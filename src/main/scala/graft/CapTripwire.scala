@@ -16,8 +16,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * Spark result silently diverges from the uncapped SQL oracle and the
   * gate reports an opaque hash mismatch. This listener turns that
   * failure mode into an explicit, attributable signal: [[Verify]]
-  * SKIPS (deletes the dump of) any query whose execution fired a cap,
-  * and [[Bench]] reports a `caps_fired` count in its JSON line.
+  * SKIPS (deletes the dump of) any query whose execution fired a cap
+  * and counts it in its non-zero exit status.
   *
   * QueryExecutionListener events post asynchronously on the listener
   * bus, so [[drain]] first FLUSHES the bus (`LiveListenerBus

@@ -5,8 +5,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.QDot
 
-/** One place for the engine's SparkSession config so Verify, Bench and
-  * tests run identical semantics.
+/** One place for the engine's SparkSession config so Verify, JobsMain,
+  * the benchmark and tests run identical semantics.
   *
   *  - `shuffle.partitions` = local cores (not the 200 default) — on a
   *    real cluster this would be cluster-sized or AQE-coalesced; queries

@@ -2,7 +2,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Exits with
+  * the number of queries that threw or were skipped for a fired skew
+  * cap (capped at 255), after every dump and oracle_sql.json are
+  * written — a failure is counted, never only printed. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -19,6 +22,7 @@ object Verify {
     // error for that query instead of an opaque hash mismatch.
     val caps = CapTripwire.install(spark)
     caps.drain(spark) // discard anything from session warmup
+    var failed = 0
     SparkEntry.queries
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .foreach { case (name, fn) =>
@@ -28,11 +32,13 @@ object Verify {
         val hit = caps.drain(spark)
         if (hit.nonEmpty) {
           org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$outDir/$name"))
+          failed += 1
           System.err.println(s"[verify] $name SKIPPED: skew cap fired (capped result " +
             s"cannot match the uncapped oracle): ${hit.mkString("; ")}")
         }
       }
       catch { case e: Throwable =>
+        failed += 1
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // a failed query may still have fired caps on partial
         // executions — drain them HERE so they are not attributed to
@@ -57,5 +63,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed > 0) {
+      System.err.println(s"[verify] $failed queries failed or were skipped")
+      sys.exit(math.min(failed, 255))
+    }
   }
 }

@@ -71,24 +71,6 @@ object Fns {
         i => concat_ws(" ", (1 to k).map(off => element_at(toks, i + off)): _*))
     ).otherwise(array().cast(ArrayType(StringType)))
 
-  /** Element-wise double cosine similarity between two float/double array
-    * columns, computed as dot/(sqrt(n1)*sqrt(n2)) with all arithmetic in
-    * double and left-to-right accumulation (matches DuckDB's
-    * list_cosine_similarity over DOUBLE[] to within an ulp). */
-  def cosineSim(a: Column, b: Column): Column = {
-    def d(x: Column) = transform(x, v => v.cast(DoubleType))
-    val da = d(a); val db = d(b)
-    val dot = aggregate(zip_with(da, db, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-    val na = aggregate(transform(da, x => x * x), lit(0.0), (acc, v) => acc + v)
-    val nb = aggregate(transform(db, x => x * x), lit(0.0), (acc, v) => acc + v)
-    dot / (sqrt(na) * sqrt(nb))
-  }
-
-  /** Squared L2 norm of a float/double array column, in double. */
-  def norm2(a: Column): Column =
-    aggregate(transform(a, v => v.cast(DoubleType) * v.cast(DoubleType)),
-      lit(0.0), (acc, v) => acc + v)
-
   /** Canonical text for exact dedup: trim, collapse runs of spaces,
     * lowercase. DuckDB twin: lower(trim(regexp_replace(text,' +',' ','g'))). */
   def normText(c: Column): Column =
@@ -125,11 +107,6 @@ object Fns {
     * ~10× faster on the hot path. Semantically identical to [[qdot]]. */
   def qdotStatic(a: Column, b: Column, dim: Int): Column =
     (1 to dim).map(i => element_at(a, i) * element_at(b, i)).reduce(_ + _)
-
-  /** [[qcosine]] with the codegen-friendly unrolled dot product. */
-  def qcosineStatic(qa: Column, qb: Column, qna: Column, qnb: Column, dim: Int): Column =
-    qdotStatic(qa, qb, dim).cast(DoubleType) /
-      sqrt(qna.cast(DoubleType) * qnb.cast(DoubleType))
 
   /** The native-`Expression` dot product ([[graft.functions.QDot]],
     * registered by [[graft.Sessions]] via SparkSessionExtensions):

@@ -849,7 +849,7 @@ object Pipeline {
     text => flatten(transform(tokens(text), bpeWordOf(merges)(_)))
 
   /** WORD-level encode under a merge table (the q124 distinct-word
-    * stage; `BpeProbe`'s vocabulary-economy row drives it directly). */
+    * stage). */
   private[graft] def bpeWordTokens(merges: Seq[(String, String)]): Column => Column =
     w => bpeWordOf(merges)(w)
 
@@ -897,9 +897,8 @@ object Pipeline {
       .computeIfAbsent(s, _ => new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]())
       .computeIfAbsent(dir, _ => bpeTrainedMergesN(s, dir, BpeRounds))
 
-  /** The training loop at an explicit round count (probe surface —
-    * `graft.BpeProbe` measures the compression a larger vocabulary
-    * buys; the gated path always runs [[BpeRounds]]). */
+  /** The training loop at an explicit round count: the gated q118
+    * path runs [[BpeRounds]], the q124 vocabulary [[BpeVocabRounds]]. */
   private[graft] def bpeTrainedMergesN(s: SparkSession, dir: String,
       nRounds: Int): Seq[(String, String)] = {
         val sc = s.sparkContext
@@ -1004,9 +1003,9 @@ object Pipeline {
   // ------------------------------------------------------------------
   // q124: PRODUCTION-SHAPED VOCABULARY (round-12 item 3). The gated
   // vocabulary stops being oracle-prefix-sized (6 rules): the encode
-  // economy runs under a 64-round corpus-trained merge table — the
-  // dial `BpeProbe` measured (chars/token 1.16 → 2.54) made a GATED
-  // row — read from the WRITTEN `bpemerges64` artifact. The oracle
+  // economy runs under a 64-round corpus-trained merge table — a
+  // measured dial (chars/token 1.16 → 2.54 over the 6-round table)
+  // made a GATED row — read from the WRITTEN `bpemerges64` artifact. The oracle
   // re-derives ALL 64 training rounds AND the encode in SQL (the
   // unrolled chain is tractable because each round is one pass over
   // the fixed 512-doc sample and the encode runs over DISTINCT WORDS,
@@ -1014,8 +1013,8 @@ object Pipeline {
   // to end, strictly stronger than a held-artifact gate.
   // ------------------------------------------------------------------
 
-  /** The production-vocabulary round count (the `BpeProbe` dial's
-    * high end; a real ~50k vocab is the same loop longer). */
+  /** The production-vocabulary round count (the measured dial's high
+    * end; a real ~50k vocab is the same loop longer). */
   private[graft] val BpeVocabRounds = 64
 
   /** The WRITTEN 64-round merge table (rnd, a, b, ab) — the artifact a
@@ -3435,7 +3434,7 @@ object Pipeline {
     // state and each ends in a bounded 1-row collect, yet they ran as
     // three SEQUENTIAL driver actions — concurrent futures make the
     // invocation pay max(pass) instead of Σ(pass). Identical jobs,
-    // identical integers; the warmAllParallel lane idiom.
+    // identical integers.
     val (cleanRows, corrRows, ri) = {
       import scala.concurrent.{Await, ExecutionContext, Future}
       val pool = java.util.concurrent.Executors.newFixedThreadPool(3)

@@ -98,7 +98,15 @@ object Similarity {
   private[graft] def ivfKOf(n: Long): Int =
     math.max(IvfKFloor.toLong, math.min(IvfKMax.toLong, n / SamplePerCent)).toInt
 
-  /** Realized training-sample bound for a corpus of n rows. */
+  /** Realized training-sample bound for a corpus of n rows: the IVF
+    * centroids and PQ codebooks are k-means-TRAINED (not hash-picked)
+    * over the trainNOf(n) smallest-hash vectors — a TakeOrdered, so
+    * training cost and driver memory are BOUNDED (≤ 32·[[IvfKMax]]
+    * rows) at any corpus size (the standard bounded-sample k-means
+    * every production IVF/PQ build runs). The hash order makes the
+    * sample deterministic and reshuffle-proof, and the DuckDB oracles
+    * re-derive the identical sample, seeds and iterations in SQL
+    * ([[trainNSql]]). */
   private[graft] def trainNOf(n: Long): Int = SamplePerCent * ivfKOf(n)
 
   /** The [[ivfKOf]] clamp as a DuckDB scalar expression over the
@@ -112,31 +120,39 @@ object Similarity {
   private def trainNSql(src: String): String =
     s"($SamplePerCent * ${ivfKSql(src)})"
 
+  /** The corpus an ANN artifact family is built over: [[Full]] (every
+    * non-degenerate embedding) or [[Standing]] (vec_id ≢ 0 mod 5 — the
+    * q43/q77 "today's crawl" split: the held snapshot that the q108
+    * append and the q116/q117 deletes maintain). Each family trains
+    * its OWN sample, centroids and codebooks on its own rows, so K and
+    * the sample adapt to that corpus. `suffix` names the family's
+    * written tables (`ivfcents` + suffix); `rows` narrows the
+    * quantized relation to the corpus. */
+  private[graft] sealed abstract class Corpus(val suffix: String) {
+    def rows(e: DataFrame): DataFrame
+  }
+  private[graft] case object Full extends Corpus("") {
+    def rows(e: DataFrame): DataFrame = e
+  }
+  private[graft] case object Standing extends Corpus("base") {
+    def rows(e: DataFrame): DataFrame = e.filter(pmod(col("vec_id"), lit(5)) =!= 0)
+  }
+
   /** Corpus row count (the quantized, degenerate-filtered relation),
-    * MEMOIZED per (session, snapshot): one column-pruned count
+    * MEMOIZED per (session, corpus, snapshot): one column-pruned count
     * aggregate, once — it sizes the quantizer capacity and the
-    * training sample for every ANN build over the snapshot. */
+    * training sample for every ANN build over the corpus. */
   private val countMemo = snapMemo[java.lang.Long]()
 
-  private[graft] def corpusN(s: SparkSession, dir: String): Long =
-    memoized[java.lang.Long](countMemo, s, dir)(quantized(s, dir).count())
+  private[graft] def corpusN(s: SparkSession, dir: String, c: Corpus): Long =
+    memoized[java.lang.Long](countMemo, s, c, dir)(c.rows(quantized(s, dir)).count())
 
-  /** The realized coarse-quantizer capacity for a snapshot. */
-  private[graft] def ivfK(s: SparkSession, dir: String): Int = ivfKOf(corpusN(s, dir))
+  /** The realized coarse-quantizer capacity for a corpus. */
+  private[graft] def ivfK(s: SparkSession, dir: String, c: Corpus): Int =
+    ivfKOf(corpusN(s, dir, c))
 
-  /** Lloyd-training sample FLOOR (= [[SamplePerCent]] · [[IvfKFloor]]):
-    * the IVF centroids and PQ codebooks are k-means-TRAINED (not
-    * hash-picked) over the [[trainNOf]] smallest-hash vectors — a
-    * TakeOrdered, so training cost and driver memory are BOUNDED
-    * (≤ 32·[[IvfKMax]] rows) at any corpus size (the standard
-    * bounded-sample k-means every production IVF/PQ build runs). The
-    * hash order makes the sample deterministic and reshuffle-proof,
-    * and the DuckDB oracles re-derive the identical sample, seeds and
-    * iterations in SQL ([[trainNSql]]). */
-  private[graft] val TrainSample = SamplePerCent * IvfKFloor
-
-  /** Fixed Lloyd iteration count. Four is where the recall grid
-    * (graft.RecallGrid, round 8) plateaus at both measured scales —
+  /** Fixed Lloyd iteration count. Four is where the round-8 recall
+    * grid plateaus at both measured scales —
     * more iterations moved no PQ recall row by more than one probe
     * slot; the SQL twins unroll exactly this many iteration CTEs. */
   private[graft] val LloydIters = 4
@@ -175,29 +191,34 @@ object Similarity {
   // DuckDB-oracle CTE materialization: the shared graft.operators.mat
   // (one definition per round-11 advice; safety caveat documented there)
 
-  /** The corpus training sample, MEMOIZED per (session, dir) — the
-    * sample is a pure function of the snapshot (hash-ordered
+  /** The corpus training sample, MEMOIZED per (session, corpus, dir)
+    * — the sample is a pure function of the snapshot (hash-ordered
     * TakeOrdered), so one scan serves every trainer: the IVF/PQ table
     * builders AND the per-query codebook derivations (q90/q92 and the
     * recall harness retrain from the sample on each call — the memo
-    * turns those into driver-array lookups). Weakly keyed by session,
+    * turns those into driver-array lookups). ONE sample per corpus
+    * feeds its coarse quantizer, PQ codebook and residual codebook, so
+    * a family's three trained artifacts cannot drift apart. Weakly
+    * keyed by session,
     * the `Layout.once` idiom: values are plain arrays with no session
     * references, so a stopped session's entry is collectable. */
   private def snapMemo[T]() = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, T]]())
+      java.util.concurrent.ConcurrentHashMap[(Corpus, String), T]]())
 
   private def memoized[T](m: java.util.Map[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, T]],
-      s: SparkSession, dir: String)(f: => T): T =
-    m.computeIfAbsent(s, _ => new java.util.concurrent.ConcurrentHashMap[String, T]())
-      .computeIfAbsent(dir, _ => f)
+        java.util.concurrent.ConcurrentHashMap[(Corpus, String), T]],
+      s: SparkSession, c: Corpus, dir: String)(f: => T): T =
+    m.computeIfAbsent(s, _ =>
+      new java.util.concurrent.ConcurrentHashMap[(Corpus, String), T]())
+      .computeIfAbsent((c, dir), _ => f)
 
   private val sampleMemo = snapMemo[Array[(Long, Array[Long], Long)]]()
 
-  private[graft] def trainSample(s: SparkSession, dir: String): Array[(Long, Array[Long], Long)] =
-    memoized(sampleMemo, s, dir)(
-      trainSampleFrom(quantized(s, dir), trainNOf(corpusN(s, dir))))
+  private[graft] def trainSample(s: SparkSession, dir: String,
+      c: Corpus): Array[(Long, Array[Long], Long)] =
+    memoized(sampleMemo, s, c, dir)(
+      trainSampleFrom(c.rows(quantized(s, dir)), trainNOf(corpusN(s, dir, c))))
 
   /** The bounded hash-ordered training sample of a quantized relation
     * — rows arrive IN hash order (seeds are its prefix). `n` is the
@@ -428,7 +449,7 @@ object Similarity {
     // collect), and it is already memoized per (session, snapshot) for
     // every ANN build — so the per-invocation raw-table count job this
     // used to run is gone, and the sizing got tighter, not looser.
-    val n = corpusN(s, dir)
+    val n = corpusN(s, dir, Full)
     embeddingNearDupTiled(s, dir, tilesFor(n))
   }
 
@@ -696,7 +717,7 @@ object Similarity {
     * Centroids are k-means TRAINED ([[lloydCents]]): seeds = the
     * [[ivfKOf]]-many smallest-hash sample rows, then [[LloydIters]]
     * deterministic spherical-Lloyd iterations over the bounded
-    * [[TrainSample]] sample — the offline training step of a
+    * [[trainNOf]] sample — the offline training step of a
     * production IVF build, integer-deterministic so the oracle
     * re-derives it in SQL. K and the sample are constants, never a
     * fraction of the table: training is a TakeOrdered collect, so
@@ -717,10 +738,10 @@ object Similarity {
       .select(col("vec_id"), col("q"), col("qn")).as[(Long, Array[Long], Long)]
 
     // coarse quantizer: k-means trained over the bounded sample (a
-    // TakeOrdered — TrainSample rows collected), constant-size at any
+    // TakeOrdered — trainNOf rows collected), constant-size at any
     // corpus scale; q83 serves the same centroids from its written
     // table (the q83 == q37 oracle identity)
-    val cents = lloydCents(trainSample(s, dir), ivfK(s, dir)).sortBy(_._1)
+    val cents = lloydCents(trainSample(s, dir, Full), ivfK(s, dir, Full)).sortBy(_._1)
     val bcCents = s.sparkContext.broadcast(cents)
     // inverted-list assignment: map-only, nearest (nprobe=1) centroid
     val assign = e.mapPartitions { it =>
@@ -887,9 +908,9 @@ object Similarity {
 
   /** SQL fragment: full-corpus ADC scoring of every (probe, vector)
     * pair via per-probe LOOKUP LISTS instead of an (enc ⋈ pdist)
-    * expand + re-group (round-16, the round-15 judge's oracle-wall
-    * item: the group-by hashed #probes × #vectors × subs rows — the
-    * dominant held-q96 cost at sf1, 5.0 → 1.3 s from this rewrite).
+    * expand + re-group (round-16: the group-by hashed #probes ×
+    * #vectors × subs rows — the dominant q96 oracle cost at sf1,
+    * 5.0 → 1.3 s from this rewrite).
     * `pdist` pivots once into O(#probes · subs) rows each holding a
     * codes-length list ordered by code, and each pair's distance is
     * direct list indexing — value-identical because codes are the
@@ -917,8 +938,7 @@ object Similarity {
     * derivation at limit 1 — the single-probe production point
     * lookup, so the gate proves the point path == the batch path
     * restricted to one probe. */
-  private def annIvfSqlFor(probeLimit: Int,
-      quant: String = fullQuantAssignSql): String = mat(
+  private def annIvfSqlFor(probeLimit: Int): String = mat(
     s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
        |n AS (SELECT vec_id, q,
        |             CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
@@ -926,7 +946,7 @@ object Similarity {
        |      WHERE list_sum(list_transform(q, x -> x * x)) > 0),
        |pset AS (SELECT vec_id FROM n WHERE vec_id % 100 = 0
        |         ORDER BY vec_id LIMIT $probeLimit),
-       |$quant,
+       |$fullQuantAssignSql,
        |probes AS (
        |  SELECT probe_id, cent_id, pq, pqn FROM (
        |    SELECT v.vec_id AS probe_id, c.cent_id, v.q AS pq, v.qn AS pqn,
@@ -953,19 +973,13 @@ object Similarity {
 
   val annIvfSql: String = annIvfSqlFor(MaxProbes)
 
-  /** The sf1 gate's q83 oracle — held quantizer/assignment (the
-    * exacttopk pattern; `Sf1Bench` swaps this in): probe routing and
-    * cell scoring stay re-derived, only the corpus×K assignment and
-    * the trained centroids read the dumped artifacts. */
-  val annIvfHeldSql: String = annIvfSqlFor(MaxProbes, heldCentsAssignSql)
-
   /** The q113 oracle: one probe, nprobe = 2 — [[annIvfSqlFor]](1). */
   val annPointSql: String = annIvfSqlFor(1)
 
   /** q113: the production point-lookup shape as a GATED query — one
     * external probe over the written index at nprobe = 2 (the regime
-    * where planning-time bucket pruning is visible, `Sf1Bench`'s
-    * SelectedBucketsCount 2-of-8 point). Oracle = the q37 derivation
+    * where planning-time bucket pruning is visible: SelectedBucketsCount
+    * 2 of 8 at sf1). Oracle = the q37 derivation
     * restricted to the same single probe, so the gate proves the
     * point path returns exactly what the batch path would for that
     * probe. */
@@ -1030,123 +1044,25 @@ object Similarity {
       .orderBy("probe_id", "rnk")
   }
 
-  /** Materialize the ANN family's snapshot tables (q83's centroids +
-    * bucketed assignment) — called by the bench's setup pass so the
-    * one-time build cost lands in `setup_sec`, mirroring
-    * `Dedup.warmSharedState`. */
-  private[graft] def warmSharedState(s: SparkSession, dir: String): Unit = {
-    warmAllParallel(s, dir, dedupToo = false)
-    ()
-  }
-
-  /** The WHOLE setup pass, PARALLEL (round-15 judge item 5: the sf1
-    * artifact build ran 4.8× the gate it serves — sequential builds
-    * left a 32-core host underused between each build's own stages).
-    * Independent artifact families run as concurrent Spark actions
-    * from a small driver-side pool — Spark schedules concurrent jobs
-    * from one session natively; the Layout once-gates serialize any
-    * two lanes that reach the SAME artifact (computeIfAbsent blocks
-    * the second caller — correctness is the gate's, the lanes only
-    * add overlap). Lane partitioning follows the dependency order the
-    * builders already obey internally (inner tables first, never
-    * nested): the two NN-descent graphs (the measured long poles,
-    * 21.5 s + 17.1 s at sf1) each get their own lane, the ivf/pq
-    * chain and the base-family chain run as two sequential lanes, and
-    * dedup/extra builds ride additional lanes. Setup WALL becomes
-    * ≈ the longest lane instead of the sum.
-    *
-    * ONE embeddings scan for the whole family (round-14 item 5): the
-    * shared quantized relation is persisted for the pass; the cache
-    * manager substitutes it into every builder's canonically-equal
-    * subtree, and the unpersist restores the timed queries' plans
-    * untouched. Artifact CONTENT is build-order independent (each
-    * builder derives from raw tables under its own once-gate), so
-    * hashes are unchanged by the parallelism.
-    *
-    * Returns per-artifact spans for the bench artifacts' attribution
-    * — spans OVERLAP under parallelism (their sum exceeds the wall by
-    * design; the wall is the headline `setup_sec`). */
-  private[graft] def warmAllParallel(s: SparkSession, dir: String,
-      dedupToo: Boolean = true,
-      extras: Seq[(String, (SparkSession, String) => Any)] = Nil)
-      : Seq[(String, Double)] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    val spans = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]()
-    def timed(name: String)(f: => Unit): Unit = {
-      val t0 = System.nanoTime()
-      try f catch {
-        case e: Throwable =>
-          System.err.println(s"[warm] $name failed: ${e.getMessage}")
-      }
-      spans.add(name -> (System.nanoTime() - t0) / 1e9)
-    }
-    val qv = quantized(s, dir)
-    qv.persist()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      qv.count()
-      val lanes: Seq[() => Unit] = Seq(
-        () => timed("nngraph")(nnGraphTable(s, dir).count()),
-        // nngraphbase forces groutesbase first (its own discipline)
-        () => {
-          timed("groutesbase")(gRoutesBase(s, dir).count())
-          timed("nngraphbase")(nnGraphBaseTable(s, dir).count())
-        },
-        () => {
-          timed("exacttopk")(exactTopKTable(s, dir).count())
-          timed("ann_ivf")(annIvfIndexed(s, dir).count())
-          timed("pqcodes")(pqCodesTable(s, dir, pqTrain(s, dir)).count())
-          timed("ivfpq")(ivfPq(s, dir).count())
-        },
-        () => {
-          timed("ivfassignbase")(
-            ivfAssignBase(s, dir, ivfCentsBase(s, dir)).count())
-          timed("pqcodesbase")(pqCodesBaseTable(s, dir).count())
-          timed("ivfpqbase")(ivfPqBaseTable(s, dir).count())
-        }) ++
-        (if (dedupToo)
-          // the five dedup artifacts each build from raw tables under
-          // independent once-gates — per-artifact lanes, so the text
-          // family's long poles (pair graph, window index) overlap
-          // the ANN training lanes instead of queuing behind each
-          // other (the r16 sf1 wall was dedup-lane-bound at 51 s)
-          Seq[() => Unit](
-            () => timed("dedup_pairgraph")(Dedup.pairGraph(s, dir).count()),
-            () => {
-              timed("dedup_bandindex")(Dedup.corpusBandIndex(s, dir).count())
-              timed("dedup_corpusgraph")(Dedup.corpusPairGraphWarm(s, dir))
-            },
-            () => timed("dedup_shingles")(Dedup.shingleTableWarm(s, dir)),
-            () => timed("dedup_windowindex")(Dedup.corpusWindowIndex(s, dir).count()))
-        else Nil) ++
-        extras.map { case (n, b) => () => timed(n)(b(s, dir)) }
-      Await.result(
-        Future.sequence(lanes.map(l => Future(l()))),
-        scala.concurrent.duration.Duration.Inf)
-    } finally {
-      qv.unpersist()
-      pool.shutdown()
-    }
-    spans.toArray(Array.empty[(String, Double)]).toSeq
-  }
-
-  /** The written coarse quantizer (q83's `ivfcents` snapshot table):
-    * k-means-TRAINED centroids ([[lloydCents]] over the bounded
-    * sample), built once per snapshot inside the table builder, then
-    * collected to the K-row driver array — the only collect in the
-    * ANN index path, constant-size at any corpus scale. */
+  /** The written coarse quantizer (q83's `ivfcents` snapshot table,
+    * `ivfcentsbase` for the [[Standing]] corpus): k-means-TRAINED
+    * centroids ([[lloydCents]] over the corpus's bounded sample),
+    * built once per snapshot inside the table builder, then collected
+    * to the K-row driver array — the only collect in the ANN index
+    * path, constant-size at any corpus scale. */
   private val centsMemo = snapMemo[Array[(Long, Array[Long], Long)]]()
 
-  private def ivfCents(s: SparkSession, dir: String): Array[(Long, Array[Long], Long)] = {
+  private[graft] def ivfCents(s: SparkSession, dir: String,
+      c: Corpus): Array[(Long, Array[Long], Long)] = {
     import s.implicits._
-    // memoized per (session, snapshot) — round 20: the K-row collect of
-    // an immutable snapshot table ran as a job in EVERY ANN query
-    // invocation (q37/q83/q93/q96/q97/q98/q107/q113…); the quantizer is
-    // constant-size driver state exactly like [[trainSample]]'s memo
-    memoized(centsMemo, s, dir) {
-      Layout.materializedTable(s, dir, "ivfcents") {
-        lloydCents(trainSample(s, dir), ivfK(s, dir)).toSeq
+    // memoized per (session, corpus, snapshot) — round 20: the K-row
+    // collect of an immutable snapshot table ran as a job in EVERY ANN
+    // query invocation (q37/q83/q93/q96/q97/q98/q107/q113…); the
+    // quantizer is constant-size driver state exactly like
+    // [[trainSample]]'s memo
+    memoized(centsMemo, s, c, dir) {
+      Layout.materializedTable(s, dir, "ivfcents" + c.suffix) {
+        lloydCents(trainSample(s, dir, c), ivfK(s, dir, c)).toSeq
           .toDF("vec_id", "q", "qn")
       }.as[(Long, Array[Long], Long)].collect().sortBy(_._1)
     }
@@ -1158,14 +1074,16 @@ object Similarity {
     * map-only pass over the broadcast quantizer. Shared by the q83
     * query path and q86's within-cluster semantic dedup — the one
     * index serves both workloads, exactly as a production deployment
-    * would run it. */
-  private def ivfAssignTable(s: SparkSession, dir: String,
-                             cents: Array[(Long, Array[Long], Long)]): DataFrame = {
+    * would run it. The [[Standing]] corpus's `ivfassignbase` is the
+    * standing assignment q91 probes at ingest time. */
+  private[graft] def ivfAssignTable(s: SparkSession, dir: String,
+      c: Corpus): DataFrame = {
     import s.implicits._
-    val bcCents = s.sparkContext.broadcast(cents)
-    Layout.materializedTable(s, dir, "ivfassign",
+    val cents = ivfCents(s, dir, c) // force before the once-gate
+    Layout.materializedTable(s, dir, "ivfassign" + c.suffix,
         Some((Layout.Buckets, Seq("cent_id")))) {
-      quantized(s, dir)
+      val bcCents = s.sparkContext.broadcast(cents)
+      c.rows(quantized(s, dir))
         .select(col("vec_id"), col("q"), col("qn")).as[(Long, Array[Long], Long)]
         .mapPartitions { it =>
           val cs = bcCents.value
@@ -1198,8 +1116,8 @@ object Similarity {
     * planning-time bucket-pruning literals. */
   private def ivfRoutedProbes(s: SparkSession, dir: String, maxNprobe: Int)
       : (DataFrame, DataFrame, Seq[Long], Long) = {
-    val cents = ivfCents(s, dir)
-    val assign = ivfAssignTable(s, dir, cents)
+    val cents = ivfCents(s, dir, Full)
+    val assign = ivfAssignTable(s, dir, Full)
     val routed = routeProbesDf(boundedProbes(assign), cents, maxNprobe)
     // ONE bounded auxiliary action serves both driver-side needs: the
     // ≤ K distinct probed cells (pruning literals) and the probe
@@ -1247,13 +1165,11 @@ object Similarity {
     * `SelectedBucketsCount` shows "8 out of 8" — which reads as "no
     * pruning" when it actually means "union of 400 cells". The
     * production regime is THIS shape: one external query, nprobe ≪ K,
-    * ≤ nprobe cell literals → the scan provably skips buckets
-    * (`Sf1Bench` records the SelectedBucketsCount line at the sf1
-    * point). */
+    * ≤ nprobe cell literals → the scan provably skips buckets. */
   private[graft] def ivfPointQuery(s: SparkSession, dir: String,
       nprobe: Int): DataFrame = {
-    val cents = ivfCents(s, dir)
-    val assign = ivfAssignTable(s, dir, cents)
+    val cents = ivfCents(s, dir, Full)
+    val assign = ivfAssignTable(s, dir, Full)
     val probe = boundedProbes(assign).orderBy(col("vec_id")).limit(1)
     val routed = routeProbesDf(probe, cents, nprobe).drop("r")
     val probedCents = routed.select(col("cent_id")).distinct()
@@ -1282,14 +1198,15 @@ object Similarity {
     * the codebook array's LENGTH is the realized pqK — every encode /
     * ADC consumer sizes its loops from `train.length`, so the Scala
     * and SQL sides cannot disagree on capacity. MEMOIZED per
-    * (session, snapshot) like [[trainSample]]: at pqK 256 a Lloyd run
-    * costs ~10⁸ integer ops, and six queries retrain the identical
-    * codebook without the memo. */
+    * (session, corpus, snapshot) like [[trainSample]]: at pqK 256 a
+    * Lloyd run costs ~10⁸ integer ops, and six queries retrain the
+    * identical codebook without the memo. */
   private val cbMemo = snapMemo[Array[(Long, Array[Long])]]()
 
-  private[graft] def pqTrain(s: SparkSession, dir: String): Array[(Long, Array[Long])] =
-    memoized(cbMemo, s, dir) {
-      val smp = trainSample(s, dir)
+  private[graft] def pqTrain(s: SparkSession, dir: String,
+      c: Corpus): Array[(Long, Array[Long])] =
+    memoized(cbMemo, s, c, dir) {
+      val smp = trainSample(s, dir, c)
       lloydCodebook(smp, pqKOf(smp.length))
     }
 
@@ -1354,17 +1271,18 @@ object Similarity {
     cb
   }
 
-  /** The WRITTEN PQ code table (vec_id, codes[8]) — the snapshot
+  /** The WRITTEN PQ code table (vec_id, codes[8]; `pqcodes`, or
+    * `pqcodesbase` over the [[Standing]] corpus) — the snapshot
     * artifact of the compression: one map-only encode pass per corpus
     * snapshot (n·K·Dim integer ops against the broadcast codebook),
     * after which query-time scoring touches ONLY 8 small ints per
     * vector, never the 64-dim payload. */
   private[graft] def pqCodesTable(s: SparkSession, dir: String,
-                           train: Array[(Long, Array[Long])]): DataFrame = {
+      c: Corpus): DataFrame = {
     import s.implicits._
-    val bc = s.sparkContext.broadcast(train)
-    Layout.materializedTable(s, dir, "pqcodes") {
-      quantized(s, dir)
+    Layout.materializedTable(s, dir, "pqcodes" + c.suffix) {
+      val bc = s.sparkContext.broadcast(pqTrain(s, dir, c))
+      c.rows(quantized(s, dir))
         .select(col("vec_id"), col("q")).as[(Long, Array[Long])]
         .mapPartitions { it =>
           val cb = bc.value
@@ -1428,12 +1346,14 @@ object Similarity {
     * of the immutable snapshot (vec_id ≡ 0 mod 100, TakeOrdered ≤
     * [[MaxProbes]] rows), and its collect ran as a ~150 ms job in EVERY
     * invocation of the q90/q92/q96/q97/q107 harness family. One scan
-    * per snapshot now serves them all; constant driver memory. */
+    * per snapshot now serves them all; constant driver memory. The
+    * memo key's corpus is always `Full`: probes are drawn from the full
+    * corpus whichever corpus the harness searches. */
   private val probesMemo = snapMemo[Array[(Long, Array[Long], Long)]]()
 
   private def pqProbes(s: SparkSession, dir: String): Array[(Long, Array[Long], Long)] = {
     import s.implicits._
-    memoized(probesMemo, s, dir) {
+    memoized(probesMemo, s, Full, dir) {
       boundedProbes(quantized(s, dir))
         .select(col("vec_id"), col("q"), col("qn"))
         .as[(Long, Array[Long], Long)].collect().sortBy(_._1)
@@ -1470,8 +1390,8 @@ object Similarity {
   private def pqAdcRanked(s: SparkSession, dir: String,
                           probeRows: Array[(Long, Array[Long], Long)]): DataFrame = {
     import s.implicits._
-    val train = pqTrain(s, dir)
-    val codes = pqCodesTable(s, dir, train)
+    val train = pqTrain(s, dir, Full)
+    val codes = pqCodesTable(s, dir, Full)
     val adc: Array[(Long, Array[Long])] =
       probeRows.map { case (pid, pq, _) => (pid, adcTable(pq, train)) }
     val bcAdc = s.sparkContext.broadcast(adc)
@@ -1598,14 +1518,16 @@ object Similarity {
     * codebook capacity buys far finer within-cell resolution than
     * flat encoding (round-8 recall grid: the flat composed path
     * DEGRADED with corpus growth, the residual path improves).
-    * `cents` must be the snapshot quantizer ([[ivfCents]]) — the memo
-    * is keyed by (session, dir) like the sample's. */
+    * Residuals are taken against the corpus's own quantizer
+    * ([[ivfCents]]); memoized per (session, corpus, dir) like the
+    * sample. */
   private val resCbMemo = snapMemo[Array[(Long, Array[Long])]]()
 
   private[graft] def resTrain(s: SparkSession, dir: String,
-      cents: Array[(Long, Array[Long], Long)]): Array[(Long, Array[Long])] =
-    memoized(resCbMemo, s, dir) {
-      val smp = trainSample(s, dir)
+      c: Corpus): Array[(Long, Array[Long])] =
+    memoized(resCbMemo, s, c, dir) {
+      val smp = trainSample(s, dir, c)
+      val cents = ivfCents(s, dir, c)
       val centById = cents.map(c => (c._1, c._2)).toMap
       val res = smp.map { case (id, q, qn) =>
         val cq = centById(routeCents(q, qn, cents, 1).head)
@@ -1631,23 +1553,24 @@ object Similarity {
     * q37. All-BIGINT adist; the oracle composes the IVF assignment
     * and residual-PQ encoding CTEs verbatim. */
   /** The written `graft_ivfpq` index table alone (residual codes,
-    * cent_id-bucketed) — factored from [[ivfPq]] so the delete
-    * lifecycle (q106) can rewrite it without running the query. */
-  private[graft] def ivfPqIndex(s: SparkSession, dir: String): DataFrame = {
+    * cent_id-bucketed; `ivfpqbase` over the [[Standing]] corpus) —
+    * factored from [[ivfPq]] so the delete lifecycle (q106) can
+    * rewrite it without running the query. */
+  private[graft] def ivfPqIndex(s: SparkSession, dir: String,
+      c: Corpus): DataFrame = {
     import s.implicits._
-    val cents = ivfCents(s, dir)
-    val train = resTrain(s, dir, cents)
-    val centById = cents.map(c => (c._1, c._2)).toMap
-    // materialize the source index BEFORE entering the composed
+    // materialize the source tables BEFORE entering the composed
     // table's once-gate: a materializedTable call inside another's
     // builder is a nested computeIfAbsent on the same gate map —
     // ConcurrentHashMap detects it as a (bin-collision-dependent,
     // i.e. flaky) "Recursive update" IllegalStateException
-    val assign = ivfAssignTable(s, dir, cents)
-    val bcC = s.sparkContext.broadcast(centById)
-    val bcCb = s.sparkContext.broadcast(train)
-    Layout.materializedTable(s, dir, "ivfpq",
+    val cents = ivfCents(s, dir, c)
+    val train = resTrain(s, dir, c)
+    val assign = ivfAssignTable(s, dir, c)
+    Layout.materializedTable(s, dir, "ivfpq" + c.suffix,
         Some((Layout.Buckets, Seq("cent_id")))) {
+      val bcC = s.sparkContext.broadcast(cents.map(ct => (ct._1, ct._2)).toMap)
+      val bcCb = s.sparkContext.broadcast(train)
       // one map-only residual-encode pass over the assignment (which
       // already co-locates each vector with its cell id and payload)
       assign.select(col("vec_id"), col("cent_id"), col("q"))
@@ -1664,13 +1587,13 @@ object Similarity {
 
   def ivfPq(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val cents = ivfCents(s, dir)
-    val train = resTrain(s, dir, cents)
+    val cents = ivfCents(s, dir, Full)
+    val train = resTrain(s, dir, Full)
     val centById = cents.map(c => (c._1, c._2)).toMap
-    val assign = ivfAssignTable(s, dir, cents)
+    val assign = ivfAssignTable(s, dir, Full)
     val bcC = s.sparkContext.broadcast(centById)
     val bcCb = s.sparkContext.broadcast(train)
-    val index = ivfPqIndex(s, dir)
+    val index = ivfPqIndex(s, dir, Full)
     // probes route DISTRIBUTED (routeProbesDf) and their
     // per-(probe, routed-cell) residual ADC tables are built in the
     // SAME map-side pass — the probe vectors never transit the
@@ -1747,11 +1670,12 @@ object Similarity {
        |$rvecSql,
        |${pqEncSqlOver("rvec", "rcb", "renc")}""".stripMargin
 
-  /** The probes' per-(probe, routed-cell) residual ADC tables (needs
-    * `proutes`, `n`, `cents`, `rcb`) — probe-side work, shared by the
-    * full and held residual chains. */
-  private def rpdistSql: String =
-    s"""rpdist AS (
+  /** The residual encoding chain plus the probes' per-(probe,
+    * routed-cell) residual ADC tables (`rpdist`; needs `proutes`, `n`,
+    * `cents`). */
+  private def residualPqSql: String =
+    s"""$residualEncSql,
+       |rpdist AS (
        |  SELECT pr.probe_id, pr.cent_id, c.sub, c.code,
        |         CAST(list_sum(list_transform(generate_series(1, $PqDim),
        |           i -> (p.q[c.sub*$PqDim+i] - ct.cq[c.sub*$PqDim+i] - c.cq[i])
@@ -1760,20 +1684,6 @@ object Similarity {
        |  JOIN n p ON p.vec_id = pr.probe_id
        |  JOIN cents ct ON ct.cent_id = pr.cent_id
        |  CROSS JOIN rcb c)""".stripMargin
-
-  private def residualPqSql: String =
-    s"""$residualEncSql,
-       |$rpdistSql""".stripMargin
-
-  /** [[residualPqSql]]'s held twin: the residual codebook AND the
-    * full-corpus residual encode both read their dumped artifacts
-    * (`pqrcb`, `ivfpq`) — re-training the codebook was the held
-    * oracle's real wall (see [[cbDump]]); only the probe-side rpdist
-    * tables are re-derived. */
-  private def residualPqHeldSql: String =
-    s"""rcb AS (SELECT sub, code, cq FROM pqrcb),
-       |${heldEncSql("ivfpq", "renc")},
-       |$rpdistSql""".stripMargin
 
   /** The residual-scored probed-lists CTE (twin of [[ivfPq]]'s scan):
     * candidates from the probes' routed cells, adist = Σ over
@@ -1850,7 +1760,7 @@ object Similarity {
     * rollup, with only the output sort shuffling. At 100 TB the
     * rank-and-cap runs entirely within each bucket's files. */
   def clusterBalance(s: SparkSession, dir: String): DataFrame = {
-    val assign = ivfAssignTable(s, dir, ivfCents(s, dir))
+    val assign = ivfAssignTable(s, dir, Full)
     val w = Window.partitionBy(col("cent_id"))
       .orderBy(hash60(col("vec_id").cast(StringType)), col("vec_id"))
     assign.select(col("cent_id"), col("vec_id"))
@@ -1920,7 +1830,7 @@ object Similarity {
     * and norms, one IEEE division), so the DuckDB oracle — which
     * rebuilds the identical assignment in SQL — agrees bit-for-bit. */
   def semDedup(s: SparkSession, dir: String): DataFrame =
-    semDedupFrom(ivfAssignTable(s, dir, ivfCents(s, dir)), MaxSemCluster)
+    semDedupFrom(ivfAssignTable(s, dir, Full), MaxSemCluster)
 
   /** [[semDedup]] over an explicit (vec_id, cent_id, q, qn) assignment —
     * the spec surface where `SimilaritySpec` fires the cluster cap. */
@@ -1994,82 +1904,6 @@ object Similarity {
        |FROM pairs WHERE cos >= 0.4
        |GROUP BY vec_b ORDER BY vec_id""".stripMargin)
 
-  /** The STANDING-corpus (vec_id ≢ 0 mod 5 — the q43/q77 "today's
-    * crawl" split) semantic index: centroids trained on the corpus
-    * subset and its nearest-centroid assignment, both written snapshot
-    * tables, the assignment bucketed by cent_id. The PREVIOUS
-    * snapshot's artifact that q91 probes at ingest time. */
-  /** The STANDING-corpus quantized relation (vec_id ≢ 0 mod 5). */
-  private def quantizedBase(s: SparkSession, dir: String): DataFrame =
-    quantized(s, dir).filter(pmod(col("vec_id"), lit(5)) =!= 0)
-
-  /** Standing-corpus row count, memoized — the base family's K and
-    * sample adapt to ITS corpus (one count aggregate per snapshot). */
-  private val countBaseMemo = snapMemo[java.lang.Long]()
-  private[graft] def corpusNBase(s: SparkSession, dir: String): Long =
-    memoized[java.lang.Long](countBaseMemo, s, dir)(quantizedBase(s, dir).count())
-
-  /** The standing corpus's bounded hash-ordered training sample,
-    * memoized — ONE sample feeds the base coarse quantizer, the base
-    * PQ codebook and the base residual codebook, so the three trained
-    * artifacts of the held snapshot cannot drift apart. */
-  private val sampleBaseMemo = snapMemo[Array[(Long, Array[Long], Long)]]()
-  private[graft] def trainSampleBase(s: SparkSession, dir: String): Array[(Long, Array[Long], Long)] =
-    memoized(sampleBaseMemo, s, dir)(
-      trainSampleFrom(quantizedBase(s, dir), trainNOf(corpusNBase(s, dir))))
-
-  private val centsBaseMemo = snapMemo[Array[(Long, Array[Long], Long)]]()
-
-  private[graft] def ivfCentsBase(s: SparkSession, dir: String): Array[(Long, Array[Long], Long)] = {
-    import s.implicits._
-    // memoized per (session, snapshot) — see [[ivfCents]] (round 20)
-    memoized(centsBaseMemo, s, dir) {
-      Layout.materializedTable(s, dir, "ivfcentsbase") {
-        lloydCents(trainSampleBase(s, dir), ivfKOf(corpusNBase(s, dir))).toSeq
-          .toDF("vec_id", "q", "qn")
-      }.as[(Long, Array[Long], Long)].collect().sortBy(_._1)
-    }
-  }
-
-  /** The held snapshot's FLAT PQ codebook (trained on the base
-    * sample) — the q90 codebook's base-family twin. */
-  private val cbBaseMemo = snapMemo[Array[(Long, Array[Long])]]()
-  private[graft] def pqTrainBase(s: SparkSession, dir: String): Array[(Long, Array[Long])] =
-    memoized(cbBaseMemo, s, dir) {
-      val smp = trainSampleBase(s, dir)
-      lloydCodebook(smp, pqKOf(smp.length))
-    }
-
-  /** The held snapshot's RESIDUAL PQ codebook (base-sample residuals
-    * against the base coarse quantizer) — [[resTrain]]'s twin. */
-  private val resCbBaseMemo = snapMemo[Array[(Long, Array[Long])]]()
-  private[graft] def resTrainBase(s: SparkSession, dir: String,
-      cents: Array[(Long, Array[Long], Long)]): Array[(Long, Array[Long])] =
-    memoized(resCbBaseMemo, s, dir) {
-      val smp = trainSampleBase(s, dir)
-      val centById = cents.map(c => (c._1, c._2)).toMap
-      val res = smp.map { case (id, q, qn) =>
-        val cq = centById(routeCents(q, qn, cents, 1).head)
-        (id, Array.tabulate(Dim)(i => q(i) - cq(i)), 0L)
-      }
-      lloydCodebook(res, pqKOf(smp.length))
-    }
-
-  private[graft] def ivfAssignBase(s: SparkSession, dir: String,
-                            cents: Array[(Long, Array[Long], Long)]): DataFrame = {
-    import s.implicits._
-    val bcCents = s.sparkContext.broadcast(cents)
-    Layout.materializedTable(s, dir, "ivfassignbase",
-        Some((Layout.Buckets, Seq("cent_id")))) {
-      quantized(s, dir).filter(pmod(col("vec_id"), lit(5)) =!= 0)
-        .select(col("vec_id"), col("q"), col("qn")).as[(Long, Array[Long], Long)]
-        .mapPartitions { it =>
-          val cs = bcCents.value
-          it.map { case (id, q, qn) => (id, routeCents(q, qn, cs, 1).head, q, qn) }
-        }.toDF("vec_id", "cent_id", "q", "qn")
-    }
-  }
-
   /** q91: INCREMENTAL semantic dedup — q86's within-cluster pruning in
     * the ingest-time shape of q43/q77: "is this new embedding a
     * semantic near-copy of something the corpus already holds?" The
@@ -2113,10 +1947,10 @@ object Similarity {
   }
 
   def semDedupIncremental(s: SparkSession, dir: String): DataFrame = {
-    val cents = ivfCentsBase(s, dir)
+    val cents = ivfCents(s, dir, Standing)
     val m = semanticMatchEvents(
       Tables.embeddings(s, dir).filter(pmod(col("vec_id"), lit(5)) === 0),
-      cents, ivfAssignBase(s, dir, cents))
+      cents, ivfAssignTable(s, dir, Standing))
     val w = Window.partitionBy(col("vec_id"))
       .orderBy(col("cos").desc, col("cvec"))
     val wc = Window.partitionBy(col("vec_id"))
@@ -2197,7 +2031,7 @@ object Similarity {
     * rows — AQE broadcasts the drop set at runtime — and no exchange
     * anywhere carries a vector payload. */
   def embeddingPipeline(s: SparkSession, dir: String): DataFrame = {
-    val assign = ivfAssignTable(s, dir, ivfCents(s, dir))
+    val assign = ivfAssignTable(s, dir, Full)
     // drop set WITH its cluster key: groupBy(cent_id, vec_b) is
     // semantically groupBy(vec_b) — a vector's pairs are all within
     // one cluster — and rides the bucketing (see [[semPairs]])
@@ -2370,26 +2204,8 @@ object Similarity {
        |                              ORDER BY cos DESC, vec_id) AS rnk
        |    FROM escored) t WHERE rnk <= 5)""".stripMargin
 
-  /** [[exactBaseSql]]'s artifact-backed twin: the baseline READ from
-    * the written `exacttopk` ground-truth table instead of re-derived
-    * (probe set = its distinct probes — identical to [[boundedProbes]]
-    * by construction). Round-11 item 5: the sf1 q96 gate's re-derived
-    * probes×corpus CTE needed ~50 GB of DuckDB temp; this is the same
-    * held-artifact pattern the Spark side and q83's oracle already
-    * use, and the per-round oracle scales keep the re-deriving form,
-    * so written == recomputed stays proven every round. */
-  private def exactHeldBaseSql: String =
-    s"""q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
-       |n AS (SELECT vec_id, q,
-       |             CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
-       |      FROM q
-       |      WHERE list_sum(list_transform(q, x -> x * x)) > 0),
-       |pset AS (SELECT DISTINCT probe_id AS vec_id FROM exacttopk),
-       |exact5 AS (SELECT probe_id, vec_id FROM exacttopk)""".stripMargin
-
-  /** The full (re-deriving) quantizer + assignment CTE chain: sample,
-    * trained centroids, corpus×K nearest-cell assignment. The
-    * per-round oracle scales always use this form. */
+  /** The quantizer + assignment CTE chain: sample, trained centroids,
+    * corpus×K nearest-cell assignment. */
   private def fullQuantAssignSql: String =
     s"""${sampSql("n")},
        |${trainedCentsSql("n")},
@@ -2403,54 +2219,6 @@ object Similarity {
        |    FROM n v CROSS JOIN cents c) t
        |  WHERE rn = 1)""".stripMargin
 
-  /** The HELD quantizer + assignment: centroids read from the dumped
-    * `ivfcents` table, the corpus assignment from the dumped
-    * `nnroutes` rank-1 rows (round-13 item 7: re-deriving the
-    * corpus×K assignment, the full-corpus PQ encodes
-    * ([[heldEncSql]]) and above all the Lloyd training chains
-    * ([[cbDump]]) cost the sf1 gate 1,207 s for q96 + 721 s for q107
-    * at K=625). Every probe-side derivation (routing, cell scoring,
-    * ADC tables, re-rank, intersections) stays re-derived; the
-    * per-round sf0.01/sf0.1 gates keep [[fullQuantAssignSql]] and the
-    * training chains, so held == recomputed stays proven every round
-    * (the exacttopk pattern). */
-  private def heldCentsAssignSql: String =
-    s"""cents AS (SELECT vec_id AS cent_id, q AS cq, qn AS cqn FROM ivfcents),
-       |assign AS (SELECT vec_id, cent_id, q, qn FROM nnroutes WHERE r = 1)""".stripMargin
-
-  /** The trained flat/residual PQ codebooks as (sub, code, cq) rows —
-    * the SQL oracles' cb/rcb relations, dumped by `Sf1Bench` so the
-    * sf1 held oracles skip RE-TRAINING: profiling the round-13 held
-    * q96 showed its 1,222 s wall was almost entirely the two unrolled
-    * Lloyd chains (8 assignment windows of sample×subs×codes ≈ 41M
-    * rows each at the sf1 point) — the one derivation the exacttopk/
-    * nnroutes/pqcodes dumps didn't cover. Code ids are 1-based in
-    * seed-vec_id order, exactly the SQL chain's row_number seeding,
-    * and the cq slices are the per-subspace codewords the pdist/ADC
-    * fragments consume. Unreferenced MATERIALIZED CTEs still EVALUATE
-    * in DuckDB, so the held oracles must drop the training chains
-    * from the SQL text, not merely stop referencing them. */
-  private[graft] def cbDump(s: SparkSession, dir: String): DataFrame =
-    cbRows(s, pqTrain(s, dir))
-  private[graft] def rcbDump(s: SparkSession, dir: String): DataFrame =
-    cbRows(s, resTrain(s, dir, ivfCents(s, dir)))
-  private def cbRows(s: SparkSession, cb: Array[(Long, Array[Long])]): DataFrame = {
-    import s.implicits._
-    (for {
-      sub <- 0 until PqSubs
-      (cw, idx) <- cb.zipWithIndex
-    } yield (sub, idx + 1, cw._2.slice(sub * PqDim, sub * PqDim + PqDim).toSeq))
-      .toDF("sub", "code", "cq")
-  }
-
-  /** A dumped codes table ((vec_id, …, codes LIST)) unnested to the
-    * oracle's (vec_id, sub, code) encoding relation — replaces a
-    * full-corpus × codebook encode CTE in the held oracles. */
-  private def heldEncSql(table: String, out: String): String =
-    s"""$out AS (
-       |  SELECT vec_id, s.s AS sub, codes[s.s + 1] AS code
-       |  FROM $table CROSS JOIN range(0, $PqSubs) s(s))""".stripMargin
-
   /** The q96 oracle: ONE shared-CTE derivation — the exact baseline
     * (q25's machinery), the IVF route (q37/q83's cents/assign/proutes),
     * the PQ route (q90/q92's train/cb/enc/pdist) and the composed
@@ -2458,10 +2226,9 @@ object Similarity {
     * exact top-5. Every fragment is the (hash-gate-proven) SQL of its
     * source query, so a recall mismatch localizes to the intersection
     * math, not the methods. */
-  private def annRecallSqlOver(base: String, quant: String,
-      cbFrag: String, encFrag: String, residFrag: String): String = mat(
-    s"""WITH $base,
-       |$quant,
+  val annRecallSql: String = mat(
+    s"""WITH $exactBaseSql,
+       |$fullQuantAssignSql,
        |proutes AS (
        |  SELECT probe_id, cent_id FROM (
        |    SELECT v.vec_id AS probe_id, c.cent_id,
@@ -2484,8 +2251,8 @@ object Similarity {
        |           row_number() OVER (PARTITION BY probe_id
        |                              ORDER BY cos DESC, vec_id) AS rnk
        |    FROM iscored) t WHERE rnk <= 5),
-       |$cbFrag,
-       |$encFrag,
+       |$trainedCbSql,
+       |$pqEncSql,
        |$pqPdistSql,
        |${adcScoredSql("ascored")},
        |aranked AS (SELECT probe_id, vec_id, adist,
@@ -2505,7 +2272,7 @@ object Similarity {
        |           row_number() OVER (PARTITION BY probe_id
        |                              ORDER BY cos DESC, vec_id) AS rnk
        |    FROM rr) t WHERE rnk <= 5),
-       |$residFrag,
+       |$residualPqSql,
        |${residualScoredSql("pscored")},
        |ipq5 AS (SELECT probe_id, vec_id FROM (
        |    SELECT probe_id, vec_id,
@@ -2526,17 +2293,6 @@ object Similarity {
        |       CAST(n_hits AS BIGINT) AS n_hits,
        |       CAST(n_hits AS DOUBLE) / CAST(5 * np AS DOUBLE) AS recall_at_5
        |FROM hits, np ORDER BY method""".stripMargin)
-
-  val annRecallSql: String = annRecallSqlOver(
-    exactBaseSql, fullQuantAssignSql, trainedCbSql, pqEncSql, residualPqSql)
-
-  /** The sf1 gate's q96 oracle — reads the dumped `exacttopk` table
-    * (see [[exactHeldBaseSql]]; `Sf1Bench` writes the artifact next
-    * to the snapshot and swaps this SQL into the verify dump). */
-  val annRecallHeldSql: String = annRecallSqlOver(
-    exactHeldBaseSql, heldCentsAssignSql,
-    "cb AS (SELECT sub, code, cq FROM pqcb)",
-    heldEncSql("pqcodes", "enc"), residualPqHeldSql)
 
   /** q97: the IVF recall-vs-nprobe TUNING CURVE — recall@5 of the
     * written-index path at nprobe = 1/2/4/8, against the exact q25
@@ -2734,20 +2490,19 @@ object Similarity {
     * computes. */
   private[operators] def deletedAnnTables(s: SparkSession, dir: String,
       vecDel: DataFrame): Seq[(String, DataFrame, Column)] = {
-    val cents = ivfCents(s, dir)
     val codesKey = concat_ws(",", transform(col("codes"), c => c.cast(StringType)))
     def del(what: String, buckets: Option[(Int, Seq[String])], base: DataFrame) =
       Layout.deleteRewrite(s, dir, what, buckets, vecDel, Seq("vec_id"))(base)
     Seq(
       ("ivfassign",
         del("ivfassign", Some((Layout.Buckets, Seq("cent_id"))),
-          ivfAssignTable(s, dir, cents)),
+          ivfAssignTable(s, dir, Full)),
         concat_ws("|", col("vec_id"), col("cent_id"))),
       ("ivfpq",
-        del("ivfpq", Some((Layout.Buckets, Seq("cent_id"))), ivfPqIndex(s, dir)),
+        del("ivfpq", Some((Layout.Buckets, Seq("cent_id"))), ivfPqIndex(s, dir, Full)),
         concat_ws("|", col("vec_id"), col("cent_id"), codesKey)),
       ("pqcodes",
-        del("pqcodes", None, pqCodesTable(s, dir, pqTrain(s, dir))),
+        del("pqcodes", None, pqCodesTable(s, dir, Full)),
         concat_ws("|", col("vec_id"), codesKey)))
   }
 
@@ -2821,47 +2576,6 @@ object Similarity {
   /** Neighbors kept per vector (HNSW's M, layer-0). */
   private[graft] val GraphG = 16
 
-  /** The held snapshot's FLAT PQ code table over the standing corpus
-    * (`pqcodesbase`) — one map-only encode pass against the broadcast
-    * base codebook, [[pqCodesTable]]'s base-family twin. */
-  private[graft] def pqCodesBaseTable(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val bc = s.sparkContext.broadcast(pqTrainBase(s, dir))
-    Layout.materializedTable(s, dir, "pqcodesbase") {
-      quantizedBase(s, dir)
-        .select(col("vec_id"), col("q")).as[(Long, Array[Long])]
-        .mapPartitions { it =>
-          val cb = bc.value
-          it.map { case (id, q) => (id, pqEncode(q, cb).toSeq) }
-        }.toDF("vec_id", "codes")
-    }
-  }
-
-  /** The held snapshot's composed IVF-PQ index over the standing
-    * corpus (`ivfpqbase`, residual codes, cent_id-bucketed) —
-    * [[ivfPqIndex]]'s base-family twin. */
-  private[graft] def ivfPqBaseTable(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val cents = ivfCentsBase(s, dir)
-    val train = resTrainBase(s, dir, cents)
-    val centById = cents.map(c => (c._1, c._2)).toMap
-    val assign = ivfAssignBase(s, dir, cents) // force before the once-gate
-    val bcC = s.sparkContext.broadcast(centById)
-    val bcCb = s.sparkContext.broadcast(train)
-    Layout.materializedTable(s, dir, "ivfpqbase",
-        Some((Layout.Buckets, Seq("cent_id")))) {
-      assign.select(col("vec_id"), col("cent_id"), col("q"))
-        .as[(Long, Long, Array[Long])]
-        .mapPartitions { it =>
-          val cm = bcC.value; val cb = bcCb.value
-          it.map { case (id, cid, q) =>
-            val cq = cm(cid)
-            (id, cid, pqEncode(Array.tabulate(Dim)(i => q(i) - cq(i)), cb).toSeq)
-          }
-        }.toDF("vec_id", "cent_id", "codes")
-    }
-  }
-
   /** The standing corpus's WRITTEN [[GraphR]]-deep routing table
     * (`groutesbase`: vec_id, cent_id, q, qn — one row per (vector,
     * routed cell), cent_id-bucketed). This is the graph index's pool
@@ -2870,8 +2584,8 @@ object Similarity {
     * WITHOUT re-routing (or re-shuffling) the standing corpus — the
     * datum that makes graph maintenance O(batch). */
   private[graft] def gRoutesBase(s: SparkSession, dir: String): DataFrame = {
-    val cents = ivfCentsBase(s, dir)
-    val assign = ivfAssignBase(s, dir, cents) // force before the once-gate
+    val cents = ivfCents(s, dir, Standing)
+    val assign = ivfAssignTable(s, dir, Standing) // force before the once-gate
     Layout.materializedTable(s, dir, "groutesbase",
         Some((Layout.Buckets, Seq("cent_id")))) {
       routeProbesDf(assign, cents, GraphR)
@@ -2954,15 +2668,15 @@ object Similarity {
   private def annAppendFamily(s: SparkSession, dir: String):
       (DataFrame, DataFrame, DataFrame, DataFrame) = {
     import s.implicits._
-    val cents = ivfCentsBase(s, dir)
-    val cb = pqTrainBase(s, dir)
-    val rcb = resTrainBase(s, dir, cents)
+    val cents = ivfCents(s, dir, Standing)
+    val cb = pqTrain(s, dir, Standing)
+    val rcb = resTrain(s, dir, Standing)
     val centById = cents.map(c => (c._1, c._2)).toMap
     // materialize every base artifact BEFORE the append once-gates
     // (the ivfPqIndex "Recursive update" rule)
-    val assignBase = ivfAssignBase(s, dir, cents)
-    val codesBase = pqCodesBaseTable(s, dir)
-    val ivfpqBase = ivfPqBaseTable(s, dir)
+    val assignBase = ivfAssignTable(s, dir, Standing)
+    val codesBase = pqCodesTable(s, dir, Standing)
+    val ivfpqBase = ivfPqIndex(s, dir, Standing)
     val routesBase = gRoutesBase(s, dir)
     val graphBase = nnGraphBaseTable(s, dir)
 
@@ -3203,7 +2917,7 @@ object Similarity {
     // materialize the q108 upd family first (its once-gates; no
     // census evaluation rides along)
     annAppendFamily(s, dir)
-    val cents = ivfCentsBase(s, dir)
+    val cents = ivfCents(s, dir, Standing)
     val del = vecDelSet(s, dir)
     def updView(what: String) = s.table(Layout.tableName(dir, what + "upd"))
     def delT(what: String, buckets: Option[(Int, Seq[String])]) =
@@ -3423,9 +3137,9 @@ object Similarity {
     * "every row exact". */
   def annGraphBackfold(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val cents = ivfCentsBase(s, dir)
+    val cents = ivfCents(s, dir, Standing)
     // materialize the base artifacts BEFORE the fold's once-gate
-    val assignBase = ivfAssignBase(s, dir, cents)
+    val assignBase = ivfAssignTable(s, dir, Standing)
     val routesBase = gRoutesBase(s, dir)
     val graphBase = nnGraphBaseTable(s, dir)
 
@@ -3575,8 +3289,8 @@ object Similarity {
     * data-dependent; the batched form is its bulk-synchronous
     * approximation — expressible as [[BeamH]] unrolled relational
     * blocks on BOTH engines, which is what makes the recall row
-    * hash-gateable. Dial choice measured on `graft.GraphAnnProbe`
-    * (driver-math replica through the product's own routing/cosine):
+    * hash-gateable. Dial choice measured with a driver-math replica
+    * through the product's own routing/cosine:
     * R4/G16/B4/H4 reaches recall@5 = 0.92/0.55 at sf0.01/sf0.1 vs
     * IVF's 0.92@nprobe=21 / 0.48@nprobe=7 at the SAME eval budget —
     * the graph matches IVF at the small scale and BEATS it at the
@@ -3587,7 +3301,7 @@ object Similarity {
 
   /** NN-DESCENT refinement dials (round-10 item 4). The pool graph
     * alone leaves measured recall headroom (0.55 at sf0.1 vs the 0.65
-    * exact-kNN-graph bound, `GraphAnnProbe`): vectors near a cell
+    * exact-kNN-graph bound): vectors near a cell
     * boundary miss true neighbors that share none of their routed
     * cells. One ADDITIVE NN-descent round closes most of it: each
     * vertex proposes its best [[NdExp]] neighbors' adjacency lists
@@ -3671,10 +3385,10 @@ object Similarity {
   }
 
   private[graft] def nnGraphTable(s: SparkSession, dir: String): DataFrame = {
-    val cents = ivfCents(s, dir)
+    val cents = ivfCents(s, dir, Full)
     // force the base table BEFORE the nngraph once-gate (the
     // ivfPqIndex "Recursive update" rule)
-    val assign = ivfAssignTable(s, dir, cents)
+    val assign = ivfAssignTable(s, dir, Full)
     val sc = s.sparkContext
     val pre = sc.getPersistentRDDs.keySet.toSet
     val t = Layout.materializedTable(s, dir, "nngraph",
@@ -3715,11 +3429,11 @@ object Similarity {
     * step above runs distributed. */
   def graphAnn(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val cents = ivfCents(s, dir)
-    val assign = ivfAssignTable(s, dir, cents)
+    val cents = ivfCents(s, dir, Full)
+    val assign = ivfAssignTable(s, dir, Full)
     val graph = nnGraphTable(s, dir)
     val kK = cents.length.toLong
-    val nCorpus = corpusN(s, dir)
+    val nCorpus = corpusN(s, dir, Full)
 
     // Round-20: the probe set is BOUNDED (≤ [[MaxProbes]] rows), so
     // collect it ONCE and do everything probe-shaped on the driver —
@@ -3737,7 +3451,6 @@ object Similarity {
     // [[pqProbes]] memo serves this path too (its collect job ran per
     // invocation here)
     val probeRows: Array[(Long, Array[Long], Long)] = pqProbes(s, dir)
-    val probeVecs = probeRows.toSeq.toDF("probe_id", "pq", "pqn")
 
     def routedRows(np: Int): Seq[(Long, Long, Array[Long], Long)] =
       probeRows.toSeq.flatMap { case (pid, q, qn) =>
@@ -3933,9 +3646,7 @@ object Similarity {
     * count. */
   /** The beam-search + equal-budget comparison tail of the q107
     * oracle (pr1 probe routing through the final 2-row relation) —
-    * requires `n`, `pset`, `cents`, `assign`, `graph`, `exact5`;
-    * shared verbatim by the full and held forms so the measured
-    * semantics cannot drift between scales. */
+    * requires `n`, `pset`, `cents`, `assign`, `graph`, `exact5`. */
   private def graphAnnTailSql: String =
     s"""pr1 AS (
        |  SELECT probe_id, cent_id FROM (
@@ -4074,22 +3785,6 @@ object Similarity {
        |  UNION ALL SELECT vec_id, nbr FROM nd),
        |$graphAnnTailSql""".stripMargin)
 
-  /** The sf1 gate's q107 oracle — HELD (round-13 item 7): the exact
-    * baseline reads the dumped `exacttopk`, the quantizer/assignment
-    * read `ivfcents`/`nnroutes` (rank-1), and the neighbor GRAPH —
-    * whose gpool/g0/NN-descent re-derivation is the oracle's dominant
-    * cost at sf1 — reads the dumped `nngraph` rows (g0 ∪ nd = the
-    * 'g' and 'x' sources together). Only the probe-side beam search
-    * and the equal-budget IVF comparison are re-derived
-    * ([[graphAnnTailSql]], shared verbatim with the full form); the
-    * per-round scales keep [[graphAnnSql]], so held == recomputed
-    * stays proven every round. */
-  val graphAnnHeldSql: String = mat(
-    s"""WITH $exactHeldBaseSql,
-       |$heldCentsAssignSql,
-       |graph AS (SELECT vec_id, nbr FROM nngraph),
-       |$graphAnnTailSql""".stripMargin)
-
   // ------------------------------------------------------------------
   // q116/q117: DELETE LIFECYCLE OVER THE GRAPH-ANN ARTIFACT FAMILY
   // (round-11 lead item). q106 covers ivfassign/ivfpq/pqcodes (+ the
@@ -4169,7 +3864,7 @@ object Similarity {
     // sparse drives — fails loudly instead of via an opaque hash
     // mismatch if the dials ever diverge (round-11 advice)
     require(NdExp >= GraphG, "extras recompute assumes NdExp >= GraphG")
-    val cents = ivfCents(s, dir)
+    val cents = ivfCents(s, dir, Full)
     val graph = nnGraphTable(s, dir)
     val delN = del.select(col("vec_id").as("nbr"))
     val g0Held = graph.filter(col("src") === "g")
@@ -4246,8 +3941,7 @@ object Similarity {
     * rebuild for an ARBITRARY delete relation. */
   private[graft] def nnGraphDeleteMaintainedFor(s: SparkSession, dir: String,
       del: DataFrame): (DataFrame, DataFrame) = {
-    val cents = ivfCents(s, dir)
-    val assign = ivfAssignTable(s, dir, cents)
+    val assign = ivfAssignTable(s, dir, Full)
     val (maintained, _, a2) =
       nnGraphDeleteParts(s, dir, del, assign.join(del, Seq("vec_id"), "left_anti"))
     (maintained, a2)
@@ -4255,8 +3949,8 @@ object Similarity {
 
   private[graft] def nnGraphRebuiltFor(s: SparkSession, dir: String,
       del: DataFrame): DataFrame = {
-    val cents = ivfCents(s, dir)
-    val surv = ivfAssignTable(s, dir, cents).join(del, Seq("vec_id"), "left_anti")
+    val cents = ivfCents(s, dir, Full)
+    val surv = ivfAssignTable(s, dir, Full).join(del, Seq("vec_id"), "left_anti")
     val routed = routeProbesDf(
         surv.select(col("vec_id"), col("q"), col("qn")), cents, GraphR)
       .select(col("probe_id").as("vec_id"), col("cent_id"),
@@ -4265,8 +3959,7 @@ object Similarity {
   }
 
   def annDeleteGraph(s: SparkSession, dir: String): DataFrame = {
-    val cents = ivfCents(s, dir)
-    val assign = ivfAssignTable(s, dir, cents)
+    val assign = ivfAssignTable(s, dir, Full)
     val etk = exactTopKTable(s, dir)
     val del = vecDelSet(s, dir)
     // the survivors' assignment — q106's `ivfassigndel` artifact
@@ -4473,8 +4166,7 @@ object Similarity {
     val del = Tables.embeddings(s, dir)
       .filter(pmod(col("vec_id"), lit(SparseDelMod)) === lit(SparseDelRem))
       .select(col("vec_id"))
-    val cents = ivfCents(s, dir)
-    val assign = ivfAssignTable(s, dir, cents)
+    val assign = ivfAssignTable(s, dir, Full)
     val (_, refreshed, a2) = nnGraphDeleteParts(s, dir, del,
       assign.join(del, Seq("vec_id"), "left_anti"))
     // tombstone-event publish (round-12): at this density the carried
@@ -4704,7 +4396,7 @@ object Similarity {
     * append∘delete, q129/q130 compaction) and spec-level. */
   def annLifecycle(s: SparkSession, dir: String): DataFrame = {
     val dM = Dedup.DelMod; val dR = Dedup.DelRem
-    val bc = s.sparkContext.broadcast(ivfCentsBase(s, dir))
+    val bc = s.sparkContext.broadcast(ivfCents(s, dir, Standing))
     val emb = Tables.embeddings(s, dir)
     val bkt = Some((Layout.Buckets, Seq("cent_id")))
     val base = lifeAssign(s, emb.filter(pmod(col("vec_id"), lit(5)) =!= 0), bc)
@@ -4783,51 +4475,6 @@ object Similarity {
          |  UNION ALL
          |  ${row("total", "")}) t
          |ORDER BY artifact""".stripMargin)
-  }
-
-  /** The sf1 gate's q131 oracle (round-15 item 1 — the lifecycle
-    * family above the quantizer floor): the corpus×K assignment reads
-    * the dumped `lifeassign` artifact (the exacttopk/held-quantizer
-    * pattern — re-deriving K=625 Lloyd training plus a 200k×625
-    * routing cross join is the prohibitive chain at sf1), while the
-    * MEMBERSHIP ALGEBRA — which rows survive append → delete →
-    * re-add → append → compact — stays fully re-derived from the id
-    * arithmetic. Per-round sf0.01/sf0.1 gates keep
-    * [[annLifecycleSql]]'s full training chain, so held == recomputed
-    * stays proven every round. */
-  val annLifecycleHeldSql: String = {
-    val dM = Dedup.DelMod; val dR = Dedup.DelRem
-    def h32(key: String): String =
-      s"CAST(coalesce(sum(CAST('0x' || substr(md5($key), 1, 8) AS BIGINT)), 0) AS BIGINT)"
-    def row(nm: String, where: String): String =
-      s"""SELECT '$nm' AS artifact, CAST(count(*) AS BIGINT) AS n_rows,
-         |       ${h32("CAST(vec_id AS VARCHAR) || '|' || CAST(cent_id AS VARCHAR)")} AS checksum
-         |FROM m $where""".stripMargin
-    mat(
-      s"""WITH assign AS (SELECT vec_id, cent_id FROM lifeassign),
-         |m AS (
-         |  SELECT vec_id, cent_id FROM assign
-         |  WHERE (vec_id % 5 <> 0 AND vec_id % $dM <> $dR)
-         |     OR vec_id % 10 = 0 OR vec_id % 10 = 5)
-         |SELECT artifact, n_rows, checksum FROM (
-         |  ${row("base_survivors", "WHERE vec_id % 5 <> 0")}
-         |  UNION ALL
-         |  ${row("batch1_survivors", s"WHERE vec_id % 10 = 0 AND vec_id % $dM <> $dR")}
-         |  UNION ALL
-         |  ${row("batch2", "WHERE vec_id % 10 = 5")}
-         |  UNION ALL
-         |  ${row("readded", s"WHERE vec_id % 10 = 0 AND vec_id % $dM = $dR")}
-         |  UNION ALL
-         |  ${row("total", "")}) t
-         |ORDER BY artifact""".stripMargin)
-  }
-
-  /** The held-quantizer route of EVERY embedding — q131's per-event
-    * ingest map over the whole id space, dumped by `Sf1Bench` as the
-    * `lifeassign` artifact backing [[annLifecycleHeldSql]]. */
-  private[graft] def lifeAssignDump(s: SparkSession, dir: String): DataFrame = {
-    val bc = s.sparkContext.broadcast(ivfCentsBase(s, dir))
-    lifeAssign(s, Tables.embeddings(s, dir), bc)
   }
 
   /** q132's correction set: one live vector per 13 (vec_id ≡ 1
@@ -4915,7 +4562,7 @@ object Similarity {
     // force q131's lifecycle (its own once-gates): base, batches,
     // takedown, compaction — the upsert continues that artifact
     annLifecycle(s, dir)
-    val bc = s.sparkContext.broadcast(ivfCentsBase(s, dir))
+    val bc = s.sparkContext.broadcast(ivfCents(s, dir, Standing))
     val emb = Tables.embeddings(s, dir)
     // live membership after q131 = everything except the deleted
     // (never re-added) base rows
@@ -5109,222 +4756,6 @@ object Similarity {
          |ORDER BY artifact""".stripMargin)
   }
 
-  /** Shared held chain for the sf1 q132/q136 oracles: membership `m`
-    * off the dumped `lifeassign` route, the correction routing `ups`
-    * RE-DERIVED from raw reversed embeddings against the dumped BASE
-    * centroids (`ivfcentsbase` — training is held; the reversed-route
-    * math, q132's actual subject, is recomputed: ~15k vectors × K
-    * cents, the q96-spot cost class), then carried + fin. */
-  /** Round-17 item 5 follow-through: like [[annDeleteSparseHeldSql]],
-    * the chain runs as STAGED temp-table statements (byte-identical
-    * census, verified both ways at k=10; the composed materialized-CTE
-    * form re-planned the 15k × K reversed-route cross join poorly —
-    * q132's oracle wall 3.3 → 1.4 s). Prefixed per consumer so the
-    * q132 and q136 scripts stay independent in check.py's shared
-    * connection. */
-  private def heldUpsertChainStaged(pfx: String): String = {
-    val dM = Dedup.DelMod; val dR = Dedup.DelRem
-    s"""CREATE OR REPLACE TEMP TABLE ${pfx}n AS
-       |  SELECT vec_id, q,
-       |         CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
-       |  FROM (SELECT vec_id, $qListSql AS q FROM embeddings) t
-       |  WHERE list_sum(list_transform(q, x -> x * x)) > 0;
-       |CREATE OR REPLACE TEMP TABLE ${pfx}cents AS
-       |  SELECT vec_id AS cent_id, q AS cq, qn AS cqn FROM ivfcentsbase;
-       |CREATE OR REPLACE TEMP TABLE ${pfx}m AS
-       |  SELECT vec_id, cent_id FROM lifeassign
-       |  WHERE (vec_id % 5 <> 0 AND vec_id % $dM <> $dR)
-       |     OR vec_id % 10 = 0 OR vec_id % 10 = 5;
-       |CREATE OR REPLACE TEMP TABLE ${pfx}ups AS
-       |  SELECT vec_id, cent_id FROM (
-       |    SELECT v.vec_id, c.cent_id,
-       |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-       |             CAST(CAST(list_sum(list_transform(generate_series(1, len(v.q)),
-       |                    i -> v.q[len(v.q) + 1 - i] * c.cq[i])) AS BIGINT) AS DOUBLE)
-       |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-       |             c.cent_id) AS rn
-       |    FROM ${pfx}n v CROSS JOIN ${pfx}cents c
-       |    WHERE v.vec_id % $UpsMod = $UpsRem
-       |      AND v.vec_id IN (SELECT vec_id FROM ${pfx}m)) t
-       |  WHERE rn = 1;
-       |CREATE OR REPLACE TEMP TABLE ${pfx}carried AS
-       |  SELECT vec_id, cent_id FROM ${pfx}m WHERE vec_id % $UpsMod <> $UpsRem;
-       |CREATE OR REPLACE TEMP TABLE ${pfx}fin AS
-       |  SELECT vec_id, cent_id FROM ${pfx}carried
-       |  UNION ALL SELECT vec_id, cent_id FROM ${pfx}ups""".stripMargin
-  }
-
-  private def heldCensusRow(nm: String, src: String): String = {
-    val h32 =
-      s"CAST(coalesce(sum(CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR) " +
-        s"|| '|' || CAST(cent_id AS VARCHAR)), 1, 8) AS BIGINT)), 0) AS BIGINT)"
-    s"""SELECT '$nm' AS artifact, CAST(count(*) AS BIGINT) AS n_rows,
-       |       $h32 AS checksum
-       |FROM $src""".stripMargin
-  }
-
-  /** The sf1 gate's q132 oracle — held lifeassign/ivfcentsbase, the
-    * reversed-route correction recomputed from raw embeddings
-    * ([[heldUpsertChainSql]]); per-round scales keep the full
-    * training-chain [[annUpsertSql]]. */
-  val annUpsertHeldSql: String =
-    s"""${heldUpsertChainStaged("q132h_")};
-       |SELECT artifact, n_rows, checksum FROM (
-       |  ${heldCensusRow("carried", "q132h_carried")}
-       |  UNION ALL
-       |  ${heldCensusRow("total", "q132h_fin")}
-       |  UNION ALL
-       |  ${heldCensusRow("upserted", "q132h_ups")}) t
-       |ORDER BY artifact""".stripMargin
-
-  /** The sf1 gate's q136 oracle — the held q132 chain censused as the
-    * audit before/after plus the two EXCEPT diffs; per-round scales
-    * keep the full [[annTimeTravelSql]]. */
-  val annTimeTravelHeldSql: String =
-    s"""${heldUpsertChainStaged("q136h_")};
-       |SELECT artifact, n_rows, checksum FROM (
-       |  ${heldCensusRow("corrected_new",
-            "(SELECT vec_id, cent_id FROM q136h_fin EXCEPT SELECT vec_id, cent_id FROM q136h_m) te")}
-       |  UNION ALL
-       |  ${heldCensusRow("corrected_old",
-            "(SELECT vec_id, cent_id FROM q136h_m EXCEPT SELECT vec_id, cent_id FROM q136h_fin) te")}
-       |  UNION ALL
-       |  ${heldCensusRow("horizon_total", "q136h_m")}
-       |  UNION ALL
-       |  ${heldCensusRow("latest_total", "q136h_fin")}) t
-       |ORDER BY artifact""".stripMargin
-
-  /** The sf1 gate's q123 oracle — ARTIFACT-BACKED (round-12 item 5,
-    * the [[annRecallHeldSql]] pattern): reads the dumped held graph
-    * (`nngraph`) and routing (`nnroutes`) tables instead of re-deriving
-    * quantizer + full pool from scratch (the re-deriving form scores
-    * every pool pair — prohibitive at the 200k-vector sf1 point), and
-    * recomputes ONLY the delete maintenance: A1/A2 off the held rows,
-    * the A2 pool refill off the survivor routing, the NN-descent
-    * extras over the A2 cone, carried rows read verbatim. The
-    * per-round sf0.01/sf0.1 gates keep the from-scratch
-    * [[annDeleteSparseSql]], so held == recomputed stays proven every
-    * round; `Sf1Bench` dumps both artifacts next to the snapshot and
-    * swaps this SQL in. */
-  val annDeleteSparseHeldSql: String = {
-    val dM = SparseDelMod; val dR = SparseDelRem
-    def h32(key: String): String =
-      s"CAST(coalesce(sum(CAST('0x' || substr(md5($key), 1, 8) AS BIGINT)), 0) AS BIGINT)"
-    val ck = h32("CAST(vec_id AS VARCHAR) || '|' || CAST(nbr AS VARCHAR) || '|' || CAST(nqn AS VARCHAR)")
-    // Round-17 item 5: the chain runs as STAGED temp-table statements
-    // (check.py's `con.sql` executes the script and returns the final
-    // SELECT) instead of one materialized-CTE query — IDENTICAL
-    // derivation and byte-identical census (verified both ways at
-    // k=10), but DuckDB plans each stage in isolation, which cut the
-    // sf1 oracle wall from 5.7 s to 2.3 s where the composed form
-    // repeatedly rebuilt the 1.8M-pair scoring join's hash side.
-    // Nothing is held that was recomputed before — the gate count and
-    // the re-derivation surface are unchanged.
-    s"""CREATE OR REPLACE TEMP TABLE q123h_n AS
-       |  SELECT vec_id, q,
-       |         CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
-       |  FROM (SELECT vec_id, $qListSql AS q FROM embeddings) t
-       |  WHERE list_sum(list_transform(q, x -> x * x)) > 0;
-       |CREATE OR REPLACE TEMP TABLE q123h_del AS
-       |  SELECT vec_id FROM q123h_n WHERE vec_id % $dM = $dR;
-       |CREATE OR REPLACE TEMP TABLE q123h_sg0 AS
-       |  SELECT vec_id, nbr, nqn FROM nngraph WHERE src = 'g'
-       |    AND vec_id NOT IN (SELECT vec_id FROM q123h_del);
-       |CREATE OR REPLACE TEMP TABLE q123h_a1 AS
-       |  SELECT DISTINCT vec_id FROM q123h_sg0
-       |  WHERE nbr IN (SELECT vec_id FROM q123h_del);
-       |CREATE OR REPLACE TEMP TABLE q123h_a2 AS
-       |  SELECT vec_id FROM q123h_a1
-       |  UNION SELECT g.vec_id FROM q123h_sg0 g
-       |        JOIN q123h_a1 ON q123h_a1.vec_id = g.nbr;
-       |CREATE OR REPLACE TEMP TABLE q123h_rs AS
-       |  SELECT vec_id, cent_id FROM nnroutes
-       |  WHERE vec_id NOT IN (SELECT vec_id FROM q123h_del);
-       |CREATE OR REPLACE TEMP TABLE q123h_pool AS
-       |  SELECT DISTINCT a.vec_id, b.vec_id AS nbr
-       |  FROM q123h_rs a JOIN q123h_a2 USING (vec_id)
-       |  JOIN q123h_rs b ON b.cent_id = a.cent_id AND b.vec_id <> a.vec_id;
-       |CREATE OR REPLACE TEMP TABLE q123h_refsc AS
-       |  SELECT p.vec_id, p.nbr, vb.qn AS nqn,
-       |         CAST(CAST(list_inner_product(va.q, vb.q) AS BIGINT) AS DOUBLE)
-       |           / sqrt(CAST(va.qn AS DOUBLE) * CAST(vb.qn AS DOUBLE)) AS sc
-       |  FROM q123h_pool p JOIN q123h_n va ON va.vec_id = p.vec_id
-       |  JOIN q123h_n vb ON vb.vec_id = p.nbr;
-       |CREATE OR REPLACE TEMP TABLE q123h_ref AS
-       |  SELECT vec_id, nbr, nqn FROM (
-       |    SELECT vec_id, nbr, nqn,
-       |           row_number() OVER (PARTITION BY vec_id
-       |                              ORDER BY sc DESC, nbr) AS rn
-       |    FROM q123h_refsc) t
-       |  WHERE rn <= $GraphG;
-       |CREATE OR REPLACE TEMP TABLE q123h_g0new AS
-       |  SELECT vec_id, nbr FROM q123h_sg0
-       |  WHERE vec_id NOT IN (SELECT vec_id FROM q123h_a2)
-       |  UNION ALL SELECT vec_id, nbr FROM q123h_ref;
-       |CREATE OR REPLACE TEMP TABLE q123h_ndc AS
-       |  SELECT DISTINCT a.vec_id, b.nbr
-       |  FROM q123h_g0new a JOIN q123h_a2 USING (vec_id)
-       |  JOIN q123h_g0new b ON b.vec_id = a.nbr
-       |  WHERE b.nbr <> a.vec_id
-       |    AND NOT EXISTS (SELECT 1 FROM q123h_g0new e
-       |                    WHERE e.vec_id = a.vec_id AND e.nbr = b.nbr);
-       |CREATE OR REPLACE TEMP TABLE q123h_ndsc AS
-       |  SELECT c.vec_id, c.nbr, vb.qn AS nqn,
-       |         CAST(CAST(list_inner_product(va.q, vb.q) AS BIGINT) AS DOUBLE)
-       |           / sqrt(CAST(va.qn AS DOUBLE) * CAST(vb.qn AS DOUBLE)) AS sc
-       |  FROM q123h_ndc c JOIN q123h_n va ON va.vec_id = c.vec_id
-       |  JOIN q123h_n vb ON vb.vec_id = c.nbr;
-       |CREATE OR REPLACE TEMP TABLE q123h_nd AS
-       |  SELECT vec_id, nbr, nqn FROM (
-       |    SELECT vec_id, nbr, nqn,
-       |           row_number() OVER (PARTITION BY vec_id
-       |                              ORDER BY sc DESC, nbr) AS rn
-       |    FROM q123h_ndsc) t
-       |  WHERE rn <= $NdAdd;
-       |SELECT artifact, n_rows, checksum FROM (
-       |  SELECT 'pool_refreshed' AS artifact,
-       |         CAST(count(*) AS BIGINT) AS n_rows, $ck AS checksum
-       |  FROM q123h_ref
-       |  UNION ALL
-       |  SELECT 'pool_untouched', CAST(count(*) AS BIGINT), $ck
-       |  FROM q123h_sg0 WHERE vec_id NOT IN (SELECT vec_id FROM q123h_a2)
-       |  UNION ALL
-       |  SELECT 'extras_refreshed', CAST(count(*) AS BIGINT), $ck
-       |  FROM q123h_nd
-       |  UNION ALL
-       |  SELECT 'extras_untouched', CAST(count(*) AS BIGINT), $ck
-       |  FROM nngraph WHERE src = 'x'
-       |    AND vec_id NOT IN (SELECT vec_id FROM q123h_del)
-       |    AND vec_id NOT IN (SELECT vec_id FROM q123h_a2)) t
-       |ORDER BY artifact""".stripMargin
-  }
-
-  /** The sf1 dump's routing artifact (round-12 item 5): the held
-    * snapshot's top-[[GraphR]] cell routing with quantized payloads —
-    * what [[nnGraphTable]] derives inline at build time, exposed so
-    * the sf1 q123 oracle can read it instead of re-deriving the
-    * quantizer. */
-  private[graft] def nnRoutesDump(s: SparkSession, dir: String): DataFrame = {
-    val cents = ivfCents(s, dir)
-    val assign = ivfAssignTable(s, dir, cents)
-    routeProbesDf(assign, cents, GraphR)
-      .select(col("probe_id").as("vec_id"), col("cent_id"), col("r"),
-        col("pq").as("q"), col("pqn").as("qn"))
-  }
-
-  /** The sparse takedown's cone size at a snapshot — (|A2|, vertices);
-    * `Sf1Bench` records the sf1 point next to the probe's
-    * 30.5% → 10.4% trend. */
-  private[graft] def sparseDeleteConeStats(s: SparkSession, dir: String): (Long, Long) = {
-    val del = Tables.embeddings(s, dir)
-      .filter(pmod(col("vec_id"), lit(SparseDelMod)) === lit(SparseDelRem))
-      .select(col("vec_id"))
-    val cents = ivfCents(s, dir)
-    val assign = ivfAssignTable(s, dir, cents)
-    val (_, _, a2) = nnGraphDeleteParts(s, dir, del,
-      assign.join(del, Seq("vec_id"), "left_anti"))
-    (a2.count(), nnGraphTable(s, dir).select(col("vec_id")).distinct().count())
-  }
 
   /** q117: TARGETED DELETE over the BASE-family graph artifacts — the
     * written routing table (`groutesbase`) and the held-snapshot kNN
@@ -5341,8 +4772,6 @@ object Similarity {
     * base quantizer (trained on the standing corpus, the q108
     * contract), with the pool scored once and ranked twice. */
   def annDeleteBase(s: SparkSession, dir: String): DataFrame = {
-    val cents = ivfCentsBase(s, dir)
-    ivfAssignBase(s, dir, cents) // force the base chain's once-gates
     val routesB = gRoutesBase(s, dir)
     val graphB = nnGraphBaseTable(s, dir)
     val del = vecDelSet(s, dir)

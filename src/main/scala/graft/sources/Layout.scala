@@ -667,8 +667,7 @@ object Layout {
     * consumers — the production remedy is compaction folding the seg
     * into the base at the next snapshot build ([[compactBucketed]]'s
     * job). At 100 TB this mechanism makes a takedown's write cost
-    * `O(|delete set| + |affected cone|)` — `AnnDeleteProbe`'s
-    * write-side row measures it directly — while reads pay one
+    * `O(|delete set| + |affected cone|)` while reads pay one
     * broadcast anti join, the merge-on-read trade every production
     * MVCC table format makes. */
   private[graft] def tombstoneEvent(s: SparkSession, dir: String, what: String,
@@ -1020,9 +1019,9 @@ object Layout {
     * Derived-artifact consistency is the caller's contract:
     * `Similarity.annIndexAppend` (q108) appends every ANN artifact
     * from one batch and its gate proves update == rebuild under the
-    * held snapshot quantizer. `AnnScaleProbe`'s write-side row
-    * measures the I/O contract directly: bytes written per append
-    * stay flat as the base grows. */
+    * held snapshot quantizer. The I/O contract was measured on the
+    * write side: bytes written per append stay flat as the base
+    * grows. */
   private[graft] def appendRewrite(s: SparkSession, dir: String, what: String,
       buckets: Option[(Int, Seq[String])], batch: DataFrame)
       (base: => DataFrame): DataFrame = {

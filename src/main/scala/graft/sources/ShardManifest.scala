@@ -18,17 +18,7 @@ import org.apache.spark.sql.types.StructType
   * recorded range) — always sound for skipping; absent bounds (legacy
   * manifests, tombstone files) never skip. */
 private[graft] final case class ShardFileEnt(name: String, len: Long,
-    minDoc: Option[Long] = None, maxDoc: Option[Long] = None) {
-  /** Can this file hold a doc_id inside [lo, hi] ∩ points? Unknown
-    * bounds → maybe (never skip what cannot be ruled out). */
-  def mayMatch(lo: Option[Long], hi: Option[Long],
-      points: Option[Set[Long]]): Boolean = (minDoc, maxDoc) match {
-    case (Some(mn), Some(mx)) =>
-      lo.forall(_ <= mx) && hi.forall(_ >= mn) &&
-        points.forall(_.exists(p => p >= mn && p <= mx))
-    case _ => true
-  }
-}
+    minDoc: Option[Long] = None, maxDoc: Option[Long] = None)
 
 /** One shard's statistics line: row count always; payload mass and id
   * range when the layout's schema carries the columns; per-column

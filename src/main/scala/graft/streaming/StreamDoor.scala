@@ -31,8 +31,8 @@ object StreamDoor {
     * checkpoint and sink travel together — the restart/recovery
     * matrix is `StreamingSpec`'s subject, not this gate's). */
   def streamIndexDoor(s: SparkSession, dir: String): DataFrame = {
-    val cents = Similarity.ivfCentsBase(s, dir)
-    val rcb = Similarity.resTrainBase(s, dir, cents)
+    val cents = Similarity.ivfCents(s, dir, Similarity.Standing)
+    val rcb = Similarity.resTrain(s, dir, Similarity.Standing)
     val out = Layout.materializedTable(s, dir, "sdoorout") {
       val base = Layout.warehousePath(s, Layout.tableName(dir, "sdoorrun"))
       Layout.deleteWarehouseDir(s, base)
@@ -207,8 +207,8 @@ object StreamDoor {
     * stream's admissions equal the batch semantic-dedup math through
     * the engine's machinery. */
   def streamSemanticDoor(s: SparkSession, dir: String): DataFrame = {
-    val cents = Similarity.ivfCentsBase(s, dir)
-    val corpusAssign = Similarity.ivfAssignBase(s, dir, cents)
+    val cents = Similarity.ivfCents(s, dir, Similarity.Standing)
+    val corpusAssign = Similarity.ivfAssignTable(s, dir, Similarity.Standing)
     val out = Layout.materializedTable(s, dir, "semdoorout") {
       val base = Layout.warehousePath(s, Layout.tableName(dir, "semdoorrun"))
       Layout.deleteWarehouseDir(s, base)
@@ -249,7 +249,7 @@ object StreamDoor {
     * final stable view (upserted/carried/total) hash-matches
     * [[Similarity.upsertDoorSql]]'s from-raw-embeddings derivation. */
   def streamUpsertDoor(s: SparkSession, dir: String): DataFrame = {
-    val bc = s.sparkContext.broadcast(Similarity.ivfCentsBase(s, dir))
+    val bc = s.sparkContext.broadcast(Similarity.ivfCents(s, dir, Similarity.Standing))
     val emb = Tables.embeddings(s, dir)
     val bkt = Some((Layout.Buckets, Seq("cent_id")))
     // seed the store OUTSIDE the census gate (nested once-gates are
@@ -432,12 +432,6 @@ object StreamDoor {
         concat_ws("\u0001", col("cname"), col("v"))), lit(1L << 40))).as("k"),
       col("cname"), col("v"), col("cnt"))
 
-  /** Total sub-events BEYOND the first that [[chunkedCountUpsert]]
-    * split deltas into this JVM (0 while every delta fits the
-    * envelope) — the sf1 JSON line records it so the artifact shows
-    * whether the chunked path actually EXECUTED at that scale. */
-  private[graft] val chunkSplits = new java.util.concurrent.atomic.AtomicLong()
-
   /** Envelope-aware upsert (see [[streamProfileDoor]]'s docstring): a
     * delta above `spark.graft.massDeleteKeys` is split into key-residue
     * sub-events. Residue-class sizes are multinomial, NOT bounded by
@@ -454,17 +448,7 @@ object StreamDoor {
     * auxiliary actions on the DELTA, never the corpus. */
   private[graft] def chunkedCountUpsert(s: SparkSession, dir: String, what: String,
       bkt: Option[(Int, Seq[String])], delta: DataFrame): Unit = {
-    // the door's own envelope knob (`spark.graft.door.chunkEnv`): a
-    // deployment sizes it to the per-executor broadcast/upsert budget
-    // INDEPENDENTLY of the global takedown envelope — the sf1 gate
-    // runs the doors at a production-ratio value so the chunked path
-    // EXECUTES at scale (it no-ops at the oracle scales), with the
-    // hash gate invariant to the chunking by construction. Never
-    // above massDeleteKeys: each chunk must still pass upsertSegment's
-    // hard envelope.
-    val env = math.max(1L, math.min(Layout.massDeleteKeys(s),
-      s.conf.getOption("spark.graft.door.chunkEnv").map(_.toLong)
-        .getOrElse(Layout.massDeleteKeys(s))))
+    val env = math.max(1L, Layout.massDeleteKeys(s))
     val n = delta.count()
     if (n <= env) {
       Layout.upsertSegment(s, dir, what, bkt, delta, Seq("k"))
@@ -474,7 +458,6 @@ object StreamDoor {
           .agg(count(lit(1)).as("n")).agg(max(col("n"))).head().getLong(0)
       var chunks = ((n - 1) / env + 1).toInt
       while (maxClass(chunks) > env) chunks += math.max(1, chunks / 2)
-      chunkSplits.addAndGet(chunks - 1L)
       (0 until chunks).foreach { c =>
         Layout.upsertSegment(s, dir, what, bkt,
           delta.filter(pmod(col("k"), lit(chunks.toLong)) === c), Seq("k"))

@@ -19,7 +19,7 @@ import graft.operators.Pipeline
   *     keep-reference that keeps the hot-bucket count canonicalized onto
   *     the band barrier) is a runtime-plan property that silently
   *     evaporates if a future Spark folds the reference away. Pin the
-  *     executed shuffle/reuse counts (PlanCountProbe's logic as a test).
+  *     executed shuffle/reuse counts.
   */
 class BroadcastBudgetSpec extends SparkSpec {
 

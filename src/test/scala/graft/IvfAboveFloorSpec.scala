@@ -31,11 +31,11 @@ class IvfAboveFloorSpec extends SparkSpec {
       .reduce(_ union _)
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 
-    val n = Similarity.corpusN(spark, dir)
-    val k = Similarity.ivfK(spark, dir)
+    val n = Similarity.corpusN(spark, dir, Similarity.Full)
+    val k = Similarity.ivfK(spark, dir, Similarity.Full)
     assert(n == 8000L && k == Similarity.ivfKOf(n) && k == 250,
       s"adaptive capacity wrong: n=$n K=$k")
-    val sample = Similarity.trainSample(spark, dir)
+    val sample = Similarity.trainSample(spark, dir, Similarity.Full)
     assert(sample.length == Similarity.trainNOf(n) && sample.length == 8000,
       s"training sample not tracking K: ${sample.length}")
 

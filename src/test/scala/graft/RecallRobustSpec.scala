@@ -33,8 +33,8 @@ class RecallRobustSpec extends SparkSpec {
     // the realized snapshot artifacts obey the formula: the written
     // quantizer has exactly ivfK(corpus) centroids at both scales
     Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1").foreach { dir =>
-      val k = Similarity.ivfK(spark, dir)
-      assert(k == Similarity.ivfKOf(Similarity.corpusN(spark, dir)))
+      val k = Similarity.ivfK(spark, dir, Similarity.Full)
+      assert(k == Similarity.ivfKOf(Similarity.corpusN(spark, dir, Similarity.Full)))
       val clusters = Similarity.clusterBalance(spark, dir).count()
       assert(clusters <= k && clusters >= k * 9L / 10L,
         s"$dir: $clusters realized clusters vs K=$k — quantizer capacity not tracking the snapshot")

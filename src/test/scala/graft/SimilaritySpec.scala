@@ -126,7 +126,7 @@ class SimilaritySpec extends SparkSpec {
       .findFirstMatchIn(plan)
     assert(sel.isDefined, s"no bucket pruning in the point plan:\n$plan")
     // one probe, nprobe = 2 → ≤ 2 cell-id literals → ≤ 2 buckets of 8
-    // touched (the production regime Sf1Bench demonstrates at sf1)
+    // touched (the production point-lookup regime)
     assert(sel.get.group(1).toInt <= 2 && sel.get.group(2).toInt > 2,
       s"point lookup did not prune to its nprobe: ${sel.get.matched}")
     // the result is exactly the batch path's rows for that probe
@@ -168,7 +168,8 @@ class SimilaritySpec extends SparkSpec {
 
   test("distributed probe routing equals driver-side routeCents rank for rank") {
     val cents = Similarity.lloydCents(
-      Similarity.trainSample(spark, sfDir), Similarity.ivfK(spark, sfDir)).sortBy(_._1)
+      Similarity.trainSample(spark, sfDir, Similarity.Full),
+      Similarity.ivfK(spark, sfDir, Similarity.Full)).sortBy(_._1)
     val probes = Similarity.boundedProbes(
       Similarity.quantizedFrom(graft.sources.Tables.embeddings(spark, sfDir)))
     val viaDf = Similarity.routeProbesDf(probes, cents, 8)
@@ -231,18 +232,18 @@ class SimilaritySpec extends SparkSpec {
     }.sum
 
   test("q90 PQ encoding: every sample vector gets the argmin code per subspace, ties low") {
-    val train = Similarity.pqTrain(spark, sfDir)
+    val train = Similarity.pqTrain(spark, sfDir, Similarity.Full)
     // capacity scales with the snapshot: one code per 8 sample rows,
     // clamped to [16, 256] (the round-8 no-degradation fix)
-    val pqK = Similarity.pqKOf(Similarity.trainSample(spark, sfDir).length)
+    val pqK = Similarity.pqKOf(Similarity.trainSample(spark, sfDir, Similarity.Full).length)
     assert(train.length == pqK)
     assert(pqK >= 16 && pqK <= 256)
-    val codes = Similarity.pqCodesTable(spark, sfDir, train)
+    val codes = Similarity.pqCodesTable(spark, sfDir, Similarity.Full)
       .as[(Long, Seq[Int])].collect().toMap
     // the TRAINED codewords are floor-means, not corpus vectors, so
     // the invariant is argmin: the assigned code's distance must beat
     // every lower code strictly and every higher code weakly
-    Similarity.trainSample(spark, sfDir).take(64).foreach { case (vid, q, _) =>
+    Similarity.trainSample(spark, sfDir, Similarity.Full).take(64).foreach { case (vid, q, _) =>
       val cs = codes(vid)
       for (sub <- 0 until 8) {
         val got = cs(sub)
@@ -255,12 +256,12 @@ class SimilaritySpec extends SparkSpec {
       }
     }
     // and every corpus vector got exactly one 8-code row
-    assert(codes.size == Similarity.pqCodesTable(spark, sfDir, train).count())
+    assert(codes.size == Similarity.pqCodesTable(spark, sfDir, Similarity.Full).count())
     assert(codes.values.forall(cs => cs.length == 8 && cs.forall(c => c >= 1 && c <= pqK)))
   }
 
   test("Lloyd training improves both codebook objectives over the hash-picked seeds") {
-    val sample = Similarity.trainSample(spark, sfDir)
+    val sample = Similarity.trainSample(spark, sfDir, Similarity.Full)
     def cos(q: Array[Long], qn: Long, c: Array[Long], cn: Long): Double = {
       var s = 0L; var i = 0
       while (i < q.length) { s += q(i) * c(i); i += 1 }
@@ -291,16 +292,31 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("trainSample is memoized per snapshot: repeat calls return the SAME collected array") {
-    // the sample is a pure function of the (session, dir) snapshot —
-    // every trainer (index builders, per-query codebook derivations,
-    // the recall harness) must share one corpus scan, not re-collect;
-    // reference identity proves the memo, distinct dirs stay distinct
-    val a = Similarity.trainSample(spark, sfDir)
-    assert(a eq Similarity.trainSample(spark, sfDir),
+    // the sample is a pure function of the (session, corpus, dir)
+    // snapshot — every trainer (index builders, per-query codebook
+    // derivations, the recall harness) must share one corpus scan, not
+    // re-collect; reference identity proves the memo, distinct dirs
+    // and distinct corpora stay distinct
+    import Similarity.{Full, Standing}
+    val a = Similarity.trainSample(spark, sfDir, Full)
+    assert(a eq Similarity.trainSample(spark, sfDir, Full),
       "repeat trainSample call re-collected the sample")
-    val other = Similarity.trainSample(spark, "/root/testdata/sf0.01")
+    val other = Similarity.trainSample(spark, "/root/testdata/sf0.01", Full)
     assert(!(a eq other), "distinct snapshots must not share a sample")
-    assert(other eq Similarity.trainSample(spark, "/root/testdata/sf0.01"))
+    assert(other eq Similarity.trainSample(spark, "/root/testdata/sf0.01", Full))
+    val std = Similarity.trainSample(spark, sfDir, Standing)
+    assert(!(a eq std), "the standing corpus must not share the full corpus's sample")
+    assert(std eq Similarity.trainSample(spark, sfDir, Standing))
+    assert(std.nonEmpty && std.forall(_._1 % 5 != 0),
+      "the standing sample holds a vec_id ≡ 0 mod 5")
+    assert(a.exists(_._1 % 5 == 0), "the full sample never reached the batch residue")
+    // the memoized standing quantizer is the written ivfcentsbase table
+    def rows(cs: Array[(Long, Array[Long], Long)]): Seq[(Long, Seq[Long], Long)] =
+      cs.map { case (id, q, qn) => (id, q.toSeq, qn) }.toSeq.sortBy(_._1)
+    val cents = Similarity.ivfCents(spark, sfDir, Standing)
+    val written = spark.table(graft.sources.Layout.tableName(sfDir, "ivfcentsbase"))
+      .as[(Long, Array[Long], Long)].collect()
+    assert(rows(cents) == rows(written))
   }
 
   test("q97 nprobe curve: monotone non-decreasing recall, consistent with q96 at nprobe=2") {
@@ -395,10 +411,11 @@ class SimilaritySpec extends SparkSpec {
     // equal the driver-side recomputation — encode the candidate's
     // residual to ITS cell against the residual codebook, build the
     // probe's residual table for that cell, sum the 8 lookups
-    val sample = Similarity.trainSample(spark, sfDir)
-    val cents = Similarity.lloydCents(sample, Similarity.ivfK(spark, sfDir)).sortBy(_._1)
+    val sample = Similarity.trainSample(spark, sfDir, Similarity.Full)
+    val cents = Similarity.lloydCents(sample,
+      Similarity.ivfK(spark, sfDir, Similarity.Full)).sortBy(_._1)
     val centById = cents.map(c => (c._1, c._2)).toMap
-    val resCb = Similarity.resTrain(spark, sfDir, cents)
+    val resCb = Similarity.resTrain(spark, sfDir, Similarity.Full)
     val pqK = resCb.length
     val e = Similarity.quantizedFrom(graft.sources.Tables.embeddings(spark, sfDir))
       .select(col("vec_id"), col("q"), col("qn"))

@@ -470,8 +470,8 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.Similarity
     import graft.streaming.DocIngest
     val dir = java.nio.file.Files.createTempDirectory("graft_sem_restart_").toString
-    val cents = Similarity.ivfCentsBase(spark, sfDir)
-    val corpusAssign = Similarity.ivfAssignBase(spark, sfDir, cents)
+    val cents = Similarity.ivfCents(spark, sfDir, Similarity.Standing)
+    val corpusAssign = Similarity.ivfAssignTable(spark, sfDir, Similarity.Standing)
     val batchDf = graft.sources.Tables.embeddings(spark, sfDir)
       .filter(pmod(col("vec_id"), lit(5)) === 0)
     val want = Similarity.semanticMatchEvents(batchDf, cents, corpusAssign)
@@ -510,8 +510,8 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{col, lit, pmod}
     import graft.operators.Similarity
     import graft.streaming.DocIngest
-    val cents = Similarity.ivfCentsBase(spark, sfDir)
-    val corpusAssign = Similarity.ivfAssignBase(spark, sfDir, cents)
+    val cents = Similarity.ivfCents(spark, sfDir, Similarity.Standing)
+    val corpusAssign = Similarity.ivfAssignTable(spark, sfDir, Similarity.Standing)
     val batchDf = graft.sources.Tables.embeddings(spark, sfDir)
       .filter(pmod(col("vec_id"), lit(5)) === 0)
     val want = Similarity.semanticMatchEvents(batchDf, cents, corpusAssign)
@@ -545,8 +545,8 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{col, lit, pmod}
     import graft.operators.Similarity
     import graft.streaming.DocIngest
-    val cents = Similarity.ivfCentsBase(spark, sfDir)
-    val rcb = Similarity.resTrainBase(spark, sfDir, cents)
+    val cents = Similarity.ivfCents(spark, sfDir, Similarity.Standing)
+    val rcb = Similarity.resTrain(spark, sfDir, Similarity.Standing)
     val batchDf = graft.sources.Tables.embeddings(spark, sfDir)
       .filter(pmod(col("vec_id"), lit(5)) === 0)
     def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, String)] =

@@ -9,9 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * the rule STRUCTURALLY: the operator sources (sources/, operators/,
   * streaming/ — everything that touches warehouse paths at query
   * time) carry zero java.io.File / FileUtils / java.net.URI-path-math
-  * references. Driver-side mains (Verify's outDir, Sf1Bench's /tmp
-  * snapshot, the probe tools) write LOCAL artifacts by contract and
-  * are exempt.
+  * references. Driver-side mains (Verify's outDir) write LOCAL
+  * artifacts by contract and are exempt.
   *
   * And the positive side: [[graft.sources.Layout]]'s helpers resolve
   * through `Path.getFileSystem`, so a warehouse URI with any

@@ -58,21 +58,8 @@ def df_strs(df):
 
 def main():
     con = duckdb.connect()
-    # beyond the driver's base tables, register any extra <name>.parquet
-    # next to the snapshot — Sf1Bench dumps written ARTIFACTS (e.g.
-    # exacttopk, the ground-truth table) there so artifact-backed
-    # oracles (annRecallHeldSql) can read them
-    extra = sorted(
-        f[:-len(".parquet")] for f in os.listdir(SF_DIR)
-        if f.endswith(".parquet") and f[:-len(".parquet")] not in TABLES
-        and f[:-len(".parquet")].isidentifier())
-    for t in TABLES + extra:
-        # driver testdata ships single parquet FILES; the Sf1Bench
-        # snapshot writes Spark DIRECTORIES of part files
-        pat = f"{SF_DIR}/{t}.parquet"
-        if os.path.isdir(pat):
-            pat += "/*.parquet"
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{pat}'")
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
 
     with open(os.path.join(OUT_DIR, "oracle_sql.json")) as f:
         oracles = json.load(f)
@@ -82,11 +69,8 @@ def main():
         if os.path.isdir(os.path.join(OUT_DIR, d)))
 
     n_pass = n_fail = n_noora = 0
-    walls = {}  # per-query oracle wall seconds (round-13 item 7:
-    #             oracle tractability should be a visible number —
-    #             managed by trend, not discovered by a judge timeout)
-    verdicts = {}  # per-query pass/fail/rows_only (SF1BENCH hash_match)
-    rowcounts = {}
+    walls = {}  # per-query oracle wall seconds (oracle tractability
+    #             should be a visible number, managed by trend)
     for name in result_dirs:
         t_start = time.monotonic()
         files = sorted(glob.glob(os.path.join(OUT_DIR, name, "*.parquet")))
@@ -101,8 +85,6 @@ def main():
             n = len(srel.fetchall())
             print(f"NOORA {name}: rows={n} (rows-only check)")
             n_noora += 1
-            verdicts[name] = "rows_only"
-            rowcounts[name] = n
             if n == 0:
                 print(f"      ^ WARNING: zero rows")
             continue
@@ -143,7 +125,6 @@ def main():
                         problems.append(f"  row {i} oracle: {b}")
 
         walls[name] = round(time.monotonic() - t_start, 3)
-        verdicts[name] = "fail" if problems else "pass"
         if problems:
             print(f"FAIL  {name}: ({walls[name]}s oracle wall)")
             for p in problems:
@@ -151,7 +132,6 @@ def main():
             n_fail += 1
         else:
             n = len(sdf)
-            rowcounts[name] = n
             print(f"PASS  {name}: {n} rows ({walls[name]}s oracle wall)")
             if n == 0:
                 print(f"      ^ WARNING: zero rows on both sides")
@@ -165,13 +145,6 @@ def main():
     print("\nslowest oracles: " +
           ", ".join(f"{n}={w}s" for n, w in slow) +
           f"; total oracle wall {round(sum(walls.values()), 1)}s")
-    # machine-readable sidecar for artifact embedding (Sf1 runner &
-    # round notes read this instead of scraping stdout)
-    with open(os.path.join(OUT_DIR, "check_result.json"), "w") as f:
-        json.dump({"pass": n_pass, "fail": n_fail, "rows_only": n_noora,
-                   "verdicts": verdicts, "rows": rowcounts,
-                   "oracle_wall_sec": walls},
-                  f, indent=1, sort_keys=True)
     print(f"== {n_pass} pass, {n_fail} fail, {n_noora} rows-only ==")
     sys.exit(1 if n_fail else 0)
 
