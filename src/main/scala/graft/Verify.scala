@@ -5,17 +5,26 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. Exits with
   * the number of queries that threw or were skipped for a fired skew
   * cap (capped at 255), after every dump and oracle_sql.json are
-  * written — a failure is counted, never only printed. */
+  * written — a failure is counted, never only printed. Exits 2 before
+  * running anything when SPARK_GRAFT_ONLY names an unknown query. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // SPARK_GRAFT_ONLY: optional comma-separated name filter (dev only;
+    // the driver always runs the full set). A name that matches no
+    // query is an error: a typo would otherwise filter out every
+    // query and pass with nothing checked.
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    val unknown = only.fold(Set.empty[String])(_ -- SparkEntry.queries.keySet)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[verify] SPARK_GRAFT_ONLY names no query: " +
+        unknown.toSeq.sorted.mkString(", "))
+      sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY: optional comma-separated name filter (dev only;
-    // the driver always runs the full set).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // Skew-cap tripwire: a query whose execution fired any graft.cap()
     // metric produced a CAPPED result the uncapped SQL oracle cannot
     // match — deleting its dump makes the gate record an explicit

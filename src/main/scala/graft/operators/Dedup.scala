@@ -1592,8 +1592,7 @@ object Dedup {
   def compactionPolicy(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val bkt = Some((Layout.Buckets, Seq("h")))
-    // the probe-shared base artifact (built BEFORE the census gate —
-    // nested once-gates are the "Recursive update" hazard)
+    // the probe-shared base artifact
     val base = Layout.materializedTable(s, dir, "kneebase", bkt) {
       corpusWindowIndex(s, dir).select(col("doc_id"), col("h"))
     }

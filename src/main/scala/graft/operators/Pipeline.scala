@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.SnapMemo
 import graft.sources.Tables
 import graft.functions.Fns._
 
@@ -877,10 +878,6 @@ object Pipeline {
     * unchanged; a production ~50k vocab is the same loop longer). */
   private[graft] val BpeRounds = 6
 
-  private val bpeMergeMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]]())
-
   /** The learned merge table, MEMOIZED per (session, snapshot). Each
     * round is one MAP-SIDE-COMBINED aggregate over the sample's
     * adjacent-pair relation (partial counts per partition, one tiny
@@ -893,9 +890,7 @@ object Pipeline {
     * per-round sample generations are localCheckpointed and freed,
     * the q89 iterative-shape discipline. */
   private[graft] def bpeTrainedMerges(s: SparkSession, dir: String): Seq[(String, String)] =
-    bpeMergeMemo
-      .computeIfAbsent(s, _ => new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]())
-      .computeIfAbsent(dir, _ => bpeTrainedMergesN(s, dir, BpeRounds))
+    SnapMemo(s, dir, "bpeMerges")(bpeTrainedMergesN(s, dir, BpeRounds))
 
   /** The training loop at an explicit round count: the gated q118
     * path runs [[BpeRounds]], the q124 vocabulary [[BpeVocabRounds]]. */
@@ -1695,8 +1690,7 @@ object Pipeline {
   def cdcEvolution(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.Layout
     // force q137's store lifecycle (its events are once-gated inside
-    // its own census gate) BEFORE entering this query's gate — nested
-    // once-gates are the Recursive-update hazard
+    // its own census gate)
     schemaEvolution(s, dir)
     val vs = Layout.readableVersions(s, dir, "docstatupd")
     // min   = the held narrow snapshot; min+1 = its schema-identical
@@ -2355,6 +2349,16 @@ object Pipeline {
        |FROM nv JOIN nd USING (cname) LEFT JOIN topk t USING (cname)
        |ORDER BY cname""".stripMargin)
 
+  /** The standing corpus's max doc_id, memoized per (session,
+    * snapshot) — round-20: q145 re-ran this one-scalar scan aggregate
+    * of an immutable snapshot as a job on every invocation (the
+    * corpusN/pqProbes memo family; profiledCorpus never alters
+    * doc_id, so the raw filtered max is the same value). */
+  private def standingMaxDocId(s: SparkSession, dir: String): Long =
+    SnapMemo(s, dir, "standingMaxDocId")(
+      Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(5)) =!= 0)
+        .agg(max(col("doc_id"))).head().getLong(0))
+
   /** q145: PROFILE MAINTENANCE UNDER DELETE — the other half of the
     * q142 contract, and the documented min/max boundary
     * ("deletes force a re-scan") made code instead of prose. A
@@ -2386,23 +2390,6 @@ object Pipeline {
     * Scale: O(delete set) melt + merge; the re-scan is the honest
     * per-affected-column cost every table-stats system pays, priced
     * once per takedown, and skipped entirely when no extremum falls. */
-  /** The standing corpus's max doc_id, memoized per (session,
-    * snapshot) — round-20: q145 re-ran this one-scalar scan aggregate
-    * of an immutable snapshot as a job on every invocation (the
-    * corpusN/pqProbes memo family; profiledCorpus never alters
-    * doc_id, so the raw filtered max is the same value). */
-  private val maxIdMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]]())
-
-  private def standingMaxDocId(s: SparkSession, dir: String): Long =
-    maxIdMemo
-      .computeIfAbsent(s,
-        _ => new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]())
-      .computeIfAbsent(dir, _ =>
-        Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(5)) =!= 0)
-          .agg(max(col("doc_id"))).head().getLong(0))
-
   def profileDelete(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val standing = profiledCorpus(
@@ -2620,9 +2607,8 @@ object Pipeline {
     val above = docs.filter(pmod(col("doc_id"), lit(4)) === 1)
     val nBelow = below.count(); val nAbove = above.count()
     val envelope = (nBelow + nAbove) / 2
-    // the delete EVENTS run outside the census gate's builder — each
-    // deleteRewrite is itself once-gated, and a nested once is the
-    // Recursive-update hazard documented at Similarity.ivfPqIndex.
+    // the delete EVENTS run outside the census gate's builder (each
+    // deleteRewrite is itself once-gated).
     // NON-REENTRANT by the established q133 in-query conf pattern:
     // the session-global massDeleteKeys is tightened for the two
     // events and restored in the finally — a lifecycle verb running
@@ -2737,9 +2723,8 @@ object Pipeline {
     val del = d.filter(pmod(col("doc_id"), lit(13)) === 4 && present)
       .select(col("doc_id"))
     val batch2 = d.filter(pmod(col("doc_id"), lit(10)) === 5)
-    // gens 1-2 are once-gated inside appendRewrite (run BEFORE the
-    // census gate — nested once-gates are the Recursive-update
-    // hazard); gens 3-6 ride the census once-gate
+    // gens 1-2 are once-gated inside appendRewrite; gens 3-6 ride the
+    // census once-gate
     Layout.appendRewrite(s, dir, "bevo", bkt1, batch1)(base)
     val name = Layout.tableName(dir, "bevoupd")
     val key = concat_ws("|", col("doc_id"), col("source"), col("n_chars"))
@@ -2880,8 +2865,7 @@ object Pipeline {
     val bktB = Some((Layout.Buckets, Seq("vec_id")))
     val presentA = pmod(col("doc_id"), lit(5)) =!= 0 ||
       pmod(col("doc_id"), lit(10)) === 0
-    // gens 1-2 of each store are once-gated inside appendRewrite (run
-    // BEFORE the census gate — the Recursive-update rule)
+    // gens 1-2 of each store are once-gated inside appendRewrite
     Layout.appendRewrite(s, dir, "spga", bktA,
       d.filter(pmod(col("doc_id"), lit(10)) === 0))(
       d.filter(pmod(col("doc_id"), lit(5)) =!= 0))
@@ -3010,8 +2994,7 @@ object Pipeline {
       .select(col("doc_id"))
     val batch0 = d.filter(pmod(col("doc_id"), lit(10)) === 0)
     val bkt = Some((Layout.Buckets, Seq("doc_id")))
-    // gens 1-2 once-gated inside appendRewrite (BEFORE the census
-    // gate — the Recursive-update rule)
+    // gens 1-2 once-gated inside appendRewrite
     Layout.appendRewrite(s, dir, "sph", bkt,
       standing.filter(pmod(col("doc_id"), lit(2)) === 1))(
       standing.filter(pmod(col("doc_id"), lit(2)) === 0))
@@ -3143,8 +3126,7 @@ object Pipeline {
     val bktB = Some((Layout.Buckets, Seq("vec_id")))
     val presentA = pmod(col("doc_id"), lit(5)) =!= 0 ||
       pmod(col("doc_id"), lit(10)) === 0
-    // gens 1-2 once-gated inside appendRewrite (outside the census
-    // gate — the Recursive-update rule)
+    // gens 1-2 once-gated inside appendRewrite
     Layout.appendRewrite(s, dir, "trd", bktA,
       d.filter(pmod(col("doc_id"), lit(10)) === 0))(
       d.filter(pmod(col("doc_id"), lit(5)) =!= 0))
@@ -3934,8 +3916,7 @@ object Pipeline {
     val bkt = Some((Layout.Buckets, Seq("doc_id")))
     val present = pmod(col("doc_id"), lit(5)) =!= 0 ||
       pmod(col("doc_id"), lit(10)) === 0
-    // gens 1-2 once-gated inside appendRewrite (outside the census
-    // gate — the Recursive-update rule)
+    // gens 1-2 once-gated inside appendRewrite
     Layout.appendRewrite(s, dir, "pexp", bkt,
       d.filter(pmod(col("doc_id"), lit(10)) === 0))(
       d.filter(pmod(col("doc_id"), lit(5)) =!= 0))

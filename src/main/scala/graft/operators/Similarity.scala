@@ -7,6 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.SnapMemo
 import graft.sources.{Layout, Tables}
 import graft.functions.Fns._
 
@@ -142,10 +143,8 @@ object Similarity {
     * MEMOIZED per (session, corpus, snapshot): one column-pruned count
     * aggregate, once — it sizes the quantizer capacity and the
     * training sample for every ANN build over the corpus. */
-  private val countMemo = snapMemo[java.lang.Long]()
-
   private[graft] def corpusN(s: SparkSession, dir: String, c: Corpus): Long =
-    memoized[java.lang.Long](countMemo, s, c, dir)(c.rows(quantized(s, dir)).count())
+    SnapMemo(s, dir, "corpusN" + c.suffix)(c.rows(quantized(s, dir)).count())
 
   /** The realized coarse-quantizer capacity for a corpus. */
   private[graft] def ivfK(s: SparkSession, dir: String, c: Corpus): Int =
@@ -178,19 +177,6 @@ object Similarity {
   private def pqKSql: String =
     "GREATEST(16, LEAST(256, (SELECT count(*) FROM samp) // 8))"
 
-  /** Force every CTE in a DuckDB oracle to `AS MATERIALIZED`: DuckDB
-    * INLINES each CTE reference by default, and the unrolled Lloyd
-    * chains reference their predecessor CTE ~3× per iteration — at
-    * [[LloydIters]] = 4 that inlining re-evaluates the whole training
-    * chain O(3^iters) times (measured: q90's oracle 30 s → 2 s at
-    * sf0.01). Pure evaluation-strategy hint; results are identical.
-    * Idempotent (the rewritten text no longer matches the pattern),
-    * and safe on these strings: `\\w+ AS (` only ever introduces a
-    * CTE — column aliases have no paren, CASTs have no AS-paren, and
-    * window clauses read `OVER (`. */
-  // DuckDB-oracle CTE materialization: the shared graft.operators.mat
-  // (one definition per round-11 advice; safety caveat documented there)
-
   /** The corpus training sample, MEMOIZED per (session, corpus, dir)
     * — the sample is a pure function of the snapshot (hash-ordered
     * TakeOrdered), so one scan serves every trainer: the IVF/PQ table
@@ -198,26 +184,10 @@ object Similarity {
     * recall harness retrain from the sample on each call — the memo
     * turns those into driver-array lookups). ONE sample per corpus
     * feeds its coarse quantizer, PQ codebook and residual codebook, so
-    * a family's three trained artifacts cannot drift apart. Weakly
-    * keyed by session,
-    * the `Layout.once` idiom: values are plain arrays with no session
-    * references, so a stopped session's entry is collectable. */
-  private def snapMemo[T]() = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(Corpus, String), T]]())
-
-  private def memoized[T](m: java.util.Map[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[(Corpus, String), T]],
-      s: SparkSession, c: Corpus, dir: String)(f: => T): T =
-    m.computeIfAbsent(s, _ =>
-      new java.util.concurrent.ConcurrentHashMap[(Corpus, String), T]())
-      .computeIfAbsent((c, dir), _ => f)
-
-  private val sampleMemo = snapMemo[Array[(Long, Array[Long], Long)]]()
-
+    * a family's three trained artifacts cannot drift apart. */
   private[graft] def trainSample(s: SparkSession, dir: String,
       c: Corpus): Array[(Long, Array[Long], Long)] =
-    memoized(sampleMemo, s, c, dir)(
+    SnapMemo(s, dir, "trainSample" + c.suffix)(
       trainSampleFrom(c.rows(quantized(s, dir)), trainNOf(corpusN(s, dir, c))))
 
   /** The bounded hash-ordered training sample of a quantized relation
@@ -1050,8 +1020,6 @@ object Similarity {
     * built once per snapshot inside the table builder, then collected
     * to the K-row driver array — the only collect in the ANN index
     * path, constant-size at any corpus scale. */
-  private val centsMemo = snapMemo[Array[(Long, Array[Long], Long)]]()
-
   private[graft] def ivfCents(s: SparkSession, dir: String,
       c: Corpus): Array[(Long, Array[Long], Long)] = {
     import s.implicits._
@@ -1060,7 +1028,7 @@ object Similarity {
     // query invocation (q37/q83/q93/q96/q97/q98/q107/q113…); the
     // quantizer is constant-size driver state exactly like
     // [[trainSample]]'s memo
-    memoized(centsMemo, s, c, dir) {
+    SnapMemo(s, dir, "ivfCents" + c.suffix) {
       Layout.materializedTable(s, dir, "ivfcents" + c.suffix) {
         lloydCents(trainSample(s, dir, c), ivfK(s, dir, c)).toSeq
           .toDF("vec_id", "q", "qn")
@@ -1079,7 +1047,7 @@ object Similarity {
   private[graft] def ivfAssignTable(s: SparkSession, dir: String,
       c: Corpus): DataFrame = {
     import s.implicits._
-    val cents = ivfCents(s, dir, c) // force before the once-gate
+    val cents = ivfCents(s, dir, c)
     Layout.materializedTable(s, dir, "ivfassign" + c.suffix,
         Some((Layout.Buckets, Seq("cent_id")))) {
       val bcCents = s.sparkContext.broadcast(cents)
@@ -1201,11 +1169,9 @@ object Similarity {
     * (session, corpus, snapshot) like [[trainSample]]: at pqK 256 a
     * Lloyd run costs ~10⁸ integer ops, and six queries retrain the
     * identical codebook without the memo. */
-  private val cbMemo = snapMemo[Array[(Long, Array[Long])]]()
-
   private[graft] def pqTrain(s: SparkSession, dir: String,
       c: Corpus): Array[(Long, Array[Long])] =
-    memoized(cbMemo, s, c, dir) {
+    SnapMemo(s, dir, "pqTrain" + c.suffix) {
       val smp = trainSample(s, dir, c)
       lloydCodebook(smp, pqKOf(smp.length))
     }
@@ -1347,13 +1313,11 @@ object Similarity {
     * [[MaxProbes]] rows), and its collect ran as a ~150 ms job in EVERY
     * invocation of the q90/q92/q96/q97/q107 harness family. One scan
     * per snapshot now serves them all; constant driver memory. The
-    * memo key's corpus is always `Full`: probes are drawn from the full
-    * corpus whichever corpus the harness searches. */
-  private val probesMemo = snapMemo[Array[(Long, Array[Long], Long)]]()
-
+    * memo key names no corpus: probes are drawn from the full corpus
+    * whichever corpus the harness searches. */
   private def pqProbes(s: SparkSession, dir: String): Array[(Long, Array[Long], Long)] = {
     import s.implicits._
-    memoized(probesMemo, s, Full, dir) {
+    SnapMemo(s, dir, "pqProbes") {
       boundedProbes(quantized(s, dir))
         .select(col("vec_id"), col("q"), col("qn"))
         .as[(Long, Array[Long], Long)].collect().sortBy(_._1)
@@ -1521,11 +1485,9 @@ object Similarity {
     * Residuals are taken against the corpus's own quantizer
     * ([[ivfCents]]); memoized per (session, corpus, dir) like the
     * sample. */
-  private val resCbMemo = snapMemo[Array[(Long, Array[Long])]]()
-
   private[graft] def resTrain(s: SparkSession, dir: String,
       c: Corpus): Array[(Long, Array[Long])] =
-    memoized(resCbMemo, s, c, dir) {
+    SnapMemo(s, dir, "resTrain" + c.suffix) {
       val smp = trainSample(s, dir, c)
       val cents = ivfCents(s, dir, c)
       val centById = cents.map(c => (c._1, c._2)).toMap
@@ -1559,11 +1521,6 @@ object Similarity {
   private[graft] def ivfPqIndex(s: SparkSession, dir: String,
       c: Corpus): DataFrame = {
     import s.implicits._
-    // materialize the source tables BEFORE entering the composed
-    // table's once-gate: a materializedTable call inside another's
-    // builder is a nested computeIfAbsent on the same gate map —
-    // ConcurrentHashMap detects it as a (bin-collision-dependent,
-    // i.e. flaky) "Recursive update" IllegalStateException
     val cents = ivfCents(s, dir, c)
     val train = resTrain(s, dir, c)
     val assign = ivfAssignTable(s, dir, c)
@@ -2585,7 +2542,7 @@ object Similarity {
     * datum that makes graph maintenance O(batch). */
   private[graft] def gRoutesBase(s: SparkSession, dir: String): DataFrame = {
     val cents = ivfCents(s, dir, Standing)
-    val assign = ivfAssignTable(s, dir, Standing) // force before the once-gate
+    val assign = ivfAssignTable(s, dir, Standing)
     Layout.materializedTable(s, dir, "groutesbase",
         Some((Layout.Buckets, Seq("cent_id")))) {
       routeProbesDf(assign, cents, GraphR)
@@ -2604,7 +2561,7 @@ object Similarity {
     * the same deferred-improvement discipline as the graph's
     * back-edges. */
   private[graft] def nnGraphBaseTable(s: SparkSession, dir: String): DataFrame = {
-    val routes = gRoutesBase(s, dir) // force before the once-gate
+    val routes = gRoutesBase(s, dir)
     Layout.materializedTable(s, dir, "nngraphbase",
         Some((Layout.Buckets, Seq("vec_id")))) {
       val a = routes.select(col("vec_id"), col("cent_id"), col("q"), col("qn"))
@@ -2672,8 +2629,6 @@ object Similarity {
     val cb = pqTrain(s, dir, Standing)
     val rcb = resTrain(s, dir, Standing)
     val centById = cents.map(c => (c._1, c._2)).toMap
-    // materialize every base artifact BEFORE the append once-gates
-    // (the ivfPqIndex "Recursive update" rule)
     val assignBase = ivfAssignTable(s, dir, Standing)
     val codesBase = pqCodesTable(s, dir, Standing)
     val ivfpqBase = ivfPqIndex(s, dir, Standing)
@@ -3138,7 +3093,6 @@ object Similarity {
   def annGraphBackfold(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val cents = ivfCents(s, dir, Standing)
-    // materialize the base artifacts BEFORE the fold's once-gate
     val assignBase = ivfAssignTable(s, dir, Standing)
     val routesBase = gRoutesBase(s, dir)
     val graphBase = nnGraphBaseTable(s, dir)
@@ -3386,8 +3340,6 @@ object Similarity {
 
   private[graft] def nnGraphTable(s: SparkSession, dir: String): DataFrame = {
     val cents = ivfCents(s, dir, Full)
-    // force the base table BEFORE the nngraph once-gate (the
-    // ivfPqIndex "Recursive update" rule)
     val assign = ivfAssignTable(s, dir, Full)
     val sc = s.sparkContext
     val pre = sc.getPersistentRDDs.keySet.toSet
@@ -4319,8 +4271,7 @@ object Similarity {
     * runs once per (session, snapshot), the single-writer maintenance
     * contract. */
   def sparseDeleteCompaction(s: SparkSession, dir: String): DataFrame = {
-    // force the q123 publish BEFORE the census once-gate (shared
-    // artifact; nested gates are the "Recursive update" hazard)
+    // the q123 publish: the shared artifact this census compacts
     sparseDelPub(s, dir)
     Layout.materializedTable(s, dir, "sparsecompcensus") {
       val compacted = Layout.compactDeleted(s, dir, "nngraphdelsparse",
@@ -4407,10 +4358,9 @@ object Similarity {
     val batch2 = lifeAssign(s, emb.filter(pmod(col("vec_id"), lit(10)) === 5 ||
       (pmod(col("vec_id"), lit(dM)) === lit(dR) &&
         pmod(col("vec_id"), lit(10)) === 0)), bc)
-    // events 1-2 are once-gated inside appendRewrite (run it BEFORE
-    // the census gate — nested once-gates are the "Recursive update"
-    // hazard); events 3-5 ride the census once-gate so the sequence
-    // runs exactly once per (session, snapshot)
+    // events 1-2 are once-gated inside appendRewrite; events 3-5 ride
+    // the census once-gate so the sequence runs exactly once per
+    // (session, snapshot)
     Layout.appendRewrite(s, dir, "ivflife", bkt, batch1)(base)
     Layout.materializedTable(s, dir, "ivflifecensus") {
       Layout.deleteSegment(s, dir, "ivflife", del, Seq("vec_id"))

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.util.concurrent.ConcurrentHashMap
 
+import graft.SnapMemo
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,9 +24,9 @@ import org.apache.spark.sql.functions._
   *    planning time (`LayoutSpec` pins ~1/30th file reads for a
   *    one-day filter).
   *
-  * Writes are idempotent per (session, dir): a ConcurrentHashMap gate
-  * makes the first caller write and every later caller re-read — the
-  * in-session stand-in for "run once per corpus snapshot". Bucket
+  * Writes are idempotent per (session, dir): the [[graft.SnapMemo]]
+  * gate makes the first caller write and every later caller re-read —
+  * the in-session stand-in for "run once per corpus snapshot". Bucket
   * count is 8 at test scale; at 100 TB it would be sized so one
   * bucket ≈ one executor-core's worth of data (e.g. 4096), which is a
   * config change, not a plan change. Table names carry a dir tag so
@@ -39,20 +41,6 @@ object Layout {
   /** Catalog name of a [[materializedTable]] artifact (spec surface). */
   private[graft] def tableName(dir: String, what: String): String =
     s"graft_${what}_${tag(dir)}"
-
-  /** Write-once gate, WEAKLY keyed by session: a long-running
-    * multi-session driver stops sessions and builds new ones, and a
-    * strongly-keyed map would pin every dead session (and through it
-    * the whole SparkContext object graph) forever. Values are plain
-    * strings — never DataFrames, which hold a reference back to their
-    * session and would defeat the weak keys — so a stopped session's
-    * entry is collectable as soon as the caller drops it. */
-  private val ensured = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, String]]())
-
-  private def once(s: SparkSession, dir: String, what: String)(write: => Unit): Unit =
-    ensured.computeIfAbsent(s, _ => new ConcurrentHashMap[String, String]())
-      .computeIfAbsent(s"$dir#$what", { _ => write; "done" })
 
   /** Clear a managed table AND its leftover warehouse location before
     * (re)writing. The warehouse outlives the in-memory catalog: a
@@ -148,7 +136,7 @@ object Layout {
       s: SparkSession, dir: String, what: String,
       buckets: Option[(Int, Seq[String])] = None)(build: => DataFrame): DataFrame = {
     val name = s"graft_${what}_${tag(dir)}"
-    once(s, dir, what) {
+    SnapMemo[Unit](s, dir, what) {
       refresh(s, name)
       val w = build.write
       buckets match {
@@ -208,7 +196,7 @@ object Layout {
   def zorderedDocs(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Fns
     val path = s"${s.conf.get("spark.sql.warehouse.dir")}/graft_docs_zorder_${tag(dir)}"
-    once(s, dir, "docs_zorder") {
+    SnapMemo[Unit](s, dir, "docs_zorder") {
       val docs = Tables.documents(s, dir)
         .withColumn("nh", Fns.hash60(Fns.normText(col("text"))))
       // the id-dimension bucket needs the id range — one 1-value agg,
@@ -615,21 +603,12 @@ object Layout {
       case _ => None
     }
 
-  /** In-memory first-event tracker for the tombstone sidecar tables:
-    * the first delete event of a (session, artifact) clears any stale
+  /** The memo key of an artifact's tombstone-lifecycle start: the
+    * first delete event of a (session, artifact) clears any stale
     * sidecars a previous session left in the shared warehouse (the
     * materializedTable snapshot-refresh discipline — gens restart per
-    * snapshot; a deployment keeps the sidecars permanent instead).
-    * A DEDICATED map, never [[ensured]]: tombstoneEvent runs inside a
-    * caller's once-gate, and touching the gate map from within its own
-    * computeIfAbsent is the bin-collision-dependent "Recursive update"
-    * hazard (it fired on q106 the first time this shared the map). */
-  private val tombInit = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, String]]())
-
-  private def firstEvent(s: SparkSession, name: String): Boolean =
-    tombInit.computeIfAbsent(s, _ => new ConcurrentHashMap[String, String]())
-      .putIfAbsent(name, "done") == null
+    * snapshot; a deployment keeps the sidecars permanent instead). */
+  private def tombsStart(what: String): String = s"$what#tombs"
 
   /** ONE TOMBSTONE-DELETE EVENT against a catalog-backed artifact
     * (round-12 lead item — takedown write I/O made O(affected); the
@@ -703,7 +682,7 @@ object Layout {
     // run outside it, letting two racing first events interleave a
     // clear between the loser's append and swap (round-12 advice).
     ctr.synchronized {
-      if (firstEvent(s, name)) {
+      SnapMemo[Unit](s, dir, tombsStart(what)) {
         refresh(s, tombsT); refresh(s, segT)
         // a fresh lifecycle also discards prior sessions' version
         // TABLES of this artifact — they snapshot a PREVIOUS corpus
@@ -808,12 +787,8 @@ object Layout {
   private[graft] def deleteRewrite(s: SparkSession, dir: String, what: String,
       buckets: Option[(Int, Seq[String])], keys: DataFrame,
       keyCols: Seq[String])(base: => DataFrame): DataFrame = {
-    // force the (usually materializedTable-gated) base BEFORE entering
-    // the del table's own once-gate: a nested computeIfAbsent on the
-    // same per-session gate map is the bin-collision-dependent
-    // "Recursive update" hazard documented at Similarity.ivfPqIndex
     val b = base
-    once(s, dir, what + "del") {
+    SnapMemo[Unit](s, dir, what + "del") {
       catalogNameOf(s, b) match {
         // MASS-TAKEDOWN BOUNDARY (round-13 item 2): the tombstone
         // mechanism's read side assumes the delete relation BROADCASTS
@@ -934,11 +909,10 @@ object Layout {
       }
       // clean sidecars: the next event starts a fresh tombstone
       // lifecycle over the compacted base (and must NOT re-clear — the
-      // firstEvent gate is marked done for this session)
+      // lifecycle-start gate is marked done for this session)
       refresh(s, s"${name}tombs")
       refresh(s, s"${name}seg")
-      tombInit.computeIfAbsent(s, _ => new ConcurrentHashMap[String, String]())
-        .put(name, "done")
+      SnapMemo[Unit](s, dir, tombsStart(what))(())
       if (isStore) {
         // the store's later generations (> e) don't exist yet — record
         // e as the compaction horizon so the next publishStoreView
@@ -966,7 +940,7 @@ object Layout {
       tombs: Seq[(String, DataFrame)], refill: => DataFrame)
       (base: => DataFrame): DataFrame = {
     val b = base
-    once(s, dir, what) {
+    SnapMemo[Unit](s, dir, what) {
       catalogNameOf(s, b) match {
         case Some(baseName) =>
           tombstoneEvent(s, dir, what, baseName, b.columns.toSeq,
@@ -1025,12 +999,9 @@ object Layout {
   private[graft] def appendRewrite(s: SparkSession, dir: String, what: String,
       buckets: Option[(Int, Seq[String])], batch: DataFrame)
       (base: => DataFrame): DataFrame = {
-    // force the (usually materializedTable-gated) base BEFORE entering
-    // the upd table's own once-gate (the "Recursive update" hazard —
-    // see deleteRewrite)
     val b = base
     val name = tableName(dir, what + "upd")
-    once(s, dir, what + "upd") {
+    SnapMemo[Unit](s, dir, what + "upd") {
       val store = s"${name}store"
       refresh(s, store)
       // stale sidecars/views from a previous session's lifecycle over
@@ -1127,13 +1098,13 @@ object Layout {
   // scan. Compaction clears the sidecars and their markers with them,
   // so the policy restarts at zero debt.
   //
-  // Thresholds (override via spark.graft.compact.*):
-  //  - tombRowsMax (= MassDeleteKeys): the tombstone relation must
-  //    stay inside the broadcast envelope — past it every read's anti
-  //    join degrades to a shuffled SMJ, the hard boundary;
-  //  - tombFrac: read tax ∝ tombstone count; past ~1% of base rows
-  //    the anti join's probe-side work is no longer noise (the
-  //    BASELINE.md knee measurement backs the default);
+  // Thresholds (the last two override via spark.graft.compact.*):
+  //  - tomb rows > MassDeleteKeys: the tombstone relation must stay
+  //    inside the broadcast envelope — past it every read's anti join
+  //    degrades to a shuffled SMJ, the hard boundary;
+  //  - tomb rows > 1% of base rows: read tax ∝ tombstone count; past
+  //    it the anti join's probe-side work is no longer noise (the
+  //    BASELINE.md knee measurement);
   //  - segFilesMax: every refill event lands per-bucket files; past
   //    ~64 small files the scan's open/seek overhead dominates (the
   //    compactBucketed small-file rationale);
@@ -1219,14 +1190,12 @@ object Layout {
   private[graft] def shouldCompact(s: SparkSession, dir: String, what: String): Boolean = {
     def conf(k: String, d: Long): Long =
       s.conf.getOption(s"spark.graft.compact.$k").map(_.toLong).getOrElse(d)
-    def confD(k: String, d: Double): Double =
-      s.conf.getOption(s"spark.graft.compact.$k").map(_.toDouble).getOrElse(d)
     val policy = latestMassMarker(s, s"${tableName(dir, what)}tombs") match {
       case None => false
       case Some(m) =>
         val tombRows = m.getOrElse("tombRows", 0L)
-        tombRows > conf("tombRowsMax", MassDeleteKeys) ||
-          tombRows > confD("tombFrac", 0.01) * m.getOrElse("baseRows", Long.MaxValue) ||
+        tombRows > MassDeleteKeys ||
+          tombRows > 0.01 * m.getOrElse("baseRows", Long.MaxValue) ||
           m.getOrElse("segFiles", 0L) > conf("segFilesMax", 64L) ||
           m.getOrElse("events", 0L) >= conf("maxEvents", 16L)
     }
@@ -1565,7 +1534,7 @@ object Layout {
     * [[appendRewrite]]'s base ∪ batch shape cannot express. */
   private[graft] def replaceRewrite(s: SparkSession, dir: String, what: String,
       buckets: Option[(Int, Seq[String])])(build: => DataFrame): DataFrame = {
-    once(s, dir, what) {
+    SnapMemo[Unit](s, dir, what) {
       publishVersioned(s, dir, what, buckets)(build)
       ()
     }
@@ -1581,7 +1550,7 @@ object Layout {
   def bucketedLineitemOrders(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val li = s"graft_lineitem_bkt_${tag(dir)}"
     val ord = s"graft_orders_bkt_${tag(dir)}"
-    once(s, dir, "bucketed") {
+    SnapMemo[Unit](s, dir, "bucketed") {
       refresh(s, li)
       refresh(s, ord)
       Tables.lineitem(s, dir).write
@@ -1598,7 +1567,7 @@ object Layout {
   def partitionedEvents(s: SparkSession, dir: String): DataFrame = {
     val base = s.conf.get("spark.sql.warehouse.dir")
     val path = s"$base/graft_events_by_day_${tag(dir)}"
-    once(s, dir, "events_parted") {
+    SnapMemo[Unit](s, dir, "events_parted") {
       Tables.events(s, dir).withColumn("day", to_date(col("ts")))
         .write.mode("overwrite").partitionBy("day").parquet(path)
     }
@@ -1623,7 +1592,7 @@ object Layout {
     * bounded by the calendar — one row per day — not by data volume. */
   def incrementalEvents(s: SparkSession, dir: String): DataFrame = {
     val path = s"${s.conf.get("spark.sql.warehouse.dir")}/graft_events_inc_${tag(dir)}"
-    once(s, dir, "events_inc") {
+    SnapMemo[Unit](s, dir, "events_inc") {
       val ev = Tables.events(s, dir).withColumn("day", to_date(col("ts")))
       val days = ev.select(col("day")).distinct().orderBy(col("day"))
         .collect().map(_.getDate(0).toString).toSeq
@@ -1658,7 +1627,7 @@ object Layout {
   def bucketedIncremental(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val li = s"graft_lineitem_binc_${tag(dir)}"
     val ord = s"graft_orders_binc_${tag(dir)}"
-    once(s, dir, "bucketed_inc") {
+    SnapMemo[Unit](s, dir, "bucketed_inc") {
       refresh(s, li)
       refresh(s, ord)
       val l = Tables.lineitem(s, dir)

@@ -252,9 +252,8 @@ object StreamDoor {
     val bc = s.sparkContext.broadcast(Similarity.ivfCents(s, dir, Similarity.Standing))
     val emb = Tables.embeddings(s, dir)
     val bkt = Some((Layout.Buckets, Seq("cent_id")))
-    // seed the store OUTSIDE the census gate (nested once-gates are
-    // the "Recursive update" hazard): gens 1+2 = the full corpus
-    // assignment, split arbitrarily
+    // seed the store: gens 1+2 = the full corpus assignment, split
+    // arbitrarily
     Layout.appendRewrite(s, dir, "ivfsdoor", bkt,
       Similarity.lifeAssign(s, emb.filter(pmod(col("vec_id"), lit(2)) === 1), bc))(
       Similarity.lifeAssign(s, emb.filter(pmod(col("vec_id"), lit(2)) === 0), bc))
@@ -327,8 +326,7 @@ object StreamDoor {
   def streamEvolveDoor(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir)
     val bkt = Some((Layout.Buckets, Seq("doc_id")))
-    // era 0 seeds the store OUTSIDE the census gate (nested once-gates
-    // are the "Recursive update" hazard): gens 1+2, narrow schema
+    // era 0 seeds the store: gens 1+2, narrow schema
     val era0 = d.filter(pmod(col("doc_id"), lit(4)) <= 1)
       .select(col("doc_id"), col("n_chars"))
     Layout.appendRewrite(s, dir, "docsdoor", bkt,
@@ -474,8 +472,7 @@ object StreamDoor {
       profKeyed(counts, prefix)
     // seed = the standing corpus's counts (prefix 0 — stream batchIds
     // map to prefixes ≥ 1, so namespaces never collide), split in two
-    // for appendRewrite's gen-1/gen-2 snapshot shape; OUTSIDE the
-    // census gate (nested once-gates are the Recursive-update hazard)
+    // for appendRewrite's gen-1/gen-2 snapshot shape
     val seed = keyed(counted(d.filter(pmod(col("doc_id"), lit(5)) =!= 0)), 0L)
     Layout.appendRewrite(s, dir, "profdoor", bkt,
       seed.filter(pmod(col("k"), lit(2)) === 1))(
@@ -736,8 +733,7 @@ object StreamDoor {
     val shardOf = shiftright(conv(substring(md5(concat(lit("tail0:"),
       col("doc_id").cast(StringType))), 1, 8), 16, 10).cast(LongType), 29)
     // seed = the reader's initial full read of the base corpus (gens
-    // 1-2, prefix-free: keys are doc ids); OUTSIDE the census gate
-    // (nested once-gates are the Recursive-update hazard)
+    // 1-2, prefix-free: keys are doc ids)
     val seed = d.filter(pmod(col("doc_id"), lit(10)) =!= 3)
       .select(col("doc_id").as("k"), col("lang"), col("n_chars"),
         md5(col("text")).as("tmd5"), shardOf.as("shard_id"))
