@@ -1424,6 +1424,20 @@ object Dedup {
       coalesce(sum(hash32(key)), lit(0L)).as("checksum"))
       .select(lit(name).as("artifact"), col("n_rows"), col("checksum"))
 
+  /** The document content checksum: the [[censusRow]] sum over the
+    * per-document key (doc_id | n_chars | lang | md5(text)). The
+    * oracles spell the same key in SQL. */
+  private[graft] def docChecksum: Column =
+    sum(hash32(concat_ws("|", col("doc_id"), col("n_chars"),
+      col("lang"), md5(col("text"))))).as("checksum")
+
+  /** The document census per `key` (a shard or a source): n_docs,
+    * sum_chars and [[docChecksum]] — what every corpus export gate
+    * compares against its oracle. */
+  private[graft] def docCensus(df: DataFrame, key: Column): DataFrame =
+    df.groupBy(key).agg(count(lit(1)).as("n_docs"),
+      sum(col("n_chars")).as("sum_chars"), docChecksum)
+
   /** Multi-class census in ONE source pass (r19 optimization — guide
     * §1.2 "don't compute things twice"): `cls` names each row's class,
     * and the result carries one row per entry of `names` — row-for-row
@@ -1552,8 +1566,6 @@ object Dedup {
     * (shared [[winSurvivorsSql]] fragment), relabelled — compaction
     * must preserve exactly the surviving window relation. */
   val deleteCompactionSql: String = {
-    def h32(key: String): String =
-      s"CAST(coalesce(sum(CAST('0x' || substr(md5($key), 1, 8) AS BIGINT)), 0) AS BIGINT)"
     val corpusSurvivors =
       s"""documents AS (SELECT * FROM main.documents
          |              WHERE doc_id % $DelMod <> $DelRem AND doc_id % 5 <> 0)""".stripMargin
@@ -1637,8 +1649,6 @@ object Dedup {
     * window-index cardinality, and the index minus the first
     * `fired`-many killed residues. */
   val compactionPolicySql: String = {
-    def h32(key: String): String =
-      s"CAST(coalesce(sum(CAST('0x' || substr(md5($key), 1, 8) AS BIGINT)), 0) AS BIGINT)"
     val evmap = PolicyKillRes.zip(PolicyTouchRes).zipWithIndex
       .map { case ((k, t), i) => s"(${i + 1}, $k, $t)" }.mkString(", ")
     val corpusAll = "documents AS (SELECT * FROM main.documents WHERE doc_id % 5 <> 0)"
@@ -1693,8 +1703,6 @@ object Dedup {
       "minhashLshSql reworded; update deleteCensusSql surgery")
     val pairSurv = minhashLshSql.replace("WITH toks AS (",
       s"WITH $survivors,\ntoks AS (")
-    def h32(key: String): String =
-      s"CAST(coalesce(sum(CAST('0x' || substr(md5($key), 1, 8) AS BIGINT)), 0) AS BIGINT)"
     s"""SELECT 'pairgraph' AS artifact, CAST(count(*) AS BIGINT) AS n_rows,
        |       ${h32("CAST(doc_a AS VARCHAR) || '|' || CAST(doc_b AS VARCHAR) || '|' || CAST(n_eq AS VARCHAR)")} AS checksum
        |FROM ($pairSurv) p

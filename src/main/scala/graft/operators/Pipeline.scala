@@ -1640,8 +1640,6 @@ object Pipeline {
     * the documents table (era membership is doc_id mod 4; each era's
     * checksum covers exactly the columns its generation carried). */
   val schemaEvolutionSql: String = {
-    def h32(key: String): String =
-      s"CAST(coalesce(sum(CAST('0x' || substr(md5($key), 1, 8) AS BIGINT)), 0) AS BIGINT)"
     val k0 = "CAST(doc_id AS VARCHAR) || '|' || CAST(n_chars AS VARCHAR)"
     val k1 = s"$k0 || '|' || lang"
     val k2 = s"$k1 || '|' || source"
@@ -1726,8 +1724,6 @@ object Pipeline {
     * formula, two rows, so the engine's replay must land exactly on
     * its latest snapshot. */
   val cdcEvolutionSql: String = {
-    def h32(key: String): String =
-      s"CAST(coalesce(sum(CAST('0x' || substr(md5($key), 1, 8) AS BIGINT)), 0) AS BIGINT)"
     val kt = "CAST(doc_id AS VARCHAR) || '|' || CAST(n_chars AS VARCHAR)" +
       " || '|' || coalesce(CASE WHEN doc_id % 4 >= 2 THEN lang END, '~')" +
       " || '|' || coalesce(CASE WHEN doc_id % 4 = 3 THEN source END, '~')"
@@ -1775,9 +1771,7 @@ object Pipeline {
         col("n_chars")).write.mode("overwrite").json(path)
       val back = s.read.schema(d.schema).json(path)
       back.groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(hash32(concat_ws("|", col("doc_id"), col("n_chars"),
-            col("lang"), md5(col("text"))))).as("checksum"))
+        .agg(count(lit(1)).as("n_docs"), Dedup.docChecksum)
     }.orderBy("source")
   }
 
@@ -1833,9 +1827,7 @@ object Pipeline {
       }
       val back = s.read.schema(d.schema).json(path)
       back.groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(hash32(concat_ws("|", col("doc_id"), col("n_chars"),
-            col("lang"), md5(col("text"))))).as("checksum"))
+        .agg(count(lit(1)).as("n_docs"), Dedup.docChecksum)
         .unionByName(Seq(
           ("zz_decision_gzip_magic", if (allGz) 1L else 0L, 1L))
           .toDF("source", "n_docs", "checksum"))
@@ -1887,9 +1879,7 @@ object Pipeline {
         }
       val back = s.read.schema(d.schema).json(path)
       back.groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(hash32(concat_ws("|", col("doc_id"), col("n_chars"),
-            col("lang"), md5(col("text"))))).as("checksum"))
+        .agg(count(lit(1)).as("n_docs"), Dedup.docChecksum)
         .unionByName(Seq(
           ("zz_decision_zstd_magic", if (allZst) 1L else 0L, 1L))
           .toDF("source", "n_docs", "checksum"))
@@ -3217,6 +3207,96 @@ object Pipeline {
     * no sampling pass and no global sort — are count-independent. */
   private val EpochShards = 8
 
+  /** The shard-id step: `shard_id` is the top 3 bits of the uniform
+    * 32-bit position `u`, one of [[EpochShards]] shards. */
+  private def withShardId(df: DataFrame): DataFrame =
+    df.withColumn("shard_id", shiftright(col("u"), 29))
+
+  /** The salted shard assignment of every sharded export: `u` is the
+    * salted md5 position of `doc_id`, then [[withShardId]]. The oracles
+    * spell the same formula as
+    * `CAST(('0x' || substr(md5(salt || doc_id), 1, 8)) AS BIGINT) // 536870912`. */
+  private[graft] def shardAssign(df: DataFrame, salt: String): DataFrame =
+    withShardId(df.withColumn("u",
+      hash32(concat(lit(salt), col("doc_id").cast(StringType)))))
+
+  /** The shards `df`'s doc ids hash to under `salt` — the write image
+    * a gate predicts from raw residues. */
+  private[graft] def shardImage(df: DataFrame, salt: String): Set[Long] =
+    shardAssign(df, salt).select(col("shard_id"))
+      .distinct().collect().map(_.getLong(0)).toSet // bounded: ≤ shards
+
+  /** [[shardAssign]] then one task per shard, sorted by (shard, u,
+    * doc) — written through [[writeShards]] it lands one file per
+    * shard, over whatever columns `df` carries. */
+  private[graft] def sharded18(df: DataFrame, salt: String): DataFrame =
+    shardAssign(df, salt)
+      .repartition(EpochShards, col("shard_id"))
+      .sortWithinPartitions(col("shard_id"), col("u"), col("doc_id"))
+
+  /** Every physical part file under the shard dirs of `path`, as
+    * `shard_id=<k>/<name>` -> length (manifest-oblivious: retained
+    * bytes included). */
+  private def partFiles(s: SparkSession, path: String): Map[String, Long] = {
+    import graft.sources.Layout
+    Layout.listWarehouseNames(s, path, dirsOnly = true)
+      .filter(_.startsWith("shard_id=")).flatMap { sd =>
+        val (fs, p) = Layout.hfs(s, s"$path/$sd")
+        fs.listStatus(p).toSeq.filter(_.getPath.getName.startsWith("part-"))
+          .map(st => s"$sd/${st.getPath.getName}" -> st.getLen)
+      }.toMap
+  }
+
+  /** The document census per shard of the layout at `path`, read RAW:
+    * a manifest-oblivious json glob sees exactly the bytes on disk
+    * (shard_id re-enters as the partition column). */
+  private def rawShardCensus(s: SparkSession, path: String): DataFrame =
+    Dedup.docCensus(s.read
+      .schema("doc_id long, text string, lang string, n_chars long")
+      .json(path), col("shard_id").cast(LongType).as("shard_id"))
+
+  /** [[Dedup.docCensus]] per shard, collected as (shard_id, n_docs,
+    * sum_chars, checksum). */
+  private[graft] def shardCensus(df: DataFrame): Seq[(Long, Long, Long, Long)] =
+    Dedup.docCensus(df, col("shard_id"))
+      .collect() // bounded: shards
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+
+  /** Write `df` to the shard layout at `path` through the connector. */
+  private[graft] def writeShards(df: DataFrame, path: String, mode: String): Unit =
+    df.write.format("graft.sources.ShardSource")
+      .option("path", path).mode(mode).save()
+
+  /** Read the live shard layout at `path` through the connector. */
+  private[graft] def readShards(s: SparkSession, path: String): DataFrame =
+    s.read.format("graft.sources.ShardSource").option("path", path).load()
+
+  /** The layout checks of a fresh [[sharded18]] export read off the
+    * directory listing: exactly one part file in each of the
+    * [[EpochShards]] shard dirs, and every part file a zstd frame by
+    * its magic bytes. */
+  private def oneZstFilePerShard(s: SparkSession, path: String): (Boolean, Boolean) = {
+    import graft.sources.{Layout, ZstdCodec}
+    val shardDirs = Layout.listWarehouseNames(s, path, dirsOnly = true)
+      .filter(_.startsWith("shard_id="))
+    val partsPerDir = shardDirs.map(sd =>
+      Layout.listWarehouseNames(s, s"$path/$sd")
+        .filter(_.startsWith("part-")))
+    val oneFileEach = shardDirs.length == EpochShards &&
+      partsPerDir.forall(_.length == 1)
+    val allZst = partsPerDir.zip(shardDirs).forall { case (ps, sd) =>
+      ps.forall { f =>
+        f.endsWith(".zst") && {
+          val magic = Layout.headBytes(s, s"$path/$sd/$f", 4)
+          magic.length == 4 &&
+            magic.zip(ZstdCodec.Magic).forall { case (b, m) =>
+              (b & 0xff) == m }
+        }
+      }
+    }
+    (oneFileEach, allZst)
+  }
+
   /** q156: the DETERMINISTIC EPOCH SHUFFLE every training reader
     * needs — each epoch is a different pseudo-random permutation of
     * the corpus, realized WITHOUT a global sort: position
@@ -3245,10 +3325,9 @@ object Pipeline {
       conv(substring(md5(concat(lit("epoch"), epoch.cast(StringType),
         lit(":"), id.cast(StringType))), 1, 8), 16, 10).cast(LongType)
     val d = Tables.documents(s, dir).select(col("doc_id"), col("n_chars"))
-    val assigned = d
+    val assigned = withShardId(d
       .withColumn("epoch", explode(array(lit(0L), lit(1L))))
-      .withColumn("u", uOf(col("epoch"), col("doc_id")))
-      .withColumn("shard_id", shiftright(col("u"), 29))
+      .withColumn("u", uOf(col("epoch"), col("doc_id"))))
     val w = Window.partitionBy(col("epoch"), col("shard_id"))
       .orderBy(col("u"), col("doc_id"))
     val census = assigned
@@ -3538,46 +3617,16 @@ object Pipeline {
     * match the previous `partitionBy().json()` exporter exactly). */
   def shardExport(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.sources.{Layout, ShardManifest, ZstdCodec}
+    import graft.sources.{Layout, ShardManifest}
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
     Layout.materializedTable(s, dir, "shardexportcensus") {
-      val u = conv(substring(md5(concat(lit("epoch0:"),
-        col("doc_id").cast(StringType))), 1, 8), 16, 10).cast(LongType)
       val path = freshLayout(s, Layout.warehousePath(s, Layout.tableName(dir, "eposhards")))
-      d.withColumn("u", u)
-        .withColumn("shard_id", shiftright(col("u"), 29))
-        .repartition(EpochShards, col("shard_id"))
-        .sortWithinPartitions(col("shard_id"), col("u"), col("doc_id"))
-        .write.format("graft.sources.ShardSource")
-        .option("path", path).mode("overwrite").save()
-      val shardDirs = Layout.listWarehouseNames(s, path, dirsOnly = true)
-        .filter(_.startsWith("shard_id="))
-      val partsPerDir = shardDirs.map(sd =>
-        Layout.listWarehouseNames(s, s"$path/$sd")
-          .filter(_.startsWith("part-")))
-      val oneFileEach = shardDirs.length == EpochShards &&
-        partsPerDir.forall(_.length == 1)
-      val allZst = partsPerDir.zip(shardDirs).forall { case (ps, sd) =>
-        ps.forall { f =>
-          f.endsWith(".zst") && {
-            val magic = Layout.headBytes(s, s"$path/$sd/$f", 4)
-            magic.length == 4 &&
-              magic.zip(ZstdCodec.Magic).forall { case (b, m) =>
-                (b & 0xff) == m }
-          }
-        }
-      }
+      writeShards(sharded18(d, "epoch0:"), path, "overwrite")
+      val (oneFileEach, allZst) = oneZstFilePerShard(s, path)
       val manifestValid = ShardManifest.readValidated(
         s.sessionState.newHadoopConf(), path).isDefined
-      val back = s.read
-        .schema("doc_id long, text string, lang string, n_chars long")
-        .json(path) // shard_id re-enters as the partition column
-      back.groupBy(col("shard_id").cast(LongType).as("shard_id"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("sum_chars"),
-          sum(hash32(concat_ws("|", col("doc_id"), col("n_chars"),
-            col("lang"), md5(col("text"))))).as("checksum"))
+      rawShardCensus(s, path)
         .unionByName(Seq(
           (99L, if (oneFileEach) 1L else 0L, 1L, 1L),
           (100L, if (allZst) 1L else 0L, 1L, 1L),
@@ -3910,7 +3959,7 @@ object Pipeline {
     * underneath, never blocking or contaminating the delivery. */
   def pinnedExport(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.sources.{Layout, ZstdCodec}
+    import graft.sources.Layout
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
     val bkt = Some((Layout.Buckets, Seq("doc_id")))
@@ -3931,32 +3980,9 @@ object Pipeline {
         d.filter(pmod(col("doc_id"), lit(10)) === 5))
       Layout.compactDeleted(s, dir, "pexpupd", bkt)
       val pinned = Layout.readSavepoint(s, dir, "q163", "pexpupd")
-      val u = conv(substring(md5(concat(lit("exp0:"),
-        col("doc_id").cast(StringType))), 1, 8), 16, 10).cast(LongType)
       val path = freshLayout(s, Layout.warehousePath(s, Layout.tableName(dir, "pexpshards")))
-      pinned.withColumn("u", u)
-        .withColumn("shard_id", shiftright(col("u"), 29))
-        .repartition(EpochShards, col("shard_id"))
-        .sortWithinPartitions(col("shard_id"), col("u"), col("doc_id"))
-        .write.format("graft.sources.ShardSource")
-        .option("path", path).mode("overwrite").save()
-      val shardDirs = Layout.listWarehouseNames(s, path, dirsOnly = true)
-        .filter(_.startsWith("shard_id="))
-      val partsPerDir = shardDirs.map(sd =>
-        Layout.listWarehouseNames(s, s"$path/$sd")
-          .filter(_.startsWith("part-")))
-      val oneFileEach = shardDirs.length == EpochShards &&
-        partsPerDir.forall(_.length == 1)
-      val allZst = partsPerDir.zip(shardDirs).forall { case (ps, sd) =>
-        ps.forall { f =>
-          f.endsWith(".zst") && {
-            val magic = Layout.headBytes(s, s"$path/$sd/$f", 4)
-            magic.length == 4 &&
-              magic.zip(ZstdCodec.Magic).forall { case (b, m) =>
-                (b & 0xff) == m }
-          }
-        }
-      }
+      writeShards(sharded18(pinned, "exp0:"), path, "overwrite")
+      val (oneFileEach, allZst) = oneZstFilePerShard(s, path)
       // isolation: the post-pin batch is at latest, not in the export
       val latestN = s.table(name).count()
       val pinnedN = pinned.count()
@@ -3967,14 +3993,7 @@ object Pipeline {
       // change, the pinned export included)
       val manifestValid = graft.sources.ShardManifest.readValidated(
         s.sessionState.newHadoopConf(), path).isDefined
-      val back = s.read
-        .schema("doc_id long, text string, lang string, n_chars long")
-        .json(path)
-      back.groupBy(col("shard_id").cast(LongType).as("shard_id"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("sum_chars"),
-          sum(hash32(concat_ws("|", col("doc_id"), col("n_chars"),
-            col("lang"), md5(col("text"))))).as("checksum"))
+      rawShardCensus(s, path)
         .unionByName(Seq(
           (99L, if (oneFileEach) 1L else 0L, 1L, 1L),
           (100L, if (allZst) 1L else 0L, 1L, 1L),
@@ -4050,42 +4069,20 @@ object Pipeline {
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
     Layout.materializedTable(s, dir, "deltaexportcensus") {
-      val u = conv(substring(md5(concat(lit("epoch0:"),
-        col("doc_id").cast(StringType))), 1, 8), 16, 10).cast(LongType)
-      def sharded(df: DataFrame): DataFrame = df
-        .withColumn("u", u)
-        .withColumn("shard_id", shiftright(col("u"), 29))
-        .repartition(EpochShards, col("shard_id"))
-        .sortWithinPartitions(col("shard_id"), col("u"), col("doc_id"))
       val path = freshLayout(s, Layout.warehousePath(s, Layout.tableName(dir, "deltashards")))
-      sharded(d.filter(pmod(col("doc_id"), lit(10)) =!= 3))
-        .write.format("graft.sources.ShardSource")
-        .option("path", path).mode("overwrite").save()
-      def listing(): Map[String, Long] = {
-        val dirs = Layout.listWarehouseNames(s, path, dirsOnly = true)
-          .filter(_.startsWith("shard_id="))
-        dirs.flatMap { sd =>
-          val (fs, p) = Layout.hfs(s, s"$path/$sd")
-          fs.listStatus(p).toSeq.filter(_.getPath.getName.startsWith("part-"))
-            .map(st => s"$sd/${st.getPath.getName}" -> st.getLen)
-        }.toMap
-      }
-      val before = listing()
+      writeShards(sharded18(d.filter(pmod(col("doc_id"), lit(10)) =!= 3),
+        "epoch0:"), path, "overwrite")
+      val before = partFiles(s, path)
       val batch = d.filter(pmod(col("doc_id"), lit(10)) === 3)
       // the delta: append-mode connector write — new files land in
       // the touched shard dirs, existing files are never opened, and
       // the commit MERGES the touched shards' manifest lines (round-17:
       // the sidecar survives the lifecycle, judge item 1)
-      sharded(batch).write.format("graft.sources.ShardSource")
-        .option("path", path).mode("append").save()
-      val after = listing()
+      writeShards(sharded18(batch, "epoch0:"), path, "append")
+      val after = partFiles(s, path)
       val baseUntouched = before.forall { case (f, len) =>
         after.get(f).contains(len) }
-      val touched = batch
-        .select(shiftright(conv(substring(md5(concat(lit("epoch0:"),
-          col("doc_id").cast(StringType))), 1, 8), 16, 10)
-          .cast(LongType), 29).as("shard_id"))
-        .distinct().collect().map(_.getLong(0)).toSet // bounded: ≤ shards
+      val touched = shardImage(batch, "epoch0:")
       val newPerShard = (after.keySet -- before.keySet).toSeq
         .groupBy(f => f.split("/")(0).stripPrefix("shard_id=").toLong)
         .map { case (sh, fs) => sh -> fs.size }
@@ -4095,14 +4092,7 @@ object Pipeline {
       // untouched, touched shards' lines extended by the delta commit
       val manifestValid = graft.sources.ShardManifest.readValidated(
         s.sessionState.newHadoopConf(), path).isDefined
-      val back = s.read
-        .schema("doc_id long, text string, lang string, n_chars long")
-        .json(path)
-      back.groupBy(col("shard_id").cast(LongType).as("shard_id"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("sum_chars"),
-          sum(hash32(concat_ws("|", col("doc_id"), col("n_chars"),
-            col("lang"), md5(col("text"))))).as("checksum"))
+      rawShardCensus(s, path)
         .unionByName(Seq(
           (99L, if (baseUntouched) 1L else 0L, 1L, 1L),
           (100L, if (oneDeltaEach) 1L else 0L, 1L, 1L),
@@ -4171,31 +4161,14 @@ object Pipeline {
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
     Layout.materializedTable(s, dir, "exportcompactcensus") {
-      val u = conv(substring(md5(concat(lit("cexp0:"),
-        col("doc_id").cast(StringType))), 1, 8), 16, 10).cast(LongType)
-      def sharded(df: DataFrame): DataFrame = df
-        .withColumn("u", u)
-        .withColumn("shard_id", shiftright(col("u"), 29))
-        .repartition(EpochShards, col("shard_id"))
-        .sortWithinPartitions(col("shard_id"), col("u"), col("doc_id"))
       val path = freshLayout(s, Layout.warehousePath(s, Layout.tableName(dir, "cexpshards")))
-      def write(df: DataFrame, mode: String, to: String): Unit =
-        sharded(df).write.format("graft.sources.ShardSource")
-          .option("path", to).mode(mode).save()
+      def write(df: DataFrame, mode: String): Unit =
+        writeShards(sharded18(df, "cexp0:"), path, mode)
       write(d.filter(pmod(col("doc_id"), lit(10)) =!= 3 &&
-        pmod(col("doc_id"), lit(10)) =!= 7), "overwrite", path)
-      write(d.filter(pmod(col("doc_id"), lit(10)) === 3), "append", path)
-      write(d.filter(pmod(col("doc_id"), lit(10)) === 7), "append", path)
-      def listing(): Map[String, Long] = {
-        val dirs = Layout.listWarehouseNames(s, path, dirsOnly = true)
-          .filter(_.startsWith("shard_id="))
-        dirs.flatMap { sd =>
-          val (fs, p) = Layout.hfs(s, s"$path/$sd")
-          fs.listStatus(p).toSeq.filter(_.getPath.getName.startsWith("part-"))
-            .map(st => s"$sd/${st.getPath.getName}" -> st.getLen)
-        }.toMap
-      }
-      val before = listing()
+        pmod(col("doc_id"), lit(10)) =!= 7), "overwrite")
+      write(d.filter(pmod(col("doc_id"), lit(10)) === 3), "append")
+      write(d.filter(pmod(col("doc_id"), lit(10)) === 7), "append")
+      val before = partFiles(s, path)
       def filesPerShard(l: Map[String, Long]): Map[Long, Int] =
         l.keySet.toSeq
           .groupBy(f => f.split("/")(0).stripPrefix("shard_id=").toLong)
@@ -4209,7 +4182,7 @@ object Pipeline {
       // collapse, so it runs the vacuum at an everything-past horizon
       vacuumShardLayout(s, path, System.currentTimeMillis() + 60000L)
       val hconf = s.sessionState.newHadoopConf()
-      val after = listing()
+      val after = partFiles(s, path)
       val crossedFolded = filesPerShard(after)
         .filter { case (sh, _) => crossed.contains(sh) }
         .values.forall(_ == 1)
@@ -4223,12 +4196,8 @@ object Pipeline {
       // at most one file per shard (repartition on the shard column
       // task-aligns), so a shard crosses the ≥3-file policy iff it
       // sits in ALL THREE residue classes' shard hash images
-      def imageOf(residueFilter: org.apache.spark.sql.Column): Set[Long] =
-        d.filter(residueFilter)
-          .select(shiftright(conv(substring(md5(concat(lit("cexp0:"),
-            col("doc_id").cast(StringType))), 1, 8), 16, 10)
-            .cast(LongType), 29).as("sh"))
-          .distinct().collect().map(_.getLong(0)).toSet // bounded: ≤ shards
+      def imageOf(residueFilter: Column): Set[Long] =
+        shardImage(d.filter(residueFilter), "cexp0:")
       val predicted =
         imageOf(pmod(col("doc_id"), lit(10)) =!= 3 &&
           pmod(col("doc_id"), lit(10)) =!= 7) intersect
@@ -4238,14 +4207,7 @@ object Pipeline {
       // post-fold the sidecar must again describe the bytes exactly
       val manifestValid = graft.sources.ShardManifest.readValidated(
         hconf, path).isDefined
-      val back = s.read
-        .schema("doc_id long, text string, lang string, n_chars long")
-        .json(path)
-      back.groupBy(col("shard_id").cast(LongType).as("shard_id"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("sum_chars"),
-          sum(hash32(concat_ws("|", col("doc_id"), col("n_chars"),
-            col("lang"), md5(col("text"))))).as("checksum"))
+      rawShardCensus(s, path)
         .unionByName(Seq(
           (99L, if (crossedFolded) 1L else 0L, 1L, 1L),
           (100L, if (uncrossedUntouched) 1L else 0L, 1L, 1L),
@@ -4316,23 +4278,10 @@ object Pipeline {
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
     Layout.materializedTable(s, dir, "dsvcensus") {
-      val u = conv(substring(md5(concat(lit("epoch0:"),
-        col("doc_id").cast(StringType))), 1, 8), 16, 10).cast(LongType)
       val path = freshLayout(s, Layout.warehousePath(s, Layout.tableName(dir, "dsvshards")))
-      d.withColumn("u", u)
-        .withColumn("shard_id", shiftright(col("u"), 29))
-        .repartition(EpochShards, col("shard_id"))
-        .sortWithinPartitions(col("shard_id"), col("u"), col("doc_id"))
-        .write.format("graft.sources.ShardSource")
-        .option("path", path).mode("overwrite").save()
-      def src = s.read.format("graft.sources.ShardSource")
-        .option("path", path).load()
-      val census = src
-        .groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("sum_chars"),
-          sum(hash32(concat_ws("|", col("doc_id"), col("n_chars"),
-            col("lang"), md5(col("text"))))).as("checksum"))
+      writeShards(sharded18(d, "epoch0:"), path, "overwrite")
+      def src = readShards(s, path)
+      val census = Dedup.docCensus(src, col("shard_id"))
       val rows = census.collect() // bounded: shards
       val byShard = rows.map(r =>
         r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -4429,20 +4378,12 @@ object Pipeline {
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
     Layout.materializedTable(s, dir, "statspdcensus") {
-      val u = conv(substring(md5(concat(lit("epoch0:"),
-        col("doc_id").cast(StringType))), 1, 8), 16, 10).cast(LongType)
       val path = freshLayout(s, Layout.warehousePath(s, Layout.tableName(dir, "aggshards")))
       // round 17: the connector's write path derives and writes the
       // sidecar at COMMIT from the task messages — no hand-rolled
       // manifest step survives (judge item 7)
-      d.withColumn("u", u)
-        .withColumn("shard_id", shiftright(col("u"), 29))
-        .repartition(EpochShards, col("shard_id"))
-        .sortWithinPartitions(col("shard_id"), col("u"), col("doc_id"))
-        .write.format("graft.sources.ShardSource")
-        .option("path", path).mode("overwrite").save()
-      def src = s.read.format("graft.sources.ShardSource")
-        .option("path", path).load()
+      writeShards(sharded18(d, "epoch0:"), path, "overwrite")
+      def src = readShards(s, path)
       def statsOf(df: DataFrame): Array[org.apache.spark.sql.Row] = df
         .groupBy(col("shard_id"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
@@ -4710,12 +4651,8 @@ object Pipeline {
     * the rewritten shard set. */
   private[graft] def shardUpsert(s: SparkSession, path: String,
       updates: DataFrame, salt: String): Set[Long] = {
-    val withShard = updates
-      .withColumn("u", conv(substring(md5(concat(lit(salt),
-        col("doc_id").cast(StringType))), 1, 8), 16, 10).cast(LongType))
-      .withColumn("shard_id", shiftright(col("u"), 29))
-    val image = withShard.select(col("shard_id"))
-      .distinct().collect().map(_.getLong(0)).toSet // bounded: ≤ shards
+    val withShard = shardAssign(updates, salt)
+    val image = shardImage(updates, salt)
     rewriteShards(s, path, image, live =>
       live.join(broadcast(updates.select(col("doc_id"))),
         Seq("doc_id"), "left_anti")
@@ -5218,12 +5155,7 @@ object Pipeline {
     * Returns the takedown's hash-image shard set. */
   private[graft] def shardTakedown(s: SparkSession, path: String,
       tombIds: DataFrame, salt: String): Set[Long] = {
-    val image = tombIds
-      .select(shiftright(conv(substring(md5(concat(lit(salt),
-        col("doc_id").cast(StringType))), 1, 8), 16, 10)
-        .cast(LongType), 29).as("sh"))
-      .distinct().collect().map(_.getLong(0)).toSet // bounded: ≤ shards
-    shardTakedownAt(s, path, tombIds, image)
+    shardTakedownAt(s, path, tombIds, shardImage(tombIds, salt))
   }
 
   /** The takedown core against an EXPLICIT candidate shard set — the
@@ -5241,8 +5173,7 @@ object Pipeline {
     // included, over the layout's full (union) schema: a column an era
     // never carried reads NULL and counts as such, exactly the
     // missing-field rule the data path applies
-    val src = s.read.format("graft.sources.ShardSource")
-      .option("path", path).load()
+    val src = readShards(s, path)
     val dataCols = src.schema.fieldNames.toSeq.filter(_ != "shard_id")
     val hasChars = dataCols.contains("n_chars")
     val marked = src
@@ -5366,16 +5297,8 @@ object Pipeline {
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
     Layout.materializedTable(s, dir, "manlifecensus") {
-      val u = conv(substring(md5(concat(lit("m17:"),
-        col("doc_id").cast(StringType))), 1, 8), 16, 10).cast(LongType)
-      def sharded(df: DataFrame): DataFrame = df
-        .withColumn("u", u)
-        .withColumn("shard_id", shiftright(col("u"), 29))
-        .repartition(EpochShards, col("shard_id"))
-        .sortWithinPartitions(col("shard_id"), col("u"), col("doc_id"))
       val path = freshLayout(s, Layout.warehousePath(s, Layout.tableName(dir, "mlcshards")))
-      def src = s.read.format("graft.sources.ShardSource")
-        .option("path", path).load()
+      def src = readShards(s, path)
       var openedDelta = 0L
       var manifestDelta = 0L
       def statsOf(): Seq[(Long, Long, Long, Long, Long)] = {
@@ -5392,14 +5315,12 @@ object Pipeline {
         rows
       }
       // 1-2: base export, stats
-      sharded(d.filter(pmod(col("doc_id"), lit(10)) =!= 3))
-        .write.format("graft.sources.ShardSource")
-        .option("path", path).mode("overwrite").save()
+      writeShards(sharded18(d.filter(pmod(col("doc_id"), lit(10)) =!= 3),
+        "m17:"), path, "overwrite")
       val statsBase = statsOf()
       // 3-4: delta append, stats
-      sharded(d.filter(pmod(col("doc_id"), lit(10)) === 3))
-        .write.format("graft.sources.ShardSource")
-        .option("path", path).mode("append").save()
+      writeShards(sharded18(d.filter(pmod(col("doc_id"), lit(10)) === 3),
+        "m17:"), path, "append")
       val statsDelta = statsOf()
       // 5-6: fold the ≥2-file shards, stats
       val hconf = s.sessionState.newHadoopConf()
@@ -5412,12 +5333,8 @@ object Pipeline {
       foldShardDirs(s, path, crossed)
       val statsFold = statsOf()
       // decisions
-      def imageOf(residueFilter: org.apache.spark.sql.Column): Set[Long] =
-        d.filter(residueFilter)
-          .select(shiftright(conv(substring(md5(concat(lit("m17:"),
-            col("doc_id").cast(StringType))), 1, 8), 16, 10)
-            .cast(LongType), 29).as("sh"))
-          .distinct().collect().map(_.getLong(0)).toSet // bounded: ≤ shards
+      def imageOf(residueFilter: Column): Set[Long] =
+        shardImage(d.filter(residueFilter), "m17:")
       val predicted =
         imageOf(pmod(col("doc_id"), lit(10)) =!= 3) intersect
           imageOf(pmod(col("doc_id"), lit(10)) === 3)
@@ -5501,22 +5418,9 @@ object Pipeline {
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
     Layout.materializedTable(s, dir, "kgcensus") {
-      val u = conv(substring(md5(concat(lit("kg17:"),
-        col("doc_id").cast(StringType))), 1, 8), 16, 10).cast(LongType)
       val path = freshLayout(s, Layout.warehousePath(s, Layout.tableName(dir, "kgshards")))
-      d.withColumn("u", u)
-        .withColumn("shard_id", shiftright(col("u"), 29))
-        .repartition(EpochShards, col("shard_id"))
-        .sortWithinPartitions(col("shard_id"), col("u"), col("doc_id"))
-        .write.format("graft.sources.ShardSource")
-        .option("path", path).mode("overwrite").save()
-      val census = s.read.format("graft.sources.ShardSource")
-        .option("path", path).load()
-        .groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("sum_chars"),
-          sum(hash32(concat_ws("|", col("doc_id"), col("n_chars"),
-            col("lang"), md5(col("text"))))).as("checksum"))
+      writeShards(sharded18(d, "kg17:"), path, "overwrite")
+      val census = Dedup.docCensus(readShards(s, path), col("shard_id"))
       val rows = census.collect() // bounded: shards
       // node counts on the AQE-final plan OBJECT, not its rendering
       // (round-18 judge item 7)
@@ -5620,23 +5524,14 @@ object Pipeline {
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
     Layout.materializedTable(s, dir, "spjcensus") {
-      val u = conv(substring(md5(concat(lit("spj17:"),
-        col("doc_id").cast(StringType))), 1, 8), 16, 10).cast(LongType)
       val path = freshLayout(s, Layout.warehousePath(s, Layout.tableName(dir, "spjshards")))
-      d.withColumn("u", u)
-        .withColumn("shard_id", shiftright(col("u"), 29))
-        .repartition(EpochShards, col("shard_id"))
-        .sortWithinPartitions(col("shard_id"), col("u"), col("doc_id"))
-        .write.format("graft.sources.ShardSource")
-        .option("path", path).mode("overwrite").save()
-      def src = s.read.format("graft.sources.ShardSource")
-        .option("path", path).load()
+      writeShards(sharded18(d, "spj17:"), path, "overwrite")
+      def src = readShards(s, path)
       val mass = src.groupBy(col("shard_id"))
         .agg(count(when(length(col("text")) >= 0, 1)).as("n_docs"),
           sum(abs(col("n_chars"))).as("sum_chars"))
       val content = src.groupBy(col("shard_id"))
-        .agg(sum(hash32(concat_ws("|", col("doc_id"), col("n_chars"),
-          col("lang"), md5(col("text"))))).as("checksum"))
+        .agg(Dedup.docChecksum)
       val joined = mass.join(content, Seq("shard_id"))
       val rows = joined.collect() // bounded: shards
       // node counts on the AQE-final plan OBJECT, not its rendering
@@ -5725,22 +5620,14 @@ object Pipeline {
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
     Layout.materializedTable(s, dir, "tdelcensus") {
-      val u = conv(substring(md5(concat(lit("tdel17:"),
-        col("doc_id").cast(StringType))), 1, 8), 16, 10).cast(LongType)
       val path = freshLayout(s, Layout.warehousePath(s, Layout.tableName(dir, "tdelshards")))
-      d.withColumn("u", u)
-        .withColumn("shard_id", shiftright(col("u"), 29))
-        .repartition(EpochShards, col("shard_id"))
-        .sortWithinPartitions(col("shard_id"), col("u"), col("doc_id"))
-        .write.format("graft.sources.ShardSource")
-        .option("path", path).mode("overwrite").save()
+      writeShards(sharded18(d, "tdel17:"), path, "overwrite")
       val hconf = s.sessionState.newHadoopConf()
       def partListing(): Map[String, Long] =
         ShardManifest.listDataFiles(hconf, path)
           .filter(_._1.split("/")(1).startsWith("part-"))
       val before = partListing()
-      def src = s.read.format("graft.sources.ShardSource")
-        .option("path", path).load()
+      def src = readShards(s, path)
       // 2: the takedown — opened-files accounting around it
       val tombIds = d.filter(pmod(col("doc_id"), lit(7)) === 3)
         .select(col("doc_id"))
@@ -5877,26 +5764,10 @@ object Pipeline {
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
     Layout.materializedTable(s, dir, "isocensus") {
-      val u = conv(substring(md5(concat(lit("iso17:"),
-        col("doc_id").cast(StringType))), 1, 8), 16, 10).cast(LongType)
       val path = freshLayout(s, Layout.warehousePath(s, Layout.tableName(dir, "isoshards")))
-      d.withColumn("u", u)
-        .withColumn("shard_id", shiftright(col("u"), 29))
-        .repartition(EpochShards, col("shard_id"))
-        .sortWithinPartitions(col("shard_id"), col("u"), col("doc_id"))
-        .write.format("graft.sources.ShardSource")
-        .option("path", path).mode("overwrite").save()
-      def src = s.read.format("graft.sources.ShardSource")
-        .option("path", path).load()
-      def census(): Array[(Long, Long, Long, Long)] = src
-        .groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("sum_chars"),
-          sum(hash32(concat_ws("|", col("doc_id"), col("n_chars"),
-            col("lang"), md5(col("text"))))).as("checksum"))
-        .collect() // bounded: shards
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      val before = census()
+      writeShards(sharded18(d, "iso17:"), path, "overwrite")
+      def src = readShards(s, path)
+      val before = shardCensus(src)
       // 2: the orphan — a crashed task attempt's leftover
       val sh0 = before.map(_._1).min
       val codec = new ZstdCodec()
@@ -5909,8 +5780,8 @@ object Pipeline {
         "\"lang\":\"xx\",\"n_chars\":6,\"u\":0}\n").getBytes("UTF-8"))
       finally o.close()
       // 3: invisible to the connector
-      val after = census()
-      val invisible = after.toSeq == before.toSeq
+      val after = shardCensus(src)
+      val invisible = after == before
       // 4: the snapshot is intact — stats stay metadata-only and agree
       val f0 = ShardSource.openedFiles.get()
       val statRows = src.groupBy(col("shard_id"))
@@ -5925,7 +5796,7 @@ object Pipeline {
         .json(path).count()
       val jsonSees = jsonN == rawN + 1
       ofs.delete(op, false)
-      before.toSeq.map(t => (t._1, t._2, t._3, t._4))
+      before
         .++(Seq(
           (99L, if (invisible) 1L else 0L, 1L, 1L),
           (100L, if (statsOk) 1L else 0L, 1L, 1L),
@@ -5999,34 +5870,16 @@ object Pipeline {
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
     Layout.materializedTable(s, dir, "vocensus") {
-      val u = conv(substring(md5(concat(lit("vo18:"),
-        col("doc_id").cast(StringType))), 1, 8), 16, 10).cast(LongType)
       val path = freshLayout(s, Layout.warehousePath(s, Layout.tableName(dir, "voshards")))
-      def sharded(df: DataFrame): DataFrame = df
-        .withColumn("u", u)
-        .withColumn("shard_id", shiftright(col("u"), 29))
-        .repartition(EpochShards, col("shard_id"))
-        .sortWithinPartitions(col("shard_id"), col("u"), col("doc_id"))
-      def census(df: DataFrame): Seq[(Long, Long, Long, Long)] = df
-        .groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("sum_chars"),
-          sum(hash32(concat_ws("|", col("doc_id"), col("n_chars"),
-            col("lang"), md5(col("text"))))).as("checksum"))
-        .collect() // bounded: shards
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toSeq
       val hconf = s.sessionState.newHadoopConf()
       // 1: gen-1 export
-      sharded(d.filter(pmod(col("doc_id"), lit(3)) =!= 0))
-        .write.format("graft.sources.ShardSource")
-        .option("path", path).mode("overwrite").save()
+      writeShards(sharded18(d.filter(pmod(col("doc_id"), lit(3)) =!= 0),
+        "vo18:"), path, "overwrite")
       val gen1 = ShardManifest.currentGen(hconf, path)
       val gen1Files = ShardManifest.read(hconf, path).toSeq
         .flatMap(_._2.flatMap(_.files))
       // 2: the versioned overwrite — gen 2 lands, gen 1 retained
-      sharded(d).write.format("graft.sources.ShardSource")
-        .option("path", path).mode("overwrite").save()
+      writeShards(sharded18(d, "vo18:"), path, "overwrite")
       // retention: every gen-1 file still on disk at its recorded length
       val all = ShardManifest.listAllFiles(hconf, path)
       val retained = gen1Files.nonEmpty && gen1Files.forall(f =>
@@ -6034,23 +5887,22 @@ object Pipeline {
       // 3-4: the snapshot-holding reader vs the live reader
       def asOfRead = s.read.format("graft.sources.ShardSource")
         .option("path", path).option("asOfGen", gen1.toString).load()
-      def liveRead = s.read.format("graft.sources.ShardSource")
-        .option("path", path).load()
-      val censusGen1 = census(asOfRead)
-      val censusLive = census(liveRead)
+      def liveRead = readShards(s, path)
+      val censusGen1 = shardCensus(asOfRead)
+      val censusLive = shardCensus(liveRead)
       // 5: the explicit GC horizon
       val (sweptF, sweptG) = vacuumShardLayout(s, path,
         System.currentTimeMillis() + 60000L)
       val sweptExact = sweptF == gen1Files.size.toLong && sweptG == 1L
       // 6: past the horizon the snapshot is GONE — loudly
       val failsLoudly =
-        try { census(asOfRead); false }
+        try { shardCensus(asOfRead); false }
         catch { case t: Throwable =>
           Option(t.getMessage).exists(_.contains("retention horizon")) ||
             Option(t.getCause).flatMap(c => Option(c.getMessage))
               .exists(_.contains("retention horizon"))
         }
-      val liveUnchanged = census(liveRead) == censusLive
+      val liveUnchanged = shardCensus(liveRead) == censusLive
       def phased(phase: String, rows: Seq[(Long, Long, Long, Long)]) =
         rows.map { case (sh, n, sc, ck) => (phase, sh, n, sc, ck) }
       (phased("a_gen1", censusGen1) ++ phased("b_live", censusLive) ++ Seq(
@@ -6133,18 +5985,13 @@ object Pipeline {
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
     Layout.materializedTable(s, dir, "vrcensus") {
-      val u = conv(substring(md5(concat(lit("vr18:"),
-        col("doc_id").cast(StringType))), 1, 8), 16, 10).cast(LongType)
       val path = freshLayout(s, Layout.warehousePath(s, Layout.tableName(dir, "vrshards")))
-      sharded18(d, "vr18:").write.format("graft.sources.ShardSource")
-        .option("path", path).mode("overwrite").save()
+      writeShards(sharded18(d, "vr18:"), path, "overwrite")
       val hconf = s.sessionState.newHadoopConf()
-      def src = s.read.format("graft.sources.ShardSource")
-        .option("path", path).load()
+      def src = readShards(s, path)
       // 2: the out-of-band takedown — min doc's tombstone, unrecorded
       val victim = d.agg(min(col("doc_id"))).collect()(0).getLong(0)
-      val vShard = d.filter(col("doc_id") === victim)
-        .select(shiftright(u, 29)).collect()(0).getLong(0)
+      val vShard = shardImage(d.filter(col("doc_id") === victim), "vr18:").head
       val codec = new ZstdCodec()
       codec.setConf(hconf)
       val (tfs, tp) = Layout.hfs(s,
@@ -6161,14 +6008,7 @@ object Pipeline {
       val refusedToData = ShardSource.statsRefused.get() > r0 &&
         ShardSource.openedFiles.get() > f0
       // phase a: the degraded census (data path, tombstone applied)
-      val censusA = src.groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("sum_chars"),
-          sum(hash32(concat_ws("|", col("doc_id"), col("n_chars"),
-            col("lang"), md5(col("text"))))).as("checksum"))
-        .collect() // bounded: shards
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toSeq
+      val censusA = shardCensus(src)
       val brokenTruth = refusedToData &&
         probeBroken == censusA.map(t => t._1 -> t._2).toMap
       // 3: repair — rescan rebuilds and ADOPTS the tombstone
@@ -6193,14 +6033,7 @@ object Pipeline {
       finally oo.close()
       val (sweptF, sweptG) = vacuumShardLayout(s, path,
         System.currentTimeMillis() + 60000L)
-      val censusB = src.groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("sum_chars"),
-          sum(hash32(concat_ws("|", col("doc_id"), col("n_chars"),
-            col("lang"), md5(col("text"))))).as("checksum"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toSeq
+      val censusB = shardCensus(src)
       // one generation to drop: the repair archived the pre-repair
       // manifest (every manifest that was ever current is a
       // generation); its recorded files are all current-recorded too,
@@ -6247,16 +6080,6 @@ object Pipeline {
        |         CAST(1 AS BIGINT)) t
        |ORDER BY shard_id""".stripMargin)
 
-  /** The shared round-18 sharding transform (salted md5 permutation +
-    * top-3-bit shard + one file per shard) over whatever columns `df`
-    * carries — the q159 shape, reusable by the widened-schema gates. */
-  private def sharded18(df: DataFrame, salt: String): DataFrame = df
-    .withColumn("u", conv(substring(md5(concat(lit(salt),
-      col("doc_id").cast(StringType))), 1, 8), 16, 10).cast(LongType))
-    .withColumn("shard_id", shiftright(col("u"), 29))
-    .repartition(EpochShards, col("shard_id"))
-    .sortWithinPartitions(col("shard_id"), col("u"), col("doc_id"))
-
   /** q176: EVOLVE-ON-APPEND at the delivery layer (round-18 judge
     * item 3): an append whose batch carries NEW columns widens the
     * manifest header schema by NAME-UNION at commit — no re-export,
@@ -6292,19 +6115,14 @@ object Pipeline {
     Layout.materializedTable(s, dir, "evcensus") {
       val path = freshLayout(s, Layout.warehousePath(s, Layout.tableName(dir, "evshards")))
       // era 1: narrow — no lang, no quality
-      sharded18(d.filter(pmod(col("doc_id"), lit(10)) =!= 3)
-        .select(col("doc_id"), col("text"), col("n_chars")), "ev18:")
-        .write.format("graft.sources.ShardSource")
-        .option("path", path).mode("overwrite").save()
+      writeShards(sharded18(d.filter(pmod(col("doc_id"), lit(10)) =!= 3)
+        .select(col("doc_id"), col("text"), col("n_chars")), "ev18:"), path, "overwrite")
       // era 2: widened — lang returns, quality is brand-new
-      sharded18(d.filter(pmod(col("doc_id"), lit(10)) === 3)
+      writeShards(sharded18(d.filter(pmod(col("doc_id"), lit(10)) === 3)
         .select(col("doc_id"), col("text"), col("n_chars"), col("lang"),
           (pmod(col("n_chars"), lit(7)).cast(DoubleType) + lit(0.5))
-            .as("quality")), "ev18:")
-        .write.format("graft.sources.ShardSource")
-        .option("path", path).mode("append").save()
-      def src = s.read.format("graft.sources.ShardSource")
-        .option("path", path).load()
+            .as("quality")), "ev18:"), path, "append")
+      def src = readShards(s, path)
       val names = src.schema.fieldNames.toSeq
       // era-1 order is the prefix; the widened columns append
       val unionExact = names ==
@@ -6417,15 +6235,13 @@ object Pipeline {
       val path = freshLayout(s, Layout.warehousePath(s, Layout.tableName(dir, "gdshards")))
       val hconf = s.sessionState.newHadoopConf()
       // 1-2: base commit, delta commit
-      sharded18(d.filter(pmod(col("doc_id"), lit(10)) =!= 3), "gd18:")
-        .write.format("graft.sources.ShardSource")
-        .option("path", path).mode("overwrite").save()
+      writeShards(sharded18(d.filter(pmod(col("doc_id"), lit(10)) =!= 3), "gd18:"),
+        path, "overwrite")
       val gen1 = ShardManifest.currentGen(hconf, path)
       val gen1Names = ShardManifest.read(hconf, path).toSeq
         .flatMap(_._2.flatMap(_.files.map(_.name))).toSet
-      sharded18(d.filter(pmod(col("doc_id"), lit(10)) === 3), "gd18:")
-        .write.format("graft.sources.ShardSource")
-        .option("path", path).mode("append").save()
+      writeShards(sharded18(d.filter(pmod(col("doc_id"), lit(10)) === 3), "gd18:"),
+        path, "append")
       val gen2 = ShardManifest.currentGen(hconf, path)
       val newFiles = ShardManifest.read(hconf, path).toSeq
         .flatMap(_._2.flatMap(_.files.map(_.name)))
@@ -6435,14 +6251,7 @@ object Pipeline {
         .option("path", path).option("sinceGen", g.toString).load()
       // 3: the diff census — exactly the delta, exactly the new files
       val f0 = ShardSource.openedFiles.get()
-      val census = since(gen1).groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("sum_chars"),
-          sum(hash32(concat_ws("|", col("doc_id"), col("n_chars"),
-            col("lang"), md5(col("text"))))).as("checksum"))
-        .collect() // bounded: shards
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toSeq
+      val census = shardCensus(since(gen1))
       val oNewFiles = ShardSource.openedFiles.get() - f0 == newFiles.toLong &&
         newFiles > 0
       // 4: the up-to-date reader pays nothing
@@ -6530,8 +6339,7 @@ object Pipeline {
     Layout.materializedTable(s, dir, "lhcensus") {
       val path = freshLayout(s, Layout.warehousePath(s, Layout.tableName(dir, "lhshards")))
       def write(df: DataFrame, mode: String): Unit =
-        sharded18(df, "lh18:").write.format("graft.sources.ShardSource")
-          .option("path", path).mode(mode).save()
+        writeShards(sharded18(df, "lh18:"), path, mode)
       write(d.filter(pmod(col("doc_id"), lit(10)) =!= 3), "overwrite")
       write(d.filter(pmod(col("doc_id"), lit(10)) === 3), "append")
       shardTakedown(s, path,
@@ -6627,8 +6435,7 @@ object Pipeline {
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
     Layout.materializedTable(s, dir, "upcensus") {
       val path = freshLayout(s, Layout.warehousePath(s, Layout.tableName(dir, "upshards")))
-      sharded18(d, "up18:").write.format("graft.sources.ShardSource")
-        .option("path", path).mode("overwrite").save()
+      writeShards(sharded18(d, "up18:"), path, "overwrite")
       val hconf = s.sessionState.newHadoopConf()
       val gen1 = ShardManifest.currentGen(hconf, path)
       val before = ShardManifest.listDataFiles(hconf, path)
@@ -6644,24 +6451,13 @@ object Pipeline {
       def outsideImage(l: Map[String, Long]) = l.filter { case (n, _) =>
         !image.contains(n.split("/")(0).stripPrefix("shard_id=").toLong) }
       val untouched = outsideImage(before) == outsideImage(after)
-      def census(df: DataFrame): Seq[(Long, Long, Long, Long)] = df
-        .groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("sum_chars"),
-          sum(hash32(concat_ws("|", col("doc_id"), col("n_chars"),
-            col("lang"), md5(col("text"))))).as("checksum"))
-        .collect() // bounded: shards
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toSeq
       // 3-4: the corrected live census; the original via time travel
-      val censusLive = census(s.read.format("graft.sources.ShardSource")
-        .option("path", path).load())
-      val censusGen1 = census(s.read.format("graft.sources.ShardSource")
+      val censusLive = shardCensus(readShards(s, path))
+      val censusGen1 = shardCensus(s.read.format("graft.sources.ShardSource")
         .option("path", path).option("asOfGen", gen1.toString).load())
       // 5b: the rewritten manifest serves the corrected stats
       val f0 = ShardSource.openedFiles.get()
-      val statRows = s.read.format("graft.sources.ShardSource")
-        .option("path", path).load()
+      val statRows = readShards(s, path)
         .groupBy(col("shard_id"))
         .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sc")).collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -6746,8 +6542,7 @@ object Pipeline {
     Layout.materializedTable(s, dir, "locensus") {
       val path = freshLayout(s, Layout.warehousePath(s, Layout.tableName(dir, "loshards")))
       def write(df: DataFrame, mode: String): Unit =
-        sharded18(df, "lo18:").write.format("graft.sources.ShardSource")
-          .option("path", path).mode(mode).save()
+        writeShards(sharded18(df, "lo18:"), path, mode)
       write(d.filter(pmod(col("doc_id"), lit(10)) =!= 3), "overwrite")
       write(d.filter(pmod(col("doc_id"), lit(10)) === 3), "append")
       shardTakedown(s, path,
@@ -6767,12 +6562,7 @@ object Pipeline {
         System.currentTimeMillis() + 60000L)
       // the predicted set, re-derived from raw residues (never from
       // the listing that fed the verb — the q165 independence rule)
-      def imageOf(f: org.apache.spark.sql.Column): Set[Long] =
-        d.filter(f)
-          .select(shiftright(conv(substring(md5(concat(lit("lo18:"),
-            col("doc_id").cast(StringType))), 1, 8), 16, 10)
-            .cast(LongType), 29).as("sh"))
-          .distinct().collect().map(_.getLong(0)).toSet // bounded: ≤ shards
+      def imageOf(f: Column): Set[Long] = shardImage(d.filter(f), "lo18:")
       val predicted =
         (imageOf(pmod(col("doc_id"), lit(10)) =!= 3) intersect
           imageOf(pmod(col("doc_id"), lit(10)) === 3)) union
@@ -6796,17 +6586,7 @@ object Pipeline {
         ShardManifest.readValidated(hconf, path).isDefined &&
         sweptG >= 3L
       // 4: content invariant, against raw ground truth
-      val census = s.read.format("graft.sources.ShardSource")
-        .option("path", path).load()
-        .groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("sum_chars"),
-          sum(hash32(concat_ws("|", col("doc_id"), col("n_chars"),
-            col("lang"), md5(col("text"))))).as("checksum"))
-        .collect() // bounded: shards
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toSeq
-      census.map(t => (t._1, t._2, t._3, t._4))
+      shardCensus(readShards(s, path))
         .++(Seq(
           (99L, if (policyExact) 1L else 0L, 1L, 1L),
           (100L, if (collapsed) 1L else 0L, 1L, 1L)))
@@ -6880,54 +6660,34 @@ object Pipeline {
       val mx = d.agg(max(col("doc_id"))).collect()(0).getLong(0)
       val (c1, c2, c3) = (mx / 4, mx / 2, 3 * mx / 4)
       def write(f: Column, mode: String): Unit =
-        sharded18(d.filter(f), "fs19:")
-          .write.format("graft.sources.ShardSource")
-          .option("path", path).mode(mode).save()
+        writeShards(sharded18(d.filter(f), "fs19:"), path, mode)
       write(col("doc_id") <= c1, "overwrite")
       write(col("doc_id") > c1 && col("doc_id") <= c2, "append")
       write(col("doc_id") > c2 && col("doc_id") <= c3, "append")
       write(col("doc_id") > c3, "append")
-      val shardOf = shiftright(conv(substring(md5(concat(lit("fs19:"),
-        col("doc_id").cast(StringType))), 1, 8), 16, 10)
-        .cast(LongType), 29)
       val probeRow = d.filter(col("doc_id") > c2)
         .agg(min(col("doc_id")).as("p")).collect()(0)
       val probe = probeRow.getLong(0)
-      val probeShard = d.filter(col("doc_id") === probe)
-        .select(shardOf.as("sh")).collect()(0).getLong(0)
-      def src = s.read.format("graft.sources.ShardSource")
-        .option("path", path).load()
+      val probeShard = shardImage(d.filter(col("doc_id") === probe), "fs19:").head
+      def src = readShards(s, path)
       val hconf = s.sessionState.newHadoopConf()
       val totalParts = ShardManifest.read(hconf, path).toSeq
         .flatMap(_._2.flatMap(_.files.map(_.name)))
         .count(_.split("/").last.startsWith("part-"))
-      def rowChecksum = hash32(concat_ws("|", col("doc_id"),
-        col("n_chars"), col("lang"), md5(col("text"))))
       // 2: the point read — one shard directory, ONE file
       val f0 = ShardSource.openedFiles.get()
-      val pointRows = src
-        .filter(col("shard_id") === probeShard && col("doc_id") === probe)
-        .groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-          sum(rowChecksum).as("checksum"))
-        .collect() // bounded: 1
-        .map(r => ("a_point", r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3))).toSeq
+      val pointRows = shardCensus(src
+        .filter(col("shard_id") === probeShard && col("doc_id") === probe))
+        .map(t => ("a_point", t._1, t._2, t._3, t._4))
       val pointOpened = ShardSource.openedFiles.get() - f0
       // 3: the id-range scan — only intersecting era files
       val f1 = ShardSource.openedFiles.get()
-      val rangeRows = src.filter(col("doc_id") > c3)
-        .groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-          sum(rowChecksum).as("checksum"))
-        .collect() // bounded: shards
-        .map(r => ("b_range", r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3))).toSeq
+      val rangeRows = shardCensus(src.filter(col("doc_id") > c3))
+        .map(t => ("b_range", t._1, t._2, t._3, t._4))
       val rangeOpened = ShardSource.openedFiles.get() - f1
       // the expected era-4 image, RAW-derived (never from the manifest
       // the skip itself reads — the q165 independence rule)
-      val expectedRange = d.filter(col("doc_id") > c3)
-        .select(shardOf.as("sh")).distinct().count()
+      val expectedRange = shardImage(d.filter(col("doc_id") > c3), "fs19:").size.toLong
       (pointRows ++ rangeRows ++ Seq(
         ("zz_point_opens_one_file", 0L, if (pointOpened == 1L) 1L else 0L,
           1L, 1L),
@@ -7027,9 +6787,7 @@ object Pipeline {
       val tbl = Layout.tableName(dir, "sq19shards")
       val path = freshLayout(s, Layout.warehousePath(s, tbl))
       def write(f: Column, mode: String): Unit =
-        sharded18(d.filter(f), "sq19:")
-          .write.format("graft.sources.ShardSource")
-          .option("path", path).mode(mode).save()
+        writeShards(sharded18(d.filter(f), "sq19:"), path, mode)
       write(pmod(col("doc_id"), lit(10)) =!= 3, "overwrite")
       val hconf = s.sessionState.newHadoopConf()
       val g1 = ShardManifest.currentGen(hconf, path)
@@ -7184,18 +6942,13 @@ object Pipeline {
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
     Layout.materializedTable(s, dir, "cwcensus") {
-      val scattered = d
-        .withColumn("u", conv(substring(md5(concat(lit("cw19:"),
-          col("doc_id").cast(StringType))), 1, 8), 16, 10).cast(LongType))
-        .withColumn("shard_id", shiftright(col("u"), 29))
-        .repartition(13)
+      val scattered = shardAssign(d, "cw19:").repartition(13)
       val path = freshLayout(s, Layout.warehousePath(s, Layout.tableName(dir, "cw19shards")))
       val ctrl = freshLayout(s, Layout.warehousePath(s, Layout.tableName(dir, "cw19free")))
       scattered.write.format("graft.sources.ShardSource")
         .option("path", path).option("distribute", "shard_sorted")
         .mode("overwrite").save()
-      scattered.write.format("graft.sources.ShardSource")
-        .option("path", ctrl).mode("overwrite").save()
+      writeShards(scattered, ctrl, "overwrite")
       val hconf = s.sessionState.newHadoopConf()
       val (_, entries) = ShardManifest.readSnapshot(hconf, path).get
       val clusteredOne = entries.nonEmpty && entries.forall(_.files.count(
@@ -7205,11 +6958,8 @@ object Pipeline {
         .count(_.split("/").last.startsWith("part-"))
       // the zone-map tightness check derives expected extrema from RAW
       // (never from the manifest the decision is about)
-      val expBounds = d
-        .withColumn("sh", shiftright(conv(substring(md5(concat(lit("cw19:"),
-          col("doc_id").cast(StringType))), 1, 8), 16, 10)
-          .cast(LongType), 29))
-        .groupBy(col("sh"))
+      val expBounds = shardAssign(d, "cw19:")
+        .groupBy(col("shard_id"))
         .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
         .collect() // bounded: shards
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -7218,16 +6968,8 @@ object Pipeline {
         expBounds.get(e.shardId).contains(
           (f.minDoc.getOrElse(-1L), f.maxDoc.getOrElse(-1L)))
       }
-      val ck = expr("sum(CAST(conv(substring(md5(concat_ws('|', doc_id, " +
-        "n_chars, lang, md5(text))), 1, 8), 16, 10) AS BIGINT))")
-      val census = s.read.format("graft.sources.ShardSource")
-        .option("path", path).load()
-        .groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-          ck.as("checksum"))
-        .collect() // bounded: shards
-        .map(r => ("a_census", r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3))).toSeq
+      val census = shardCensus(readShards(s, path))
+        .map(t => ("a_census", t._1, t._2, t._3, t._4))
       (census ++ Seq(
         ("zz_clustered_one_file_per_shard", 0L,
           if (clusteredOne) 1L else 0L, 1L, 1L),
@@ -7301,11 +7043,8 @@ object Pipeline {
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
     Layout.materializedTable(s, dir, "sbcensus") {
       val path = freshLayout(s, Layout.warehousePath(s, Layout.tableName(dir, "sb19shards")))
-      sharded18(d, "sb19:")
-        .write.format("graft.sources.ShardSource")
-        .option("path", path).mode("overwrite").save()
-      def src = s.read.format("graft.sources.ShardSource")
-        .option("path", path).load()
+      writeShards(sharded18(d, "sb19:"), path, "overwrite")
+      def src = readShards(s, path)
       def relStats(df: DataFrame) = df.queryExecution.optimizedPlan.collect {
         case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
           r.stats
@@ -7349,11 +7088,8 @@ object Pipeline {
           (rows, bhj)
         } finally s.conf.set("spark.sql.adaptive.enabled", aqeWas)
       // exactness of the reported estimates, raw-derived
-      val shardOf = shiftright(conv(substring(md5(concat(lit("sb19:"),
-        col("doc_id").cast(StringType))), 1, 8), 16, 10)
-        .cast(LongType), 29)
-      val expRows = d.select(shardOf.as("sh"))
-        .filter(col("sh").isin(2L, 5L)).count()
+      val expRows = shardAssign(d, "sb19:")
+        .filter(col("shard_id").isin(2L, 5L)).count()
       val stPruned = relStats(pruned)
       val stFull = relStats(src)
       val statsExact =
@@ -7436,9 +7172,7 @@ object Pipeline {
       val mx = d.agg(max(col("doc_id"))).collect()(0).getLong(0)
       val (c1, c2, c3) = (mx / 4, mx / 2, 3 * mx / 4)
       def write(f: Column, mode: String): Unit =
-        sharded18(d.filter(f), "rp19:")
-          .write.format("graft.sources.ShardSource")
-          .option("path", path).mode(mode).save()
+        writeShards(sharded18(d.filter(f), "rp19:"), path, mode)
       write(col("doc_id") <= c1, "overwrite")
       write(col("doc_id") > c1 && col("doc_id") <= c2, "append")
       write(col("doc_id") > c2 && col("doc_id") <= c3, "append")
@@ -7451,34 +7185,22 @@ object Pipeline {
       // entirely inside era 4 so the zone maps can rule eras 1-3 out
       val dim = d.filter(col("doc_id") > c3 &&
         pmod(col("doc_id"), lit(97)) === 0).select(col("doc_id").as("k"))
-      val shardOf = shiftright(conv(substring(md5(concat(lit("rp19:"),
-        col("doc_id").cast(StringType))), 1, 8), 16, 10)
-        .cast(LongType), 29)
       // raw-derived expectation (never from the manifest the skip
       // itself reads): a file opens iff its era-4 per-shard id RANGE
       // covers ≥1 dimension id — per-shard ranges interleave
       // numerically, so coverage, not membership, is the rule; eras
       // 1-3 never open (their ranges top out at ≤ c3 < every
       // dimension id)
-      val expOpen = d.filter(col("doc_id") > c3)
-        .select(shardOf.as("sh"), col("doc_id"))
-        .groupBy(col("sh"))
+      val expOpen = shardAssign(d.filter(col("doc_id") > c3), "rp19:")
+        .groupBy(col("shard_id"))
         .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
         .join(dim, col("k") >= col("mn") && col("k") <= col("mx"),
           "left_semi")
         .count()
-      def rowCk = expr("sum(CAST(conv(substring(md5(concat_ws('|', " +
-        "doc_id, n_chars, lang, md5(text))), 1, 8), 16, 10) AS BIGINT))")
       val f0 = ShardSource.openedFiles.get()
-      val census = s.read.format("graft.sources.ShardSource")
-        .option("path", path).load()
-        .join(dim, col("doc_id") === col("k"))
-        .groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-          rowCk.as("checksum"))
-        .collect() // bounded: shards
-        .map(r => ("a_join", r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3))).toSeq
+      val census = shardCensus(readShards(s, path)
+        .join(dim, col("doc_id") === col("k")))
+        .map(t => ("a_join", t._1, t._2, t._3, t._4))
       val opened = ShardSource.openedFiles.get() - f0
       (census ++ Seq(
         ("zz_runtime_opens_exactly_matching_files", 0L,
@@ -7557,10 +7279,7 @@ object Pipeline {
       // shard rolls at least twice, none degenerates to per-row files
       val totalChars = d.agg(sum(col("n_chars"))).collect()(0).getLong(0)
       val target = math.max(4096L, totalChars / EpochShards / 4)
-      d.withColumn("u", conv(substring(md5(concat(lit("fb19:"),
-          col("doc_id").cast(StringType))), 1, 8), 16, 10).cast(LongType))
-        .withColumn("shard_id", shiftright(col("u"), 29))
-        .repartition(13)
+      shardAssign(d, "fb19:").repartition(13)
         .write.format("graft.sources.ShardSource")
         .option("path", path)
         .option("distribute", "shard_sorted")
@@ -7581,24 +7300,14 @@ object Pipeline {
       }
       // the point probe: the corpus max id and its raw-derived shard
       val probe = d.agg(max(col("doc_id"))).collect()(0).getLong(0)
-      val probeShard = d.filter(col("doc_id") === probe)
-        .select(shiftright(conv(substring(md5(concat(lit("fb19:"),
-          col("doc_id").cast(StringType))), 1, 8), 16, 10)
-          .cast(LongType), 29).as("sh")).collect()(0).getLong(0)
-      def src = s.read.format("graft.sources.ShardSource")
-        .option("path", path).load()
+      val probeShard = shardImage(d.filter(col("doc_id") === probe), "fb19:").head
+      def src = readShards(s, path)
       val f0 = ShardSource.openedFiles.get()
       val probeN = src.filter(col("shard_id") === probeShard &&
         col("doc_id") === probe).count()
       val pointOne = ShardSource.openedFiles.get() - f0 == 1L && probeN == 1L
-      def rowCk = expr("sum(CAST(conv(substring(md5(concat_ws('|', " +
-        "doc_id, n_chars, lang, md5(text))), 1, 8), 16, 10) AS BIGINT))")
-      val census = src.groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-          rowCk.as("checksum"))
-        .collect() // bounded: shards
-        .map(r => ("a_census", r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3))).toSeq
+      val census = shardCensus(src)
+        .map(t => ("a_census", t._1, t._2, t._3, t._4))
       (census ++ Seq(
         ("zz_every_shard_rolls", 0L, if (everyShardRolls) 1L else 0L,
           1L, 1L),
@@ -7679,9 +7388,7 @@ object Pipeline {
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
     Layout.materializedTable(s, dir, "bmcensus") {
       val path = freshLayout(s, Layout.warehousePath(s, Layout.tableName(dir, "bm19shards")))
-      sharded18(d, "bm19:")
-        .write.format("graft.sources.ShardSource")
-        .option("path", path).mode("overwrite").save()
+      writeShards(sharded18(d, "bm19:"), path, "overwrite")
       val hconf = s.sessionState.newHadoopConf()
       val totalChars = d.agg(sum(col("n_chars"))).collect()(0).getLong(0)
       val budget = math.max(1024L, totalChars / EpochShards / 16)
@@ -7696,22 +7403,13 @@ object Pipeline {
       val (crossed2, _, _) = maintainShardLayout(s, path, 0L, Some(budget))
       val idempotent = crossed2.isEmpty
       val f0 = ShardSource.openedFiles.get()
-      val agg = s.read.format("graft.sources.ShardSource")
-        .option("path", path).load()
+      val agg = readShards(s, path)
         .agg(count(lit(1)).as("n"), min(col("doc_id")).as("mn"),
           max(col("doc_id")).as("mx")).collect()(0) // bounded: 1
       val statsMeta = ShardSource.openedFiles.get() == f0 &&
         agg.getLong(0) == d.count()
-      def rowCk = expr("sum(CAST(conv(substring(md5(concat_ws('|', " +
-        "doc_id, n_chars, lang, md5(text))), 1, 8), 16, 10) AS BIGINT))")
-      val census = s.read.format("graft.sources.ShardSource")
-        .option("path", path).load()
-        .groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-          rowCk.as("checksum"))
-        .collect() // bounded: shards
-        .map(r => ("a_census", r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3))).toSeq
+      val census = shardCensus(readShards(s, path))
+        .map(t => ("a_census", t._1, t._2, t._3, t._4))
       (census ++ Seq(
         ("zz_policy_names_every_monolith", 0L, if (allNamed) 1L else 0L,
           1L, 1L),
@@ -7793,26 +7491,16 @@ object Pipeline {
       val tbl = Layout.tableName(dir, "rr19shards")
       val path = freshLayout(s, Layout.warehousePath(s, tbl))
       def write(f: Column, mode: String): Unit =
-        sharded18(d.filter(f), "rr19:")
-          .write.format("graft.sources.ShardSource")
-          .option("path", path).mode(mode).save()
+        writeShards(sharded18(d.filter(f), "rr19:"), path, mode)
       write(pmod(col("doc_id"), lit(10)) =!= 3, "overwrite")
       val hconf = s.sessionState.newHadoopConf()
       val g1 = ShardManifest.currentGen(hconf, path)
       s.sql(s"CALL graft.tag('$tbl', 'audit', $g1)").collect() // bounded: 1
       write(pmod(col("doc_id"), lit(10)) === 3, "append")
       val g2 = ShardManifest.currentGen(hconf, path)
-      val ck = expr("sum(CAST(conv(substring(md5(concat_ws('|', doc_id, " +
-        "n_chars, lang, md5(text))), 1, 8), 16, 10) AS BIGINT))")
       def census(phase: String, df: DataFrame): Seq[(String, Long, Long, Long, Long)] =
-        df.groupBy(col("shard_id"))
-          .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-            ck.as("checksum"))
-          .collect() // bounded: shards
-          .map(r => (phase, r.getLong(0), r.getLong(1), r.getLong(2),
-            r.getLong(3))).toSeq
-      def cur = s.read.format("graft.sources.ShardSource")
-        .option("path", path).load()
+        shardCensus(df).map(t => (phase, t._1, t._2, t._3, t._4))
+      def cur = readShards(s, path)
       val a = census("a_cur", cur)
       val b = census("b_tag", s.sql(
         s"SELECT * FROM graft.`$tbl` VERSION AS OF 'audit'"))

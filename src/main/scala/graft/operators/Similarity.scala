@@ -2533,6 +2533,32 @@ object Similarity {
   /** Neighbors kept per vector (HNSW's M, layer-0). */
   private[graft] val GraphG = 16
 
+  /** The neighbour order: each vertex's candidates (vec_id, nbr, q,
+    * qn, nq, nqn) ranked by quantized cosine, best first, ties to the
+    * lower neighbour id; the best `k` survive as (vec_id, nbr, nq,
+    * nqn), plus their rank `rn` when `withRank`. */
+  private[graft] def topK(cands: DataFrame, k: Int,
+      withRank: Boolean = false): DataFrame = {
+    val byCos = Window.partitionBy(col("vec_id"))
+      .orderBy(col("cos").desc, col("nbr"))
+    cands
+      .withColumn("cos", qcosineNative(col("q"), col("nq"), col("qn"), col("nqn")))
+      .withColumn("rn", row_number().over(byCos))
+      .filter(col("rn") <= k)
+      .select((Seq("vec_id", "nbr", "nq", "nqn") ++
+        (if (withRank) Seq("rn") else Nil)).map(col): _*)
+  }
+
+  /** The pool graph's [[GraphG]] neighbours of each `probeSide` vertex
+    * (vec_id, cent_id, q, qn) among `nbrSide` (nbr, cent_id, nq, nqn):
+    * candidates share a routed cell, self excluded, one row per pair,
+    * ranked by [[topK]]. */
+  private[graft] def topG(probeSide: DataFrame, nbrSide: DataFrame,
+      withRank: Boolean = false): DataFrame =
+    topK(probeSide.join(nbrSide, Seq("cent_id"))
+      .filter(col("vec_id") =!= col("nbr"))
+      .dropDuplicates("vec_id", "nbr"), GraphG, withRank)
+
   /** The standing corpus's WRITTEN [[GraphR]]-deep routing table
     * (`groutesbase`: vec_id, cent_id, q, qn — one row per (vector,
     * routed cell), cent_id-bucketed). This is the graph index's pool
@@ -2567,15 +2593,7 @@ object Similarity {
       val a = routes.select(col("vec_id"), col("cent_id"), col("q"), col("qn"))
       val b = routes.select(col("vec_id").as("nbr"), col("cent_id"),
         col("q").as("nq"), col("qn").as("nqn"))
-      val wG = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cos").desc, col("nbr"))
-      a.join(b, Seq("cent_id"))
-        .filter(col("vec_id") =!= col("nbr"))
-        .dropDuplicates("vec_id", "nbr")
-        .withColumn("cos", qcosineNative(col("q"), col("nq"), col("qn"), col("nqn")))
-        .withColumn("rn", row_number().over(wG))
-        .filter(col("rn") <= GraphG)
-        .select(col("vec_id"), col("nbr"), col("nq"), col("nqn"))
+      topG(a, b)
     }
   }
 
@@ -2674,15 +2692,7 @@ object Similarity {
     val candSide = routesBase.unionByName(routedBatch)
       .select(col("vec_id").as("nbr"), col("cent_id"),
         col("q").as("nq"), col("qn").as("nqn"))
-    val wG = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("nbr"))
-    val graphBatch = routedBatch.join(candSide, Seq("cent_id"))
-      .filter(col("vec_id") =!= col("nbr"))
-      .dropDuplicates("vec_id", "nbr")
-      .withColumn("cos", qcosineNative(col("q"), col("nq"), col("qn"), col("nqn")))
-      .withColumn("rn", row_number().over(wG))
-      .filter(col("rn") <= GraphG)
-      .select(col("vec_id"), col("nbr"), col("nq"), col("nqn"))
+    val graphBatch = topG(routedBatch, candSide)
 
     def upd(what: String, buckets: Option[(Int, Seq[String])],
             batch: DataFrame, base: DataFrame) =
@@ -2725,8 +2735,6 @@ object Similarity {
     * to corpus-only pools and batch rows seeing the whole updated
     * corpus (exactly the maintained composition). */
   val annIndexAppendSql: String = {
-    def h32(key: String): String =
-      s"CAST(coalesce(sum(CAST('0x' || substr(md5($key), 1, 8) AS BIGINT)), 0) AS BIGINT)"
     mat(
       s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
          |n AS (SELECT vec_id, q,
@@ -2903,16 +2911,6 @@ object Similarity {
     val survG = heldUpd.join(del, Seq("vec_id"), "left_anti")
     val a1 = survG.join(del.select(col("vec_id").as("nbr")), Seq("nbr"), "left_semi")
       .select(col("vec_id")).distinct()
-    val wG = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("nbr"))
-    def topG(probeSide: DataFrame, nbrSide: DataFrame): DataFrame =
-      probeSide.join(nbrSide, Seq("cent_id"))
-        .filter(col("vec_id") =!= col("nbr"))
-        .dropDuplicates("vec_id", "nbr")
-        .withColumn("cos", qcosineNative(col("q"), col("nq"), col("qn"), col("nqn")))
-        .withColumn("rn", row_number().over(wG))
-        .filter(col("rn") <= GraphG)
-        .select(col("vec_id"), col("nbr"), col("nq"), col("nqn"))
     val nbrOf = (r: DataFrame) => r.select(col("vec_id").as("nbr"), col("cent_id"),
       col("q").as("nq"), col("qn").as("nqn"))
     val refillBase = topG(
@@ -2966,8 +2964,6 @@ object Similarity {
     * per-vector artifacts censused over survivors. */
   val annAppendDeleteSql: String = {
     val dM = Dedup.DelMod; val dR = Dedup.DelRem
-    def h32(key: String): String =
-      s"CAST(coalesce(sum(CAST('0x' || substr(md5($key), 1, 8) AS BIGINT)), 0) AS BIGINT)"
     mat(
       s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
          |n AS (SELECT vec_id, q,
@@ -3110,8 +3106,6 @@ object Similarity {
       .select(col("probe_id").as("vec_id"), col("cent_id"),
         col("pq").as("q"), col("pqn").as("qn"))
 
-    val wG = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("nbr"))
     val folded = Layout.replaceRewrite(s, dir, "nngraphfold",
         Some((Layout.Buckets, Seq("vec_id")))) {
       // (corpus u, batch v) candidates sharing a routed cell — the
@@ -3124,25 +3118,15 @@ object Similarity {
         .dropDuplicates("vec_id", "nbr")
       val affected = crossU.select(col("vec_id")).distinct()
       val uPay = assignBase.select(col("vec_id"), col("q"), col("qn"))
-      val refreshed = graphBase.join(affected, Seq("vec_id"), "left_semi")
+      val refreshed = topK(graphBase.join(affected, Seq("vec_id"), "left_semi")
         .unionByName(crossU)
-        .join(uPay, Seq("vec_id"))
-        .withColumn("cos", qcosineNative(col("q"), col("nq"), col("qn"), col("nqn")))
-        .withColumn("rn", row_number().over(wG))
-        .filter(col("rn") <= GraphG)
-        .select(col("vec_id"), col("nbr"), col("nq"), col("nqn"))
+        .join(uPay, Seq("vec_id")), GraphG)
       val untouched = graphBase.join(affected, Seq("vec_id"), "left_anti")
       // batch rows: q108's derivation (pools = corpus routing ∪ own)
       val candSide = routesBase.unionByName(routedBatch)
         .select(col("vec_id").as("nbr"), col("cent_id"),
           col("q").as("nq"), col("qn").as("nqn"))
-      val graphBatch = routedBatch.join(candSide, Seq("cent_id"))
-        .filter(col("vec_id") =!= col("nbr"))
-        .dropDuplicates("vec_id", "nbr")
-        .withColumn("cos", qcosineNative(col("q"), col("nq"), col("qn"), col("nqn")))
-        .withColumn("rn", row_number().over(wG))
-        .filter(col("rn") <= GraphG)
-        .select(col("vec_id"), col("nbr"), col("nq"), col("nqn"))
+      val graphBatch = topG(routedBatch, candSide)
       untouched.unionByName(refreshed).unionByName(graphBatch)
     }
 
@@ -3171,8 +3155,6 @@ object Similarity {
     * the fold-maintained graph must equal the from-scratch rebuild,
     * refreshed/untouched/batch partitions included. */
   val annGraphBackfoldSql: String = {
-    def h32(key: String): String =
-      s"CAST(coalesce(sum(CAST('0x' || substr(md5($key), 1, 8) AS BIGINT)), 0) AS BIGINT)"
     mat(
       s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
          |n AS (SELECT vec_id, q,
@@ -3302,37 +3284,24 @@ object Similarity {
     val a = routed.select(col("vec_id"), col("cent_id"), col("q"), col("qn"))
     val b = routed.select(col("vec_id").as("nbr"), col("cent_id"),
       col("q").as("nq"), col("qn").as("nqn"))
-    val wG = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("nbr"))
     // referenced three times below (edge output, expansion seed,
     // already-adjacent anti-join) — checkpointed so the pool join
     // runs once, freed by the caller's RDD-diff bracket
-    val g0 = a.join(b, Seq("cent_id"))
-      .filter(col("vec_id") =!= col("nbr"))
-      .dropDuplicates("vec_id", "nbr")
-      .withColumn("cos", qcosineNative(col("q"), col("nq"), col("qn"), col("nqn")))
-      .withColumn("rn", row_number().over(wG))
-      .filter(col("rn") <= GraphG)
-      .select(col("vec_id"), col("nbr"), col("nq"), col("nqn"), col("rn"))
-      .localCheckpoint()
+    val g0 = topG(a, b, withRank = true).localCheckpoint()
     // one ADDITIVE NN-descent round (see NdExp/NdAdd): candidates =
     // adjacency of the best NdExp neighbors, minus self, minus
     // already-adjacent; candidate payload rides the hop edge, so
     // only the probe-side payload joins (one n-row equi-join)
     val mid = g0.filter(col("rn") <= NdExp)
       .select(col("vec_id"), col("nbr").as("mid"))
-    val extras = mid.join(
+    val extras = topK(mid.join(
         g0.select(col("vec_id").as("mid"), col("nbr"), col("nq"), col("nqn")),
         Seq("mid"))
       .filter(col("vec_id") =!= col("nbr"))
       .select(col("vec_id"), col("nbr"), col("nq"), col("nqn"))
       .dropDuplicates("vec_id", "nbr")
       .join(g0.select(col("vec_id"), col("nbr")), Seq("vec_id", "nbr"), "left_anti")
-      .join(payload.select(col("vec_id"), col("q"), col("qn")), Seq("vec_id"))
-      .withColumn("cos", qcosineNative(col("q"), col("nq"), col("qn"), col("nqn")))
-      .withColumn("rn", row_number().over(wG))
-      .filter(col("rn") <= NdAdd)
-      .select(col("vec_id"), col("nbr"), col("nq"), col("nqn"))
+      .join(payload.select(col("vec_id"), col("q"), col("qn")), Seq("vec_id")), NdAdd)
     g0.select(col("vec_id"), col("nbr"), col("nq"), col("nqn"))
       .withColumn("src", lit("g"))
       .union(extras.withColumn("src", lit("x")))
@@ -3836,22 +3805,13 @@ object Similarity {
         survG0.join(a1.select(col("vec_id").as("nbr")), Seq("nbr"), "left_semi")
           .select(col("vec_id")))
       .distinct()
-    val wG = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("nbr"))
     val poolNbr = routedSurv.select(col("vec_id").as("nbr"), col("cent_id"),
       col("q").as("nq"), col("qn").as("nqn"))
     // A2's pool rows re-ranked over the FULL surviving pool (for
     // A2∖A1 this reproduces the held rows — no deleted neighbor in
     // their top-G means the shrunk pool has the same top-G — but
     // recomputing keeps the refill one uniform derivation)
-    val g0Refill = routedSurv.join(a2, Seq("vec_id"), "left_semi")
-      .join(poolNbr, Seq("cent_id"))
-      .filter(col("vec_id") =!= col("nbr"))
-      .dropDuplicates("vec_id", "nbr")
-      .withColumn("cos", qcosineNative(col("q"), col("nq"), col("qn"), col("nqn")))
-      .withColumn("rn", row_number().over(wG))
-      .filter(col("rn") <= GraphG)
-      .select(col("vec_id"), col("nbr"), col("nq"), col("nqn"))
+    val g0Refill = topG(routedSurv.join(a2, Seq("vec_id"), "left_semi"), poolNbr)
     val g0New = survG0.join(a2, Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("nbr"), col("nq"), col("nqn"))
       .unionByName(g0Refill)
@@ -3859,18 +3819,14 @@ object Similarity {
     // round over the refreshed pool graph
     val midA2 = g0New.join(a2, Seq("vec_id"), "left_semi")
       .select(col("vec_id"), col("nbr").as("mid"))
-    val xRe = midA2.join(
+    val xRe = topK(midA2.join(
         g0New.select(col("vec_id").as("mid"), col("nbr"), col("nq"), col("nqn")),
         Seq("mid"))
       .filter(col("vec_id") =!= col("nbr"))
       .select(col("vec_id"), col("nbr"), col("nq"), col("nqn"))
       .dropDuplicates("vec_id", "nbr")
       .join(g0New.select(col("vec_id"), col("nbr")), Seq("vec_id", "nbr"), "left_anti")
-      .join(assignSurv.select(col("vec_id"), col("q"), col("qn")), Seq("vec_id"))
-      .withColumn("cos", qcosineNative(col("q"), col("nq"), col("qn"), col("nqn")))
-      .withColumn("rn", row_number().over(wG))
-      .filter(col("rn") <= NdAdd)
-      .select(col("vec_id"), col("nbr"), col("nq"), col("nqn"))
+      .join(assignSurv.select(col("vec_id"), col("q"), col("qn")), Seq("vec_id")), NdAdd)
     // held extras outside A2 cannot reference a deleted neighbor: an
     // extra arrives through a pool neighbor's adjacency, so a
     // deleted extra-neighbor implies that pool neighbor is in A1 and
@@ -3981,8 +3937,6 @@ object Similarity {
     * class as q107's. */
   val annDeleteGraphSql: String = {
     val dM = Dedup.DelMod; val dR = Dedup.DelRem
-    def h32(key: String): String =
-      s"CAST(coalesce(sum(CAST('0x' || substr(md5($key), 1, 8) AS BIGINT)), 0) AS BIGINT)"
     mat(
       s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
          |n AS (SELECT vec_id, q,
@@ -4230,8 +4184,6 @@ object Similarity {
   /** The q123 oracle: [[sparseSurvivorChainSql]] censused pool/extras
     * × refreshed/untouched. */
   val annDeleteSparseSql: String = {
-    def h32(key: String): String =
-      s"CAST(coalesce(sum(CAST('0x' || substr(md5($key), 1, 8) AS BIGINT)), 0) AS BIGINT)"
     mat(
       s"""$sparseSurvivorChainSql
          |SELECT artifact, n_rows, checksum FROM (
@@ -4288,8 +4240,6 @@ object Similarity {
     * relations verbatim — compaction must preserve exactly the
     * maintained delete's row set, class column included. */
   val sparseDeleteCompactionSql: String = {
-    def h32(key: String): String =
-      s"CAST(coalesce(sum(CAST('0x' || substr(md5($key), 1, 8) AS BIGINT)), 0) AS BIGINT)"
     mat(
       s"""$sparseSurvivorChainSql
          |SELECT artifact, n_rows, checksum FROM (
@@ -4386,8 +4336,6 @@ object Similarity {
     * censused by the same segment classes. */
   val annLifecycleSql: String = {
     val dM = Dedup.DelMod; val dR = Dedup.DelRem
-    def h32(key: String): String =
-      s"CAST(coalesce(sum(CAST('0x' || substr(md5($key), 1, 8) AS BIGINT)), 0) AS BIGINT)"
     def row(nm: String, where: String): String =
       s"""SELECT '$nm' AS artifact, CAST(count(*) AS BIGINT) AS n_rows,
          |       ${h32("CAST(vec_id AS VARCHAR) || '|' || CAST(cent_id AS VARCHAR)")} AS checksum
@@ -4442,8 +4390,6 @@ object Similarity {
     * product, the q132 trick) — so the gate proves the streamed
     * per-micro-batch upsert events land exactly the batch math. */
   val upsertDoorSql: String = {
-    def h32(key: String): String =
-      s"CAST(coalesce(sum(CAST('0x' || substr(md5($key), 1, 8) AS BIGINT)), 0) AS BIGINT)"
     def row(nm: String, src: String): String =
       s"""SELECT '$nm' AS artifact, CAST(count(*) AS BIGINT) AS n_rows,
          |       ${h32("CAST(vec_id AS VARCHAR) || '|' || CAST(cent_id AS VARCHAR)")} AS checksum
@@ -4543,8 +4489,6 @@ object Similarity {
     * list_reverse dependence); censused upserted/carried/total. */
   val annUpsertSql: String = {
     val dM = Dedup.DelMod; val dR = Dedup.DelRem
-    def h32(key: String): String =
-      s"CAST(coalesce(sum(CAST('0x' || substr(md5($key), 1, 8) AS BIGINT)), 0) AS BIGINT)"
     def row(nm: String, src: String): String =
       s"""SELECT '$nm' AS artifact, CAST(count(*) AS BIGINT) AS n_rows,
          |       ${h32("CAST(vec_id AS VARCHAR) || '|' || CAST(cent_id AS VARCHAR)")} AS checksum
@@ -4648,8 +4592,6 @@ object Similarity {
     * the audit diff). */
   val annTimeTravelSql: String = {
     val dM = Dedup.DelMod; val dR = Dedup.DelRem
-    def h32(key: String): String =
-      s"CAST(coalesce(sum(CAST('0x' || substr(md5($key), 1, 8) AS BIGINT)), 0) AS BIGINT)"
     def row(nm: String, src: String): String =
       s"""SELECT '$nm' AS artifact, CAST(count(*) AS BIGINT) AS n_rows,
          |       ${h32("CAST(vec_id AS VARCHAR) || '|' || CAST(cent_id AS VARCHAR)")} AS checksum
@@ -4731,18 +4673,9 @@ object Similarity {
     val survG = graphB.join(del, Seq("vec_id"), "left_anti")
     val a1 = survG.join(del.select(col("vec_id").as("nbr")), Seq("nbr"), "left_semi")
       .select(col("vec_id")).distinct()
-    val wG = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("nbr"))
     val poolNbr = routesSurv.select(col("vec_id").as("nbr"), col("cent_id"),
       col("q").as("nq"), col("qn").as("nqn"))
-    val refill = routesSurv.join(a1, Seq("vec_id"), "left_semi")
-      .join(poolNbr, Seq("cent_id"))
-      .filter(col("vec_id") =!= col("nbr"))
-      .dropDuplicates("vec_id", "nbr")
-      .withColumn("cos", qcosineNative(col("q"), col("nq"), col("qn"), col("nqn")))
-      .withColumn("rn", row_number().over(wG))
-      .filter(col("rn") <= GraphG)
-      .select(col("vec_id"), col("nbr"), col("nq"), col("nqn"))
+    val refill = topG(routesSurv.join(a1, Seq("vec_id"), "left_semi"), poolNbr)
     // tombstone-event publish (round-12): deleted vertices/payloads
     // tombstone, A1's held rows are shadowed by the same-generation
     // refill — the held graph's files are never rewritten
@@ -4769,8 +4702,6 @@ object Similarity {
     * (→ A1) and survivor (→ rebuilt rows). */
   val annDeleteBaseSql: String = {
     val dM = Dedup.DelMod; val dR = Dedup.DelRem
-    def h32(key: String): String =
-      s"CAST(coalesce(sum(CAST('0x' || substr(md5($key), 1, 8) AS BIGINT)), 0) AS BIGINT)"
     mat(
       s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
          |n AS (SELECT vec_id, q,

@@ -29,4 +29,10 @@ package object operators {
     * before quoting parentheses). */
   private[graft] def mat(sql: String): String =
     sql.replaceAll("(\\w+) AS \\(", "$1 AS MATERIALIZED (")
+
+  /** The oracle side of `Dedup.censusRow`'s checksum: the sum of the
+    * 32-bit md5 prefixes of `key` (a SQL string expression), 0 over
+    * no rows, as BIGINT. */
+  private[graft] def h32(key: String): String =
+    s"CAST(coalesce(sum(CAST('0x' || substr(md5($key), 1, 8) AS BIGINT)), 0) AS BIGINT)"
 }

@@ -315,7 +315,7 @@ object Layout {
   }
 
   /** Highest already-committed version of `name` (0 when none). */
-  private def priorMaxVersion(s: SparkSession, name: String): Long =
+  private[graft] def priorMaxVersion(s: SparkSession, name: String): Long =
     versionsOf(s, name).foldLeft(0L)(math.max)
 
   /** Drop a version regardless of whether it is a VIEW (delete-event

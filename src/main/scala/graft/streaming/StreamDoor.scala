@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.IntegerType
 
-import graft.operators.{QueryDef, Similarity}
+import graft.operators.{Dedup, Pipeline, QueryDef, Similarity}
 import graft.sources.{Layout, Tables}
 
 /** Round-11 item 6: ONE streaming front door run END TO END inside the
@@ -266,11 +266,7 @@ object StreamDoor {
         .filter(pmod(col("vec_id"), lit(Similarity.UpsMod)) === lit(Similarity.UpsRem))
         .withColumn("embedding", reverse(col("embedding")))
       corrections.repartition(4).write.mode("overwrite").parquet(srcDir)
-      def maxV(): Long = s.catalog.listTables().collect().map(_.name)
-        .filter(_.startsWith(s"${name}__v"))
-        .flatMap(n => scala.util.Try(n.stripPrefix(s"${name}__v").toLong).toOption)
-        .foldLeft(0L)(math.max)
-      val vBefore = maxV()
+      val vBefore = Layout.priorMaxVersion(s, name)
       // one upsert EVENT per micro-batch: the lifecycle IS the sink.
       // (explicitly-typed function value — the foreachBatch overloads
       // are ambiguous for an inline Scala lambda)
@@ -285,9 +281,10 @@ object StreamDoor {
         .trigger(Trigger.AvailableNow())
         .foreachBatch(applyBatch).start()
       q.awaitTermination()
-      require(maxV() - vBefore >= 3,
+      val vAfter = Layout.priorMaxVersion(s, name)
+      require(vAfter - vBefore >= 3,
         s"correction stream did not span multiple micro-batches " +
-          s"(generations ${vBefore} -> ${maxV()})")
+          s"(generations $vBefore -> $vAfter)")
       val key = concat_ws("|", col("vec_id"), col("cent_id"))
       val view = s.table(name)
       graft.operators.Dedup.censusRow("carried",
@@ -336,11 +333,7 @@ object StreamDoor {
     val out = Layout.materializedTable(s, dir, "edoorout") {
       val base = Layout.warehousePath(s, Layout.tableName(dir, "edoorrun"))
       Layout.deleteWarehouseDir(s, base)
-      def maxV(): Long = s.catalog.listTables().collect().map(_.name)
-        .filter(_.startsWith(s"${name}__v"))
-        .flatMap(n => scala.util.Try(n.stripPrefix(s"${name}__v").toLong).toOption)
-        .foldLeft(0L)(math.max)
-      val vBefore = maxV()
+      val vBefore = Layout.priorMaxVersion(s, name)
       // one redeployment per drifted era: stage the era's rows as two
       // source files, drain them one micro-batch each, every batch an
       // evolving-upsert event on the store
@@ -363,9 +356,10 @@ object StreamDoor {
         .select(col("doc_id"), col("n_chars"), col("lang")))
       runEra("era2", d.filter(pmod(col("doc_id"), lit(4)) === 3)
         .select(col("doc_id"), col("n_chars"), col("lang"), col("source")))
-      require(maxV() - vBefore >= 4,
+      val vAfter = Layout.priorMaxVersion(s, name)
+      require(vAfter - vBefore >= 4,
         s"drift streams did not span multiple micro-batches " +
-          s"(generations ${vBefore} -> ${maxV()})")
+          s"(generations $vBefore -> $vAfter)")
       val view = s.table(name)
       def row(nm: String, p: org.apache.spark.sql.Column,
           key: org.apache.spark.sql.Column) =
@@ -484,11 +478,7 @@ object StreamDoor {
       val srcDir = s"$base/src"; val ckpt = s"$base/ckpt"
       val ingest = d.filter(pmod(col("doc_id"), lit(5)) === 0)
       ingest.repartition(4).write.mode("overwrite").parquet(srcDir)
-      def maxV(): Long = s.catalog.listTables().collect().map(_.name)
-        .filter(_.startsWith(s"${name}__v"))
-        .flatMap(n => scala.util.Try(n.stripPrefix(s"${name}__v").toLong).toOption)
-        .foldLeft(0L)(math.max)
-      val vBefore = maxV()
+      val vBefore = Layout.priorMaxVersion(s, name)
       val applyBatch: (DataFrame, Long) => Unit = (batch, id) => {
         chunkedCountUpsert(s, dir, "profdoor", bkt, keyed(counted(batch), id + 1))
         ()
@@ -499,9 +489,10 @@ object StreamDoor {
         .trigger(Trigger.AvailableNow())
         .foreachBatch(applyBatch).start()
       q.awaitTermination()
-      require(maxV() - vBefore >= 3,
+      val vAfter = Layout.priorMaxVersion(s, name)
+      require(vAfter - vBefore >= 3,
         s"profile stream did not span multiple micro-batches " +
-          s"(generations ${vBefore} -> ${maxV()})")
+          s"(generations $vBefore -> $vAfter)")
       // merge-on-aggregate read: one (cname, v) exchange, three
       // profile rollups riding it
       Pipeline.profSurfaceFromCounts(
@@ -554,12 +545,7 @@ object StreamDoor {
       val srcDir = s"$base/src"; val ckpt = s"$base/ckpt"
       val ingest = d.filter(pmod(col("doc_id"), lit(5)) === 0)
       ingest.repartition(4).write.mode("overwrite").parquet(srcDir)
-      def maxV(): Long = s.catalog.listTables().collect().map(_.name)
-        .filter(_.startsWith(s"${name}__v"))
-        .flatMap(n =>
-          scala.util.Try(n.stripPrefix(s"${name}__v").toLong).toOption)
-        .foldLeft(0L)(math.max)
-      val vBefore = maxV()
+      val vBefore = Layout.priorMaxVersion(s, name)
       val applyBatch: (DataFrame, Long) => Unit = (batch, id) => {
         chunkedCountUpsert(s, dir, "qsdoor", bkt,
           keyed(Pipeline.charHist(batch), id + 1))
@@ -571,9 +557,10 @@ object StreamDoor {
         .trigger(Trigger.AvailableNow())
         .foreachBatch(applyBatch).start()
       q.awaitTermination()
-      require(maxV() - vBefore >= 3,
+      val vAfter = Layout.priorMaxVersion(s, name)
+      require(vAfter - vBefore >= 3,
         s"quantile stream did not span multiple micro-batches " +
-          s"(generations ${vBefore} -> ${maxV()})")
+          s"(generations $vBefore -> $vAfter)")
       // merge-on-aggregate: the store is BUCKETED on the grouping
       // keys, so the read plans ZERO hash-partition exchanges — the
       // only exchange is the tombstone broadcast (collect, not head —
@@ -639,11 +626,7 @@ object StreamDoor {
       Layout.deleteWarehouseDir(s, base)
       val srcDir = s"$base/src"; val ckpt = s"$base/ckpt"
       val ingest = d.filter(pmod(col("doc_id"), lit(5)) === 0)
-      def maxV(): Long = s.catalog.listTables().collect().map(_.name)
-        .filter(_.startsWith(s"${name}__v"))
-        .flatMap(n => scala.util.Try(n.stripPrefix(s"${name}__v").toLong).toOption)
-        .foldLeft(0L)(math.max)
-      val vBefore = maxV()
+      val vBefore = Layout.priorMaxVersion(s, name)
       // stream batchIds map to prefixes ≥ 2; prefix 1 is RESERVED for
       // the takedown event, prefix 0 for the seed
       val applyBatch: (DataFrame, Long) => Unit = (batch, id) => {
@@ -672,9 +655,10 @@ object StreamDoor {
       ingest.filter(pmod(col("doc_id"), lit(10)) === 5)
         .repartition(2).write.mode("append").parquet(srcDir)
       drain()
-      require(maxV() - vBefore >= 5,
+      val vAfter = Layout.priorMaxVersion(s, name)
+      require(vAfter - vBefore >= 5,
         s"takedown-door run did not interleave stream and batch events " +
-          s"(generations ${vBefore} -> ${maxV()})")
+          s"(generations $vBefore -> $vAfter)")
       Pipeline.profSurfaceFromCounts(
         s.table(name).groupBy(col("cname"), col("v"))
           .agg(sum(col("cnt")).as("cnt")).filter(col("cnt") > 0))
@@ -727,16 +711,13 @@ object StreamDoor {
     * writes, never a corpus rescan; the store stays one row per
     * document under every interleaving. */
   def streamShardTailDoor(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType}
     val d = Tables.documents(s, dir)
     val bkt = Some((Layout.Buckets, Seq("k")))
-    val shardOf = shiftright(conv(substring(md5(concat(lit("tail0:"),
-      col("doc_id").cast(StringType))), 1, 8), 16, 10).cast(LongType), 29)
     // seed = the reader's initial full read of the base corpus (gens
     // 1-2, prefix-free: keys are doc ids)
-    val seed = d.filter(pmod(col("doc_id"), lit(10)) =!= 3)
+    val seed = Pipeline.shardAssign(d.filter(pmod(col("doc_id"), lit(10)) =!= 3), "tail0:")
       .select(col("doc_id").as("k"), col("lang"), col("n_chars"),
-        md5(col("text")).as("tmd5"), shardOf.as("shard_id"))
+        md5(col("text")).as("tmd5"), col("shard_id"))
     Layout.appendRewrite(s, dir, "taildoor", bkt,
       seed.filter(pmod(col("k"), lit(2)) === 1))(
       seed.filter(pmod(col("k"), lit(2)) === 0))
@@ -747,19 +728,8 @@ object StreamDoor {
       val base = Layout.warehousePath(s, Layout.tableName(dir, "tailrun"))
       Layout.deleteWarehouseDir(s, base)
       val ckpt = s"$base/ckpt"
-      def sharded(df: DataFrame): DataFrame = df
-        .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
-        .withColumn("u", conv(substring(md5(concat(lit("tail0:"),
-          col("doc_id").cast(StringType))), 1, 8), 16, 10).cast(LongType))
-        .withColumn("shard_id", shiftright(col("u"), 29))
-        .repartition(8, col("shard_id"))
-        .sortWithinPartitions(col("shard_id"), col("u"), col("doc_id"))
-      def maxV(): Long = s.catalog.listTables().collect().map(_.name)
-        .filter(_.startsWith(s"${name}__v"))
-        .flatMap(n =>
-          scala.util.Try(n.stripPrefix(s"${name}__v").toLong).toOption)
-        .foldLeft(0L)(math.max)
-      val vBefore = maxV()
+      val docs = d.select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
+      val vBefore = Layout.priorMaxVersion(s, name)
       val delivered = new java.util.concurrent.atomic.AtomicLong()
       val applyBatch: (DataFrame, Long) => Unit = (batch, _) => {
         // the batch arrives in the connector's own schema — no glob,
@@ -782,18 +752,16 @@ object StreamDoor {
         delivered.getAndSet(0L)
       }
       // 1: base export + first drain (full re-delivery over the seed)
-      sharded(d.filter(pmod(col("doc_id"), lit(10)) =!= 3))
-        .write.format("graft.sources.ShardSource")
-        .option("path", path).mode("overwrite").save()
+      Pipeline.writeShards(Pipeline.sharded18(
+        docs.filter(pmod(col("doc_id"), lit(10)) =!= 3), "tail0:"), path, "overwrite")
       val baseN = d.filter(pmod(col("doc_id"), lit(10)) =!= 3).count()
       val p1 = drain()
       // 2: delta append, then a TAKEDOWN of part of the not-yet-
       // drained batch — the SAME checkpoint resumes, only the new
       // files process, and the reader applies the takedown's
       // tombstones even though the files predate them
-      sharded(d.filter(pmod(col("doc_id"), lit(10)) === 3))
-        .write.format("graft.sources.ShardSource")
-        .option("path", path).mode("append").save()
+      Pipeline.writeShards(Pipeline.sharded18(
+        docs.filter(pmod(col("doc_id"), lit(10)) === 3), "tail0:"), path, "append")
       val takedown = d.filter(pmod(col("doc_id"), lit(10)) === 3 &&
         pmod(col("doc_id"), lit(3)) === 1).select(col("doc_id"))
       val takedownN = takedown.count()
@@ -816,12 +784,13 @@ object StreamDoor {
         .getOrElse(0L)
       graft.operators.Pipeline.foldShardDirs(s, path, crossed)
       val p3 = drain()
-      require(maxV() - vBefore >= 3,
+      val vAfter = Layout.priorMaxVersion(s, name)
+      require(vAfter - vBefore >= 3,
         s"tail door did not span multiple micro-batches " +
-          s"(generations ${vBefore} -> ${maxV()})")
+          s"(generations $vBefore -> $vAfter)")
       val tailIncremental = p2 == deltaN - takedownN && p2 > 0L
       val redelivery = p1 == baseN && p3 == crossedRows && p3 > 0L
-      val generations = maxV() - vBefore >= 3
+      val generations = vAfter - vBefore >= 3
       // the tombstoned rows never reached the sink — the store is
       // insert-only, so even a TRANSIENT delivery would persist here
       val leaked = s.table(name)
@@ -871,7 +840,6 @@ object StreamDoor {
     * the destination accumulates ordinary generations the vacuum
     * horizon bounds. */
   def streamWriteDoor(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType}
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
     Layout.materializedTable(s, dir, "swcensus") {
@@ -882,12 +850,6 @@ object StreamDoor {
       val run = Layout.warehousePath(s, Layout.tableName(dir, "swrun"))
       Seq(srcPath, outPath, run).foreach(Layout.deleteWarehouseDir(s, _))
       val ckpt = s"$run/ckpt"
-      def sharded(df: DataFrame): DataFrame = df
-        .withColumn("u", conv(substring(md5(concat(lit("sw19:"),
-          col("doc_id").cast(StringType))), 1, 8), 16, 10).cast(LongType))
-        .withColumn("shard_id", shiftright(col("u"), 29))
-        .repartition(8, col("shard_id"))
-        .sortWithinPartitions(col("shard_id"), col("u"), col("doc_id"))
       def drain(): Unit = {
         val q = s.readStream.format("graft.sources.ShardSource")
           .option("path", srcPath).load()
@@ -900,9 +862,8 @@ object StreamDoor {
       }
       val hconf = s.sessionState.newHadoopConf()
       // 1: base export + first drain
-      sharded(d.filter(pmod(col("doc_id"), lit(10)) =!= 3))
-        .write.format("graft.sources.ShardSource")
-        .option("path", srcPath).mode("overwrite").save()
+      Pipeline.writeShards(Pipeline.sharded18(
+        d.filter(pmod(col("doc_id"), lit(10)) =!= 3), "sw19:"), srcPath, "overwrite")
       drain()
       // 2: the empty drain commits nothing
       val genBefore = ShardManifest.currentGen(hconf, outPath)
@@ -910,28 +871,18 @@ object StreamDoor {
       val emptyDrainSilent =
         ShardManifest.currentGen(hconf, outPath) == genBefore
       // 3: delta append + drain
-      sharded(d.filter(pmod(col("doc_id"), lit(10)) === 3))
-        .write.format("graft.sources.ShardSource")
-        .option("path", srcPath).mode("append").save()
+      Pipeline.writeShards(Pipeline.sharded18(
+        d.filter(pmod(col("doc_id"), lit(10)) === 3), "sw19:"), srcPath, "append")
       drain()
       // 4: the destination is first-class
-      def out = s.read.format("graft.sources.ShardSource")
-        .option("path", outPath).load()
+      def out = Pipeline.readShards(s, outPath)
       val firstClass = ShardManifest.readValidated(hconf, outPath).isDefined
       val f0 = graft.sources.ShardSource.openedFiles.get()
       val metaCount = out.agg(count(lit(1))).collect()(0).getLong(0)
       val statsMetaOnly = graft.sources.ShardSource.openedFiles.get() == f0 &&
         metaCount == d.count()
       val twoCommits = ShardManifest.currentGen(hconf, outPath) == genBefore + 1
-      val census = out.groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("sum_chars"),
-          sum(graft.functions.Fns.hash32(concat_ws("|", col("doc_id"),
-            col("n_chars"), col("lang"), md5(col("text"))))).as("checksum"))
-        .collect() // bounded: shards
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toSeq
-      census
+      Pipeline.shardCensus(out)
         .++(Seq(
           (99L, if (emptyDrainSilent) 1L else 0L, 1L, 1L),
           (100L, if (firstClass && statsMetaOnly) 1L else 0L, 1L, 1L),
@@ -998,7 +949,6 @@ object StreamDoor {
     * cap turns it into a resumable sequence whose every step is an
     * ordinary commit. */
   def throttledDrainDoor(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType}
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
     Layout.materializedTable(s, dir, "ttcensus") {
@@ -1008,18 +958,10 @@ object StreamDoor {
       val outPath = Layout.warehousePath(s, Layout.tableName(dir, "ttoutshards"))
       val run = Layout.warehousePath(s, Layout.tableName(dir, "ttrun"))
       Seq(srcPath, outPath, run).foreach(Layout.deleteWarehouseDir(s, _))
-      def sharded(df: DataFrame): DataFrame = df
-        .withColumn("u", conv(substring(md5(concat(lit("tt19:"),
-          col("doc_id").cast(StringType))), 1, 8), 16, 10).cast(LongType))
-        .withColumn("shard_id", shiftright(col("u"), 29))
-        .repartition(8, col("shard_id"))
-        .sortWithinPartitions(col("shard_id"), col("u"), col("doc_id"))
-      sharded(d.filter(pmod(col("doc_id"), lit(10)) =!= 3))
-        .write.format("graft.sources.ShardSource")
-        .option("path", srcPath).mode("overwrite").save()
-      sharded(d.filter(pmod(col("doc_id"), lit(10)) === 3))
-        .write.format("graft.sources.ShardSource")
-        .option("path", srcPath).mode("append").save()
+      Pipeline.writeShards(Pipeline.sharded18(
+        d.filter(pmod(col("doc_id"), lit(10)) =!= 3), "tt19:"), srcPath, "overwrite")
+      Pipeline.writeShards(Pipeline.sharded18(
+        d.filter(pmod(col("doc_id"), lit(10)) === 3), "tt19:"), srcPath, "append")
       val hconf = s.sessionState.newHadoopConf()
       val srcFiles = ShardManifest.read(hconf, srcPath).toSeq
         .flatMap(_._2.flatMap(_.files.map(_.name)))
@@ -1039,23 +981,14 @@ object StreamDoor {
       // the cap's row envelope: no batch may exceed the cap × the
       // largest file's row count (derived from the RAW corpus — each
       // source file is one (shard, era) slice)
-      val maxFileRows = d
-        .withColumn("sh", shiftright(conv(substring(md5(concat(lit("tt19:"),
-          col("doc_id").cast(StringType))), 1, 8), 16, 10)
-          .cast(LongType), 29))
-        .groupBy(col("sh"), pmod(col("doc_id"), lit(10)) === 3)
+      val maxFileRows = Pipeline.shardAssign(d, "tt19:")
+        .groupBy(col("shard_id"), pmod(col("doc_id"), lit(10)) === 3)
         .count().agg(max(col("count"))).collect()(0).getLong(0) // bounded: 1
       val bounded = batches.length == expBatches &&
         batches.forall(_ <= cap.toLong * maxFileRows)
       val epochCommits =
         ShardManifest.currentGen(hconf, outPath) == expBatches.toLong
-      def out = s.read.format("graft.sources.ShardSource")
-        .option("path", outPath).load()
-      out.groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("sum_chars"),
-          sum(graft.functions.Fns.hash32(concat_ws("|", col("doc_id"),
-            col("n_chars"), col("lang"), md5(col("text"))))).as("checksum"))
+      Dedup.docCensus(Pipeline.readShards(s, outPath), col("shard_id"))
         .unionByName(Seq(
           (99L, if (bounded) 1L else 0L, 1L, 1L),
           (100L, if (epochCommits) 1L else 0L, 1L, 1L))
