@@ -29,21 +29,87 @@ import scala.collection.mutable.ArrayBuffer
   */
 object CaaCsv {
 
+  /** The reference's index arithmetic, its one copy: the index of the
+    * last char of the token that starts at `i`; the next token starts
+    * two chars later. Quirk 6 throws here, through the JDK's own
+    * `substring`, whether or not the caller keeps the token. */
+  private def tokenEnd(line: String, i: Int): Int = {
+    val end =
+      if (line.charAt(i) == '"') line.indexOf('"', i + 1)
+      else {
+        val e = line.indexOf(',', i) - 1
+        if (e < 0) line.length - 1 else e // -1 at i==0 only: leading comma (quirk 5)
+      }
+    if (end < i - 1) line.substring(i, end + 1) // quirk 6 when i > 0
+    end
+  }
+
   def splitByComma(line: String): Array[String] = {
     val out = new ArrayBuffer[String]()
     var i = 0
-    val n = line.length
-    while (i < n) {
-      val start = i
-      val end =
-        if (line.charAt(i) == '"') line.indexOf('"', i + 1)
-        else {
-          val e = line.indexOf(',', i) - 1
-          if (e < 0) n - 1 else e // -1 at i==0 only: leading comma (quirk 5)
-        }
-      out += line.substring(start, end + 1) // throws on quirk 6 when start > 0
+    while (i < line.length) {
+      val end = tokenEnd(line, i)
+      out += line.substring(i, end + 1)
       i = end + 2
     }
     out.toArray
+  }
+
+  /** Field scanner: tokenizes a line exactly as [[splitByComma]] does,
+    * but keeps only the bounds of its first `width` tokens and allocates
+    * nothing until a field is read. Fields come back trimmed, as the
+    * reference trims every field it reads (SURVEY §2.3 P2). One instance
+    * serves one thread; each [[scan]] replaces the line before. */
+  final class Fields(width: Int) {
+    private val from = new Array[Int](width)
+    private val to = new Array[Int](width)
+    private var line = ""
+    private var n = 0
+
+    /** Tokenizes `line` and returns its token count, the length of the
+      * array [[splitByComma]] would return. */
+    def scan(line: String): Int = {
+      this.line = line
+      var k = 0
+      var i = 0
+      while (i < line.length) {
+        val end = tokenEnd(line, i)
+        if (k < width) { from(k) = i; to(k) = end + 1 }
+        k += 1
+        i = end + 2
+      }
+      n = k
+      n
+    }
+
+    /** `splitByComma(line)(k).trim` of the last scanned line: beyond its
+      * token count this throws as indexing the split array would. */
+    def apply(k: Int): String = {
+      trim(k)
+      line.substring(from(k), to(k))
+    }
+
+    /** `apply(k) == s`, allocating nothing. */
+    def is(k: Int, s: String): Boolean = {
+      trim(k)
+      to(k) - from(k) == s.length && line.startsWith(s, from(k))
+    }
+
+    /** `Integer.parseInt(apply(k))`, allocating nothing. */
+    def int(k: Int): Int = {
+      trim(k)
+      Integer.parseInt(line, from(k), to(k), 10)
+    }
+
+    /** Narrows token k's bounds as `String.trim` would. */
+    private def trim(k: Int): Unit = {
+      if (k >= n) throw new ArrayIndexOutOfBoundsException(s"Index $k out of bounds for length $n")
+      var s = from(k)
+      var e = to(k)
+      while (s < e && line.charAt(s) <= ' ') s += 1
+      while (s < e && line.charAt(e - 1) <= ' ') e -= 1
+      from(k) = s
+      to(k) = e
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.CaaCsv.splitByComma
+import graft.sources.CaaCsv.{Fields, splitByComma}
 
 /** Dialect-quirk spec for the reference CSV tokenizer port
   * (SURVEY.md §1.3; reference Program/Delay.java:144-162). */
@@ -43,6 +43,9 @@ class CaaCsvSpec extends AnyFunSuite {
     assert(splitByComma("\"ab").toSeq == Seq("", "ab"))
     // at index > 0: substring(start, 0) throws, killing the task
     assertThrows[StringIndexOutOfBoundsException](splitByComma("a,\"bc"))
+    // the field scanner walks the whole line: a token it does not keep
+    // still throws
+    assertThrows[StringIndexOutOfBoundsException](new Fields(1).scan("a,\"bc"))
   }
 
   test("property: seeded random lines match the dialect model (SURVEY §5.2 3a)") {
@@ -63,6 +66,12 @@ class CaaCsvSpec extends AnyFunSuite {
       val expected =
         if (fields.nonEmpty && fields.last.isEmpty) fields.dropRight(1) else fields
       assert(splitByComma(line).toSeq == expected, s"line=<$line>")
+      // the field scanner: same token count, each kept field trimmed
+      val f = new Fields(4)
+      assert(f.scan(line) == expected.length, s"line=<$line>")
+      expected.take(4).zipWithIndex.foreach { case (e, k) =>
+        assert(f(k) == e.trim && f.is(k, e.trim), s"line=<$line> k=$k")
+      }
     }
   }
 }

@@ -94,4 +94,20 @@ class FidelitySpec extends SparkSpec {
     // BETA JET 2015: (8, round(8*0.25)=2) -> 25% suppressed
     assert(got == Seq(("ALPHA AIR", "2011", 50.0)))
   }
+
+  test("each job parses only the fields the reference job reads") {
+    // Delay never reads fields 12-15, Late never reads field 16, and Late
+    // reads no number of an arrival row (SURVEY §1.2): a malformed value
+    // there must not kill the job, as it would not kill the reference's
+    def bad(r: String, field: Int, v: String): String =
+      r.split(",", -1).updated(field, v).mkString(",")
+    val dep = row("201101", "LUTON", "GAMMA", "D", "S", 10, 40, 10, 0, 0, 2.0)
+    val arr = row("201101", "LUTON", "GAMMA", "A", "S", 5, 0, 0, 0, 0, 1.0)
+    val delayIn = spark.createDataset(Seq(bad(dep, 13, "n/a"), arr))
+    assert(Fidelity.delay(delayIn).as[(String, Double, Double)].collect().toSeq ==
+      Seq(("LUTON", 1.0, 2.0)))
+    for (lateIn <- Seq(Seq(bad(dep, 16, "n/a")), Seq(dep, bad(bad(arr, 8, "n/a"), 12, "n/a"))))
+      assert(Fidelity.late(spark.createDataset(lateIn)).as[(String, String, Double)]
+        .collect().toSeq == Seq(("GAMMA", "2011", 50.0)), lateIn)
+  }
 }

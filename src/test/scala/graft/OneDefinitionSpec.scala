@@ -6,9 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * every caller goes through it: the shard-id step
   * (`Pipeline.withShardId`), the oracle checksum fragment
   * (`operators.h32`), the version scan (`Layout.priorMaxVersion`, so
-  * no local `maxV`) and Similarity's neighbour order
-  * (`Similarity.topK`). A hand copy that grows back elsewhere fails
-  * here. Comment lines are skipped, as in [[WarehouseFsSpec]]. */
+  * no local `maxV`), Similarity's neighbour order (`Similarity.topK`)
+  * and the CAA dialect's token arithmetic (`CaaCsv.tokenEnd`, which
+  * `splitByComma` and the field scanner share). A hand copy that grows
+  * back elsewhere fails here. Comment lines are skipped, as in [[WarehouseFsSpec]]. */
 class OneDefinitionSpec extends AnyFunSuite {
 
   /** idiom -> the one file allowed to spell it (None: nowhere) */
@@ -16,7 +17,8 @@ class OneDefinitionSpec extends AnyFunSuite {
     """shiftright(col("u"), 29)""" -> Some("graft/operators/Pipeline.scala"),
     "def h32(" -> Some("graft/operators/package.scala"),
     "def maxV(" -> None,
-    """orderBy(col("cos").desc, col("nbr"))""" -> Some("graft/operators/Similarity.scala"))
+    """orderBy(col("cos").desc, col("nbr"))""" -> Some("graft/operators/Similarity.scala"),
+    "indexOf(',', i) - 1" -> Some("graft/sources/CaaCsv.scala"))
 
   private def sources(d: java.io.File): Seq[java.io.File] =
     Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap { f =>

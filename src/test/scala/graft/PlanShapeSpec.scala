@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 /** Physical-plan regression tests: the scan/shuffle/broadcast shapes
@@ -455,5 +458,42 @@ class PlanShapeSpec extends SparkSpec {
       val p = plan(q)
       assert(countOf(p, "\\*\\(\\d+\\)") >= 2, s"$q lost codegen: $p")
     }
+  }
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsDuring(body: => Unit): Int = {
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.graftshim.BusFlush.waitEmpty(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(l)
+    n.get
+  }
+
+  test("Delay/Late: one exchange to a single partition, no range sort, two jobs, file scan kept") {
+    // the per-partition combiner's partials shuffle once; the final
+    // aggregate and the sort run on that one partition, so neither adds
+    // an exchange or a range-sample job. The text scan stays in the plan,
+    // where inputFiles (the benchmark's input bytes) reads it.
+    val dir = Files.createTempDirectory("caa")
+    val csv = Files.write(dir.resolve("caa.csv"), java.util.Arrays.asList(
+      "01-Jan-2018,201101,LUTON,GB,X,ALPHA AIR,D,S,10,0,0,0,40,10,0,0,2.0,0,0,0,0",
+      "01-Jan-2018,201101,LUTON,GB,X,ALPHA AIR,A,S,5,0,0,0,0,0,0,0,1.0,0,0,0,0"))
+    val lines = spark.read.textFile(dir.toString)
+    for ((name, df) <- Seq("Delay" -> graft.operators.Fidelity.delay(lines),
+                           "Late" -> graft.operators.Fidelity.late(lines))) {
+      assert(jobsDuring(df.collect()) == 2, s"$name: not two jobs per collect")
+      val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+      assert(countOf(p, "\\bExchange ") == 1, s"$name: not exactly one exchange:\n$p")
+      assert(!p.contains("rangepartitioning"), s"$name: sort shuffles:\n$p")
+      assert(df.inputFiles.toSeq.map(_.split('/').last) == Seq("caa.csv"),
+        s"$name: scan left the plan: ${df.inputFiles.toSeq}")
+    }
+    Files.delete(csv)
+    Files.delete(dir)
   }
 }
