@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.SnapMemo
-import graft.sources.Tables
+import graft.sources.{ShardManifest, Tables}
+import graft.sources.ShardLayout._
 import graft.functions.Fns._
 
 /** Training-data-pipeline operators beyond the dedup/similarity/text
@@ -3201,14 +3202,9 @@ object Pipeline {
        |         CAST(1 AS BIGINT), CAST(1 AS BIGINT)) t
        |ORDER BY lang, label""".stripMargin)
 
-  /** Shards per epoch of the q156 deterministic shuffle. At 100 TB the
-    * count is thousands (sized to shard-file targets); the mechanics —
-    * a keyed hash to a uniform 32-bit position, fixed range boundaries,
-    * no sampling pass and no global sort — are count-independent. */
-  private val EpochShards = 8
-
   /** The shard-id step: `shard_id` is the top 3 bits of the uniform
-    * 32-bit position `u`, one of [[EpochShards]] shards. */
+    * 32-bit position `u`, one of
+    * [[graft.sources.ShardLayout.EpochShards]] shards. */
   private def withShardId(df: DataFrame): DataFrame =
     df.withColumn("shard_id", shiftright(col("u"), 29))
 
@@ -3227,12 +3223,55 @@ object Pipeline {
       .distinct().collect().map(_.getLong(0)).toSet // bounded: ≤ shards
 
   /** [[shardAssign]] then one task per shard, sorted by (shard, u,
-    * doc) — written through [[writeShards]] it lands one file per
-    * shard, over whatever columns `df` carries. */
+    * doc) — written through [[graft.sources.ShardLayout.writeShards]]
+    * it lands one file per shard, over whatever columns `df` carries. */
   private[graft] def sharded18(df: DataFrame, salt: String): DataFrame =
     shardAssign(df, salt)
       .repartition(EpochShards, col("shard_id"))
       .sortWithinPartitions(col("shard_id"), col("u"), col("doc_id"))
+
+  /** The DELIVERY-LAYER TAKEDOWN (the q172 verb): the ids
+    * leave the layout as per-shard TOMBSTONE delta files
+    * (`tomb-*.jsonl.zst`, one line per excluded doc) that the
+    * connector's readers apply — never an in-place rewrite of a file
+    * being served. The write is O(affected): only the tomb ids' hash-
+    * image shards are read (connector shard filter), the envelope
+    * (`Layout.massDeleteKeys`) bounds the driver pass the way the
+    * MVCC store's deleteSegment bounds its tombstones, and base part
+    * files are untouched. The manifest is maintained EXACTLY, in the
+    * SAME O(image) pass: one conditional
+    * aggregate over the image shards computes the removed id lists
+    * (bounded by the envelope) AND the survivors' row count, mass,
+    * min/max doc_id and per-column null counts — so stats pushdown
+    * keeps serving counts, mass, BOUNDS and COUNT(col) from metadata
+    * straight through a takedown, with nothing deferred to the fold.
+    * Returns the takedown's hash-image shard set. */
+  private[graft] def shardTakedown(s: SparkSession, path: String,
+      tombIds: DataFrame, salt: String): Set[Long] =
+    shardTakedownAt(s, path, tombIds, shardImage(tombIds, salt))
+
+  /** The delivery-layer UPSERT — copy-on-write corrections (the Delta
+    * default write mode at the layout): the corrected rows' hash-image
+    * shards are REWRITTEN with the replacements patched in
+    * ([[graft.sources.ShardLayout.shardUpsertAt]] — old rows
+    * anti-joined out by doc_id, new rows unioned, stats/nulls
+    * recomputed), under the versioned commit: the pre-correction
+    * generation stays addressable (`asOfGen` — corrections are
+    * AUDITABLE) until the vacuum horizon, untouched shards' files stay
+    * byte-identical, and readers mid-scan keep their snapshot.
+    * O(affected shards' rows) rewrite I/O — the honest COW trade (the
+    * tombstone route, q172, is the delete-only merge-on-read side; a
+    * same-key REPLACE cannot ride doc-id tombstones, which would
+    * exclude the replacement too). `updates` carries the layout's DATA columns (doc_id, ...);
+    * the verb derives u/shard_id from the salt formula — a corrected
+    * document lands in its original shard by construction. Returns
+    * the rewritten shard set. */
+  private[graft] def shardUpsert(s: SparkSession, path: String,
+      updates: DataFrame, salt: String): Set[Long] = {
+    val image = shardImage(updates, salt)
+    shardUpsertAt(s, path, shardAssign(updates, salt), image)
+    image
+  }
 
   /** Every physical part file under the shard dirs of `path`, as
     * `shard_id=<k>/<name>` -> length (manifest-oblivious: retained
@@ -3262,19 +3301,10 @@ object Pipeline {
       .collect() // bounded: shards
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
 
-  /** Write `df` to the shard layout at `path` through the connector. */
-  private[graft] def writeShards(df: DataFrame, path: String, mode: String): Unit =
-    df.write.format("graft.sources.ShardSource")
-      .option("path", path).mode(mode).save()
-
-  /** Read the live shard layout at `path` through the connector. */
-  private[graft] def readShards(s: SparkSession, path: String): DataFrame =
-    s.read.format("graft.sources.ShardSource").option("path", path).load()
-
   /** The layout checks of a fresh [[sharded18]] export read off the
     * directory listing: exactly one part file in each of the
-    * [[EpochShards]] shard dirs, and every part file a zstd frame by
-    * its magic bytes. */
+    * [[graft.sources.ShardLayout.EpochShards]] shard dirs, and every
+    * part file a zstd frame by its magic bytes. */
   private def oneZstFilePerShard(s: SparkSession, path: String): (Boolean, Boolean) = {
     import graft.sources.{Layout, ZstdCodec}
     val shardDirs = Layout.listWarehouseNames(s, path, dirsOnly = true)
@@ -4084,7 +4114,7 @@ object Pipeline {
         after.get(f).contains(len) }
       val touched = shardImage(batch, "epoch0:")
       val newPerShard = (after.keySet -- before.keySet).toSeq
-        .groupBy(f => f.split("/")(0).stripPrefix("shard_id=").toLong)
+        .groupBy(ShardManifest.shardOf)
         .map { case (sh, fs) => sh -> fs.size }
       val oneDeltaEach = newPerShard.keySet == touched &&
         newPerShard.values.forall(_ == 1)
@@ -4171,7 +4201,7 @@ object Pipeline {
       val before = partFiles(s, path)
       def filesPerShard(l: Map[String, Long]): Map[Long, Int] =
         l.keySet.toSeq
-          .groupBy(f => f.split("/")(0).stripPrefix("shard_id=").toLong)
+          .groupBy(ShardManifest.shardOf)
           .map { case (sh, fs) => sh -> fs.size }
       val crossed = filesPerShard(before).filter(_._2 >= 3).keySet
       require(crossed.nonEmpty, "the compaction policy never fired — " +
@@ -4188,7 +4218,7 @@ object Pipeline {
         .values.forall(_ == 1)
       val uncrossedUntouched = before
         .filter { case (f, _) =>
-          !crossed.contains(f.split("/")(0).stripPrefix("shard_id=").toLong) }
+          !crossed.contains(ShardManifest.shardOf(f)) }
         .forall { case (f, len) => after.get(f).contains(len) }
       // the policy decision checked INDEPENDENTLY of the listing that
       // defined `crossed` (round-16 advice — the prior form compared
@@ -4462,589 +4492,6 @@ object Pipeline {
     path
   }
 
-  /** Fold the named shards back to one file each (the q165/q168
-    * compaction move), VERSIONED (round 18): read only the crossed
-    * shards' snapshot files, rewrite them to a temp layout, rename the
-    * folded files INTO the live shard directories under fresh names,
-    * then — inside the layout's commit lock — archive the outgoing
-    * manifest as a generation, swap in a manifest whose crossed lines
-    * carry the folded files + recomputed stats (tombstones
-    * MATERIALIZED: the fold restores the exact bounds and null counts
-    * a takedown had invalidated; a fully-tombstoned shard's line
-    * DROPS), and RETIRE the replaced files into the ledger. No
-    * directory is ever renamed or absent, and the replaced bytes stay
-    * on disk until the vacuum horizon — a mid-read loader holding the
-    * pre-fold snapshot finishes against its own files. On a
-    * manifest-less layout the fold still retires the old files (the
-    * live listing is the ledger-scoped physical view), with a brief
-    * window where a listing reader sees both copies — degraded, never
-    * a crash. */
-  private[graft] def foldShardDirs(s: SparkSession, path: String,
-      crossed: Set[Long], targetFileBytes: Option[Long] = None): Unit =
-    rewriteShards(s, path, crossed, identity, targetFileBytes)
-
-  /** The COPY-ON-WRITE shard rewrite under the versioned commit
-    * discipline — the shared machinery of the FOLD (patch = identity:
-    * files collapse, content invariant) and the UPSERT
-    * ([[shardUpsert]]: rows replaced). Reads only the crossed shards'
-    * snapshot files (tombstones materialized), applies `patch`,
-    * rewrites those shards, renames the files into the live dirs, and
-    * — inside the commit lock — swaps a manifest whose crossed lines
-    * carry the new files + recomputed stats/nulls, retiring the
-    * replaced files into a retained generation. */
-  private[graft] def rewriteShards(s: SparkSession, path: String,
-      crossed: Set[Long], patch: DataFrame => DataFrame,
-      targetFileBytes: Option[Long] = None): Unit = {
-    import graft.sources.{Layout, ShardManifest, ShardSource, ZstdCodec}
-    val tmp = s"${path}__fold"
-    Layout.deleteWarehouseDir(s, tmp)
-    val hconf = s.sessionState.newHadoopConf()
-    // file selection is SNAPSHOT-scoped (the manifest's recorded files
-    // when intact, the ledger-scoped live listing otherwise) — never
-    // the raw physical listing, which under retention still holds
-    // replaced generations' bytes
-    val snapshotFiles: Seq[String] =
-      ShardManifest.readSnapshot(hconf, path) match {
-        case Some((_, entries)) =>
-          entries.filter(e => crossed.contains(e.shardId))
-            .flatMap(_.files.map(_.name))
-        case None => ShardManifest.listDataFiles(hconf, path).keys.toSeq
-          .filter(n =>
-            crossed.contains(n.split("/")(0).stripPrefix("shard_id=").toLong))
-      }
-    def crossedNames(prefix: String): Seq[String] = snapshotFiles
-      .filter(_.split("/").last.startsWith(prefix)).sorted
-      .map(n => s"$path/$n")
-    val partPaths = crossedNames("part-")
-    val tombPaths = crossedNames("tomb-")
-    // the layout's own schema (manifest header — an evolved layout
-    // folds ALL its columns), canonical fallback; the shard identity
-    // comes from the DIRECTORY a row was read from (never re-derived
-    // from a formula — the fold must preserve the layout, whatever
-    // sharding produced it)
-    val schema = ShardManifest.read(hconf, path).flatMap(_._1)
-      .getOrElse(ShardSource.Schema)
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      schema.fields.filter(_.name != "shard_id"))
-    val raw = s.read.schema(dataSchema).json(partPaths: _*)
-      .withColumn("shard_id", regexp_extract(input_file_name(),
-        "shard_id=(\\d+)", 1).cast(LongType))
-    val live =
-      if (tombPaths.isEmpty) raw
-      else raw.join(
-        s.read.schema("doc_id long").json(tombPaths: _*),
-        Seq("doc_id"), "left_anti")
-    val sortCols = Seq("shard_id") ++
-      Seq("u", "doc_id").filter(dataSchema.fieldNames.contains)
-    val crossedDf = patch(live)
-      .repartition(EpochShards, col("shard_id"))
-      .sortWithinPartitions(sortCols.map(col): _*)
-    // with a roll budget the temp layout writes through the CONNECTOR
-    // (the same rolling writer commits use — bounded -rNNN files, each
-    // with its own zone map); default stays the one-file-per-shard
-    // partitionBy write every standing gate pins
-    targetFileBytes match {
-      case Some(t) =>
-        crossedDf.write.format("graft.sources.ShardSource")
-          .option("path", tmp).option("targetFileBytes", t.toString)
-          .mode("overwrite").save()
-      case None =>
-        crossedDf.write.mode("overwrite").partitionBy("shard_id")
-          .option("compression", classOf[ZstdCodec].getName).json(tmp)
-    }
-    // per-FILE zone maps of the rolled temp files — served by the temp
-    // layout's own manifest (the rolling writer recorded them); the
-    // budget-less path keeps deriving the single file's bounds from
-    // the folded stats below
-    val rolledBounds: Map[String, (Option[Long], Option[Long])] =
-      if (targetFileBytes.isEmpty) Map.empty
-      else ShardManifest.read(hconf, tmp).toSeq
-        .flatMap(_._2.flatMap(_.files))
-        .map(f => f.name -> ((f.minDoc, f.maxDoc))).toMap
-    // the folded shards' stats — rows/mass/range AND per-column null
-    // counts — recomputed from what was written (O(crossed rows); for
-    // tomb-less folds identical to the carried lines, for takedowns it
-    // RESTORES the facts the tombstones had invalidated)
-    val dataNames = dataSchema.fieldNames.toSeq
-    val aggCols =
-      Seq(count(lit(1)).as("rows")) ++
-        (if (dataNames.contains("n_chars"))
-          Seq(sum(col("n_chars")).as("sc")) else Nil) ++
-        (if (dataNames.contains("doc_id"))
-          Seq(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
-        else Nil) ++
-        dataNames.map(f =>
-          sum(when(col(f).isNull, 1L).otherwise(0L)).as(s"z_$f"))
-    val folded: Map[Long, org.apache.spark.sql.Row] =
-      crossedDf.groupBy(col("shard_id"))
-        .agg(aggCols.head, aggCols.tail: _*)
-        .collect().map(r => r.getLong(0) -> r).toMap // bounded: shards
-    // land the folded files into the LIVE dirs under their (job-unique)
-    // names — pure metadata renames, no directory swap, no absent
-    // window; an emptied (fully-tombstoned) shard simply lands nothing
-    val foldedFiles: Map[Long, Seq[graft.sources.ShardFileEnt]] =
-      crossed.toSeq.sorted.map { sh =>
-        val names = Layout.listWarehouseNames(s, s"$tmp/shard_id=$sh")
-          .filter(_.startsWith("part-")).sorted
-        // a fold lands one file per shard (repartition by shard_id),
-        // so the shard's recomputed bounds ARE the file's zone map
-        val bounds = folded.get(sh).flatMap { r =>
-          def opt(n: String): Option[Long] =
-            if (r.schema.fieldNames.contains(n) &&
-              !r.isNullAt(r.fieldIndex(n)))
-              Some(r.getLong(r.fieldIndex(n))) else None
-          for (mn <- opt("mn"); mx <- opt("mx")) yield (mn, mx)
-        }.filter(_ => names.size == 1)
-        val ents = names.map { f =>
-          val (fs, from) = Layout.hfs(s, s"$tmp/shard_id=$sh/$f")
-          val to = new org.apache.hadoop.fs.Path(s"$path/shard_id=$sh/$f")
-          fs.rename(from, to)
-          val (mn, mx) = rolledBounds.getOrElse(s"shard_id=$sh/$f",
-            (bounds.map(_._1), bounds.map(_._2)))
-          graft.sources.ShardFileEnt(s"shard_id=$sh/$f",
-            fs.getFileStatus(to).getLen, mn, mx)
-        }
-        sh -> ents
-      }.toMap
-    ShardSource.withCommitLock(path) {
-      ShardManifest.read(hconf, path) match {
-        case Some((sch, entries)) =>
-          val updated = entries.flatMap { e =>
-            if (crossed.contains(e.shardId)) {
-              folded.get(e.shardId).map { r =>
-                def opt(n: String): Option[Long] =
-                  if (r.schema.fieldNames.contains(n))
-                    Some(r.getLong(r.fieldIndex(n))) else None
-                e.copy(rows = r.getLong(r.fieldIndex("rows")),
-                  sumChars = opt("sc"), minDoc = opt("mn"), maxDoc = opt("mx"),
-                  files = foldedFiles.getOrElse(e.shardId, Seq.empty),
-                  nulls = Some(dataNames.map(f =>
-                    f -> r.getLong(r.fieldIndex(s"z_$f"))).toMap))
-              } // emptied shard: no folded stats -> entry dropped
-            } else Some(e)
-          }
-          ShardManifest.write(hconf, path,
-            sch.getOrElse(ShardSource.Schema), updated)
-        case None => ()
-      }
-      // retire the pre-fold files (bytes retained until vacuum)
-      ShardManifest.retire(hconf, path, snapshotFiles)
-    }
-    Layout.deleteWarehouseDir(s, tmp)
-  }
-
-  /** The delivery-layer UPSERT — copy-on-write corrections (the Delta
-    * default write mode at the layout): the corrected rows' hash-image
-    * shards are REWRITTEN with the replacements patched in
-    * ([[rewriteShards]] — old rows anti-joined out by doc_id, new
-    * rows unioned, stats/nulls recomputed), under the versioned
-    * commit: the pre-correction generation stays addressable
-    * (`asOfGen` — corrections are AUDITABLE) until the vacuum
-    * horizon, untouched shards' files stay byte-identical, and
-    * readers mid-scan keep their snapshot. O(affected shards' rows)
-    * rewrite I/O — the honest COW trade (the tombstone route, q172,
-    * is the delete-only merge-on-read side; a same-key REPLACE cannot
-    * ride doc-id tombstones, which would exclude the replacement
-    * too). `updates` carries the layout's DATA columns (doc_id, ...);
-    * the verb derives u/shard_id from the salt formula — a corrected
-    * document lands in its original shard by construction. Returns
-    * the rewritten shard set. */
-  private[graft] def shardUpsert(s: SparkSession, path: String,
-      updates: DataFrame, salt: String): Set[Long] = {
-    val withShard = shardAssign(updates, salt)
-    val image = shardImage(updates, salt)
-    rewriteShards(s, path, image, live =>
-      live.join(broadcast(updates.select(col("doc_id"))),
-        Seq("doc_id"), "left_anti")
-        .unionByName(withShard.select(live.columns.map(col): _*)))
-    image
-  }
-
-  /** The delivery-layer GC (round-18 judge item 2, first half):
-    * expire archived generations and sweep unprotected bytes past an
-    * explicit horizon — the `expire_snapshots` + `remove_orphan_files`
-    * discipline applied to the layout.
-    *
-    *  - REFUSES (loudly, touching nothing) unless the current manifest
-    *    exists and records a non-empty file set — the table-format
-    *    rule that GC requires a readable log: with no manifest the
-    *    "protected" set would be empty and every live byte past the
-    *    horizon would read as sweepable, a total-data-loss maintenance
-    *    verb on exactly the degrade state (sidecar drop after racing
-    *    appends, raw legacy layout) the framework deliberately enters.
-    *    Run [[repairShardManifest]] first — [[maintainShardLayout]]
-    *    already does (round-18 advice, high);
-    *  - an archived generation manifest whose mtime < `horizonMs` is
-    *    DROPPED (its `asOfGen` readers fail loudly from then on) —
-    *    except the CURRENT generation's own archive file, which stays
-    *    addressable as long as it is current; `genBudget` additionally
-    *    thins history at streaming cadence: beyond the newest
-    *    `genBudget` surviving generations, older archives drop even
-    *    inside the horizon (a per-drain commit cadence accumulates
-    *    thousands of tiny manifests between horizon-based vacuums);
-    *  - an ORPHANED CLAIM — a generation file NEWER than the current
-    *    generation, left by a commit that claimed its slot but crashed
-    *    before the live swap — drops by the same horizon rule (never
-    *    younger than the horizon: it may be a racing commit mid-swap),
-    *    restoring liveness to the claim CAS (a new commit on the same
-    *    base would otherwise collide with the dead claim forever);
-    *  - a physical DATA file is SWEPT iff it is older than the horizon
-    *    AND protected by nothing — not recorded by the current
-    *    manifest, not by any surviving generation — so either a
-    *    retired file whose generations all expired or an orphan a
-    *    crashed task left behind;
-    *  - a TOMBSTONE file is held to a STRICTER rule: an exclusion that
-    *    no surviving generation records is swept only if some EXPIRED
-    *    generation or the retired ledger recorded it (its exclusion is
-    *    already materialized or superseded). An out-of-band tombstone
-    *    — recorded NOWHERE — is never swept: deleting an unapplied
-    *    exclusion resurrects taken-down rows (round-18 advice,
-    *    medium). Repair first ([[repairShardManifest]] adopts it),
-    *    then vacuum;
-    *  - the retired ledger re-writes to exactly the still-existing
-    *    retired names.
-    *
-    * Returns (swept files, dropped generations). The horizon guards
-    * in-flight writers the way every object-store GC does: a file
-    * younger than it is never touched, recorded or not.
-    *
-    * Scale: one listing pass + O(generations) manifest reads — no data
-    * bytes are ever opened; at 100 TB this is the same O(metadata)
-    * job `expire_snapshots` is. */
-  private[graft] def vacuumShardLayout(s: SparkSession, path: String,
-      horizonMs: Long, genBudget: Option[Int] = None): (Long, Long) = {
-    import graft.sources.{Layout, ShardManifest, ShardSource}
-    import org.apache.hadoop.fs.Path
-    ShardSource.withCommitLock(path) {
-      val hconf = s.sessionState.newHadoopConf()
-      val current = ShardManifest.read(hconf, path)
-      val currentRec = current
-        .map(_._2.flatMap(_.files.map(_.name)).toSet).getOrElse(Set.empty)
-      require(current.isDefined && currentRec.nonEmpty,
-        s"vacuumShardLayout($path): refusing to sweep — the current " +
-          "manifest is absent or records no files, so nothing would be " +
-          "protected and every live byte past the horizon would be " +
-          "deleted. Rebuild the log first (repairShardManifest), then " +
-          "vacuum")
-      val cur = ShardManifest.currentGen(hconf, path)
-      val gens = ShardManifest.listGens(hconf, path)
-      // a TAGGED generation is a GC root (round 19): neither the
-      // horizon nor the history budget expires it, and its recorded
-      // files stay protected — `VERSION AS OF '<tag>'` is a retention
-      // promise, not a hint
-      val refGens = ShardManifest.readRefs(hconf, path).values.toSet
-      val (expired, inHorizon) =
-        gens.filter(g => g._1 != cur && !refGens.contains(g._1))
-          .partition(_._2 < horizonMs)
-      // history budget: keep the NEWEST genBudget surviving archives
-      val overBudget = genBudget match {
-        case Some(b) => inHorizon.sortBy(-_._1).drop(b)
-        case None    => Seq.empty
-      }
-      val drop = expired ++ overBudget
-      val keep = gens.filter(_._1 != cur).filterNot(drop.contains)
-      // which names each DROPPED generation recorded — the fact the
-      // tombstone sweep rule needs (read BEFORE deleting the archives)
-      val droppedRec = drop.flatMap { case (g, _) =>
-        ShardManifest.readGen(hconf, path, g).toSeq
-          .flatMap(_._2.flatMap(_.files.map(_.name)))
-      }.toSet
-      val protectedNames = currentRec ++ keep.flatMap { case (g, _) =>
-        ShardManifest.readGen(hconf, path, g).toSeq
-          .flatMap(_._2.flatMap(_.files.map(_.name)))
-      }
-      val retired = ShardManifest.retiredNames(hconf, path)
-      val (fs, _) = Layout.hfs(s, path)
-      drop.foreach { case (g, _) =>
-        fs.delete(ShardManifest.genPath(path, g), false)
-        fs.delete(ShardManifest.claimMarker(path, g), true)
-      }
-      // claim debris: a marker whose slot was never materialized (a
-      // commit that claimed and crashed) holds its generation number
-      // hostage — clear it past the horizon, restoring liveness to
-      // the slot (a marker younger than the horizon may be a racing
-      // commit mid-materialize and is never touched)
-      val gd = ShardManifest.genDir(path)
-      if (fs.exists(gd)) fs.listStatus(gd).foreach { st =>
-        val nm = st.getPath.getName
-        if (nm.startsWith(".claim-") && st.getModificationTime < horizonMs &&
-            scala.util.Try(nm.stripPrefix(".claim-").toLong).toOption.exists(
-              g => !fs.exists(ShardManifest.genPath(path, g))))
-          fs.delete(st.getPath, true)
-      }
-      val all = ShardManifest.listAllFiles(hconf, path)
-      val swept = all.collect {
-        case (n, (_, mtime))
-            if !protectedNames.contains(n) && mtime < horizonMs &&
-              (!n.split("/").last.startsWith("tomb-") ||
-                droppedRec.contains(n) || retired.contains(n)) =>
-          fs.delete(new Path(new Path(path), n), false)
-          n
-      }.toSeq
-      val remaining = ShardManifest.listAllFiles(hconf, path).keySet
-      ShardManifest.rewriteRetired(hconf, path,
-        retired.intersect(remaining))
-      (swept.size.toLong, drop.size.toLong)
-    }
-  }
-
-  /** TAG a generation with a name (round 19 — the refs ledger):
-    * `VERSION AS OF '<name>'` then resolves to it, and the tag is a
-    * GC ROOT — [[vacuumShardLayout]] never expires a tagged
-    * generation and keeps its recorded files on disk, so the tag is a
-    * retention promise (the Iceberg tag discipline). Metadata only:
-    * one ledger line, no bytes move. The name must not parse as a
-    * number (numbers address generations directly) and the generation
-    * must be addressable NOW — tagging a never-committed or
-    * already-swept snapshot fails loudly rather than minting a
-    * dangling promise. Re-tagging an existing name moves it. */
-  private[graft] def tagShardLayout(s: SparkSession, path: String,
-      name: String, gen: Long): Unit = {
-    import graft.sources.{ShardManifest, ShardSource}
-    require(name.nonEmpty && scala.util.Try(name.trim.toLong).isFailure,
-      s"tagShardLayout($path): tag name '$name' must be non-empty and " +
-        "non-numeric (numeric versions address generations directly)")
-    ShardSource.withCommitLock(path) {
-      val hconf = s.sessionState.newHadoopConf()
-      require(ShardManifest.readGen(hconf, path, gen).isDefined,
-        s"tagShardLayout($path): generation $gen is not addressable — " +
-          "it was never committed, or its manifest was swept past the " +
-          "retention horizon (vacuumShardLayout)")
-      ShardManifest.writeRefs(hconf, path,
-        ShardManifest.readRefs(hconf, path) + (name -> gen))
-    }
-  }
-
-  /** Drop a tag — the generation it named re-enters the ordinary
-    * horizon/budget retention on the next vacuum. Returns false when
-    * the tag did not exist. */
-  private[graft] def dropShardTag(s: SparkSession, path: String,
-      name: String): Boolean = {
-    import graft.sources.{ShardManifest, ShardSource}
-    ShardSource.withCommitLock(path) {
-      val hconf = s.sessionState.newHadoopConf()
-      val refs = ShardManifest.readRefs(hconf, path)
-      if (!refs.contains(name)) false
-      else { ShardManifest.writeRefs(hconf, path, refs - name); true }
-    }
-  }
-
-  /** ROLLBACK the layout to a prior generation (round 19): a NEW
-    * commit whose body is the target snapshot's — the bad commits
-    * stay in history (addressable, auditable), the table's CURRENT
-    * state is the old one again, and nothing is copied (the target's
-    * bytes are still on disk under retention; rollback past the
-    * vacuum horizon fails loudly). The ledger maintenance is the
-    * overwrite discipline run backwards: the target's files leave the
-    * retired ledger BEFORE the manifest swap (an unrecorded live data
-    * file is invisible to snapshot reads — safe), and the
-    * rolled-back-from files retire AFTER it; a crash between leaves
-    * extra live bytes, never a hybrid snapshot. Returns the new
-    * current generation. Scale: O(metadata) — two manifest reads, two
-    * ledger rewrites, zero data bytes. */
-  private[graft] def rollbackShardLayout(s: SparkSession, path: String,
-      gen: Long): Long = {
-    import graft.sources.{ShardManifest, ShardSource}
-    ShardSource.withCommitLock(path) {
-      val hconf = s.sessionState.newHadoopConf()
-      val (tschema, tentries) =
-        ShardManifest.readGenSnapshot(hconf, path, gen).getOrElse(
-          throw new IllegalStateException(
-            s"rollbackShardLayout($path): generation $gen is not " +
-              "readable — it was never committed, or its files were " +
-              "swept past the retention horizon (vacuumShardLayout)"))
-      val targetNames = tentries.flatMap(_.files.map(_.name)).toSet
-      val curGen = ShardManifest.currentGen(hconf, path)
-      val curRec = ShardManifest.read(hconf, path)
-        .map(_._2.flatMap(_.files.map(_.name)).toSet)
-        .getOrElse(ShardManifest.listDataFiles(hconf, path).keySet)
-      // un-retire the restored files first: until the manifest swap
-      // they are merely unrecorded live bytes (invisible to snapshot
-      // reads), but a swapped manifest must never record retired names
-      ShardManifest.rewriteRetired(hconf, path,
-        ShardManifest.retiredNames(hconf, path) -- targetNames)
-      ShardManifest.write(hconf, path, tschema.getOrElse(
-        graft.sources.ShardSource.Schema), tentries,
-        expectedBase = Some(curGen))
-      ShardManifest.retire(hconf, path, curRec -- targetNames)
-      curGen + 1
-    }
-  }
-
-  /** The delivery-layer REPAIR (round-18 judge item 2, second half):
-    * rebuild a broken statistics manifest by RESCAN — rows, mass,
-    * bounds and per-column null counts re-derived from the live bytes
-    * themselves (the foldShardDirs recompute applied to the whole
-    * layout), tombstones applied and then RECORDED, so an out-of-band
-    * takedown (an unrecorded tombstone — snapshot-breaking by the
-    * round-17-advice rule) is ADOPTED rather than ignored. Returns
-    * false when the snapshot is already intact (nothing to repair).
-    *
-    * The rescan's scope is the LIVE listing (physical minus the
-    * retired ledger) — a retained generation's bytes are never
-    * resurrected into the current table. Orphan part files an
-    * uncommitted task left behind ARE adopted (they exist and are not
-    * retired — "everything that exists, never a fabrication", the
-    * same rule the degraded read path applies); run the vacuum first
-    * when orphan PART files must not survive into the repaired
-    * snapshot. For an OUT-OF-BAND TAKEDOWN (an unrecorded tombstone)
-    * the order is REPAIR THEN VACUUM: repair adopts the exclusion into
-    * the manifest; the vacuum's tombstone rule refuses to sweep an
-    * unrecorded tombstone either way (round-18 advice, medium), but
-    * only the repair makes the exclusion part of the snapshot.
-    *
-    * Scale: O(live bytes) — a repair is a deliberate table-rebuild
-    * job, the one verb here that reads data; everything else in the
-    * lifecycle stays O(metadata). */
-  private[graft] def repairShardManifest(s: SparkSession,
-      path: String): Boolean = {
-    import graft.sources.{ShardManifest, ShardSource}
-    ShardSource.withCommitLock(path) {
-      val hconf = s.sessionState.newHadoopConf()
-      if (ShardManifest.readSnapshot(hconf, path).isDefined) false
-      else {
-      val live = ShardManifest.listDataFiles(hconf, path)
-      val schema = ShardManifest.read(hconf, path).flatMap(_._1)
-        .getOrElse(ShardSource.Schema)
-      val dataSchema = org.apache.spark.sql.types.StructType(
-        schema.fields.filter(_.name != "shard_id"))
-      val dataNames = dataSchema.fieldNames.toSeq
-      def of(prefix: String): Seq[String] = live.keys.toSeq
-        .filter(_.split("/").last.startsWith(prefix)).sorted
-      val partPaths = of("part-").map(n => s"$path/$n")
-      val tombPaths = of("tomb-").map(n => s"$path/$n")
-      val raw = s.read.schema(dataSchema).json(partPaths: _*)
-        .withColumn("shard_id", regexp_extract(input_file_name(),
-          "shard_id=(\\d+)", 1).cast(LongType))
-      val rows =
-        if (tombPaths.isEmpty) raw
-        else raw.join(s.read.schema("doc_id long").json(tombPaths: _*),
-          Seq("doc_id"), "left_anti")
-      // per-FILE zone maps, rebuilt from the bytes (pre-tombstone —
-      // wider than live is sound for skipping, narrower never happens)
-      val fileBounds: Map[String, (Long, Long)] =
-        if (!dataNames.contains("doc_id") || partPaths.isEmpty) Map.empty
-        else raw
-          .groupBy(regexp_extract(input_file_name(),
-            "(shard_id=\\d+/[^/]+)$", 1).as("f"))
-          .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
-          .collect().flatMap { r =>
-            if (r.isNullAt(1) || r.isNullAt(2)) None
-            else Some(r.getString(0) -> (r.getLong(1), r.getLong(2)))
-          }.toMap // bounded: files
-      val aggCols =
-        Seq(count(lit(1)).as("rows")) ++
-          (if (dataNames.contains("n_chars"))
-            Seq(sum(col("n_chars")).as("sc")) else Nil) ++
-          (if (dataNames.contains("doc_id"))
-            Seq(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
-          else Nil) ++
-          dataNames.map(f =>
-            sum(when(col(f).isNull, 1L).otherwise(0L)).as(s"z_$f"))
-      val stats = rows.groupBy(col("shard_id"))
-        .agg(aggCols.head, aggCols.tail: _*)
-        .collect().map(r => r.getLong(0) -> r).toMap // bounded: shards
-      val shards = live.keys
-        .map(_.split("/")(0).stripPrefix("shard_id=").toLong).toSeq.distinct
-      val entries = shards.sorted.map { sh =>
-        val files = live.toSeq.filter(_._1.startsWith(s"shard_id=$sh/"))
-          .map { case (n, l) => graft.sources.ShardFileEnt(n, l,
-            fileBounds.get(n).map(_._1), fileBounds.get(n).map(_._2)) }
-        stats.get(sh) match {
-          case Some(r) =>
-            def opt(n: String): Option[Long] =
-              if (r.schema.fieldNames.contains(n))
-                Some(r.getLong(r.fieldIndex(n))) else None
-            graft.sources.ShardEnt(sh, r.getLong(r.fieldIndex("rows")),
-              opt("sc"), opt("mn"), opt("mx"), files,
-              Some(dataNames.map(f =>
-                f -> r.getLong(r.fieldIndex(s"z_$f"))).toMap))
-          case None =>
-            // every row tombstoned: a zero-row line keeps the files
-            // recorded and the stats reader skips it
-            graft.sources.ShardEnt(sh, 0L, Some(0L), None, None, files, None)
-        }
-      }
-      ShardManifest.write(hconf, path, schema, entries)
-      true
-      }
-    }
-  }
-
-  /** The layout's MAINTENANCE verb — `OPTIMIZE` for the delivery
-    * layer: one call that (1) REPAIRS the manifest if its snapshot
-    * broke (rescan — [[repairShardManifest]]), (2) decides the fold
-    * set from MANIFEST METADATA ALONE (a shard needs maintenance when
-    * it holds ≥ 2 data files or any tombstone — fragmentation or
-    * merge-on-read debt), (3) folds exactly those shards
-    * ([[foldShardDirs]] — tombstones materialized, stats/nulls
-    * restored), and (4) expires history past the caller's horizon
-    * ([[vacuumShardLayout]]). Returns (folded shards, swept files,
-    * dropped generations).
-    *
-    * Scale: the DECISION is O(shards) metadata — a 100 TB catalog's
-    * nightly maintenance job reads manifests, not corpora; data I/O
-    * is confined to the shards the policy names (and the repair
-    * rescan only when something actually broke). */
-  private[graft] def maintainShardLayout(s: SparkSession, path: String,
-      horizonMs: Long,
-      targetFileBytes: Option[Long] = None): (Set[Long], Long, Long) = {
-    import graft.sources.ShardManifest
-    val hconf = s.sessionState.newHadoopConf()
-    if (ShardManifest.readSnapshot(hconf, path).isEmpty)
-      repairShardManifest(s, path)
-    // the maintenance policy under a ROLL BUDGET (round 19): several
-    // size-bounded files per shard is the HEALTHY state (the ≥2-files
-    // fragmentation clause would re-fold a freshly rolled shard
-    // forever), so with a budget a shard needs maintenance iff it
-    // carries tombstone debt OR a file whose ON-DISK length exceeds
-    // 2× the (uncompressed-text) budget — compression only shrinks,
-    // so such a file is certainly over-budget: the conservative
-    // trigger that re-lands legacy monoliths as rolled continuations.
-    // The budget-less policy is unchanged.
-    val crossed = ShardManifest.readSnapshot(hconf, path) match {
-      case Some((_, entries)) => entries.filter { e =>
-        val names = e.files.map(_.name.split("/").last)
-        val tombs = names.exists(_.startsWith("tomb-"))
-        targetFileBytes match {
-          case Some(t) => tombs || e.files.exists(f =>
-            f.name.split("/").last.startsWith("part-") && f.len > 2 * t)
-          case None => tombs || names.count(_.startsWith("part-")) >= 2
-        }
-      }.map(_.shardId).toSet
-      case None => Set.empty[Long]
-    }
-    if (crossed.nonEmpty) foldShardDirs(s, path, crossed, targetFileBytes)
-    val (sweptF, sweptG) = vacuumShardLayout(s, path, horizonMs)
-    (crossed, sweptF, sweptG)
-  }
-
-  /** The layout's COMMIT HISTORY as a relation (the `DESCRIBE
-    * HISTORY` verb of the table-format analogy): one row per
-    * addressable generation — archived snapshots plus the current one
-    * — with the facts its manifest carries: row count, shard count
-    * (zero-row lines excluded: an emptied shard serves no group),
-    * data-file count, and whether the generation is current. Pure
-    * metadata: O(generations) manifest reads, no data bytes. */
-  private[graft] def shardLayoutHistory(s: SparkSession,
-      path: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.ShardManifest
-    val hconf = s.sessionState.newHadoopConf()
-    val cur = ShardManifest.currentGen(hconf, path)
-    val gens = (ShardManifest.listGens(hconf, path).map(_._1) ++
-      (if (cur > 0) Seq(cur) else Nil)).distinct.sorted
-    gens.flatMap { g =>
-      ShardManifest.readGen(hconf, path, g).map { case (_, entries) =>
-        val live = entries.filter(_.rows > 0)
-        (g, live.map(_.rows).sum, live.size.toLong,
-          entries.flatMap(_.files.map(_.name))
-            .count(_.split("/").last.startsWith("part-")).toLong,
-          if (g == cur) 1L else 0L)
-      }
-    }.toDF("gen", "n_rows", "n_shards", "n_files", "is_current")
-  }
-
   /** The AQE-aware executed-plan walk (round-18 judge item 7): the
     * final physical plan OBJECT flattened across adaptive boundaries —
     * `AdaptiveSparkPlanExec` hands its final plan, a materialized
@@ -5137,128 +4584,6 @@ object Pipeline {
         (f.optionalBucketSet.map(_.cardinality()).getOrElse(total), total)
     }
 
-  /** The DELIVERY-LAYER TAKEDOWN (round 17, the q172 verb): the ids
-    * leave the layout as per-shard TOMBSTONE delta files
-    * (`tomb-*.jsonl.zst`, one line per excluded doc) that the
-    * connector's readers apply — never an in-place rewrite of a file
-    * being served. The write is O(affected): only the tomb ids' hash-
-    * image shards are read (connector shard filter), the envelope
-    * (`Layout.massDeleteKeys`) bounds the driver pass the way the
-    * MVCC store's deleteSegment bounds its tombstones, and base part
-    * files are untouched. The manifest is maintained EXACTLY, in the
-    * SAME O(image) pass (round-18 judge item 5): one conditional
-    * aggregate over the image shards computes the removed id lists
-    * (bounded by the envelope) AND the survivors' row count, mass,
-    * min/max doc_id and per-column null counts — so stats pushdown
-    * keeps serving counts, mass, BOUNDS and COUNT(col) from metadata
-    * straight through a takedown, with nothing deferred to the fold.
-    * Returns the takedown's hash-image shard set. */
-  private[graft] def shardTakedown(s: SparkSession, path: String,
-      tombIds: DataFrame, salt: String): Set[Long] = {
-    shardTakedownAt(s, path, tombIds, shardImage(tombIds, salt))
-  }
-
-  /** The takedown core against an EXPLICIT candidate shard set — the
-    * salt wrapper derives it from the hash formula; the SQL `DELETE
-    * FROM` route derives it from the manifest's shard zone maps (any
-    * shard whose recorded id range could hold a victim). A candidate
-    * shard with no matching rows is read but untouched. */
-  private[graft] def shardTakedownAt(s: SparkSession, path: String,
-      tombIds: DataFrame, image: Set[Long]): Set[Long] = {
-    import graft.sources.{Layout, ShardManifest, ShardSource, ZstdCodec}
-    val hconf = s.sessionState.newHadoopConf()
-    if (image.isEmpty) return Set.empty
-    // ONE pass over the image shards: removed ids collected (enveloped
-    // below), survivor statistics recomputed — per-column null counts
-    // included, over the layout's full (union) schema: a column an era
-    // never carried reads NULL and counts as such, exactly the
-    // missing-field rule the data path applies
-    val src = readShards(s, path)
-    val dataCols = src.schema.fieldNames.toSeq.filter(_ != "shard_id")
-    val hasChars = dataCols.contains("n_chars")
-    val marked = src
-      .filter(col("shard_id").isin(image.toSeq.map(Long.box): _*))
-      .join(broadcast(tombIds.select(col("doc_id"),
-        lit(true).as("_rm"))), Seq("doc_id"), "left")
-    val keep = col("_rm").isNull
-    val aggCols =
-      Seq(collect_list(when(!keep, col("doc_id"))).as("rmids"),
-        count(when(keep, 1)).as("rows"),
-        min(when(keep, col("doc_id"))).as("mn"),
-        max(when(keep, col("doc_id"))).as("mx")) ++
-        (if (hasChars)
-          Seq(coalesce(sum(when(keep, col("n_chars"))), lit(0L)).as("sc"))
-        else Nil) ++
-        dataCols.map(f =>
-          sum(when(keep && col(f).isNull, 1L).otherwise(0L)).as(s"z_$f"))
-    val stats = marked.groupBy(col("shard_id"))
-      .agg(aggCols.head, aggCols.tail: _*)
-      .collect() // bounded: image shards (removed lists enveloped)
-      .map(r => r.getLong(r.fieldIndex("shard_id")) -> r).toMap
-    def removedOf(r: org.apache.spark.sql.Row): Seq[Long] =
-      r.getSeq[Long](r.fieldIndex("rmids"))
-    val totalRemoved = stats.valuesIterator.map(removedOf(_).size).sum
-    require(totalRemoved <= Layout.massDeleteKeys(s).toInt,
-      s"takedown of $totalRemoved rows exceeds the delivery envelope " +
-        s"(${Layout.massDeleteKeys(s)}) — route a mass takedown through a " +
-        "re-export, not tombstones")
-    val codec = new ZstdCodec()
-    codec.setConf(hconf)
-    val tombNames = stats.collect {
-      case (sh, r) if removedOf(r).nonEmpty =>
-        val ids = removedOf(r)
-        // content-derived name: distinct takedowns land distinct files
-        val tag = java.lang.Long.toHexString(ids.sum + ids.length)
-        val name = f"shard_id=$sh%d/tomb-${ids.length}%05d-$tag.jsonl.zst"
-        val (fs, p) = Layout.hfs(s, s"$path/$name")
-        val out = codec.createOutputStream(fs.create(p, true))
-        try ids.sorted.foreach { id =>
-          out.write(s"""{"doc_id":$id}""".getBytes("UTF-8"))
-          out.write('\n')
-        } finally out.close()
-        sh -> name
-    }
-    // manifest maintenance (inside the layout's commit lock): touched
-    // shards take the recomputed survivor stats — rows, mass, EXACT
-    // bounds and null counts, nothing dropped-until-fold — the tomb
-    // files enter the file lists, and per-file zone maps are KEPT (a
-    // takedown narrows a file's actual range, never widens it).
-    // A shard the takedown EMPTIED keeps its line at rows = 0 so its
-    // files (tombstone included) stay recorded — the snapshot stays
-    // intact and the stats reader SKIPS zero-row lines, so the
-    // metadata path never emits a group the data path does not
-    // (round-17 advice, medium)
-    ShardSource.withCommitLock(path) {
-      ShardManifest.read(hconf, path).foreach { case (sch, entries) =>
-        val liveFiles = ShardManifest.listDataFiles(hconf, path)
-        val updated = entries.map { e =>
-          stats.get(e.shardId).filter(removedOf(_).nonEmpty) match {
-            case Some(r) =>
-              def opt(n: String): Option[Long] =
-                if (r.schema.fieldNames.contains(n) &&
-                  !r.isNullAt(r.fieldIndex(n)))
-                  Some(r.getLong(r.fieldIndex(n))) else None
-              val recorded = e.files.map(f => f.name -> f).toMap
-              e.copy(rows = r.getLong(r.fieldIndex("rows")),
-                sumChars = opt("sc"),
-                minDoc = opt("mn"), maxDoc = opt("mx"),
-                files = liveFiles.toSeq
-                  .filter(_._1.startsWith(s"shard_id=${e.shardId}/"))
-                  .map { case (n, l) => recorded.get(n)
-                    .map(_.copy(len = l))
-                    .getOrElse(graft.sources.ShardFileEnt(n, l)) },
-                nulls = Some(dataCols.map(f =>
-                  f -> r.getLong(r.fieldIndex(s"z_$f"))).toMap))
-            case None => e
-          }
-        }
-        ShardManifest.write(hconf, path,
-          sch.getOrElse(ShardSource.Schema), updated)
-      }
-    }
-    tombNames.keySet.toSet
-  }
-
   /** q168: the MANIFEST LIFECYCLE — the round-16 judge's lead item
     * closed end to end: the statistics sidecar survives (and defends)
     * every delivery-layer verb. The walk, all through the connector:
@@ -5326,7 +4651,7 @@ object Pipeline {
       val hconf = s.sessionState.newHadoopConf()
       val crossed = graft.sources.ShardManifest.listDataFiles(hconf, path)
         .keySet.toSeq
-        .groupBy(f => f.split("/")(0).stripPrefix("shard_id=").toLong)
+        .groupBy(ShardManifest.shardOf)
         .filter(_._2.size >= 2).keySet
       require(crossed.nonEmpty, "the fold policy never fired — " +
         "the delta missed every shard and the gate would be vacuous")
@@ -5341,7 +4666,7 @@ object Pipeline {
       val refolded = crossed == predicted &&
         graft.sources.ShardManifest.listDataFiles(hconf, path)
           .keySet.toSeq
-          .groupBy(f => f.split("/")(0).stripPrefix("shard_id=").toLong)
+          .groupBy(ShardManifest.shardOf)
           .filter { case (sh, _) => crossed.contains(sh) }
           .values.forall(_.size == 1)
       val zeroFiles = openedDelta == 0L && manifestDelta >= 3L
@@ -5635,7 +4960,7 @@ object Pipeline {
       val image = shardTakedown(s, path, tombIds, "tdel17:")
       val takedownOpened = ShardSource.openedFiles.get() - f0
       val imagePartFiles = before.keySet
-        .count(f => image.contains(f.split("/")(0).stripPrefix("shard_id=").toLong))
+        .count(f => image.contains(ShardManifest.shardOf(f)))
       val after = partListing()
       val baseUntouched = before == after
       // 3: phase a — the full live census, min/max included: the
@@ -5885,8 +5210,7 @@ object Pipeline {
       val retained = gen1Files.nonEmpty && gen1Files.forall(f =>
         all.get(f.name).exists(_._1 == f.len))
       // 3-4: the snapshot-holding reader vs the live reader
-      def asOfRead = s.read.format("graft.sources.ShardSource")
-        .option("path", path).option("asOfGen", gen1.toString).load()
+      def asOfRead = readShards(s, path, asOfGen = Some(gen1))
       def liveRead = readShards(s, path)
       val censusGen1 = shardCensus(asOfRead)
       val censusLive = shardCensus(liveRead)
@@ -6247,8 +5571,7 @@ object Pipeline {
         .flatMap(_._2.flatMap(_.files.map(_.name)))
         .count(n => !gen1Names.contains(n) &&
           n.split("/").last.startsWith("part-"))
-      def since(g: Long) = s.read.format("graft.sources.ShardSource")
-        .option("path", path).option("sinceGen", g.toString).load()
+      def since(g: Long) = readShards(s, path, sinceGen = Some(g))
       // 3: the diff census — exactly the delta, exactly the new files
       val f0 = ShardSource.openedFiles.get()
       val census = shardCensus(since(gen1))
@@ -6348,7 +5671,7 @@ object Pipeline {
       val hconf = s.sessionState.newHadoopConf()
       val crossed = graft.sources.ShardManifest.listDataFiles(hconf, path)
         .keySet.toSeq
-        .groupBy(f => f.split("/")(0).stripPrefix("shard_id=").toLong)
+        .groupBy(ShardManifest.shardOf)
         .filter(_._2.size >= 2).keySet
       require(crossed.nonEmpty, "the fold policy never fired — " +
         "the g4 history row would be untested")
@@ -6449,12 +5772,11 @@ object Pipeline {
       // 5a: untouched shards byte-identical
       val after = ShardManifest.listDataFiles(hconf, path)
       def outsideImage(l: Map[String, Long]) = l.filter { case (n, _) =>
-        !image.contains(n.split("/")(0).stripPrefix("shard_id=").toLong) }
+        !image.contains(ShardManifest.shardOf(n)) }
       val untouched = outsideImage(before) == outsideImage(after)
       // 3-4: the corrected live census; the original via time travel
       val censusLive = shardCensus(readShards(s, path))
-      val censusGen1 = shardCensus(s.read.format("graft.sources.ShardSource")
-        .option("path", path).option("asOfGen", gen1.toString).load())
+      val censusGen1 = shardCensus(readShards(s, path, asOfGen = Some(gen1)))
       // 5b: the rewritten manifest serves the corrected stats
       val f0 = ShardSource.openedFiles.get()
       val statRows = readShards(s, path)
@@ -6572,7 +5894,7 @@ object Pipeline {
       // 3: the post-maintenance physical state
       val live = ShardManifest.listDataFiles(hconf, path)
       val perShard = live.keySet
-        .groupBy(_.split("/")(0).stripPrefix("shard_id=").toLong)
+        .groupBy(ShardManifest.shardOf)
       // history collapses to exactly the CURRENT generation: since the
       // claim protocol (round 19) every commit lands its own archive
       // file and the vacuum never drops the current one — the layout
@@ -6807,8 +6129,7 @@ object Pipeline {
       // 4a: SQL route == option route, zero plan change
       val sqlDf = s.sql(
         s"SELECT doc_id, n_chars FROM graft.`$tbl` VERSION AS OF $g1")
-      val optDf = s.read.format("graft.sources.ShardSource")
-        .option("path", path).option("asOfGen", g1.toString).load()
+      val optDf = readShards(s, path, asOfGen = Some(g1))
         .select(col("doc_id"), col("n_chars"))
       val sameRows = sqlDf.collect().map(r => (r.getLong(0), r.getLong(1)))
         .toSet == optDf.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -7509,7 +6830,7 @@ object Pipeline {
         .collect()(0).getLong(0) // bounded: 1
       val filesAfter = ShardManifest.listAllFiles(hconf, path).keySet
       val c = census("c_rolled_back", cur)
-      graft.operators.Pipeline.vacuumShardLayout(s, path,
+      vacuumShardLayout(s, path,
         System.currentTimeMillis() + 60000L)
       val tagSurvives = ShardManifest.readGenSnapshot(hconf, path, g1)
         .isDefined &&
@@ -7517,8 +6838,7 @@ object Pipeline {
           .collect()(0).getLong(0) ==
           d.filter(pmod(col("doc_id"), lit(10)) =!= 3).count()
       val g2Expired =
-        try { s.read.format("graft.sources.ShardSource")
-          .option("path", path).option("asOfGen", g2.toString).load()
+        try { readShards(s, path, asOfGen = Some(g2))
           .collect(); false }
         catch { case t: Throwable =>
           def msgs(x: Throwable): Seq[String] = Option(x).toSeq

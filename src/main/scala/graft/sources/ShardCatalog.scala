@@ -197,13 +197,13 @@ final class ShardCatalog extends TableCatalog with ProcedureCatalog {
         Array(tableParam, horizonParam),
         StructType(Nil).add("swept_files", LongType)
           .add("dropped_generations", LongType)) { in =>
-        val (f, g) = graft.operators.Pipeline.vacuumShardLayout(
+        val (f, g) = ShardLayout.vacuumShardLayout(
           spark(), layoutPathArg(in), in.getLong(1))
         Seq(InternalRow(f, g))
       }
       case "repair" => procedure("repair", Array(tableParam),
         StructType(Nil).add("rebuilt", LongType)) { in =>
-        val did = graft.operators.Pipeline.repairShardManifest(
+        val did = ShardLayout.repairShardManifest(
           spark(), layoutPathArg(in))
         Seq(InternalRow(if (did) 1L else 0L))
       }
@@ -212,7 +212,7 @@ final class ShardCatalog extends TableCatalog with ProcedureCatalog {
         StructType(Nil).add("folded_shards", LongType)
           .add("swept_files", LongType)
           .add("dropped_generations", LongType)) { in =>
-        val (folded, f, g) = graft.operators.Pipeline.maintainShardLayout(
+        val (folded, f, g) = ShardLayout.maintainShardLayout(
           spark(), layoutPathArg(in), in.getLong(1))
         Seq(InternalRow(folded.size.toLong, f, g))
       }
@@ -221,8 +221,7 @@ final class ShardCatalog extends TableCatalog with ProcedureCatalog {
           .add("n_shards", LongType).add("n_files", LongType)
           .add("is_current", LongType)) { in =>
         // bounded: one row per addressable generation (pure metadata)
-        graft.operators.Pipeline
-          .shardLayoutHistory(spark(), layoutPathArg(in))
+        ShardLayout.shardLayoutHistory(spark(), layoutPathArg(in))
           .collect().toSeq.map(r => InternalRow(r.getLong(0),
             r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       }
@@ -231,7 +230,7 @@ final class ShardCatalog extends TableCatalog with ProcedureCatalog {
           ProcedureParameter.in("name", StringType).build(),
           ProcedureParameter.in("gen", LongType).build()),
         StructType(Nil).add("tagged_gen", LongType)) { in =>
-        graft.operators.Pipeline.tagShardLayout(spark(),
+        ShardLayout.tagShardLayout(spark(),
           layoutPathArg(in), in.getUTF8String(1).toString, in.getLong(2))
         Seq(InternalRow(in.getLong(2)))
       }
@@ -239,7 +238,7 @@ final class ShardCatalog extends TableCatalog with ProcedureCatalog {
         Array(tableParam,
           ProcedureParameter.in("name", StringType).build()),
         StructType(Nil).add("dropped", LongType)) { in =>
-        val did = graft.operators.Pipeline.dropShardTag(spark(),
+        val did = ShardLayout.dropShardTag(spark(),
           layoutPathArg(in), in.getUTF8String(1).toString)
         Seq(InternalRow(if (did) 1L else 0L))
       }
@@ -253,7 +252,7 @@ final class ShardCatalog extends TableCatalog with ProcedureCatalog {
         Array(tableParam,
           ProcedureParameter.in("gen", LongType).build()),
         StructType(Nil).add("new_gen", LongType)) { in =>
-        Seq(InternalRow(graft.operators.Pipeline.rollbackShardLayout(
+        Seq(InternalRow(ShardLayout.rollbackShardLayout(
           spark(), layoutPathArg(in), in.getLong(1))))
       }
       case other => throw new RuntimeException(

@@ -95,6 +95,11 @@ private[graft] object ShardManifest {
 
   def manifestPath(root: String): Path = new Path(root, ShardSource.ManifestName)
 
+  /** The shard a layout-relative file name (`shard_id=<k>/<file>`)
+    * lives in. */
+  def shardOf(name: String): Long =
+    name.split("/")(0).stripPrefix("shard_id=").toLong
+
   /** Archived-generation manifests live here, one per replaced
     * snapshot: `_gen/manifest-<gen>.json`. */
   def genDir(root: String): Path = new Path(root, "_gen")
@@ -351,7 +356,7 @@ private[graft] object ShardManifest {
 
   /** The named-reference ledger (`_refs.json`, round 19): one JSON
     * line per TAG — a human name pinned to a generation (`{"name":…,
-    * "gen":…}`). A tag is a GC ROOT: [[graft.operators.Pipeline
+    * "gen":…}`). A tag is a GC ROOT: [[ShardLayout
     * .vacuumShardLayout]] never expires a tagged generation (neither
     * by horizon nor by history budget) and protects its recorded
     * files, so `VERSION AS OF '<name>'` stays readable for as long as

@@ -296,10 +296,10 @@ private[sources] final class ShardTable(path: String,
         }
       }.map(_.shardId).toSet
       case None => ShardManifest.listDataFiles(conf, path).keys
-        .map(_.split("/")(0).stripPrefix("shard_id=").toLong).toSet
+        .map(ShardManifest.shardOf).toSet
     }
     import s.implicits._
-    graft.operators.Pipeline.shardTakedownAt(s, path,
+    ShardLayout.shardTakedownAt(s, path,
       ids.toDF("doc_id"), image)
   }
   override def capabilities(): util.Set[TableCapability] =
@@ -818,7 +818,7 @@ private[sources] final class ShardScan(path: String,
         case None =>
           val live = ShardManifest.listDataFiles(conf, path)
           live.keys.toSeq
-            .groupBy(_.split("/")(0).stripPrefix("shard_id=").toLong)
+            .groupBy(ShardManifest.shardOf)
             .toSeq.map { case (sh, names) =>
               val parts = names.sorted
                 .filter(_.split("/").last.startsWith("part-"))
@@ -1082,14 +1082,14 @@ private[sources] final class ShardMicroBatchStream(path: String,
       case None => ShardManifest.listDataFiles(conf, path).keys.toSeq
     }
     val kept = names.filter { n =>
-      val sh = n.split("/")(0).stripPrefix("shard_id=").toLong
+      val sh = ShardManifest.shardOf(n)
       shardSet.forall(_.contains(sh))
     }
     val (tombs, parts) =
       kept.partition(_.split("/").last.startsWith("tomb-"))
     val root = new Path(path)
     val tombsByShard = tombs
-      .groupBy(_.split("/")(0).stripPrefix("shard_id=").toLong)
+      .groupBy(ShardManifest.shardOf)
       .map { case (sh, ns) =>
         sh -> ns.sorted.map(n => new Path(root, n).toString)
       }
@@ -1152,7 +1152,7 @@ private[sources] final class ShardMicroBatchStream(path: String,
     // and delivery must hold
     val tombs = current()._2
     val root = new Path(path)
-    fresh.groupBy(_.split("/")(0).stripPrefix("shard_id=").toLong)
+    fresh.groupBy(ShardManifest.shardOf)
       .toSeq.sortBy(_._1)
       .map { case (sh, ns) =>
         ShardPartition(

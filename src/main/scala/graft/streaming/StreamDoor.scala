@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.IntegerType
 
 import graft.operators.{Dedup, Pipeline, QueryDef, Similarity}
-import graft.sources.{Layout, Tables}
+import graft.sources.{Layout, ShardLayout, ShardManifest, Tables}
 
 /** Round-11 item 6: ONE streaming front door run END TO END inside the
   * driver gate — every door so far was spec-proven (stream==batch +
@@ -688,9 +688,9 @@ object StreamDoor {
     *     though their files landed BEFORE the takedown (never even
     *     transiently: the store is insert-only, so a transient
     *     delivery would persist — its absence is the proof);
-    *  3. a FOLD rewrites the ≥2-file shards ([[graft.operators
-    *     .Pipeline.foldShardDirs]] — versioned manifest swap, round
-    *     18); the folded files are NEW paths, the stream re-delivers
+    *  3. a FOLD rewrites the ≥2-file shards ([[graft.sources
+    *     .ShardLayout.foldShardDirs]] — versioned manifest
+    *     swap); the folded files are NEW paths, the stream re-delivers
     *     exactly those shards' live rows, and the doc-keyed upsert
     *     absorbs them — the census is fold-invariant.
     *
@@ -752,7 +752,7 @@ object StreamDoor {
         delivered.getAndSet(0L)
       }
       // 1: base export + first drain (full re-delivery over the seed)
-      Pipeline.writeShards(Pipeline.sharded18(
+      ShardLayout.writeShards(Pipeline.sharded18(
         docs.filter(pmod(col("doc_id"), lit(10)) =!= 3), "tail0:"), path, "overwrite")
       val baseN = d.filter(pmod(col("doc_id"), lit(10)) =!= 3).count()
       val p1 = drain()
@@ -760,7 +760,7 @@ object StreamDoor {
       // drained batch — the SAME checkpoint resumes, only the new
       // files process, and the reader applies the takedown's
       // tombstones even though the files predate them
-      Pipeline.writeShards(Pipeline.sharded18(
+      ShardLayout.writeShards(Pipeline.sharded18(
         docs.filter(pmod(col("doc_id"), lit(10)) === 3), "tail0:"), path, "append")
       val takedown = d.filter(pmod(col("doc_id"), lit(10)) === 3 &&
         pmod(col("doc_id"), lit(3)) === 1).select(col("doc_id"))
@@ -775,14 +775,14 @@ object StreamDoor {
       val hconf = s.sessionState.newHadoopConf()
       val crossed = graft.sources.ShardManifest.listDataFiles(hconf, path)
         .keySet.toSeq
-        .groupBy(f => f.split("/")(0).stripPrefix("shard_id=").toLong)
+        .groupBy(ShardManifest.shardOf)
         .filter(_._2.size >= 2).keySet
       require(crossed.nonEmpty, "the fold policy never fired — " +
         "the re-delivery arm would be vacuous")
       val crossedRows = graft.sources.ShardManifest.read(hconf, path)
         .map(_._2.filter(e => crossed.contains(e.shardId)).map(_.rows).sum)
         .getOrElse(0L)
-      graft.operators.Pipeline.foldShardDirs(s, path, crossed)
+      ShardLayout.foldShardDirs(s, path, crossed)
       val p3 = drain()
       val vAfter = Layout.priorMaxVersion(s, name)
       require(vAfter - vBefore >= 3,
@@ -862,7 +862,7 @@ object StreamDoor {
       }
       val hconf = s.sessionState.newHadoopConf()
       // 1: base export + first drain
-      Pipeline.writeShards(Pipeline.sharded18(
+      ShardLayout.writeShards(Pipeline.sharded18(
         d.filter(pmod(col("doc_id"), lit(10)) =!= 3), "sw19:"), srcPath, "overwrite")
       drain()
       // 2: the empty drain commits nothing
@@ -871,11 +871,11 @@ object StreamDoor {
       val emptyDrainSilent =
         ShardManifest.currentGen(hconf, outPath) == genBefore
       // 3: delta append + drain
-      Pipeline.writeShards(Pipeline.sharded18(
+      ShardLayout.writeShards(Pipeline.sharded18(
         d.filter(pmod(col("doc_id"), lit(10)) === 3), "sw19:"), srcPath, "append")
       drain()
       // 4: the destination is first-class
-      def out = Pipeline.readShards(s, outPath)
+      def out = ShardLayout.readShards(s, outPath)
       val firstClass = ShardManifest.readValidated(hconf, outPath).isDefined
       val f0 = graft.sources.ShardSource.openedFiles.get()
       val metaCount = out.agg(count(lit(1))).collect()(0).getLong(0)
@@ -958,9 +958,9 @@ object StreamDoor {
       val outPath = Layout.warehousePath(s, Layout.tableName(dir, "ttoutshards"))
       val run = Layout.warehousePath(s, Layout.tableName(dir, "ttrun"))
       Seq(srcPath, outPath, run).foreach(Layout.deleteWarehouseDir(s, _))
-      Pipeline.writeShards(Pipeline.sharded18(
+      ShardLayout.writeShards(Pipeline.sharded18(
         d.filter(pmod(col("doc_id"), lit(10)) =!= 3), "tt19:"), srcPath, "overwrite")
-      Pipeline.writeShards(Pipeline.sharded18(
+      ShardLayout.writeShards(Pipeline.sharded18(
         d.filter(pmod(col("doc_id"), lit(10)) === 3), "tt19:"), srcPath, "append")
       val hconf = s.sessionState.newHadoopConf()
       val srcFiles = ShardManifest.read(hconf, srcPath).toSeq
@@ -988,7 +988,7 @@ object StreamDoor {
         batches.forall(_ <= cap.toLong * maxFileRows)
       val epochCommits =
         ShardManifest.currentGen(hconf, outPath) == expBatches.toLong
-      Dedup.docCensus(Pipeline.readShards(s, outPath), col("shard_id"))
+      Dedup.docCensus(ShardLayout.readShards(s, outPath), col("shard_id"))
         .unionByName(Seq(
           (99L, if (bounded) 1L else 0L, 1L, 1L),
           (100L, if (epochCommits) 1L else 0L, 1L, 1L))

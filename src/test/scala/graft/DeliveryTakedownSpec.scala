@@ -178,7 +178,7 @@ class DeliveryTakedownSpec extends SparkSpec {
     val pre = census()
     assert(pre == expect, s"post-takedown census wrong: $pre vs $expect")
     // fold everything tombstoned; stats become exact and manifest-valid
-    Pipeline.foldShardDirs(spark, p, img1 ++ img2)
+    graft.sources.ShardLayout.foldShardDirs(spark, p, img1 ++ img2)
     assert(census() == expect, "the fold changed content")
     val hconf = spark.sessionState.newHadoopConf()
     val (sch, entries) = ShardManifest.readValidated(hconf, p).get

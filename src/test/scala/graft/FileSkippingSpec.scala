@@ -129,7 +129,7 @@ class FileSkippingSpec extends SparkSpec {
     val tomb = new org.apache.hadoop.fs.Path(s"$p/shard_id=1/tomb-fst.jsonl")
     val o = fs.create(tomb, true)
     o.write("{\"doc_id\":249}\n".getBytes("UTF-8")); o.close()
-    assert(graft.operators.Pipeline.repairShardManifest(spark, p))
+    assert(graft.sources.ShardLayout.repairShardManifest(spark, p))
     val hconf = spark.sessionState.newHadoopConf()
     val (_, entries) = ShardManifest.readSnapshot(hconf, p).get
     // repair rebuilt per-file bounds from the bytes

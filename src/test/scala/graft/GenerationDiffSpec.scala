@@ -60,7 +60,7 @@ class GenerationDiffSpec extends SparkSpec {
     // a fold rewrites every shard: the post-fold diff against g3
     // re-delivers the whole LIVE corpus as new files — file-level
     // semantics, absorbed downstream by keyed upserts (q170)
-    graft.operators.Pipeline.foldShardDirs(spark, p, (0L until 8L).toSet)
+    graft.sources.ShardLayout.foldShardDirs(spark, p, (0L until 8L).toSet)
     assert(since(g3).select(col("doc_id")).collect()
       .map(_.getLong(0)).toSet ==
       ((1L to 200L).toSet -- (150L to 160L).toSet))
@@ -98,7 +98,7 @@ class GenerationDiffSpec extends SparkSpec {
     assert(ShardSource.manifestReads.get() >= m0 + 2)
     // past the horizon the time-travel STATS path refuses and the scan
     // path fails loudly — never a partial answer
-    graft.operators.Pipeline.vacuumShardLayout(spark, p,
+    graft.sources.ShardLayout.vacuumShardLayout(spark, p,
       System.currentTimeMillis() + 60000L)
     val loud = intercept[Throwable] {
       asOf(g1).agg(count(lit(1))).collect()

@@ -6,10 +6,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * every caller goes through it: the shard-id step
   * (`Pipeline.withShardId`), the oracle checksum fragment
   * (`operators.h32`), the version scan (`Layout.priorMaxVersion`, so
-  * no local `maxV`), Similarity's neighbour order (`Similarity.topK`)
-  * and the CAA dialect's token arithmetic (`CaaCsv.tokenEnd`, which
-  * `splitByComma` and the field scanner share). A hand copy that grows
-  * back elsewhere fails here. Comment lines are skipped, as in [[WarehouseFsSpec]]. */
+  * no local `maxV`), Similarity's neighbour order (`Similarity.topK`),
+  * the CAA dialect's token arithmetic (`CaaCsv.tokenEnd`, which
+  * `splitByComma` and the field scanner share), the shard-path parse
+  * (`ShardManifest.shardOf`), the connector read
+  * (`ShardLayout.readShards`) and the per-shard stats rescan
+  * (`ShardLayout.shardStats`). A hand copy that grows back elsewhere
+  * fails here. The second test pins the layering: the table format
+  * (`graft.sources`) never calls up into the query layer
+  * (`graft.operators`). Comment lines are skipped, as in [[WarehouseFsSpec]]. */
 class OneDefinitionSpec extends AnyFunSuite {
 
   /** idiom -> the one file allowed to spell it (None: nowhere) */
@@ -18,7 +23,10 @@ class OneDefinitionSpec extends AnyFunSuite {
     "def h32(" -> Some("graft/operators/package.scala"),
     "def maxV(" -> None,
     """orderBy(col("cos").desc, col("nbr"))""" -> Some("graft/operators/Similarity.scala"),
-    "indexOf(',', i) - 1" -> Some("graft/sources/CaaCsv.scala"))
+    "indexOf(',', i) - 1" -> Some("graft/sources/CaaCsv.scala"),
+    """stripPrefix("shard_id=")""" -> Some("graft/sources/ShardManifest.scala"),
+    """read.format("graft.sources.ShardSource")""" -> Some("graft/sources/ShardLayout.scala"),
+    """.as(s"z_$f")""" -> Some("graft/sources/ShardLayout.scala"))
 
   private def sources(d: java.io.File): Seq[java.io.File] =
     Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap { f =>
@@ -27,16 +35,24 @@ class OneDefinitionSpec extends AnyFunSuite {
       else Nil
     }
 
-  test("the shard, checksum, version-scan and top-G idioms each have one definition") {
-    val files = sources(new java.io.File("src/main/scala"))
-    assert(files.nonEmpty, "no main sources found from the working directory")
-    val hits = for {
+  /** (file:line, line) of every non-comment line under `dir`. */
+  private def codeLines(dir: String): Seq[(String, String)] = {
+    val files = sources(new java.io.File(dir))
+    assert(files.nonEmpty, s"no sources found under $dir from the working directory")
+    for {
       f <- files
       (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines().zipWithIndex.toSeq
+      if !line.trim.startsWith("*") && !line.trim.startsWith("//")
+    } yield (s"${f.getPath}:${i + 1}", line)
+  }
+
+  test("the shard, checksum, version-scan and top-G idioms each have one definition") {
+    val code = codeLines("src/main/scala")
+    val hits = for {
+      (where, line) <- code
       (idiom, _) <- pinned
-      if line.contains(idiom) && !line.trim.startsWith("*") &&
-        !line.trim.startsWith("//")
-    } yield (idiom, s"${f.getPath}:${i + 1}")
+      if line.contains(idiom)
+    } yield (idiom, where)
     val problems = pinned.flatMap { case (idiom, home) =>
       val at = hits.collect { case (`idiom`, where) => where }
       val ok = home match {
@@ -48,5 +64,12 @@ class OneDefinitionSpec extends AnyFunSuite {
         s"found ${at.size}: ${at.mkString(", ")}")
     }
     assert(problems.isEmpty, problems.mkString("\n"))
+  }
+
+  test("the shard table format in graft.sources never names graft.operators") {
+    val upward = codeLines("src/main/scala/graft/sources")
+      .collect { case (where, line) if line.contains("graft.operators") => where }
+    assert(upward.isEmpty, "graft.sources calls up into graft.operators at: " +
+      upward.mkString(", "))
   }
 }

@@ -39,7 +39,7 @@ class RollbackRefsSpec extends SparkSpec {
     val g1 = ShardManifest.listGens(hconf, p).map(_._1).min
     val g2 = ShardManifest.currentGen(hconf, p)
     assert(src(p).count() == 120L)
-    val g3 = graft.operators.Pipeline.rollbackShardLayout(spark, p, g1)
+    val g3 = graft.sources.ShardLayout.rollbackShardLayout(spark, p, g1)
     assert(g3 == g2 + 1, "rollback must land as the NEXT generation")
     assert(ShardManifest.currentGen(hconf, p) == g3)
     // the current table IS generation g1's content again
@@ -75,7 +75,7 @@ class RollbackRefsSpec extends SparkSpec {
       .option("path", p).mode("overwrite").save()
     assert(ShardManifest.retiredNames(hconf, p).nonEmpty)
     val gOvr = ShardManifest.currentGen(hconf, p)
-    val g3 = graft.operators.Pipeline.rollbackShardLayout(spark, p, gPre)
+    val g3 = graft.sources.ShardLayout.rollbackShardLayout(spark, p, gPre)
     assert(g3 == gOvr + 1)
     // the restored files left the ledger (they are live again), the
     // overwrite's files entered it
@@ -96,7 +96,7 @@ class RollbackRefsSpec extends SparkSpec {
   test("rollback to a never-committed or swept generation fails loudly") {
     val (_, p) = build("rlshards")
     val loud = intercept[Throwable] {
-      graft.operators.Pipeline.rollbackShardLayout(spark, p, 999999L)
+      graft.sources.ShardLayout.rollbackShardLayout(spark, p, 999999L)
     }
     assert(msgs(loud).exists(m => m.contains("not") &&
       (m.contains("readable") || m.contains("committed"))))
@@ -109,7 +109,7 @@ class RollbackRefsSpec extends SparkSpec {
     val hconf = spark.sessionState.newHadoopConf()
     val g1 = ShardManifest.listGens(hconf, p).map(_._1).min
     val g2 = ShardManifest.currentGen(hconf, p)
-    graft.operators.Pipeline.tagShardLayout(spark, p, "v1", g1)
+    graft.sources.ShardLayout.tagShardLayout(spark, p, "v1", g1)
     assert(ShardManifest.readRefs(hconf, p) == Map("v1" -> g1))
     // an OVERWRITE retires every pre-existing file — from here only the
     // tag keeps g1's bytes alive
@@ -120,7 +120,7 @@ class RollbackRefsSpec extends SparkSpec {
       .option("path", p).mode("overwrite").save()
     // an everything-past horizon: without the tag g1 and its retired
     // files would sweep (g2 does — it is untagged)
-    graft.operators.Pipeline.vacuumShardLayout(spark, p,
+    graft.sources.ShardLayout.vacuumShardLayout(spark, p,
       System.currentTimeMillis() + 60000L)
     assert(ShardManifest.readGenSnapshot(hconf, p, g1).isDefined,
       "the tagged generation must survive an everything-past horizon")
@@ -136,8 +136,8 @@ class RollbackRefsSpec extends SparkSpec {
       m.contains("retention horizon")),
       "the untagged generation expires like any archive")
     // drop the tag — the next vacuum expires it like any archive
-    assert(graft.operators.Pipeline.dropShardTag(spark, p, "v1"))
-    graft.operators.Pipeline.vacuumShardLayout(spark, p,
+    assert(graft.sources.ShardLayout.dropShardTag(spark, p, "v1"))
+    graft.sources.ShardLayout.vacuumShardLayout(spark, p,
       System.currentTimeMillis() + 60000L)
     val loud = intercept[Throwable] {
       spark.read.format("graft.sources.ShardSource")
@@ -153,15 +153,15 @@ class RollbackRefsSpec extends SparkSpec {
     val hconf = spark.sessionState.newHadoopConf()
     val g1 = ShardManifest.listGens(hconf, p).map(_._1).min
     intercept[IllegalArgumentException] {
-      graft.operators.Pipeline.tagShardLayout(spark, p, "42", g1)
+      graft.sources.ShardLayout.tagShardLayout(spark, p, "42", g1)
     }
     intercept[IllegalArgumentException] {
-      graft.operators.Pipeline.tagShardLayout(spark, p, "ghost", 999999L)
+      graft.sources.ShardLayout.tagShardLayout(spark, p, "ghost", 999999L)
     }
-    assert(!graft.operators.Pipeline.dropShardTag(spark, p, "no_such"))
+    assert(!graft.sources.ShardLayout.dropShardTag(spark, p, "no_such"))
     // budget-thinning keeps a tagged generation even at budget 0
-    graft.operators.Pipeline.tagShardLayout(spark, p, "keep", g1)
-    graft.operators.Pipeline.vacuumShardLayout(spark, p, 0L,
+    graft.sources.ShardLayout.tagShardLayout(spark, p, "keep", g1)
+    graft.sources.ShardLayout.vacuumShardLayout(spark, p, 0L,
       genBudget = Some(0))
     assert(ShardManifest.readGen(hconf, p, g1).isDefined,
       "the history budget must never thin a tagged generation")

@@ -148,7 +148,7 @@ class ShardConnectorSpec extends SparkSpec {
       .listGens(hconf, p).map(_._1).headOption
       .flatMap(g => graft.sources.ShardManifest.readGen(hconf, p, g))
       .toSeq.flatMap(_._2.flatMap(_.files)).size
-    val (sweptF, sweptG) = graft.operators.Pipeline.vacuumShardLayout(
+    val (sweptF, sweptG) = graft.sources.ShardLayout.vacuumShardLayout(
       spark, p, System.currentTimeMillis() + 60000L)
     assert(sweptG == 1L && sweptF == gen1Files.toLong,
       s"vacuum swept ($sweptF files, $sweptG gens), expected ($gen1Files, 1)")
@@ -235,7 +235,7 @@ class ShardConnectorSpec extends SparkSpec {
     assert(nl == 160L && ShardSource.openedFiles.get() == f1,
       "COUNT(col) must stay metadata-only through a takedown")
     // ...and through the maintenance fold too
-    graft.operators.Pipeline.maintainShardLayout(spark, p,
+    graft.sources.ShardLayout.maintainShardLayout(spark, p,
       System.currentTimeMillis() + 60000L)
     val f2 = ShardSource.openedFiles.get()
     val nl2 = src.agg(count(col("lang"))).collect()(0).getLong(0)
@@ -257,7 +257,7 @@ class ShardConnectorSpec extends SparkSpec {
       .option("path", p).mode("overwrite").save()
     val hconf = spark.sessionState.newHadoopConf()
     val before = graft.sources.ShardManifest.listAllFiles(hconf, p).keySet
-    val (sweptF, sweptG) = graft.operators.Pipeline.vacuumShardLayout(
+    val (sweptF, sweptG) = graft.sources.ShardLayout.vacuumShardLayout(
       spark, p, 0L)
     assert(sweptF == 0L && sweptG == 0L)
     assert(graft.sources.ShardManifest.listAllFiles(hconf, p).keySet == before)
@@ -287,7 +287,7 @@ class ShardConnectorSpec extends SparkSpec {
     val (fs, _) = Layout.hfs(spark, p)
     fs.delete(graft.sources.ShardManifest.manifestPath(p), false)
     val err = intercept[IllegalArgumentException] {
-      graft.operators.Pipeline.vacuumShardLayout(
+      graft.sources.ShardLayout.vacuumShardLayout(
         spark, p, System.currentTimeMillis() + 60000L)
     }
     assert(err.getMessage.contains("repairShardManifest"))
@@ -295,8 +295,8 @@ class ShardConnectorSpec extends SparkSpec {
       "the refusing vacuum must touch nothing")
     // the documented recovery order: repair rebuilds the log, THEN the
     // vacuum may sweep
-    assert(graft.operators.Pipeline.repairShardManifest(spark, p))
-    val (sweptF, _) = graft.operators.Pipeline.vacuumShardLayout(
+    assert(graft.sources.ShardLayout.repairShardManifest(spark, p))
+    val (sweptF, _) = graft.sources.ShardLayout.vacuumShardLayout(
       spark, p, System.currentTimeMillis() + 60000L)
     assert(sweptF == 0L, "every live byte is protected after repair")
     assert(spark.read.format("graft.sources.ShardSource")
@@ -323,7 +323,7 @@ class ShardConnectorSpec extends SparkSpec {
     // make the tombstone "old": backdate is not portable, so instead
     // vacuum at an everything-past horizon — the one state where the
     // age guard cannot save it and only the tombstone rule does
-    val (sweptF, _) = graft.operators.Pipeline.vacuumShardLayout(
+    val (sweptF, _) = graft.sources.ShardLayout.vacuumShardLayout(
       spark, p, System.currentTimeMillis() + 60000L)
     val hconf = spark.sessionState.newHadoopConf()
     assert(graft.sources.ShardManifest.listAllFiles(hconf, p)
@@ -339,7 +339,7 @@ class ShardConnectorSpec extends SparkSpec {
     // repair ADOPTS the exclusion into the manifest; a vacuum after
     // that may sweep the tombstone only once a fold materializes it —
     // repair-then-vacuum is the documented order
-    assert(graft.operators.Pipeline.repairShardManifest(spark, p))
+    assert(graft.sources.ShardLayout.repairShardManifest(spark, p))
     val recorded = graft.sources.ShardManifest.read(hconf, p).get._2
       .flatMap(_.files.map(_.name))
     assert(recorded.contains("shard_id=1/tomb-oob.jsonl"))
@@ -403,10 +403,10 @@ class ShardConnectorSpec extends SparkSpec {
     assert(cur == 101L)
     // vacuum INSIDE the horizon (nothing expired by age) with a budget
     // of 10: history thins to the newest 10 archived + the current
-    val (_, sweptG) = graft.operators.Pipeline.vacuumShardLayout(
+    val (_, sweptG) = graft.sources.ShardLayout.vacuumShardLayout(
       spark, p, 0L, genBudget = Some(10))
     assert(sweptG == 90L, s"expected 90 thinned generations, got $sweptG")
-    val hist = graft.operators.Pipeline.shardLayoutHistory(spark, p)
+    val hist = graft.sources.ShardLayout.shardLayoutHistory(spark, p)
       .select(col("gen")).collect().map(_.getLong(0)).toSeq.sorted
     assert(hist == (91L to 101L),
       s"history must list exactly the retained newest set, got $hist")

@@ -53,7 +53,7 @@ class ShardRaceSpec extends SparkSpec {
     }
     // deterministic recovery: repair rebuilds from the bytes, after
     // which stats pushdown is exact whatever the race did
-    graft.operators.Pipeline.repairShardManifest(spark, p)
+    graft.sources.ShardLayout.repairShardManifest(spark, p)
     val f0 = ShardSource.openedFiles.get()
     val grouped = src.groupBy(col("shard_id")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
