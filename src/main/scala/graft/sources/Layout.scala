@@ -1,11 +1,15 @@
 package graft.sources
 
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
 
 import graft.SnapMemo
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField}
 
 /** The 100 TB layout PRODUCER — the pipeline stage that writes the
   * physical layouts every scale claim in SURVEY §9 depends on, exposed
@@ -138,13 +142,32 @@ object Layout {
     val name = s"graft_${what}_${tag(dir)}"
     SnapMemo[Unit](s, dir, what) {
       refresh(s, name)
-      val w = build.write
-      buckets match {
-        case Some((n, cols)) => w.bucketBy(n, cols.head, cols.tail: _*).saveAsTable(name)
-        case None            => w.saveAsTable(name)
-      }
+      saveBucketed(s, build, name, buckets)
     }
     s.table(name)
+  }
+
+  /** Write `df` as catalog table `table` under an artifact's bucket
+    * spec: the one bucketed write of every verb here. An append
+    * refreshes the table's cached file listing in session `s` (not
+    * `df`'s session, which for a stream batch is the stream's own), so
+    * the next view `s` builds over it sees the new files.
+    * `oneFilePerBucket` first partitions on the BUCKET ID itself
+    * (pmod(murmur3, k) is Spark's bucket formula, the
+    * [[compactBucketed]] discipline), so each bucket's rows land in one
+    * write task and one file whatever the task count. */
+  private def saveBucketed(s: SparkSession, df: DataFrame, table: String,
+      buckets: Option[(Int, Seq[String])], mode: String = "errorifexists",
+      oneFilePerBucket: Boolean = false): Unit = {
+    val w = buckets match {
+      case Some((k, bc)) =>
+        val in =
+          if (oneFilePerBucket) df.repartition(k, pmod(hash(bc.map(col): _*), lit(k))) else df
+        in.write.mode(mode).bucketBy(k, bc.head, bc.tail: _*)
+      case None => df.write.mode(mode)
+    }
+    w.saveAsTable(table)
+    if (mode == "append") s.catalog.refreshTable(table)
   }
 
   /** Bits per dimension of the Z-ORDER documents layout: 2 bits of
@@ -243,55 +266,77 @@ object Layout {
     *     table `<name>__v<N>` (bucketed under the artifact's original
     *     spec — plan properties survive versioning);
     *  2. the stable name `<name>` is a VIEW, repointed to the new
-    *     version with one `CREATE OR REPLACE VIEW` — a SINGLE
-    *     synchronized catalog operation, the atomic pointer swap;
+    *     version by [[commit]], the one commit of every lifecycle verb
+    *     here: a single catalog `alterTable`, the atomic pointer swap;
     *  3. prior versions' tables and files are NEVER touched by a
     *     publish, so a reader that resolved the view before the swap
     *     keeps scanning its version's immutable files to completion.
     *
     * A concurrent reader therefore sees EXACTLY the old or exactly
-    * the new snapshot — never a torn mix, never a vanished file
-    * (`AtomicPublishSpec` proves it with a racing reader loop). The
-    * view resolves to the underlying bucketed table at analysis time,
-    * so bucket pruning and zero-exchange joins pass through
-    * unchanged. Old-version GC is a lease question (drop versions no
-    * reader can still hold), deliberately out of scope here — the
-    * production analogue keeps k prior snapshots for time travel.
-    * Version discovery consults BOTH the catalog and the warehouse
-    * directory listing, so a fresh SparkContext over a persisted
-    * warehouse resumes the counter after the highest on-disk version
-    * rather than restarting at __v1 and clobbering prior versions'
-    * files (round-10 advice fix). Concurrent publishers of the SAME
-    * artifact are serialized on the per-name counter entry — version
-    * allocation, table write, and view swap form one critical
-    * section, so the stable name can never regress to an older
-    * generation when two publishes race (readers take no lock).
-    * Unlike [[materializedTable]] (write-once per snapshot, where
-    * in-place refresh is safe because the table is born before any
-    * reader exists), every REWRITE of a live artifact — the delete
-    * lifecycle — goes through this path. */
+    * the new snapshot — never a torn mix, never a vanished file or
+    * view (`AtomicPublishSpec` races a reader loop against it and pins
+    * the catalog events of each commit). The view resolves to the
+    * underlying bucketed table at analysis time, so bucket pruning and
+    * zero-exchange joins pass through unchanged. Old-version GC is a
+    * lease question (drop versions no reader can still hold), out of
+    * scope here; when it comes, it belongs in [[commit]]'s callers'
+    * one critical section. Version discovery consults BOTH the catalog
+    * and the warehouse directory listing ([[clock]]), so a fresh
+    * SparkContext over a persisted warehouse resumes after the highest
+    * on-disk version rather than clobbering prior versions' files.
+    * Concurrent publishers of the SAME artifact serialize on its clock:
+    * allocation, write and commit form one critical section, so the
+    * stable name can never regress to an older generation when two
+    * publishes race (readers take no lock). Unlike
+    * [[materializedTable]] (write-once per snapshot, where in-place
+    * refresh is safe because the table is born before any reader
+    * exists), every REWRITE of a live artifact — the delete lifecycle —
+    * goes through this path. */
   private[graft] def publishVersioned(s: SparkSession, dir: String, what: String,
       buckets: Option[(Int, Seq[String])])(build: => DataFrame): DataFrame = {
     val name = tableName(dir, what)
-    val ctr = publishCounter.computeIfAbsent(s"$name",
-      _ => new java.util.concurrent.atomic.AtomicLong(priorMaxVersion(s, name)))
-    // one critical section per artifact name: allocate, write, swap.
-    // Serializing the write too is deliberate — without it two racing
-    // publishers could commit their view swaps out of order and leave
-    // the stable name pointing at the older generation.
-    ctr.synchronized {
-      val n = ctr.incrementAndGet()
-      val versioned = s"${name}__v$n"
-      refresh(s, versioned)
-      val w = build.write
-      buckets match {
-        case Some((b, cols)) => w.bucketBy(b, cols.head, cols.tail: _*).saveAsTable(versioned)
-        case None            => w.saveAsTable(versioned)
-      }
-      // the commit point: one catalog op swaps every future reader over
-      s.sql(s"CREATE OR REPLACE VIEW $name AS SELECT * FROM $versioned")
-    }
+    val ctr = clock(s, name, store = false)
+    ctr.synchronized(materializeVersion(s, name, ctr.incrementAndGet(), build, buckets))
     s.table(name)
+  }
+
+  /** THE COMMIT POINT of every lifecycle verb: repoint the stable view
+    * `name` at version `vt`. On an existing view this is
+    * `ALTER VIEW name AS …`, which Spark runs as ONE catalog
+    * `alterTable` (one `AlterTableEvent`), so a reader resolving the
+    * name finds the old or the new definition, never none.
+    * `CREATE OR REPLACE VIEW` would not do: on an existing permanent
+    * view Spark runs it as `dropTable` then `createTable`, and a reader
+    * between the two fails with TABLE_OR_VIEW_NOT_FOUND. The first
+    * publish of a name creates the view. Publishes, events and
+    * compactions commit under the artifact's [[clock]] monitor, so
+    * the exists-check and the statement cannot interleave with
+    * another of their commits of the same name. */
+  private def commit(s: SparkSession, name: String, vt: String): Unit =
+    if (s.catalog.tableExists(name)) s.sql(s"ALTER VIEW $name AS SELECT * FROM $vt")
+    else s.sql(s"CREATE VIEW $name AS SELECT * FROM $vt")
+
+  /** The version clock of artifact `name`: for a store-backed artifact
+    * the store's generation clock (`<name>store#gen`, shared by every
+    * store event and compaction, so they land on one monotone
+    * sequence), else the name's own version clock. Seeded once per JVM
+    * from what the catalog, the warehouse listing and the store's
+    * commit markers already hold, in memory after that. Allocation,
+    * write and [[commit]] run under the clock's monitor: one critical
+    * section per artifact. */
+  private def clock(s: SparkSession, name: String, store: Boolean): AtomicLong =
+    publishCounter.computeIfAbsent(if (store) s"${name}store#gen" else name,
+      _ => new AtomicLong(if (store) priorMaxGen(s, name) else priorMaxVersion(s, name)))
+
+  /** Write version `e` of `name` as a physical (bucketed) table and
+    * commit it — a publish or a compaction. */
+  private def materializeVersion(s: SparkSession, name: String, e: Long,
+      rows: => DataFrame, buckets: Option[(Int, Seq[String])],
+      oneFilePerBucket: Boolean = false): Unit = {
+    val vt = s"${name}__v$e"
+    dropAnyVersion(s, vt)
+    saveBucketed(s, rows, vt, buckets, oneFilePerBucket = oneFilePerBucket)
+    commit(s, name, vt)
   }
 
   /** Every committed version number of `name`, from the union of the
@@ -318,16 +363,27 @@ object Layout {
   private[graft] def priorMaxVersion(s: SparkSession, name: String): Long =
     versionsOf(s, name).foldLeft(0L)(math.max)
 
+  /** Is catalog object `t` a VIEW (false when absent)? */
+  private def isView(s: SparkSession, t: String): Boolean =
+    s.catalog.tableExists(t) &&
+      s.sessionState.catalog.getTableMetadata(TableIdentifier(t)).tableType.name == "VIEW"
+
   /** Drop a version regardless of whether it is a VIEW (delete-event
     * publishes), a TABLE (compactions), or only a leftover warehouse
     * directory from a prior session — Spark's DROP VIEW/DROP TABLE
     * each throw on the other object type, so the GC must dispatch. */
   private def dropAnyVersion(s: SparkSession, t: String): Unit =
-    if (s.catalog.tableExists(t) &&
-        s.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(t)).tableType.name == "VIEW")
-      s.sql(s"DROP VIEW IF EXISTS $t")
+    if (isView(s, t)) s.sql(s"DROP VIEW IF EXISTS $t")
     else refresh(s, t)
+
+  /** Drop every version of `name` that `keep` does not name: the
+    * snapshot-refresh clear of a lifecycle start and the GC of a
+    * compaction. Another session of the same context leaves its
+    * versions as VIEWS in the shared catalog, so each goes through
+    * [[dropAnyVersion]]. */
+  private def dropVersions(s: SparkSession, name: String,
+      keep: Long => Boolean = _ => false): Unit =
+    versionsOf(s, name).filterNot(keep).foreach(v => dropAnyVersion(s, s"${name}__v$v"))
 
   /** FREEZE a version view into a physical snapshot table of the same
     * name — the RETENTION move [[compactDeleted]] makes for a
@@ -352,21 +408,13 @@ object Layout {
   private def freezeVersion(s: SparkSession, name: String, v: Long,
       buckets: Option[(Int, Seq[String])]): Unit = {
     val vt = s"${name}__v$v"
-    if (!s.catalog.tableExists(vt)) return
-    val isView = s.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(vt)).tableType.name == "VIEW"
-    if (!isView) return
-    val tmp = s"${vt}frozen"
-    refresh(s, tmp)
-    val rows = s.table(vt)
-    buckets match {
-      case Some((k, bc)) =>
-        rows.repartition(k, pmod(hash(bc.map(col): _*), lit(k)))
-          .write.bucketBy(k, bc.head, bc.tail: _*).saveAsTable(tmp)
-      case None => rows.write.saveAsTable(tmp)
+    if (isView(s, vt)) {
+      val tmp = s"${vt}frozen"
+      refresh(s, tmp)
+      saveBucketed(s, s.table(vt), tmp, buckets, oneFilePerBucket = true)
+      s.sql(s"DROP VIEW $vt")
+      s.sql(s"ALTER TABLE $tmp RENAME TO $vt")
     }
-    s.sql(s"DROP VIEW $vt")
-    s.sql(s"ALTER TABLE $tmp RENAME TO $vt")
   }
 
   /** Highest MATERIALIZED (table, not view) version of `name`, if any.
@@ -381,9 +429,7 @@ object Layout {
   private def latestMaterializedVersion(s: SparkSession, name: String): Option[Long] =
     versionsOf(s, name).filter { v =>
       val t = s"${name}__v$v"
-      if (s.catalog.tableExists(t))
-        s.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(t)).tableType.name != "VIEW"
+      if (s.catalog.tableExists(t)) !isView(s, t)
       else {
         // not in the catalog but listed ⇒ a warehouse directory from a
         // prior session — only materialized versions leave one
@@ -581,8 +627,7 @@ object Layout {
     storeAsOf(s, dir, what, m(what))
   }
 
-  private val publishCounter =
-    new ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
+  private val publishCounter = new ConcurrentHashMap[String, AtomicLong]()
 
   /** Test hook: forget in-memory publish counters, simulating a fresh
     * SparkContext over a persisted warehouse (the restart scenario
@@ -630,14 +675,15 @@ object Layout {
     * The published artifact is a VIEW:
     * `<name>__vE = (base as gen 0 ∪ seg rows with gen <= E) WHERE no
     * tombstone of gen in (row.gen, E] matches any purged column`,
-    * committed by the single CREATE-OR-REPLACE swap of the stable
-    * `<name>` — the [[publishVersioned]] atomicity argument (a racing
-    * reader resolves either the old or the new view; sidecar FILES
-    * written mid-event are invisible until the swap because the
-    * pre-swap view's gen predicate excludes them). Version allocation
-    * shares [[publishCounter]], so concurrent events serialize and
-    * versions stay monotone over anything a prior session left on
-    * disk. Prior versions (`__vN`) stay readable — time travel.
+    * built by [[publishVersion]] and committed by the one [[commit]]
+    * of the stable `<name>` — the [[publishVersioned]] atomicity
+    * argument (a racing reader resolves either the old or the new
+    * view; sidecar FILES written mid-event are invisible until the
+    * swap because the pre-swap view's gen predicate excludes them).
+    * Version allocation shares the name's [[clock]], so concurrent
+    * events serialize and versions stay monotone over anything a prior
+    * session left on disk. Prior versions (`__vN`) stay readable —
+    * time travel.
     *
     * Plan properties: the PURE-ANTI view is Filter∘(anti ⋉ broadcast
     * tombs) over the base scan, so the base table's bucketing/pruning
@@ -659,43 +705,28 @@ object Layout {
     // alias and never collide)
     require(!cols.contains("gen"),
       s"tombstoneEvent: artifact columns $cols collide with the gen bookkeeping column")
-    // tombstone keys are stored as BIGINT; a non-integral key column
-    // would cast to NULL and the NOT EXISTS predicate would silently
-    // never match — fail loudly at publish time instead (round-12
-    // advice). All production keys here are id columns (longs).
-    tombs.foreach { case (c, keys) =>
-      val dt = keys.schema.fields.head.dataType
-      require(Seq(org.apache.spark.sql.types.LongType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.ShortType,
-          org.apache.spark.sql.types.ByteType).contains(dt),
-        s"tombstoneEvent: delete key for column `$c` has non-integral type $dt " +
-          "— BIGINT tombstone storage would null it out and the delete would no-op")
-    }
+    val rows = tombstones("tombstoneEvent", tombs)
     val name = tableName(dir, what)
     val tombsT = s"${name}tombs"
     val segT = s"${name}seg"
-    val ctr = publishCounter.computeIfAbsent(name,
-      _ => new java.util.concurrent.atomic.AtomicLong(priorMaxVersion(s, name)))
+    val ctr = clock(s, name, store = false)
     // ONE critical section per artifact: sidecar clear, tombstone +
-    // segment writes, and the view swap. The first-event clear used to
-    // run outside it, letting two racing first events interleave a
-    // clear between the loser's append and swap (round-12 advice).
+    // segment writes, and the commit — two racing first events must
+    // not interleave a clear between the loser's append and commit.
     ctr.synchronized {
       SnapMemo[Unit](s, dir, tombsStart(what)) {
         refresh(s, tombsT); refresh(s, segT)
-        // a fresh lifecycle also discards prior sessions' version
-        // TABLES of this artifact — they snapshot a PREVIOUS corpus
-        // build (the materializedTable snapshot-refresh discipline:
-        // tombstone lifecycles restart per snapshot). ONLY when no
-        // live artifact exists under this name in the current session:
-        // a publishVersioned table published THIS session (the
+        // a fresh lifecycle also discards prior sessions' versions of
+        // this artifact — they snapshot a PREVIOUS corpus build (the
+        // materializedTable snapshot-refresh discipline: tombstone
+        // lifecycles restart per snapshot). ONLY when no live artifact
+        // exists under this name in the current session: a
+        // publishVersioned table published THIS session (the
         // mass-delete path) is current state, not stale history — it
         // becomes the event's re-base pin below, so a tombstone event
         // composes after a mass takedown instead of dropping its
         // survivors out from under the stable view.
-        if (!s.catalog.tableExists(name))
-          versionsOf(s, name).foreach(v => dropAnyVersion(s, s"${name}__v$v"))
+        if (!s.catalog.tableExists(name)) dropVersions(s, name)
       }
       // SNAPSHOT-PIN the base. Preference order:
       //  1. this artifact's own latest COMPACTED table — after a
@@ -717,53 +748,86 @@ object Layout {
         }
       val e = ctr.incrementAndGet()
       // O(delete set) write: the tombstone rows
-      tombs.map { case (c, keys) =>
-        keys.toDF("k").select(col("k").cast("long").as("k"),
-          lit(c).as("kcol"), lit(e.toInt).as("gen"))
-      }.reduce(_ unionByName _)
-        .write.mode("append").saveAsTable(tombsT)
-      s.catalog.refreshTable(tombsT)
+      saveBucketed(s, rows.withColumn("gen", lit(e.toInt)), tombsT, None, "append")
       // O(affected) write: the refill segment, artifact bucket spec
-      refill.foreach { r =>
-        val w = r.select(cols.map(col): _*)
-          .withColumn("gen", lit(e.toInt)).write.mode("append")
-        buckets match {
-          case Some((k, bc)) => w.bucketBy(k, bc.head, bc.tail: _*).saveAsTable(segT)
-          case None          => w.saveAsTable(segT)
-        }
-        s.catalog.refreshTable(segT)
-      }
-      val colsSql = cols.map(c => s"`$c`").mkString(", ")
-      val src =
-        if (s.catalog.tableExists(segT))
-          s"""(SELECT $colsSql, CAST(0 AS INT) AS gen FROM $pinnedBase
-             |   UNION ALL SELECT $colsSql, gen FROM $segT WHERE gen <= $e) t""".stripMargin
-        else s"(SELECT $colsSql, CAST(0 AS INT) AS gen FROM $pinnedBase) t"
-      // the anti predicate's column set comes from the SIDECAR, not
-      // this call's arguments: the sidecar accumulates every event's
-      // tombstones, and an event with a different purged-column set
-      // must not drop earlier events' kills on the omitted columns
-      // (round-12 advice — the resurrection hazard)
-      val kcols = s.table(tombsT).filter(col("gen") <= e)
-        .select(col("kcol")).distinct().collect().map(_.getString(0)).sorted
-      kcols.foreach(c => require(cols.contains(c),
-        s"tombstoneEvent: sidecar column `$c` missing from artifact columns $cols"))
-      val anti = kcols.map(c =>
-        s"""NOT EXISTS (SELECT 1 FROM $tombsT d
-           |     WHERE d.gen <= $e AND d.gen > t.gen AND d.kcol = '$c' AND d.k = t.`$c`)""".stripMargin)
-        .mkString("\n  AND ")
-      // a stale TABLE dir from the retired rewrite mechanism could
-      // shadow the versioned view name — clear it before creating
-      s.sql(s"DROP TABLE IF EXISTS ${name}__v$e")
-      s.sql(s"CREATE OR REPLACE VIEW ${name}__v$e AS SELECT $colsSql FROM $src WHERE $anti")
-      // the commit point
-      s.sql(s"CREATE OR REPLACE VIEW $name AS SELECT * FROM ${name}__v$e")
-      // compaction-policy bookkeeping (round-13 lead item): per-event
-      // sidecar-mass metadata next to the markers — what shouldCompact
-      // reads, so the compact/no-compact DECISION is a metadata read
+      refill.foreach(r => saveBucketed(s, r.select(cols.map(col): _*)
+        .withColumn("gen", lit(e.toInt)), segT, buckets, "append"))
+      val base = s.table(pinnedBase).schema
+      publishVersion(s, name, e, cols.map(base(_)), Some(pinnedBase -> 0L),
+        Some(segT).filter(t => s.catalog.tableExists(t)))
+      // compaction-policy bookkeeping: per-event sidecar-mass metadata
+      // next to the markers — what shouldCompact reads, so the
+      // compact/no-compact DECISION is a metadata read
       recordMass(s, name, tombsT, segT, e, baseRowsOf = () => s.table(pinnedBase).count())
     }
     s.table(name)
+  }
+
+  /** Integral key types: tombstone keys are stored as BIGINT, and a
+    * non-integral key would cast to NULL, so the NOT EXISTS predicate
+    * would silently never match. */
+  private val IntegralKeys = Seq(LongType, IntegerType, ShortType, ByteType)
+
+  /** One event's tombstone rows `(k BIGINT, kcol)`, one per (purged
+    * column, key of its single-column key relation) — O(delete set).
+    * Fails loudly before any write on a non-integral key. */
+  private def tombstones(verb: String, tombs: Seq[(String, DataFrame)]): DataFrame = {
+    tombs.foreach { case (c, keys) =>
+      val dt = keys.schema.fields.head.dataType
+      require(IntegralKeys.contains(dt),
+        s"$verb: delete key for column `$c` has non-integral type $dt " +
+          "— BIGINT tombstone storage would null it out and the delete would no-op")
+    }
+    tombs.map { case (c, keys) =>
+      keys.toDF("k").select(col("k").cast("long").as("k"), lit(c).as("kcol"))
+    }.reduce(_ unionByName _)
+  }
+
+  /** Publish version view `<name>__v<e>` and [[commit]] it — the ONE
+    * version-view builder of the tombstone artifacts
+    * ([[tombstoneEvent]]) and the MVCC stores ([[storeVersion]]):
+    *
+    *   rows = head rows (as generation g) ∪ seg rows with gen in (g, e],
+    *   minus rows matching a tombstone of gen in (row.gen, e]
+    *
+    * The head is a tombstone artifact's pinned base (g = 0) or a
+    * store's latest compacted table (g = its generation); without a
+    * head the seg rows are `gen <= e`. Columns are `fields`; one the
+    * head lacks (it predates a schema evolution) reads as a typed
+    * NULL, the rule Parquet applies to pre-evolution files. The
+    * tombstone predicate's column set comes from the SIDECAR `<name>
+    * tombs` (every event's kcols, not the current call's): an event
+    * with a different purged-column set must not drop earlier events'
+    * kills on the omitted columns (the resurrection hazard). */
+  private def publishVersion(s: SparkSession, name: String, e: Long,
+      fields: Seq[StructField], head: Option[(String, Long)], seg: Option[String]): Unit = {
+    val cols = fields.map(f => s"`${f.name}`")
+    val fromHead = head.map { case (t, g) =>
+      val have = s.table(t).columns.toSet
+      val sel = fields.map(f =>
+        if (have(f.name)) s"`${f.name}`" else s"CAST(NULL AS ${f.dataType.sql}) AS `${f.name}`")
+      s"SELECT ${sel.mkString(", ")}, CAST($g AS INT) AS gen FROM $t"
+    }
+    val range = head.fold(s"gen <= $e") { case (_, g) => s"gen > $g AND gen <= $e" }
+    val fromSeg = seg.map(t => s"SELECT ${cols.mkString(", ")}, gen FROM $t WHERE $range")
+    val src = (fromHead ++ fromSeg).mkString("(", "\n   UNION ALL ", ") t")
+    val tombsT = s"${name}tombs"
+    val kcols =
+      if (!s.catalog.tableExists(tombsT)) Array.empty[String]
+      else s.table(tombsT).filter(col("gen") <= e)
+        .select(col("kcol")).distinct().collect().map(_.getString(0)).sorted
+    kcols.foreach(c => require(fields.exists(_.name == c),
+      s"$name: sidecar column `$c` missing from artifact columns ${fields.map(_.name)}"))
+    val anti =
+      if (kcols.isEmpty) ""
+      else kcols.map(c =>
+        s"""NOT EXISTS (SELECT 1 FROM $tombsT d
+           |     WHERE d.gen <= $e AND d.gen > t.gen AND d.kcol = '$c' AND d.k = t.`$c`)""".stripMargin)
+        .mkString(" WHERE ", "\n  AND ", "")
+    val vt = s"${name}__v$e"
+    dropAnyVersion(s, vt)
+    s.sql(s"CREATE VIEW $vt AS SELECT ${cols.mkString(", ")} FROM $src$anti")
+    commit(s, name, vt)
   }
 
   /** TARGETED-DELETE rewrite of a written artifact (round-8 item 5 —
@@ -848,7 +912,7 @@ object Layout {
     * retention contract), and later events re-base on the compacted
     * table — [[tombstoneEvent]] pins it via
     * [[latestMaterializedVersion]]; store events union it with later
-    * generations via the `_compact_` marker ([[publishStoreView]]).
+    * generations via the `_compact_` marker ([[storeVersion]]).
     * For a STORE-backed artifact (`<name>store` exists — the
     * [[appendRewrite]]/[[appendSegment]]/[[deleteSegment]] lifecycle)
     * the compacted table's number is allocated from the store's OWN
@@ -873,40 +937,21 @@ object Layout {
         } pin generations of $name — releaseSavepoint them, or run with " +
           "spark.graft.savepoint.onCompact=retain to freeze the pinned reads")
     val pinnedGens = pins.values.toSet
-    val ctr =
-      if (isStore) publishCounter.computeIfAbsent(s"$store#gen",
-        _ => new java.util.concurrent.atomic.AtomicLong(priorMaxGen(s, name, store)))
-      else publishCounter.computeIfAbsent(name,
-        _ => new java.util.concurrent.atomic.AtomicLong(priorMaxVersion(s, name)))
+    val ctr = clock(s, name, isStore)
     ctr.synchronized {
       val e = ctr.incrementAndGet()
-      val versioned = s"${name}__v$e"
-      s.sql(s"DROP VIEW IF EXISTS $versioned")
-      refresh(s, versioned)
-      val rows = s.table(name)
-      val w = buckets match {
-        case Some((k, bc)) =>
-          // partition on the BUCKET ID itself (pmod(murmur3, k) is
-          // Spark's bucket formula — the compactBucketed discipline),
-          // so each bucket's rows land in one write task → one file
-          rows.repartition(k, pmod(hash(bc.map(col): _*), lit(k)))
-            .write.bucketBy(k, bc.head, bc.tail: _*)
-        case None => rows.write
-      }
-      w.saveAsTable(versioned)
-      // the commit point — readers swap to the anti-join-free table
-      s.sql(s"CREATE OR REPLACE VIEW $name AS SELECT * FROM $versioned")
+      // readers swap to the anti-join-free table, one file per bucket
+      materializeVersion(s, name, e, s.table(name), buckets, oneFilePerBucket = true)
       // GC horizon: prior version views referenced the sidecars about
       // to be cleared — drop them loudly rather than leave views that
       // would resolve to wrong (tombstone-free) history. EXCEPT the
       // generations live savepoints pin: those are FROZEN into
       // physical snapshot tables first (while the sidecars they
-      // predicate over still exist), so the pinned reads survive the
-      // horizon — released pins are swept by the NEXT compaction.
-      versionsOf(s, name).filter(_ < e).foreach { v =>
-        if (pinnedGens.contains(v)) freezeVersion(s, name, v, buckets)
-        else dropAnyVersion(s, s"${name}__v$v")
-      }
+      // predicate over, and any older compacted table they read,
+      // still exist), so the pinned reads survive the horizon —
+      // released pins are swept by the NEXT compaction.
+      pinnedGens.filter(_ < e).foreach(freezeVersion(s, name, _, buckets))
+      dropVersions(s, name, keep = v => v >= e || pinnedGens(v))
       // clean sidecars: the next event starts a fresh tombstone
       // lifecycle over the compacted base (and must NOT re-clear — the
       // lifecycle-start gate is marked done for this session)
@@ -915,10 +960,10 @@ object Layout {
       SnapMemo[Unit](s, dir, tombsStart(what))(())
       if (isStore) {
         // the store's later generations (> e) don't exist yet — record
-        // e as the compaction horizon so the next publishStoreView
-        // reads (compacted table ∪ store gens > e)
-        commitGenMarker(s, store, e)
-        commitCompactMarker(s, store, e)
+        // e as the compaction horizon so the next store version reads
+        // (compacted table ∪ store gens > e)
+        writeMarker(s, store, "gen", e)
+        writeMarker(s, store, "compact", e)
       }
     }
     s.table(name)
@@ -976,9 +1021,9 @@ object Layout {
     *    [[bucketedIncremental]] mechanism (with [[compactBucketed]]
     *    as the background small-file maintenance, as for the facts);
     *  - each VERSION is a view `<what>upd__vN` = `WHERE gen <= N`
-    *    over the store, and the commit point is the single
-    *    CREATE-OR-REPLACE of the stable view — one atomic catalog
-    *    op. A reader racing the append sees exactly the pre- or
+    *    over the store, and the commit point is the one [[commit]]
+    *    of the stable view — one atomic catalog `alterTable`.
+    *    A reader racing the append sees exactly the pre- or
     *    post-append snapshot: in-flight batch FILES may become
     *    visible to its listing mid-job, but every row in them carries
     *    gen 2 and the pre-swap view's predicate excludes them (and
@@ -1004,83 +1049,67 @@ object Layout {
     SnapMemo[Unit](s, dir, what + "upd") {
       val store = s"${name}store"
       refresh(s, store)
-      // stale sidecars/views from a previous session's lifecycle over
-      // a previous snapshot go with the store (same discipline as
-      // tombstoneEvent's first-event clear)
+      // stale sidecars and versions of a previous lifecycle over a
+      // previous snapshot go with the store (same discipline as
+      // tombstoneEvent's first-event clear; versions another session
+      // of this context committed are views)
       refresh(s, s"${name}tombs")
-      versionsOf(s, name).foreach(v => refresh(s, s"${name}__v$v"))
+      dropVersions(s, name)
       def write(df: DataFrame, gen: Int, mode: String): Unit = {
-        val w = df.withColumn("gen", lit(gen)).write.mode(mode)
-        buckets match {
-          case Some((k, bc)) => w.bucketBy(k, bc.head, bc.tail: _*).saveAsTable(store)
-          case None          => w.saveAsTable(store)
-        }
+        saveBucketed(s, df.withColumn("gen", lit(gen)), store, buckets, mode)
+        writeMarker(s, store, "gen", gen)
+        storeVersion(s, name, gen)
       }
       // gen 1 — the held snapshot's segment (snapshot-build I/O, paid
       // once; in a deployment the snapshot builder writes the store
       // directly and maintenance never rewrites it)
       write(b, 1, "error")
-      commitGenMarker(s, store, 1)
-      publishStoreView(s, name, store, 1)
       // gen 2 — the O(batch) append: only the batch's rows land, as
       // new files in their buckets
       write(batch, 2, "append")
-      commitGenMarker(s, store, 2)
-      s.catalog.refreshTable(store)
-      publishStoreView(s, name, store, 2)
-      // seed the in-memory generation counter so the first
-      // appendSegment of this session allocates 3 without a listing
-      publishCounter.computeIfAbsent(s"$store#gen",
-        _ => new java.util.concurrent.atomic.AtomicLong(0L)).set(2L)
+      // the next store event of this lifecycle allocates 3
+      clock(s, name, store = true).set(2L)
     }
     s.table(name)
   }
 
-  /** COMMIT-LOG marker for one committed store generation: an empty
-    * `_gen_<N>` file in the store's directory (underscore-prefixed —
-    * invisible to Spark's file listings, the `_spark_metadata` /
-    * `_SUCCESS` convention). The markers are what make generation
-    * discovery a METADATA read: [[appendSegment]] derives the next
-    * gen from them (plus the catalog's `__vN` views) instead of
-    * scanning the store's data for max(gen) — at 100 TB that scan is
-    * a full-column read per maintenance event just to learn a
-    * counter (round-11 finding #2). Markers persist with the data, so
-    * a fresh SparkContext over the warehouse resumes at the right
-    * generation (`AtomicPublishSpec`'s restart test). */
-  private def tableLocation(s: SparkSession, table: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      s.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
+  /** The warehouse location of catalog table `table`, as a path string. */
+  private def tableLocation(s: SparkSession, table: String): String =
+    new Path(s.sessionState.catalog.getTableMetadata(TableIdentifier(table)).location).toString
 
-  private def commitGenMarker(s: SparkSession, store: String, gen: Long): Unit = {
-    val loc = tableLocation(s, store)
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.create(new org.apache.hadoop.fs.Path(loc, s"_gen_$gen"), true).close()
+  /** COMMIT-LOG MARKERS: a `_<kind>_<N>` file in a table's directory
+    * (underscore-prefixed — invisible to Spark's file listings, the
+    * `_spark_metadata` / `_SUCCESS` convention). Three kinds:
+    *
+    *  - `gen`: store generation N committed. The markers make
+    *    generation discovery a METADATA read ([[priorMaxGen]]) instead
+    *    of a max(gen) scan of the store, a full-column read per event
+    *    at 100 TB;
+    *  - `compact`: generation N is a COMPACTION — the store's
+    *    generations ≤ N are folded into the `<name>__v<N>` table, and
+    *    [[storeVersion]] reads (that table ∪ gens > N);
+    *  - `mass`: the sidecar mass after event N, in the tombstone
+    *    table's directory ([[recordMass]]).
+    *
+    * Markers persist with the data, so a fresh SparkContext over the
+    * warehouse resumes at the right generation and horizon
+    * (`AtomicPublishSpec`'s restart test). */
+  private def markerPath(s: SparkSession, table: String, kind: String, gen: Long): String =
+    new Path(tableLocation(s, table), s"_${kind}_$gen").toString
+
+  private def writeMarker(s: SparkSession, table: String, kind: String, gen: Long,
+      body: String = ""): Unit = {
+    val (fs, p) = hfs(s, markerPath(s, table, kind, gen))
+    val out = fs.create(p, true)
+    try out.write(body.getBytes("UTF-8")) finally out.close()
   }
 
-  /** `_compact_<N>` marker: generation N is a COMPACTION — the store's
-    * generations ≤ N are folded into the `<name>__v<N>` table and
-    * [[publishStoreView]] must read (that table ∪ gens > N). Persists
-    * with the store, so the horizon survives a restart like the gen
-    * markers do. */
-  private def commitCompactMarker(s: SparkSession, store: String, gen: Long): Unit = {
-    val loc = tableLocation(s, store)
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.create(new org.apache.hadoop.fs.Path(loc, s"_compact_$gen"), true).close()
-  }
-
-  /** The store's latest compaction horizon, from its `_compact_`
-    * markers — a metadata read, like all generation discovery. */
-  private def latestCompactGen(s: SparkSession, store: String): Option[Long] = {
-    if (!s.catalog.tableExists(store)) return None
-    val loc = tableLocation(s, store)
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(loc)) None
-    else fs.listStatus(loc).map(_.getPath.getName)
-      .filter(_.startsWith("_compact_")).toSeq
-      .flatMap(n => scala.util.Try(n.stripPrefix("_compact_").toLong).toOption)
-      .sorted.lastOption
-  }
+  /** The generations of `table`'s `kind` markers, ascending (empty
+    * when the table or its directory is absent). */
+  private def markerGens(s: SparkSession, table: String, kind: String): Seq[Long] =
+    if (!s.catalog.tableExists(table)) Nil
+    else listWarehouseNames(s, tableLocation(s, table)).filter(_.startsWith(s"_${kind}_"))
+      .flatMap(n => scala.util.Try(n.stripPrefix(s"_${kind}_").toLong).toOption).sorted
 
   // ---------------------------------------------------------------
   // COMPACTION-TRIGGER POLICY (round-13 lead item). The MECHANISM —
@@ -1124,40 +1153,24 @@ object Layout {
     val (segRows, segFiles) =
       if (!s.catalog.tableExists(segT)) (0L, 0L)
       else {
-        val loc = tableLocation(s, segT)
-        val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        val n = if (!fs.exists(loc)) 0L
-          else fs.listStatus(loc).count(f =>
-            !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith(".")).toLong
+        val n = listWarehouseNames(s, tableLocation(s, segT))
+          .count(f => !f.startsWith("_") && !f.startsWith(".")).toLong
         // for store-backed artifacts segT is the (corpus-sized) store:
         // its FILE count is the small-file metric; its row count is
         // not worth a per-event job and plays no role in the policy
         (if (countSegRows) s.table(segT).count() else 0L, n)
       }
-    val loc = tableLocation(s, tombsT)
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(loc, s"_mass_$gen"), true)
-    out.write(Seq(
+    writeMarker(s, tombsT, "mass", gen, Seq(
       s"tombRows=$tombRows", s"segRows=$segRows", s"segFiles=$segFiles",
-      s"baseRows=$baseRows", s"events=$events", s"gen=$gen")
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
-    out.close()
+      s"baseRows=$baseRows", s"events=$events", s"gen=$gen").mkString("", "\n", "\n"))
   }
 
   /** The latest `_mass_` marker of an artifact's tombstone sidecar, as
     * a key→value map — [[shouldCompact]]'s entire input. */
   private[graft] def latestMassMarker(s: SparkSession, tombsT: String):
-      Option[Map[String, Long]] = {
-    if (!s.catalog.tableExists(tombsT)) return None
-    val loc = tableLocation(s, tombsT)
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(loc)) return None
-    val latest = fs.listStatus(loc).map(_.getPath)
-      .filter(_.getName.startsWith("_mass_"))
-      .flatMap(p => scala.util.Try(p.getName.stripPrefix("_mass_").toLong)
-        .toOption.map(_ -> p))
-      .sortBy(_._1).lastOption
-    latest.map { case (_, p) =>
+      Option[Map[String, Long]] =
+    markerGens(s, tombsT, "mass").lastOption.map { g =>
+      val (fs, p) = hfs(s, markerPath(s, tombsT, "mass", g))
       val in = fs.open(p)
       val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
@@ -1168,7 +1181,6 @@ object Layout {
         }
       }.toMap
     }
-  }
 
   /** The compaction-vs-savepoint policy: `retain` (default) freezes
     * pinned generations across the GC ([[freezeVersion]]); `refuse`
@@ -1211,53 +1223,12 @@ object Layout {
     if (shouldCompact(s, dir, what)) Some(compactDeleted(s, dir, what, buckets))
     else None
 
-  /** Highest committed generation of a store, from the union of the
-    * commit-log markers and the catalog's version views — no data
-    * scan. */
-  private def priorMaxGen(s: SparkSession, name: String, store: String): Long = {
-    val fromMarkers =
-      if (!s.catalog.tableExists(store)) Seq.empty[Long]
-      else {
-        val loc = tableLocation(s, store)
-        val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (!fs.exists(loc)) Seq.empty[Long]
-        else fs.listStatus(loc).map(_.getPath.getName)
-          .filter(_.startsWith("_gen_")).toSeq
-          .flatMap(n => scala.util.Try(n.stripPrefix("_gen_").toLong).toOption)
-      }
-    (versionsOf(s, name) ++ fromMarkers).foldLeft(0L)(math.max)
-  }
+  /** Highest committed generation of the store `<name>store`, from the
+    * union of its `gen` commit markers and the catalog's version
+    * views — no data scan. */
+  private def priorMaxGen(s: SparkSession, name: String): Long =
+    (versionsOf(s, name) ++ markerGens(s, s"${name}store", "gen")).foldLeft(0L)(math.max)
 
-  /** One MORE maintenance batch into an existing MVCC store — the
-    * multi-event lifecycle [[appendRewrite]] STARTS (its once-gate
-    * covers the store creation + first batch; every later event goes
-    * through here): allocate the next generation, append the batch as
-    * its files (O(batch) write I/O — same mechanism), commit the
-    * marker, publish the next version view and swap the stable name.
-    * Any number of events; every prior version stays readable
-    * (`WHERE gen <= N`), and the racing-reader guarantee is the same
-    * MVCC argument (in-flight files carry the new gen, excluded by
-    * the pre-swap predicate). `AtomicPublishSpec` proves three
-    * successive events land disjoint single-gen file sets with old
-    * versions intact. Background small-file maintenance is
-    * [[compactBucketed]] over the store, as for the facts.
-    *
-    * Generation allocation is METADATA-only (round-11 finding #2 —
-    * the prior form scanned the store for max(gen), a full-column
-    * read per event at 100 TB): the counter seeds from the commit-log
-    * markers + catalog views ([[priorMaxGen]]) and is then in-memory;
-    * allocation + write + marker + view swap form one critical
-    * section per store (round-11 advice — the unguarded
-    * read-modify-write let two concurrent events land the same gen),
-    * so generations are strictly monotone across concurrent and
-    * restarted writers alike. */
-  /** Schema ENFORCEMENT for store events (the Delta-style rule:
-    * widening is [[evolveSegment]]'s explicit contract, never an
-    * accident of a malformed batch): a batch column the store lacks
-    * fails loudly; a STORE column the batch lacks — normal once an
-    * evolution has widened the store and an older-era source keeps
-    * shipping the narrow shape — is NULL-padded by name, exactly the
-    * value those rows would read back anyway. */
   /** The metadata-only widening step shared by [[evolveSegment]] and
     * the evolving upsert: ALTER TABLE ADD COLUMNS for every batch
     * column the store has never seen (no-op when there are none). */
@@ -1271,6 +1242,13 @@ object Layout {
     }
   }
 
+  /** Schema ENFORCEMENT for store events (the Delta-style rule:
+    * widening is [[evolveSegment]]'s explicit contract, never an
+    * accident of a malformed batch): a batch column the store lacks
+    * fails loudly unless `allowNew`; a STORE column the batch lacks —
+    * normal once an evolution has widened the store and an older-era
+    * source keeps shipping the narrow shape — is NULL-padded by name,
+    * exactly the value those rows would read back anyway. */
   private def padToStore(s: SparkSession, store: String, batch: DataFrame,
       gen: Long, allowNew: Boolean): DataFrame = {
     val storeFields = s.table(store).schema.fields.filterNot(_.name == "gen")
@@ -1286,26 +1264,70 @@ object Layout {
     }.withColumn("gen", lit(gen.toInt))
   }
 
-  private[graft] def appendSegment(s: SparkSession, dir: String, what: String,
-      buckets: Option[(Int, Seq[String])], batch: DataFrame): DataFrame = {
+  /** ONE EVENT against an MVCC generation store — the body of
+    * [[appendSegment]], [[evolveSegment]], [[deleteSegment]] and
+    * [[upsertSegment]]. Under the store's [[clock]]: allocate the next
+    * generation, widen the store (metadata-only, `widen`), append the
+    * tombstone rows, append the rows (padded to the store's schema),
+    * write the `gen` marker, publish the version view and commit it,
+    * then record the sidecar mass when the event wrote tombstones.
+    *
+    * Generation allocation is METADATA-only: the clock seeds from the
+    * commit markers + catalog views ([[priorMaxGen]]) and is then in
+    * memory. Allocation, writes, marker and commit form one critical
+    * section per store, so generations are strictly monotone across
+    * concurrent and restarted writers alike, and a reader racing the
+    * event sees the pre- or post-event snapshot: in-flight files carry
+    * the new gen, which the pre-commit view's predicate excludes. */
+  private def storeEvent(s: SparkSession, dir: String, what: String,
+      buckets: Option[(Int, Seq[String])], rows: Option[DataFrame],
+      tombs: Option[DataFrame], widen: Boolean = false): DataFrame = {
     val name = tableName(dir, what + "upd")
     val store = s"${name}store"
-    val ctr = publishCounter.computeIfAbsent(s"$store#gen",
-      _ => new java.util.concurrent.atomic.AtomicLong(priorMaxGen(s, name, store)))
+    val tombsT = s"${name}tombs"
+    val ctr = clock(s, name, store = true)
     ctr.synchronized {
       val gen = ctr.incrementAndGet()
-      val w = padToStore(s, store, batch, gen, allowNew = false)
-        .write.mode("append")
-      buckets match {
-        case Some((k, bc)) => w.bucketBy(k, bc.head, bc.tail: _*).saveAsTable(store)
-        case None          => w.saveAsTable(store)
-      }
-      commitGenMarker(s, store, gen)
-      s.catalog.refreshTable(store)
-      publishStoreView(s, name, store, gen)
+      if (widen) rows.foreach(widenStore(s, store, _))
+      tombs.foreach(t =>
+        saveBucketed(s, t.withColumn("gen", lit(gen.toInt)), tombsT, None, "append"))
+      rows.foreach(r =>
+        saveBucketed(s, padToStore(s, store, r, gen, allowNew = widen), store, buckets, "append"))
+      writeMarker(s, store, "gen", gen)
+      storeVersion(s, name, gen)
+      if (tombs.nonEmpty) recordMass(s, name, tombsT, store, gen,
+        baseRowsOf = () => s.table(store).count(), countSegRows = false)
     }
     s.table(name)
   }
+
+  /** Publish version `e` of a STORE-backed artifact through
+    * [[publishVersion]]: its columns come from the STORE's schema
+    * (minus the gen bookkeeping column), not from the stable view —
+    * after a restart the views may not be re-registered yet, and
+    * recovery must not depend on reading what it is about to
+    * republish; its head is the latest compacted table, so a
+    * post-compaction event reads the compacted table plus only the
+    * generations after it. With no compaction and no tombstones the
+    * view is the plain `WHERE gen <= e` scan of the store. */
+  private def storeVersion(s: SparkSession, name: String, e: Long): Unit = {
+    val store = s"${name}store"
+    publishVersion(s, name, e, s.table(store).schema.fields.filterNot(_.name == "gen").toSeq,
+      markerGens(s, store, "compact").lastOption.map(cg => s"${name}__v$cg" -> cg), Some(store))
+  }
+
+  /** One MORE maintenance batch into an existing MVCC store — the
+    * multi-event lifecycle [[appendRewrite]] STARTS (its once-gate
+    * covers the store creation + first batch; every later event goes
+    * through here): a [[storeEvent]] whose rows are the batch, as new
+    * files (O(batch) write I/O). Any number of events; every prior
+    * version stays readable (`WHERE gen <= N`). `AtomicPublishSpec`
+    * proves three successive events land disjoint single-gen file sets
+    * with old versions intact. Background small-file maintenance is
+    * [[compactBucketed]] over the store, as for the facts. */
+  private[graft] def appendSegment(s: SparkSession, dir: String, what: String,
+      buckets: Option[(Int, Seq[String])], batch: DataFrame): DataFrame =
+    storeEvent(s, dir, what, buckets, Some(batch), None)
 
   /** SCHEMA-EVOLVING append event against an MVCC generation store —
     * [[appendSegment]] for a batch that carries columns the store has
@@ -1315,13 +1337,13 @@ object Layout {
     * METADATA-only (`ALTER TABLE ... ADD COLUMNS`, nullable — no data
     * file is read or rewritten; Parquet's reader serves NULL for a
     * column a file predates), the batch is padded by name with NULLs
-    * for any store column it lacks, and the append + marker + view
-    * swap are the standard O(batch) commit. Three consequences the
+    * for any store column it lacks, and the append + marker + commit
+    * are the standard O(batch) [[storeEvent]]. Three consequences the
     * gates pin:
     *
     *  - old generations read back as NULL in the new columns, new
     *    rows carry their values (q137's census classes);
-    *  - [[publishStoreView]] derives its column list from the store
+    *  - [[storeVersion]] derives its column list from the store
     *    schema at publish time, so the NEW stable view serves the
     *    widened schema while version views published BEFORE the
     *    evolution keep their era's columns — time travel returns each
@@ -1335,27 +1357,11 @@ object Layout {
     * compaction-time projection, not an event. */
   private[graft] def evolveSegment(s: SparkSession, dir: String, what: String,
       buckets: Option[(Int, Seq[String])], batch: DataFrame): DataFrame = {
-    val name = tableName(dir, what + "upd")
-    val store = s"${name}store"
+    val store = s"${tableName(dir, what + "upd")}store"
     require(s.catalog.tableExists(store),
       s"evolveSegment: no generation store $store — the lifecycle starts " +
         "with appendRewrite (snapshot build), evolution is a later event")
-    val ctr = publishCounter.computeIfAbsent(s"$store#gen",
-      _ => new java.util.concurrent.atomic.AtomicLong(priorMaxGen(s, name, store)))
-    ctr.synchronized {
-      val gen = ctr.incrementAndGet()
-      widenStore(s, store, batch)
-      val w = padToStore(s, store, batch, gen, allowNew = true)
-        .write.mode("append")
-      buckets match {
-        case Some((k, bc)) => w.bucketBy(k, bc.head, bc.tail: _*).saveAsTable(store)
-        case None          => w.saveAsTable(store)
-      }
-      commitGenMarker(s, store, gen)
-      s.catalog.refreshTable(store)
-      publishStoreView(s, name, store, gen)
-    }
-    s.table(name)
+    storeEvent(s, dir, what, buckets, Some(batch), None, widen = true)
   }
 
   /** One tombstone-DELETE event against an MVCC GENERATION STORE (the
@@ -1368,43 +1374,20 @@ object Layout {
     * interleavings against a reference fold).
     *
     * The event writes O(delete set) tombstone rows into
-    * `<name>tombs` (k BIGINT, kcol, gen) and swaps the view — the
-    * store's generation FILES are never touched. A tombstone at
+    * `<name>tombs` (k BIGINT, kcol, gen) and commits the next view —
+    * the store's generation FILES are never touched. A tombstone at
     * generation E kills matching rows of every strictly earlier
     * generation; a row appended LATER (gen > E) survives —
     * last-writer-wins, which is what lets a key be re-ingested after
-    * its takedown ([[publishStoreView]] carries the rule). */
+    * its takedown ([[publishVersion]] carries the rule). */
   private[graft] def deleteSegment(s: SparkSession, dir: String, what: String,
       keys: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val name = tableName(dir, what + "upd")
-    val store = s"${name}store"
-    val tombsT = s"${name}tombs"
-    val dt = keys.schema.fields.head.dataType
-    require(Seq(org.apache.spark.sql.types.LongType,
-        org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.ShortType,
-        org.apache.spark.sql.types.ByteType).contains(dt),
-      s"deleteSegment: delete key has non-integral type $dt")
+    val tombs = tombstones("deleteSegment", keyCols.map(_ -> keys))
     require(keys.count() <= massDeleteKeys(s),
       s"deleteSegment: mass takedown exceeds the broadcast envelope " +
         s"(${massDeleteKeys(s)} keys) — compact instead (compactDeleted folds " +
         "the survivors once and the store restarts clean)")
-    val ctr = publishCounter.computeIfAbsent(s"$store#gen",
-      _ => new java.util.concurrent.atomic.AtomicLong(priorMaxGen(s, name, store)))
-    ctr.synchronized {
-      val gen = ctr.incrementAndGet()
-      keyCols.map { c =>
-        keys.toDF("k").select(col("k").cast("long").as("k"),
-          lit(c).as("kcol"), lit(gen.toInt).as("gen"))
-      }.reduce(_ unionByName _)
-        .write.mode("append").saveAsTable(tombsT)
-      s.catalog.refreshTable(tombsT)
-      commitGenMarker(s, store, gen)
-      publishStoreView(s, name, store, gen)
-      recordMass(s, name, tombsT, store, gen,
-        baseRowsOf = () => s.table(store).count(), countSegRows = false)
-    }
-    s.table(name)
+    storeEvent(s, dir, what, None, None, Some(tombs))
   }
 
   /** INSERT-OR-REPLACE (upsert/MERGE) event against an MVCC generation
@@ -1416,7 +1399,7 @@ object Layout {
     * atomic last-writer-wins: every prior row of an upserted key is
     * shadowed, the event's rows stand, and a key with no prior rows
     * is simply inserted. Write I/O = O(upsert set); store generation
-    * files untouched; committed by the one view swap. Keys are the
+    * files untouched; committed by the one [[commit]]. Keys are the
     * rows' own distinct key values — the MERGE shape, no separate
     * key relation to drift from the payload.
     *
@@ -1432,99 +1415,12 @@ object Layout {
   private[graft] def upsertSegment(s: SparkSession, dir: String, what: String,
       buckets: Option[(Int, Seq[String])], rows: DataFrame,
       keyCols: Seq[String], evolve: Boolean = false): DataFrame = {
-    val name = tableName(dir, what + "upd")
-    val store = s"${name}store"
-    val tombsT = s"${name}tombs"
-    keyCols.foreach { c =>
-      val dt = rows.schema(c).dataType
-      require(Seq(org.apache.spark.sql.types.LongType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.ShortType,
-          org.apache.spark.sql.types.ByteType).contains(dt),
-        s"upsertSegment: key column `$c` has non-integral type $dt")
-    }
+    val tombs = tombstones("upsertSegment",
+      keyCols.map(c => c -> rows.select(col(c)).distinct()))
     require(rows.count() <= massDeleteKeys(s),
       s"upsertSegment: mass upsert exceeds the broadcast envelope " +
         s"(${massDeleteKeys(s)} rows) — rebuild the snapshot instead")
-    val ctr = publishCounter.computeIfAbsent(s"$store#gen",
-      _ => new java.util.concurrent.atomic.AtomicLong(priorMaxGen(s, name, store)))
-    ctr.synchronized {
-      val gen = ctr.incrementAndGet()
-      if (evolve) widenStore(s, store, rows)
-      keyCols.map { c =>
-        rows.select(col(c).cast("long").as("k")).distinct()
-          .select(col("k"), lit(c).as("kcol"), lit(gen.toInt).as("gen"))
-      }.reduce(_ unionByName _)
-        .write.mode("append").saveAsTable(tombsT)
-      s.catalog.refreshTable(tombsT)
-      val w = padToStore(s, store, rows, gen, allowNew = evolve)
-        .write.mode("append")
-      buckets match {
-        case Some((k, bc)) => w.bucketBy(k, bc.head, bc.tail: _*).saveAsTable(store)
-        case None          => w.saveAsTable(store)
-      }
-      commitGenMarker(s, store, gen)
-      s.catalog.refreshTable(store)
-      publishStoreView(s, name, store, gen)
-      recordMass(s, name, tombsT, store, gen,
-        baseRowsOf = () => s.table(store).count(), countSegRows = false)
-    }
-    s.table(name)
-  }
-
-  /** Publish version view `e` of a STORE-backed artifact — the ONE
-    * view builder behind [[appendRewrite]], [[appendSegment]],
-    * [[deleteSegment]] and [[upsertSegment]]:
-    *
-    *   rows = (latest compacted table, as its generation) ∪
-    *          store rows with gen in (compaction horizon, e],
-    *   minus rows matching a tombstone of gen in (row.gen, e]
-    *
-    * With no compaction and no tombstones this degenerates to the
-    * plain `WHERE gen <= e` scan (the q108/q120 plans are unchanged).
-    * The tombstone predicate's column set comes from the SIDECAR
-    * (every event's kcols, not the current call's) — the round-12
-    * resurrection-hazard rule — and the compaction horizon comes from
-    * the store's `_compact_` marker, so a post-compaction event reads
-    * the compacted table plus only the generations after it (the
-    * pre-compaction store rows are dead history, their kills already
-    * folded in). */
-  private def publishStoreView(s: SparkSession, name: String, store: String,
-      e: Long): Unit = {
-    // artifact columns from the STORE's schema (minus the gen
-    // bookkeeping column), not from the stable view — after a restart
-    // the views may not be re-registered yet, and recovery must not
-    // depend on reading what it is about to republish
-    val storeFields = s.table(store).schema.fields.filterNot(_.name == "gen")
-    val cols = storeFields.map(f => s"`${f.name}`").mkString(", ")
-    val src = latestCompactGen(s, store) match {
-      case Some(cg) =>
-        // the compacted table may PREDATE a schema evolution — pad the
-        // columns it lacks with typed NULLs (the same rule Parquet
-        // applies to pre-evolution generation files)
-        val cgCols = s.table(s"${name}__v$cg").columns.toSet
-        val cgSel = storeFields.map(f =>
-          if (cgCols.contains(f.name)) s"`${f.name}`"
-          else s"CAST(NULL AS ${f.dataType.sql}) AS `${f.name}`").mkString(", ")
-        s"""(SELECT $cgSel, CAST($cg AS INT) AS gen FROM ${name}__v$cg
-           |   UNION ALL SELECT $cols, gen FROM $store
-           |   WHERE gen > $cg AND gen <= $e) t""".stripMargin
-      case None => s"(SELECT $cols, gen FROM $store WHERE gen <= $e) t"
-    }
-    val tombsT = s"${name}tombs"
-    val kcols =
-      if (!s.catalog.tableExists(tombsT)) Array.empty[String]
-      else s.table(tombsT).filter(col("gen") <= e)
-        .select(col("kcol")).distinct().collect().map(_.getString(0)).sorted
-    val anti =
-      if (kcols.isEmpty) ""
-      else " WHERE " + kcols.map(c =>
-        s"""NOT EXISTS (SELECT 1 FROM $tombsT d
-           |     WHERE d.gen <= $e AND d.gen > t.gen AND d.kcol = '$c' AND d.k = t.`$c`)""".stripMargin)
-        .mkString("\n  AND ")
-    s.sql(s"CREATE OR REPLACE VIEW ${name}__v$e AS SELECT $cols FROM $src$anti")
-    // the commit point
-    s.sql(s"CREATE OR REPLACE VIEW $name AS SELECT * FROM ${name}__v$e")
+    storeEvent(s, dir, what, buckets, Some(rows), Some(tombs), widen = evolve)
   }
 
   /** Publish a REPLACED (not purely appended) maintained artifact:

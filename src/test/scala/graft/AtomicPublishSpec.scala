@@ -2,16 +2,22 @@ package graft
 
 import java.util.concurrent.atomic.AtomicBoolean
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import graft.sources.Layout
 
-/** Round-9 item 5: the versioned-publish commit protocol
-  * ([[Layout.publishVersioned]] — versioned bucketed table + one
-  * CREATE OR REPLACE VIEW pointer swap) gives batch artifacts the
+/** The versioned-publish commit protocol
+  * ([[Layout.publishVersioned]] — versioned bucketed table, then one
+  * commit that repoints the stable view with `ALTER VIEW … AS`, a
+  * single catalog `alterTable`) gives batch artifacts the
   * concurrent-reader guarantee the streaming sink already had via
   * `_spark_metadata`: a reader racing a snapshot rewrite sees EXACTLY
   * the old or exactly the new snapshot — never a torn mix, never a
-  * mid-rewrite read failure.
+  * mid-rewrite read failure. One test pins that commit
+  * deterministically with a catalog listener: re-committing an
+  * existing artifact through each lifecycle path fires one
+  * `AlterTableEvent` on the stable view and never drops it.
   *
   * The race is driven for real: a writer thread publishes generations
   * 2..N of a table whose every row carries its generation, while the
@@ -342,5 +348,86 @@ class AtomicPublishSpec extends SparkSpec {
       .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(versioned))
     assert(cat.bucketSpec.exists(b =>
       b.numBuckets == Layout.Buckets && b.bucketColumnNames == Seq("cent_id")))
+  }
+
+  test("every lifecycle commit repoints the stable view with one ALTER, never a drop") {
+    // A reader resolving the stable name must always find a view. On an
+    // existing view CREATE OR REPLACE VIEW is DropTable then CreateTable
+    // in the catalog (a reader between the two fails with
+    // TABLE_OR_VIEW_NOT_FOUND); the commit must be one AlterTable. The
+    // catalog's listener bus posts synchronously in the committing
+    // thread, so the events of one call are exactly what it did.
+    import org.apache.spark.sql.catalyst.catalog._
+    val catalog = spark.sharedState.externalCatalog
+    val problems = scala.collection.mutable.ArrayBuffer.empty[String]
+    def assertOneAlter(path: String, name: String)(recommit: => Unit): Unit = {
+      assert(spark.catalog.tableExists(name), s"$path: $name must exist before the re-commit")
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[ExternalCatalogEvent]()
+      val listener = new ExternalCatalogEventListener {
+        override def onEvent(e: ExternalCatalogEvent): Unit = e match {
+          case t: TableEvent if t.name == name => seen.add(e)
+          case _ =>
+        }
+      }
+      catalog.addListener(listener)
+      try recommit finally catalog.removeListener(listener)
+      val ev = seen.asScala.toSeq
+      if (ev.exists(e => e.isInstanceOf[DropTablePreEvent] || e.isInstanceOf[DropTableEvent]) ||
+          ev.count(_.isInstanceOf[AlterTableEvent]) != 1)
+        problems += s"$path: expected one AlterTableEvent and no drop on $name, got $ev"
+    }
+
+    Layout.publishVersioned(spark, sfDir, "commitpub", None)(rowsOf(1L, 10L))
+    assertOneAlter("publishVersioned", Layout.tableName(sfDir, "commitpub")) {
+      Layout.publishVersioned(spark, sfDir, "commitpub", None)(rowsOf(2L, 10L))
+    }
+
+    // deleteRewrite's once-gate is per session: the second tombstone
+    // event on the same artifact comes from a second session
+    val baseT = Layout.tableName(sfDir, "commitdelbase")
+    Layout.materializedTable(spark, sfDir, "commitdelbase", None)(spark.range(100L).toDF("doc_id"))
+    Layout.deleteRewrite(spark, sfDir, "commitdel", None,
+      spark.range(0L, 100L, 7L).toDF("doc_id"), Seq("doc_id"))(spark.table(baseT))
+    assertOneAlter("deleteRewrite", Layout.tableName(sfDir, "commitdeldel")) {
+      val s2 = spark.newSession()
+      Layout.deleteRewrite(s2, sfDir, "commitdel", None,
+        s2.range(1L, 100L, 7L).toDF("doc_id"), Seq("doc_id"))(s2.table(baseT))
+    }
+
+    val bkt = Some((Layout.Buckets, Seq("cent_id")))
+    val mk = (lo: Long, hi: Long) => spark.range(lo, hi)
+      .select(col("id").as("vec_id"), pmod(col("id"), lit(16)).as("cent_id"))
+    val upd = Layout.tableName(sfDir, "commitappupd")
+    Layout.appendRewrite(spark, sfDir, "commitapp", bkt, mk(100, 200))(mk(0, 100))
+    assertOneAlter("appendSegment", upd) {
+      Layout.appendSegment(spark, sfDir, "commitapp", bkt, mk(200, 300))
+    }
+    assertOneAlter("compactDeleted", upd) {
+      Layout.compactDeleted(spark, sfDir, "commitappupd", bkt)
+    }
+    assert(problems.isEmpty, problems.mkString("\n"))
+    assert(spark.table(upd).count() == 300)
+  }
+
+  test("appendRewrite in a second session of the same context rebuilds over the first's versions") {
+    // the first session leaves its versions as VIEWS in the shared
+    // catalog; the second session's snapshot-refresh clear must drop
+    // them as views (DROP TABLE on a view throws)
+    val bkt = Some((Layout.Buckets, Seq("cent_id")))
+    val name = Layout.tableName(sfDir, "twosessupd")
+    val mk = (s: org.apache.spark.sql.SparkSession, lo: Long, hi: Long) => s.range(lo, hi)
+      .select(col("id").as("vec_id"), pmod(col("id"), lit(16)).as("cent_id"))
+    Layout.appendRewrite(spark, sfDir, "twosess", bkt, mk(spark, 100, 150))(mk(spark, 0, 100))
+    assert(spark.table(name).count() == 150)
+    val s2 = spark.newSession()
+    val got = Layout.appendRewrite(s2, sfDir, "twosess", bkt, mk(s2, 200, 260))(mk(s2, 0, 120))
+      .select("vec_id").as[Long].collect().toSet
+    val want = ((0L until 120L) ++ (200L until 260L)).toSet
+    assert(got == want, s"second session read ${got.size} rows, expected base ∪ batch (${want.size})")
+    // one catalog: the first session reads the second's snapshot once
+    // it refreshes its own cached listing of the rebuilt store (each
+    // session keeps its own relation cache)
+    spark.catalog.refreshTable(s"${name}store")
+    assert(spark.table(name).select("vec_id").as[Long].collect().toSet == want)
   }
 }

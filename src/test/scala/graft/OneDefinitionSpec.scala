@@ -11,10 +11,19 @@ import org.scalatest.funsuite.AnyFunSuite
   * `splitByComma` and the field scanner share), the shard-path parse
   * (`ShardManifest.shardOf`), the connector read
   * (`ShardLayout.readShards`) and the per-shard stats rescan
-  * (`ShardLayout.shardStats`). A hand copy that grows back elsewhere
-  * fails here. The second test pins the layering: the table format
-  * (`graft.sources`) never calls up into the query layer
-  * (`graft.operators`). Comment lines are skipped, as in [[WarehouseFsSpec]]. */
+  * (`ShardLayout.shardStats`). The Layout catalog store's lifecycle
+  * verbs share one commit (`Layout.commit`, the stable-name
+  * `ALTER VIEW`; `CREATE OR REPLACE VIEW` on the stable name is gone,
+  * since Spark runs it as a drop then a create), one version clock
+  * seed (`Layout.clock`), one bucketed write (`Layout.saveBucketed`),
+  * one version-view builder with its tombstone anti filter
+  * (`Layout.publishVersion`), one integral-key type list
+  * (`Layout.IntegralKeys`), one view probe (`Layout.isView`) and one
+  * commit-marker listing (`Layout.markerGens`, no raw `listStatus`).
+  * A hand copy that grows back elsewhere fails here. The second test
+  * pins the layering: the table format (`graft.sources`) never calls
+  * up into the query layer (`graft.operators`). Comment lines are
+  * skipped, as in [[WarehouseFsSpec]]. */
 class OneDefinitionSpec extends AnyFunSuite {
 
   /** idiom -> the one file allowed to spell it (None: nowhere) */
@@ -26,7 +35,16 @@ class OneDefinitionSpec extends AnyFunSuite {
     "indexOf(',', i) - 1" -> Some("graft/sources/CaaCsv.scala"),
     """stripPrefix("shard_id=")""" -> Some("graft/sources/ShardManifest.scala"),
     """read.format("graft.sources.ShardSource")""" -> Some("graft/sources/ShardLayout.scala"),
-    """.as(s"z_$f")""" -> Some("graft/sources/ShardLayout.scala"))
+    """.as(s"z_$f")""" -> Some("graft/sources/ShardLayout.scala"),
+    "ALTER VIEW" -> Some("graft/sources/Layout.scala"),
+    "CREATE OR REPLACE VIEW $name" -> None,
+    "publishCounter.computeIfAbsent(" -> Some("graft/sources/Layout.scala"),
+    "bucketBy(k, bc.head, bc.tail: _*)" -> Some("graft/sources/Layout.scala"),
+    "NOT EXISTS (SELECT 1 FROM $tombsT" -> Some("graft/sources/Layout.scala"),
+    "ByteType)" -> Some("graft/sources/Layout.scala"),
+    ".tableType" -> Some("graft/sources/Layout.scala"),
+    """stripPrefix(s"_${kind}_")""" -> Some("graft/sources/Layout.scala"),
+    "listStatus(loc)" -> None)
 
   private def sources(d: java.io.File): Seq[java.io.File] =
     Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap { f =>

@@ -180,4 +180,22 @@ class SavepointSpec extends SparkSpec {
     assert(e3.getMessage.contains("no live savepoint"))
     fresh("spec3")
   }
+
+  test("a pinned generation that reads an older compaction survives the next compaction") {
+    // gen 4 is a view over the gen-3 compacted table; the next
+    // compaction GCs that table, so it must freeze the pin first
+    val dir = sfDir
+    fresh("spec7")
+    val bkt = Some((Layout.Buckets, Seq("k")))
+    val mk = (lo: Long, hi: Long) => (lo until hi).map(k => (k, k * 2)).toDF("k", "v")
+    Layout.appendRewrite(spark, dir, "svp7", bkt, mk(100L, 200L))(mk(0L, 100L)) // gens 1-2
+    Layout.compactDeleted(spark, dir, "svp7upd", bkt)                          // gen 3
+    Layout.appendSegment(spark, dir, "svp7", bkt, mk(200L, 300L))              // gen 4
+    Layout.savepoint(spark, dir, "spec7", Seq("svp7upd"))
+    Layout.compactDeleted(spark, dir, "svp7upd", bkt)                          // gen 5
+    val got = Layout.readSavepoint(spark, dir, "spec7", "svp7upd")
+      .select("k").as[Long].collect().toSet
+    assert(got == (0L until 300L).toSet, s"pinned read lost rows: ${got.size} of 300")
+    Layout.releaseSavepoint(spark, dir, "spec7")
+  }
 }
