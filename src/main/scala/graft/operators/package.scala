@@ -35,4 +35,78 @@ package object operators {
     * no rows, as BIGINT. */
   private[graft] def h32(key: String): String =
     s"CAST(coalesce(sum(CAST('0x' || substr(md5($key), 1, 8) AS BIGINT)), 0) AS BIGINT)"
+
+  /** The oracle's shard formula, `Pipeline.shardAssign`'s twin: the
+    * top 3 bits of the salted md5 position of `doc_id`. */
+  private[graft] def shardIdSql(salt: String): String =
+    s"""CAST(('0x' || substr(md5('$salt' || doc_id), 1, 8))
+       |           AS BIGINT) // 536870912 AS shard_id""".stripMargin
+
+  private def ones(n: Int): String = Seq.fill(n)("CAST(1 AS BIGINT)").mkString(", ")
+
+  private val unionAll = "\n  UNION ALL\n  "
+
+  /** `n` numbered decision rows `width` columns wide: decision i is
+    * (99 + i, 1, 1, ...). */
+  private[graft] def decisionRowsSql(width: Int, n: Int): String =
+    (0 until n).map(i =>
+      s"SELECT CAST(${99 + i} AS BIGINT), ${ones(2)},\n         ${ones(width - 3)}")
+      .mkString(unionAll)
+
+  /** One named decision row per name for a phased census (phase,
+    * shard_id, n_docs, sum_chars, checksum): ('zz_<name>', 0, 1, 1, 1)
+    * — the `zz_` phase sorts after every census phase. */
+  private[graft] def namedDecisionRowsSql(names: String*): String =
+    names.map(nm =>
+      s"SELECT 'zz_$nm', CAST(0 AS BIGINT),\n         ${ones(3)}")
+      .mkString(unionAll)
+
+  /** The oracle of a SHARD-CENSUS GATE. Such a gate writes a layout,
+    * reads it back and censuses it per shard as (shard_id, n_docs,
+    * sum_chars, checksum), the checksum summing the 32-bit md5
+    * prefixes of `doc_id|n_chars|lang|md5(text)`; then it appends one
+    * row per decision it checked (`Pipeline.decisionRows`). The oracle
+    * re-derives that census RAW from the rows of `from` (a relation,
+    * optionally with its `WHERE`) through the salted shard formula
+    * ([[shardIdSql]]) — files, codecs, manifests and streams appear
+    * nowhere — and predicts every decision as held, a constant-1 row
+    * ([[decisionRowsSql]]). `ctes` are leading CTE definitions `from`
+    * may name, each ending in `,\n`. DuckDB text only: the builder
+    * calls no Spark code, so each oracle stays an independent
+    * derivation. */
+  private[graft] def censusOracleSql(salt: String, from: String, decisions: Int,
+      ctes: String = ""): String =
+    censusSql(salt, from, ctes, None, decisionRowsSql(4, decisions))
+
+  /** [[censusOracleSql]] with a leading `phase` column: the census rows
+    * carry `phase`, and the decisions are named rows
+    * ([[namedDecisionRowsSql]], `Pipeline.namedDecisionRows`). */
+  private[graft] def phasedCensusOracleSql(salt: String, from: String, phase: String,
+      decisions: Seq[String], ctes: String = ""): String =
+    censusSql(salt, from, ctes, Some(phase), namedDecisionRowsSql(decisions: _*))
+
+  private def censusSql(salt: String, from: String, ctes: String,
+      phase: Option[String], decisions: String): String = {
+    val (cols, head, key) = phase match {
+      case None => ("shard_id", "", 1)
+      case Some(p) => ("phase, shard_id", s"'$p' AS phase, ", 2)
+    }
+    mat(
+      s"""WITH ${ctes}a AS (
+         |  SELECT doc_id, text, lang, n_chars,
+         |         ${shardIdSql(salt)}
+         |  FROM $from)
+         |SELECT $cols, n_docs, sum_chars, checksum FROM (
+         |  SELECT ${head}CAST(shard_id AS BIGINT) AS shard_id,
+         |         CAST(count(*) AS BIGINT) AS n_docs,
+         |         CAST(sum(n_chars) AS BIGINT) AS sum_chars,
+         |         CAST(sum(CAST('0x' || substr(md5(
+         |           CAST(doc_id AS VARCHAR) || '|' || CAST(n_chars AS VARCHAR) ||
+         |           '|' || lang || '|' || md5(text)), 1, 8) AS BIGINT)) AS BIGINT)
+         |           AS checksum
+         |  FROM a GROUP BY $key
+         |  UNION ALL
+         |  $decisions) t
+         |ORDER BY $cols""".stripMargin)
+  }
 }

@@ -380,10 +380,13 @@ object Layout {
     * snapshot-refresh clear of a lifecycle start and the GC of a
     * compaction. Another session of the same context leaves its
     * versions as VIEWS in the shared catalog, so each goes through
-    * [[dropAnyVersion]]. */
+    * [[dropAnyVersion]]. Newest first: a version reads only older ones
+    * (a store view reads the compacted table below it), and a view
+    * must still resolve while DROP VIEW uncaches it. */
   private def dropVersions(s: SparkSession, name: String,
       keep: Long => Boolean = _ => false): Unit =
-    versionsOf(s, name).filterNot(keep).foreach(v => dropAnyVersion(s, s"${name}__v$v"))
+    versionsOf(s, name).filterNot(keep).reverse
+      .foreach(v => dropAnyVersion(s, s"${name}__v$v"))
 
   /** FREEZE a version view into a physical snapshot table of the same
     * name — the RETENTION move [[compactDeleted]] makes for a

@@ -3,9 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
-import graft.operators.{Dedup, Pipeline, QueryDef, Similarity}
+import graft.operators.{Dedup, Pipeline, QueryDef, Similarity, censusOracleSql}
 import graft.sources.{Layout, ShardLayout, ShardManifest, Tables}
 
 /** Round-11 item 6: ONE streaming front door run END TO END inside the
@@ -23,6 +23,38 @@ import graft.sources.{Layout, ShardLayout, ShardManifest, Tables}
   * engine's source/state/commit machinery instead of around it. */
 object StreamDoor {
 
+  /** The file-sink door run (q119-q128): stage `staged` as parquet
+    * under a fresh `<run>` warehouse dir (rebuilt from scratch each
+    * build — source, checkpoint and sink travel together), stream it
+    * back through `ingest`, drain it under AvailableNow into a
+    * checkpointed parquet sink, and read the sink. */
+  private def fileSinkRun(s: SparkSession, dir: String, run: String,
+      staged: DataFrame)(ingest: DataFrame => DataFrame): DataFrame = {
+    val base = Layout.warehousePath(s, Layout.tableName(dir, run))
+    Layout.deleteWarehouseDir(s, base)
+    val srcDir = s"$base/src"; val sinkDir = s"$base/sink"
+    staged.write.mode("overwrite").parquet(srcDir)
+    ingest(s.readStream.schema(staged.schema).parquet(srcDir))
+      .writeStream.format("parquet")
+      .option("path", sinkDir).option("checkpointLocation", s"$base/ckpt")
+      .outputMode("append").trigger(Trigger.AvailableNow()).start()
+      .awaitTermination()
+    s.read.parquet(sinkDir)
+  }
+
+  /** The lifecycle doors' drain (q134, q138, q146, q148, q162): the
+    * parquet files under `srcDir` stream one file per micro-batch
+    * (`maxFilesPerTrigger=1`) under AvailableNow, each batch handed to
+    * `applyBatch` with its batch id. */
+  private def drainOneFileEach(s: SparkSession, srcDir: String, schema: StructType,
+      ckpt: String)(applyBatch: (DataFrame, Long) => Unit): Unit =
+    s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir)
+      .writeStream.option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(applyBatch).start()
+      .awaitTermination()
+
   /** q119: run the index door once per (session, snapshot) — the
     * stream drains the staged batch under AvailableNow, the sink's
     * rows are republished as a warehouse table (the artifact
@@ -34,19 +66,9 @@ object StreamDoor {
     val cents = Similarity.ivfCents(s, dir, Similarity.Standing)
     val rcb = Similarity.resTrain(s, dir, Similarity.Standing)
     val out = Layout.materializedTable(s, dir, "sdoorout") {
-      val base = Layout.warehousePath(s, Layout.tableName(dir, "sdoorrun"))
-      Layout.deleteWarehouseDir(s, base)
-      val srcDir = s"$base/src"; val sinkDir = s"$base/sink"; val ckpt = s"$base/ckpt"
-      val batch = Tables.embeddings(s, dir)
-        .filter(pmod(col("vec_id"), lit(5)) === 0)
-      batch.write.mode("overwrite").parquet(srcDir)
-      val door = DocIngest.indexIngest(
-        s.readStream.schema(batch.schema).parquet(srcDir), cents, rcb)
-      val q = door.writeStream.format("parquet")
-        .option("path", sinkDir).option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(sinkDir)
+      fileSinkRun(s, dir, "sdoorrun",
+          Tables.embeddings(s, dir).filter(pmod(col("vec_id"), lit(5)) === 0))(
+        DocIngest.indexIngest(_, cents, rcb))
     }
     out.select(col("vec_id"), col("cent_id"), posexplode(col("codes")))
       .select(col("vec_id"), col("cent_id"),
@@ -66,18 +88,8 @@ object StreamDoor {
     * byte-exactly for EVERY blob, corrupt subset included. */
   def streamMediaDoor(s: SparkSession, dir: String): DataFrame = {
     val out = Layout.materializedTable(s, dir, "mdoorout") {
-      val base = Layout.warehousePath(s, Layout.tableName(dir, "mdoorrun"))
-      Layout.deleteWarehouseDir(s, base)
-      val srcDir = s"$base/src"; val sinkDir = s"$base/sink"; val ckpt = s"$base/ckpt"
-      val media = graft.operators.Multimodal.ppmMediaTable(s, dir)
-      media.write.mode("overwrite").parquet(srcDir)
-      val door = DocIngest.mediaIngest(
-        s.readStream.schema(media.schema).parquet(srcDir))
-      val q = door.writeStream.format("parquet")
-        .option("path", sinkDir).option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(sinkDir)
+      fileSinkRun(s, dir, "mdoorrun",
+        graft.operators.Multimodal.ppmMediaTable(s, dir))(DocIngest.mediaIngest)
     }
     out.select(col("media_id"), col("ok").cast(IntegerType).as("ok"),
         col("width"), col("height"),
@@ -102,21 +114,10 @@ object StreamDoor {
     * hashes. */
   def streamExactDoor(s: SparkSession, dir: String): DataFrame = {
     val out = Layout.materializedTable(s, dir, "xdoorout") {
-      val base = Layout.warehousePath(s, Layout.tableName(dir, "xdoorrun"))
-      Layout.deleteWarehouseDir(s, base)
-      val srcDir = s"$base/src"; val sinkDir = s"$base/sink"; val ckpt = s"$base/ckpt"
-      val incoming = Tables.documents(s, dir)
-        .filter(pmod(col("doc_id"), lit(5)) === 0)
-      incoming.write.mode("overwrite").parquet(srcDir)
-      val corpus = Tables.documents(s, dir)
-        .filter(pmod(col("doc_id"), lit(5)) =!= 0)
-      val door = DocIngest.dedupedIngest(
-        s.readStream.schema(incoming.schema).parquet(srcDir), corpus)
-      val q = door.select(col("nh")).writeStream.format("parquet")
-        .option("path", sinkDir).option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(sinkDir)
+      val docs = Tables.documents(s, dir)
+      fileSinkRun(s, dir, "xdoorrun", docs.filter(pmod(col("doc_id"), lit(5)) === 0))(
+        DocIngest.dedupedIngest(_, docs.filter(pmod(col("doc_id"), lit(5)) =!= 0))
+          .select(col("nh")))
     }
     out.select(col("nh")).orderBy("nh")
   }
@@ -145,20 +146,9 @@ object StreamDoor {
     * source/state/commit machinery. */
   def streamNearDupDoor(s: SparkSession, dir: String): DataFrame = {
     val out = Layout.materializedTable(s, dir, "ndoorout") {
-      val base = Layout.warehousePath(s, Layout.tableName(dir, "ndoorrun"))
-      Layout.deleteWarehouseDir(s, base)
-      val srcDir = s"$base/src"; val sinkDir = s"$base/sink"; val ckpt = s"$base/ckpt"
-      val incoming = Tables.documents(s, dir)
-        .filter(pmod(col("doc_id"), lit(5)) === 0)
-      incoming.write.mode("overwrite").parquet(srcDir)
-      val door = DocIngest.nearDupIngest(
-        s.readStream.schema(incoming.schema).parquet(srcDir),
-        graft.operators.Dedup.corpusBandIndex(s, dir))
-      val q = door.writeStream.format("parquet")
-        .option("path", sinkDir).option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(sinkDir)
+      fileSinkRun(s, dir, "ndoorrun",
+          Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(5)) === 0))(
+        DocIngest.nearDupIngest(_, Dedup.corpusBandIndex(s, dir)))
     }
     out.select(col("doc_new"), col("doc_corpus"), col("n_eq"), col("est_j"))
       .orderBy("doc_new", "doc_corpus")
@@ -177,20 +167,9 @@ object StreamDoor {
     * coverage) row per incoming document with ≥ 1 window. */
   def streamSpanDoor(s: SparkSession, dir: String): DataFrame = {
     val out = Layout.materializedTable(s, dir, "sdoorspanout") {
-      val base = Layout.warehousePath(s, Layout.tableName(dir, "sdoorspanrun"))
-      Layout.deleteWarehouseDir(s, base)
-      val srcDir = s"$base/src"; val sinkDir = s"$base/sink"; val ckpt = s"$base/ckpt"
-      val incoming = Tables.documents(s, dir)
-        .filter(pmod(col("doc_id"), lit(5)) === 0)
-      incoming.write.mode("overwrite").parquet(srcDir)
-      val door = DocIngest.spanIngest(
-        s.readStream.schema(incoming.schema).parquet(srcDir),
-        graft.operators.Dedup.corpusWindowIndex(s, dir))
-      val q = door.toDF().writeStream.format("parquet")
-        .option("path", sinkDir).option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(sinkDir)
+      fileSinkRun(s, dir, "sdoorspanrun",
+          Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(5)) === 0))(
+        DocIngest.spanIngest(_, Dedup.corpusWindowIndex(s, dir)).toDF())
     }
     out.select(col("doc_id"), col("nw"), col("known_windows"), col("coverage"))
       .orderBy("doc_id")
@@ -210,19 +189,9 @@ object StreamDoor {
     val cents = Similarity.ivfCents(s, dir, Similarity.Standing)
     val corpusAssign = Similarity.ivfAssignTable(s, dir, Similarity.Standing)
     val out = Layout.materializedTable(s, dir, "semdoorout") {
-      val base = Layout.warehousePath(s, Layout.tableName(dir, "semdoorrun"))
-      Layout.deleteWarehouseDir(s, base)
-      val srcDir = s"$base/src"; val sinkDir = s"$base/sink"; val ckpt = s"$base/ckpt"
-      val incoming = Tables.embeddings(s, dir)
-        .filter(pmod(col("vec_id"), lit(5)) === 0)
-      incoming.write.mode("overwrite").parquet(srcDir)
-      val door = DocIngest.semanticIngest(
-        s.readStream.schema(incoming.schema).parquet(srcDir), cents, corpusAssign)
-      val q = door.writeStream.format("parquet")
-        .option("path", sinkDir).option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(sinkDir)
+      fileSinkRun(s, dir, "semdoorrun",
+          Tables.embeddings(s, dir).filter(pmod(col("vec_id"), lit(5)) === 0))(
+        DocIngest.semanticIngest(_, cents, corpusAssign))
     }
     out.select(col("vec_id"), col("cvec"), col("cos"))
       .orderBy("vec_id", "cvec")
@@ -267,20 +236,11 @@ object StreamDoor {
         .withColumn("embedding", reverse(col("embedding")))
       corrections.repartition(4).write.mode("overwrite").parquet(srcDir)
       val vBefore = Layout.priorMaxVersion(s, name)
-      // one upsert EVENT per micro-batch: the lifecycle IS the sink.
-      // (explicitly-typed function value — the foreachBatch overloads
-      // are ambiguous for an inline Scala lambda)
-      val applyBatch: (DataFrame, Long) => Unit = (batch, _) => {
+      // one upsert EVENT per micro-batch: the lifecycle IS the sink
+      drainOneFileEach(s, srcDir, corrections.schema, ckpt) { (batch, _) =>
         Layout.upsertSegment(s, dir, "ivfsdoor", bkt,
           Similarity.lifeAssign(s, batch, bc), Seq("vec_id"))
-        ()
       }
-      val q = s.readStream.schema(corrections.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        .writeStream.option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(applyBatch).start()
-      q.awaitTermination()
       val vAfter = Layout.priorMaxVersion(s, name)
       require(vAfter - vBefore >= 3,
         s"correction stream did not span multiple micro-batches " +
@@ -340,17 +300,10 @@ object StreamDoor {
       def runEra(tagDir: String, rows: DataFrame): Unit = {
         val srcDir = s"$base/$tagDir/src"; val ckpt = s"$base/$tagDir/ckpt"
         rows.repartition(2).write.mode("overwrite").parquet(srcDir)
-        val applyBatch: (DataFrame, Long) => Unit = (batch, _) => {
+        drainOneFileEach(s, srcDir, rows.schema, ckpt) { (batch, _) =>
           Layout.upsertSegment(s, dir, "docsdoor", bkt, batch,
             Seq("doc_id"), evolve = true)
-          ()
         }
-        val q = s.readStream.schema(rows.schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-          .writeStream.option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch(applyBatch).start()
-        q.awaitTermination()
       }
       runEra("era1", d.filter(pmod(col("doc_id"), lit(4)) === 2)
         .select(col("doc_id"), col("n_chars"), col("lang")))
@@ -479,16 +432,9 @@ object StreamDoor {
       val ingest = d.filter(pmod(col("doc_id"), lit(5)) === 0)
       ingest.repartition(4).write.mode("overwrite").parquet(srcDir)
       val vBefore = Layout.priorMaxVersion(s, name)
-      val applyBatch: (DataFrame, Long) => Unit = (batch, id) => {
+      drainOneFileEach(s, srcDir, ingest.schema, ckpt) { (batch, id) =>
         chunkedCountUpsert(s, dir, "profdoor", bkt, keyed(counted(batch), id + 1))
-        ()
       }
-      val q = s.readStream.schema(ingest.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        .writeStream.option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(applyBatch).start()
-      q.awaitTermination()
       val vAfter = Layout.priorMaxVersion(s, name)
       require(vAfter - vBefore >= 3,
         s"profile stream did not span multiple micro-batches " +
@@ -546,17 +492,10 @@ object StreamDoor {
       val ingest = d.filter(pmod(col("doc_id"), lit(5)) === 0)
       ingest.repartition(4).write.mode("overwrite").parquet(srcDir)
       val vBefore = Layout.priorMaxVersion(s, name)
-      val applyBatch: (DataFrame, Long) => Unit = (batch, id) => {
+      drainOneFileEach(s, srcDir, ingest.schema, ckpt) { (batch, id) =>
         chunkedCountUpsert(s, dir, "qsdoor", bkt,
           keyed(Pipeline.charHist(batch), id + 1))
-        ()
       }
-      val q = s.readStream.schema(ingest.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        .writeStream.option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(applyBatch).start()
-      q.awaitTermination()
       val vAfter = Layout.priorMaxVersion(s, name)
       require(vAfter - vBefore >= 3,
         s"quantile stream did not span multiple micro-batches " +
@@ -629,19 +568,11 @@ object StreamDoor {
       val vBefore = Layout.priorMaxVersion(s, name)
       // stream batchIds map to prefixes ≥ 2; prefix 1 is RESERVED for
       // the takedown event, prefix 0 for the seed
-      val applyBatch: (DataFrame, Long) => Unit = (batch, id) => {
-        chunkedCountUpsert(s, dir, "pdtd", bkt,
-          profKeyed(profCounted(batch), id + 2))
-        ()
-      }
-      def drain(): Unit = {
-        val q = s.readStream.schema(ingest.schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-          .writeStream.option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch(applyBatch).start()
-        q.awaitTermination()
-      }
+      def drain(): Unit =
+        drainOneFileEach(s, srcDir, ingest.schema, ckpt) { (batch, id) =>
+          chunkedCountUpsert(s, dir, "pdtd", bkt,
+            profKeyed(profCounted(batch), id + 2))
+        }
       ingest.filter(pmod(col("doc_id"), lit(10)) === 0)
         .repartition(2).write.mode("overwrite").parquet(srcDir)
       drain()
@@ -803,11 +734,8 @@ object StreamDoor {
           sum(col("n_chars")).as("sum_chars"),
           sum(graft.functions.Fns.hash32(concat_ws("|", col("k"),
             col("n_chars"), col("lang"), col("tmd5")))).as("checksum"))
-        .unionByName(Seq(
-          (99L, if (tailIncremental) 1L else 0L, 1L, 1L),
-          (100L, if (redelivery) 1L else 0L, 1L, 1L),
-          (101L, if (generations) 1L else 0L, 1L, 1L),
-          (102L, if (tombsHeld) 1L else 0L, 1L, 1L))
+        .unionByName(Pipeline.decisionRows(tailIncremental, redelivery,
+            generations, tombsHeld)
           .toDF("shard_id", "n_docs", "sum_chars", "checksum"))
     }
     out.orderBy("shard_id")
@@ -883,43 +811,17 @@ object StreamDoor {
         metaCount == d.count()
       val twoCommits = ShardManifest.currentGen(hconf, outPath) == genBefore + 1
       Pipeline.shardCensus(out)
-        .++(Seq(
-          (99L, if (emptyDrainSilent) 1L else 0L, 1L, 1L),
-          (100L, if (firstClass && statsMetaOnly) 1L else 0L, 1L, 1L),
-          (101L, if (twoCommits) 1L else 0L, 1L, 1L)))
+        .++(Pipeline.decisionRows(emptyDrainSilent,
+          firstClass && statsMetaOnly, twoCommits))
         .toDF("shard_id", "n_docs", "sum_chars", "checksum")
     }.orderBy("shard_id")
   }
 
-  /** The q182 oracle: the WHOLE corpus's per-shard census via the
-    * `sw19:` shard formula (the stream, the epochs and the ledger
-    * appear nowhere — a doubled or dropped epoch flips a count or
-    * checksum), the three decisions as constants. */
-  val streamWriteDoorSql: String = graft.operators.mat(
-    s"""WITH a AS (
-       |  SELECT doc_id, text, lang, n_chars,
-       |         CAST(('0x' || substr(md5('sw19:' || doc_id), 1, 8))
-       |           AS BIGINT) // 536870912 AS shard_id
-       |  FROM documents)
-       |SELECT shard_id, n_docs, sum_chars, checksum FROM (
-       |  SELECT CAST(shard_id AS BIGINT) AS shard_id,
-       |         CAST(count(*) AS BIGINT) AS n_docs,
-       |         CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-       |         CAST(sum(CAST('0x' || substr(md5(
-       |           CAST(doc_id AS VARCHAR) || '|' || CAST(n_chars AS VARCHAR) ||
-       |           '|' || lang || '|' || md5(text)), 1, 8) AS BIGINT)) AS BIGINT)
-       |           AS checksum
-       |  FROM a GROUP BY 1
-       |  UNION ALL
-       |  SELECT CAST(99 AS BIGINT), CAST(1 AS BIGINT), CAST(1 AS BIGINT),
-       |         CAST(1 AS BIGINT)
-       |  UNION ALL
-       |  SELECT CAST(100 AS BIGINT), CAST(1 AS BIGINT), CAST(1 AS BIGINT),
-       |         CAST(1 AS BIGINT)
-       |  UNION ALL
-       |  SELECT CAST(101 AS BIGINT), CAST(1 AS BIGINT), CAST(1 AS BIGINT),
-       |         CAST(1 AS BIGINT)) t
-       |ORDER BY shard_id""".stripMargin)
+  /** The q182 oracle ([[graft.operators.censusOracleSql]]): the WHOLE
+    * corpus under `sw19:` (a doubled or dropped epoch flips a count or
+    * checksum); decisions: the empty drain commits nothing, the
+    * destination is first-class, two commits. */
+  val streamWriteDoorSql: String = censusOracleSql("sw19:", "documents", 3)
 
   /** q187: the THROTTLED drain (round 19 — admission control on the
     * tail): `option("maxFilesPerTrigger", n)` bounds every micro-batch
@@ -989,39 +891,16 @@ object StreamDoor {
       val epochCommits =
         ShardManifest.currentGen(hconf, outPath) == expBatches.toLong
       Dedup.docCensus(ShardLayout.readShards(s, outPath), col("shard_id"))
-        .unionByName(Seq(
-          (99L, if (bounded) 1L else 0L, 1L, 1L),
-          (100L, if (epochCommits) 1L else 0L, 1L, 1L))
+        .unionByName(Pipeline.decisionRows(bounded, epochCommits)
           .toDF("shard_id", "n_docs", "sum_chars", "checksum"))
     }.orderBy("shard_id")
   }
 
-  /** The q187 oracle: the whole corpus's per-shard census via the
-    * `tt19:` shard formula (the cap, the batches and the epochs
-    * appear nowhere — a batch lost to the throttle or delivered twice
-    * flips a count or checksum), the two decisions as constants. */
-  val throttledDrainDoorSql: String = graft.operators.mat(
-    s"""WITH a AS (
-       |  SELECT doc_id, text, lang, n_chars,
-       |         CAST(('0x' || substr(md5('tt19:' || doc_id), 1, 8))
-       |           AS BIGINT) // 536870912 AS shard_id
-       |  FROM documents)
-       |SELECT shard_id, n_docs, sum_chars, checksum FROM (
-       |  SELECT CAST(shard_id AS BIGINT) AS shard_id,
-       |         CAST(count(*) AS BIGINT) AS n_docs,
-       |         CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-       |         CAST(sum(CAST('0x' || substr(md5(
-       |           CAST(doc_id AS VARCHAR) || '|' || CAST(n_chars AS VARCHAR) ||
-       |           '|' || lang || '|' || md5(text)), 1, 8) AS BIGINT)) AS BIGINT)
-       |           AS checksum
-       |  FROM a GROUP BY 1
-       |  UNION ALL
-       |  SELECT CAST(99 AS BIGINT), CAST(1 AS BIGINT), CAST(1 AS BIGINT),
-       |         CAST(1 AS BIGINT)
-       |  UNION ALL
-       |  SELECT CAST(100 AS BIGINT), CAST(1 AS BIGINT), CAST(1 AS BIGINT),
-       |         CAST(1 AS BIGINT)) t
-       |ORDER BY shard_id""".stripMargin)
+  /** The q187 oracle ([[graft.operators.censusOracleSql]]): the whole
+    * corpus under `tt19:` (a batch lost to the throttle or delivered
+    * twice flips a count or checksum); decisions: the capped batches,
+    * one epoch commit per batch. */
+  val throttledDrainDoorSql: String = censusOracleSql("tt19:", "documents", 2)
 
   val defs: Vector[QueryDef] = Vector(
     // the oracle re-derives the batch's index entries from scratch:

@@ -430,4 +430,46 @@ class AtomicPublishSpec extends SparkSpec {
     spark.catalog.refreshTable(s"${name}store")
     assert(spark.table(name).select("vec_id").as[Long].collect().toSet == want)
   }
+
+  test("a compaction's GC drops a version view before the compacted table it reads") {
+    // after a compaction, a store event's version is a VIEW over the
+    // compacted TABLE; the next compaction drops both. Dropping the
+    // table first leaves the view unresolvable while DROP VIEW uncaches
+    // it, which DropTableCommand logs as a TABLE_OR_VIEW_NOT_FOUND
+    // warning (the suite runs at ERROR, so the logger is opened to
+    // WARN for the one call)
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    val bkt = Some((Layout.Buckets, Seq("cent_id")))
+    val mk = (lo: Long, hi: Long) => spark.range(lo, hi)
+      .select(col("id").as("vec_id"), pmod(col("id"), lit(16)).as("cent_id"))
+    val upd = Layout.tableName(sfDir, "gcorderupd")
+    Layout.appendRewrite(spark, sfDir, "gcorder", bkt, mk(100, 200))(mk(0, 100))
+    Layout.compactDeleted(spark, sfDir, "gcorderupd", bkt)
+    Layout.appendSegment(spark, sfDir, "gcorder", bkt, mk(200, 300))
+    val loggerName = classOf[org.apache.spark.sql.execution.command.DropTableCommand].getName
+    val logger = LogManager.getLogger(loggerName).asInstanceOf[CoreLogger]
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("gcorder-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          warned.add(e.getMessage.getFormattedMessage)
+    }
+    val prior = logger.getLevel
+    capture.start()
+    logger.addAppender(capture)
+    Configurator.setLevel(loggerName, Level.WARN)
+    try Layout.compactDeleted(spark, sfDir, "gcorderupd", bkt)
+    finally {
+      Configurator.setLevel(loggerName, prior)
+      logger.removeAppender(capture)
+      capture.stop()
+    }
+    assert(warned.isEmpty, s"the GC dropped a table before a view that reads it: " +
+      warned.asScala.mkString("\n"))
+    assert(spark.table(upd).count() == 300)
+  }
 }

@@ -20,6 +20,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * (`Layout.publishVersion`), one integral-key type list
   * (`Layout.IntegralKeys`), one view probe (`Layout.isView`) and one
   * commit-marker listing (`Layout.markerGens`, no raw `listStatus`).
+  * The shard-census gates share one oracle protocol: the oracle's
+  * shard formula (`operators.shardIdSql`), its numbered decision rows
+  * (`operators.decisionRowsSql`, so the one literal numbered row left
+  * is q156's epoch row in `Pipeline.epochShuffleSql`, whose second
+  * column is a row index, not a decision) and their Spark side
+  * (`Pipeline.decisionRows`, so no hand-built `(99L, if (…)` row).
+  * StreamDoor's file-sink doors share one AvailableNow parquet-sink
+  * run (`StreamDoor.fileSinkRun`) and its lifecycle doors one
+  * file-per-batch drain (`StreamDoor.drainOneFileEach`).
   * A hand copy that grows back elsewhere fails here. The second test
   * pins the layering: the table format (`graft.sources`) never calls
   * up into the query layer (`graft.operators`). Comment lines are
@@ -44,7 +53,14 @@ class OneDefinitionSpec extends AnyFunSuite {
     "ByteType)" -> Some("graft/sources/Layout.scala"),
     ".tableType" -> Some("graft/sources/Layout.scala"),
     """stripPrefix(s"_${kind}_")""" -> Some("graft/sources/Layout.scala"),
-    "listStatus(loc)" -> None)
+    "listStatus(loc)" -> None,
+    "AS BIGINT) // 536870912 AS shard_id" -> Some("graft/operators/package.scala"),
+    "SELECT CAST(99 AS BIGINT), CAST(1 AS BIGINT), CAST(1 AS BIGINT)," ->
+      Some("graft/operators/Pipeline.scala"),
+    "(99L, if (" -> None,
+    """.outputMode("append").trigger(Trigger.AvailableNow())""" ->
+      Some("graft/streaming/StreamDoor.scala"),
+    """.option("maxFilesPerTrigger", "1")""" -> Some("graft/streaming/StreamDoor.scala"))
 
   private def sources(d: java.io.File): Seq[java.io.File] =
     Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap { f =>

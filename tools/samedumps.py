@@ -10,12 +10,15 @@ checks that both sides exist and carry the same column names, the same
 DuckDB column types and the same rows in emitted order. Rows are read
 the way tools/check.py reads them (all of a dump's parquet files, in
 name order, stringified cell by cell). It also byte-compares the two
-`oracle_sql.json` files, which shows that no oracle changed.
+`oracle_sql.json` files, which shows that no oracle changed; when they
+differ it names each query whose oracle text differs or is missing on
+one side.
 
 Prints one line per difference and a summary line; exits 1 on any
 difference, 0 when every dump and the oracle file are identical.
 """
 import glob
+import json
 import os
 import sys
 
@@ -61,6 +64,24 @@ def compare(con, a_out, b_out, name):
     return []
 
 
+def oracle_diffs(a_bytes, b_bytes):
+    """One line per query key whose oracle text differs or that one
+    side lacks, or one line if either file is not JSON."""
+    try:
+        a, b = json.loads(a_bytes), json.loads(b_bytes)
+    except ValueError as e:
+        return [f"oracle_sql.json: not JSON ({e})"]
+    out = []
+    for key in sorted(a.keys() | b.keys()):
+        if key not in b:
+            out.append(f"oracle {key}: missing on the change side")
+        elif key not in a:
+            out.append(f"oracle {key}: missing on the parent side")
+        elif a[key] != b[key]:
+            out.append(f"oracle {key}: text differs")
+    return out
+
+
 def main():
     if len(sys.argv) != 3:
         sys.exit(__doc__)
@@ -80,8 +101,10 @@ def main():
         diffs.append("oracle_sql.json: missing on at least one side")
     else:
         with open(oracle_files[0], "rb") as fa, open(oracle_files[1], "rb") as fb:
-            if fa.read() != fb.read():
-                diffs.append("oracle_sql.json: bytes differ")
+            a_bytes, b_bytes = fa.read(), fb.read()
+        if a_bytes != b_bytes:
+            diffs.append("oracle_sql.json: bytes differ")
+            diffs.extend(oracle_diffs(a_bytes, b_bytes))
 
     for d in diffs:
         print(f"DIFF  {d}")
