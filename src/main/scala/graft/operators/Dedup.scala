@@ -614,12 +614,19 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
-  val ngramJaccardSql: String =
-    """WITH toks AS (
+  /** The shingle hash of the SQL oracles, [[md5Long60]]'s twin: the
+    * first 15 hex digits of the md5 of a shingle `sgl`, as BIGINT. */
+  private val shingleHashSql = "CAST('0x' || substr(md5(sgl), 1, 15) AS BIGINT)"
+
+  /** The q23 and q88 oracles' shared prefix: each document's distinct
+    * word-3-shingle hashes (`sh`), their counts (`sz`) and every
+    * document pair's shared count (`inter`). */
+  private val trigramOverlapSql: String =
+    s"""WITH toks AS (
       |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS w
       |  FROM documents),
       |sh AS (
-      |  SELECT doc_id, CAST('0x' || substr(md5(sgl), 1, 15) AS BIGINT) AS h
+      |  SELECT doc_id, $shingleHashSql AS h
       |  FROM (
       |    SELECT DISTINCT doc_id, sgl FROM (
       |      SELECT doc_id, unnest(list_transform(generate_series(1, len(w) - 2),
@@ -629,7 +636,10 @@ object Dedup {
       |inter AS (
       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
       |  FROM sh a JOIN sh b ON a.h = b.h AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2)
+      |  GROUP BY 1, 2)""".stripMargin
+
+  val ngramJaccardSql: String =
+    s"""$trigramOverlapSql
       |SELECT doc_a, doc_b, inter, sa.n + sb.n - inter AS union_n,
       |       CAST(inter AS DOUBLE) / CAST(sa.n + sb.n - inter AS DOUBLE) AS jac
       |FROM inter
@@ -675,21 +685,7 @@ object Dedup {
   }
 
   val containmentSql: String =
-    """WITH toks AS (
-      |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS w
-      |  FROM documents),
-      |sh AS (
-      |  SELECT doc_id, CAST('0x' || substr(md5(sgl), 1, 15) AS BIGINT) AS h
-      |  FROM (
-      |    SELECT DISTINCT doc_id, sgl FROM (
-      |      SELECT doc_id, unnest(list_transform(generate_series(1, len(w) - 2),
-      |               i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sgl
-      |      FROM toks WHERE len(w) >= 3) t0) t),
-      |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-      |inter AS (
-      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-      |  FROM sh a JOIN sh b ON a.h = b.h AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2)
+    s"""$trigramOverlapSql
       |SELECT doc_a, doc_b, inter, sa.n AS na, sb.n AS nb,
       |       CAST(inter AS DOUBLE) / CAST(least(sa.n, sb.n) AS DOUBLE) AS containment
       |FROM inter
@@ -733,6 +729,35 @@ object Dedup {
     * windows. (The 50-token chunking constant belongs to q74's
     * training-chunk economics, not to span detection.) */
   val WindowLen = 20
+
+  /** The oracles' [[WindowLen]]-token window CTE: `name` holds each
+    * document's distinct window hashes `h` over the token lists `w`
+    * of `toks` (documents shorter than a window have none). */
+  private def winSql(name: String, toks: String): String =
+    s"""$name AS (
+       |  SELECT doc_id, $shingleHashSql AS h
+       |  FROM (
+       |    SELECT DISTINCT doc_id, sgl FROM (
+       |      SELECT doc_id, unnest(list_transform(generate_series(1, len(w) - ${WindowLen - 1}),
+       |               i -> array_to_string(list_slice(w, i, i + ${WindowLen - 1}), ' '))) AS sgl
+       |      FROM $toks WHERE len(w) >= $WindowLen) t0) t)""".stripMargin
+
+  /** The q100, q101 and q105 oracles' shared prefix: `wh` holds every
+    * [[WindowLen]]-token window of every document with its start token
+    * `pos` and hash `h`, repeats kept. */
+  private def posWinSql: String =
+    s"""WITH toks AS (
+       |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS w
+       |  FROM documents),
+       |win AS (
+       |  SELECT doc_id,
+       |         unnest(generate_series(1, len(w) - ${WindowLen - 1})) AS pos,
+       |         unnest(list_transform(generate_series(1, len(w) - ${WindowLen - 1}),
+       |           i -> array_to_string(list_slice(w, i, i + ${WindowLen - 1}), ' '))) AS sgl
+       |  FROM toks WHERE len(w) >= $WindowLen),
+       |wh AS (
+       |  SELECT doc_id, pos, $shingleHashSql AS h
+       |  FROM win)""".stripMargin
 
   /** Hot-window df-cap (q78) — same hazard and same treatment as q23's
     * [[MaxShingleDf]]: a boilerplate window present in m documents
@@ -818,13 +843,7 @@ object Dedup {
     s"""WITH toks AS (
        |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS w
        |  FROM documents),
-       |win AS (
-       |  SELECT doc_id, CAST('0x' || substr(md5(sgl), 1, 15) AS BIGINT) AS h
-       |  FROM (
-       |    SELECT DISTINCT doc_id, sgl FROM (
-       |      SELECT doc_id, unnest(list_transform(generate_series(1, len(w) - ${WindowLen - 1}),
-       |               i -> array_to_string(list_slice(w, i, i + ${WindowLen - 1}), ' '))) AS sgl
-       |      FROM toks WHERE len(w) >= $WindowLen) t0) t),
+       |${winSql("win", "toks")},
        |sz AS (SELECT doc_id, count(*) AS nw FROM win GROUP BY doc_id),
        |inter AS (
        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared_windows
@@ -914,13 +933,7 @@ object Dedup {
     s"""WITH toks AS (
        |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS w
        |  FROM documents),
-       |win AS (
-       |  SELECT doc_id, CAST('0x' || substr(md5(sgl), 1, 15) AS BIGINT) AS h
-       |  FROM (
-       |    SELECT DISTINCT doc_id, sgl FROM (
-       |      SELECT doc_id, unnest(list_transform(generate_series(1, len(w) - ${WindowLen - 1}),
-       |               i -> array_to_string(list_slice(w, i, i + ${WindowLen - 1}), ' '))) AS sgl
-       |      FROM toks WHERE len(w) >= $WindowLen) t0) t),
+       |${winSql("win", "toks")},
        |dfh AS (SELECT h, count(*) AS df FROM win GROUP BY h)
        |SELECT w.doc_id, CAST(count(*) AS BIGINT) AS nw,
        |       CAST(sum(CASE WHEN d.df >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS dup_windows,
@@ -989,18 +1002,7 @@ object Dedup {
   }
 
   val dupSpansSql: String =
-    s"""WITH toks AS (
-       |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS w
-       |  FROM documents),
-       |win AS (
-       |  SELECT doc_id,
-       |         unnest(generate_series(1, len(w) - ${WindowLen - 1})) AS pos,
-       |         unnest(list_transform(generate_series(1, len(w) - ${WindowLen - 1}),
-       |           i -> array_to_string(list_slice(w, i, i + ${WindowLen - 1}), ' '))) AS sgl
-       |  FROM toks WHERE len(w) >= $WindowLen),
-       |wh AS (
-       |  SELECT doc_id, pos, CAST('0x' || substr(md5(sgl), 1, 15) AS BIGINT) AS h
-       |  FROM win),
+    s"""$posWinSql,
        |dfh AS (SELECT h, count(DISTINCT doc_id) AS df FROM wh GROUP BY h),
        |dup AS (
        |  SELECT w.doc_id, w.pos FROM wh w JOIN dfh d ON d.h = w.h WHERE d.df >= 2),
@@ -1077,13 +1079,7 @@ object Dedup {
     s"""WITH toks AS (
        |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS w
        |  FROM documents),
-       |win AS (
-       |  SELECT doc_id, CAST('0x' || substr(md5(sgl), 1, 15) AS BIGINT) AS h
-       |  FROM (
-       |    SELECT DISTINCT doc_id, sgl FROM (
-       |      SELECT doc_id, unnest(list_transform(generate_series(1, len(w) - ${WindowLen - 1}),
-       |               i -> array_to_string(list_slice(w, i, i + ${WindowLen - 1}), ' '))) AS sgl
-       |      FROM toks WHERE len(w) >= $WindowLen) t0) t)
+       |${winSql("win", "toks")}
        |SELECT doc_id, h FROM win ORDER BY doc_id, h""".stripMargin
 
   /** INCREMENTAL span overlap (q102) — completes the incremental
@@ -1135,13 +1131,7 @@ object Dedup {
     s"""WITH toks AS (
        |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS w
        |  FROM documents),
-       |win AS (
-       |  SELECT doc_id, CAST('0x' || substr(md5(sgl), 1, 15) AS BIGINT) AS h
-       |  FROM (
-       |    SELECT DISTINCT doc_id, sgl FROM (
-       |      SELECT doc_id, unnest(list_transform(generate_series(1, len(w) - ${WindowLen - 1}),
-       |               i -> array_to_string(list_slice(w, i, i + ${WindowLen - 1}), ' '))) AS sgl
-       |      FROM toks WHERE len(w) >= $WindowLen) t0) t),
+       |${winSql("win", "toks")},
        |nw AS (SELECT doc_id, count(*) AS nw FROM win WHERE doc_id % 5 = 0 GROUP BY doc_id),
        |inter AS (
        |  SELECT a.doc_id AS doc_new, b.doc_id AS doc_corpus, count(*) AS shared_windows
@@ -1188,13 +1178,7 @@ object Dedup {
     s"""WITH toks AS (
        |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS w
        |  FROM documents),
-       |win AS (
-       |  SELECT doc_id, CAST('0x' || substr(md5(sgl), 1, 15) AS BIGINT) AS h
-       |  FROM (
-       |    SELECT DISTINCT doc_id, sgl FROM (
-       |      SELECT doc_id, unnest(list_transform(generate_series(1, len(w) - ${WindowLen - 1}),
-       |               i -> array_to_string(list_slice(w, i, i + ${WindowLen - 1}), ' '))) AS sgl
-       |      FROM toks WHERE len(w) >= $WindowLen) t0) t),
+       |${winSql("win", "toks")},
        |corp AS (SELECT DISTINCT h FROM win WHERE doc_id % 5 <> 0)
        |SELECT w.doc_id, CAST(count(*) AS BIGINT) AS nw,
        |       CAST(sum(CASE WHEN c.h IS NULL THEN 0 ELSE 1 END) AS BIGINT) AS known_windows,
@@ -1288,18 +1272,7 @@ object Dedup {
       .agg(survivingText.as("text"))
 
   val spanTrimSql: String =
-    s"""WITH toks AS (
-       |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS w
-       |  FROM documents),
-       |win AS (
-       |  SELECT doc_id,
-       |         unnest(generate_series(1, len(w) - ${WindowLen - 1})) AS pos,
-       |         unnest(list_transform(generate_series(1, len(w) - ${WindowLen - 1}),
-       |           i -> array_to_string(list_slice(w, i, i + ${WindowLen - 1}), ' '))) AS sgl
-       |  FROM toks WHERE len(w) >= $WindowLen),
-       |wh AS (
-       |  SELECT doc_id, pos, CAST('0x' || substr(md5(sgl), 1, 15) AS BIGINT) AS h
-       |  FROM win),
+    s"""$posWinSql,
        |own AS (SELECT h, min(doc_id) AS mn FROM wh GROUP BY h),
        |cov AS (
        |  SELECT DISTINCT w.doc_id, unnest(generate_series(w.pos, w.pos + ${WindowLen - 1})) AS idx
@@ -1353,18 +1326,7 @@ object Dedup {
     * (a doc trimmed below the window length vanishes from the second
     * rollup → coalesced zeros). */
   val trimFractionSql: String =
-    s"""WITH toks AS (
-       |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS w
-       |  FROM documents),
-       |win AS (
-       |  SELECT doc_id,
-       |         unnest(generate_series(1, len(w) - ${WindowLen - 1})) AS pos,
-       |         unnest(list_transform(generate_series(1, len(w) - ${WindowLen - 1}),
-       |           i -> array_to_string(list_slice(w, i, i + ${WindowLen - 1}), ' '))) AS sgl
-       |  FROM toks WHERE len(w) >= $WindowLen),
-       |wh AS (
-       |  SELECT doc_id, pos, CAST('0x' || substr(md5(sgl), 1, 15) AS BIGINT) AS h
-       |  FROM win),
+    s"""$posWinSql,
        |own AS (SELECT h, min(doc_id) AS mn FROM wh GROUP BY h),
        |cov AS (
        |  SELECT DISTINCT w.doc_id, unnest(generate_series(w.pos, w.pos + ${WindowLen - 1})) AS idx
@@ -1379,7 +1341,7 @@ object Dedup {
        |  FROM tok t LEFT JOIN cov c ON c.doc_id = t.doc_id AND c.idx = t.idx
        |  GROUP BY t.doc_id),
        |bwin AS (
-       |  SELECT doc_id, CAST('0x' || substr(md5(sgl), 1, 15) AS BIGINT) AS h
+       |  SELECT doc_id, $shingleHashSql AS h
        |  FROM (SELECT DISTINCT doc_id, sgl FROM win) t),
        |bdf AS (SELECT h, count(*) AS df FROM bwin GROUP BY h),
        |before_agg AS (
@@ -1389,13 +1351,7 @@ object Dedup {
        |toks2 AS (
        |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS w
        |  FROM trimmed),
-       |awin AS (
-       |  SELECT doc_id, CAST('0x' || substr(md5(sgl), 1, 15) AS BIGINT) AS h
-       |  FROM (
-       |    SELECT DISTINCT doc_id, sgl FROM (
-       |      SELECT doc_id, unnest(list_transform(generate_series(1, len(w) - ${WindowLen - 1}),
-       |               i -> array_to_string(list_slice(w, i, i + ${WindowLen - 1}), ' '))) AS sgl
-       |      FROM toks2 WHERE len(w) >= $WindowLen) t0) t),
+       |${winSql("awin", "toks2")},
        |adf AS (SELECT h, count(*) AS df FROM awin GROUP BY h),
        |after_agg AS (
        |  SELECT w.doc_id, count(*) AS nw,
@@ -1685,7 +1641,7 @@ object Dedup {
        |    SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS w
        |    FROM documents),
        |  win AS (
-       |    SELECT doc_id, CAST('0x' || substr(md5(sgl), 1, 15) AS BIGINT) AS h
+       |    SELECT doc_id, $shingleHashSql AS h
        |    FROM (
        |      SELECT DISTINCT doc_id, sgl FROM (
        |        SELECT doc_id, unnest(list_transform(generate_series(1, len(w) - ${WindowLen - 1}),
@@ -1715,7 +1671,7 @@ object Dedup {
        |    SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS w
        |    FROM documents),
        |  sh AS (
-       |    SELECT doc_id, CAST('0x' || substr(md5(sgl), 1, 15) AS BIGINT) AS h
+       |    SELECT doc_id, $shingleHashSql AS h
        |    FROM (
        |      SELECT DISTINCT doc_id, sgl FROM (
        |        SELECT doc_id, unnest(list_transform(generate_series(1, len(w) - 2),

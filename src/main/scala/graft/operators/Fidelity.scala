@@ -9,8 +9,9 @@ import graft.sources.CaaCsv
 /** Reference-fidelity pipelines: the two documented queries of the
   * reference (per-airport weighted delay, `Program/Delay.java:35-207`;
   * per-(airline, year) late-departure %, `Program/Late.java:38-196`)
-  * over raw CAA CSV lines parsed with the reference's own dialect
-  * ([[graft.sources.CaaCsv.splitByComma]]).
+  * over raw CAA CSV lines scanned in the reference's own dialect by
+  * [[graft.sources.CaaCsv.Fields]], which shares its token arithmetic
+  * (`CaaCsv.tokenEnd`) with [[graft.sources.CaaCsv.splitByComma]].
   *
   * Semantics reproduced exactly (verified by FidelitySpec goldens):
   *  - string-level filters: `s(7).trim == "S"`, `s(8).trim != "0"`

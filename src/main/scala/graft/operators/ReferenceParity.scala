@@ -24,9 +24,11 @@ import graft.functions.Fns._
   *                      groupBy(u,t,date).count → max(count) >= 2.
   *
   * The reference's in-mapper partial aggregation with flush-when-full
-  * (`Delay.java:22-28,58-132`) needs no code here: Spark always plans a
-  * partial `HashAggregateExec` before the shuffle and spills under memory
-  * pressure — a stronger guarantee than Hadoop's optional combiner.
+  * (`Delay.java:22-28,58-132`) takes no code in these star-schema
+  * shapes: they rely on the partial `HashAggregateExec` Spark plans
+  * before every shuffle, which spills under memory pressure. The CAA
+  * jobs over raw lines carry the reference's combiner itself
+  * ([[Fidelity]]), which runs each of them in 2 Spark jobs instead of 4.
   */
 object ReferenceParity {
 

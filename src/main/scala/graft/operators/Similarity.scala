@@ -3,6 +3,7 @@ package graft.operators
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -320,6 +321,22 @@ object Similarity {
       }.toDF("probe_id", "cent_id", "r", "pq", "pqn")
   }
 
+  /** The inverted-list assignment: each row of a (vec_id, q, qn)
+    * relation routed to its one nearest centroid ([[routeCents]] at
+    * nprobe 1) in one map-only pass over the broadcast quantizer —
+    * (vec_id, cent_id, q, qn). Stateless over its input, so it runs
+    * unchanged on a streaming relation. */
+  private[graft] def assignDf(rows: DataFrame,
+      cents: Broadcast[Array[(Long, Array[Long], Long)]]): DataFrame = {
+    val s = rows.sparkSession
+    import s.implicits._
+    rows.select(col("vec_id"), col("q"), col("qn")).as[(Long, Array[Long], Long)]
+      .mapPartitions { it =>
+        val cs = cents.value
+        it.map { case (id, q, qn) => (id, routeCents(q, qn, cs, 1).head, q, qn) }
+      }.toDF("vec_id", "cent_id", "q", "qn")
+  }
+
   /** (cos, id) in Spark's `cos DESC, id ASC` sort order, as a TOTAL
     * ordering: java.lang.Double.compare ranks NaN above every finite
     * value, exactly where a Spark window's DESC sort and DuckDB's
@@ -485,12 +502,73 @@ object Similarity {
   private[graft] val qListSql =
     "list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000, 0) AS BIGINT))"
 
-  val embeddingNearDupSql: String = mat(
-    s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
+  // The oracles' IVF dialect, one definition of each fragment: plain
+  // DuckDB text that names no Spark column and calls no Spark code, so
+  // every oracle stays an independent derivation of its query. Vals
+  // here precede the first oracle val that reads them (object init).
+
+  /** The quantize prologue, [[quantizedFrom]]'s twin: `q` quantizes
+    * each embedding, `n` adds the integer norm `qn` and drops the
+    * zero-norm rows. */
+  private val quantSql: String =
+    s"""q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
        |n AS (SELECT vec_id, q,
        |             CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
        |      FROM q
-       |      WHERE list_sum(list_transform(q, x -> x * x)) > 0),
+       |      WHERE list_sum(list_transform(q, x -> x * x)) > 0)""".stripMargin
+
+  /** The quantized cosine of vector columns `a` and `b` (norms `a`n,
+    * `b`n), [[jcosine]]'s twin: an exact BIGINT dot, one IEEE
+    * division. Printed as two lines starting at column `indent`. */
+  private def qcosSql(a: String, b: String, indent: Int = 9): String = {
+    val pad = " " * indent
+    s"""${pad}CAST(CAST(list_inner_product($a, $b) AS BIGINT) AS DOUBLE)
+       |$pad  / sqrt(CAST(${a}n AS DOUBLE) * CAST(${b}n AS DOUBLE))""".stripMargin
+  }
+
+  /** The route source over the bounded probe set `pset`, and the same
+    * source printed with its `CROSS JOIN` on the next line. */
+  private val ProbeRows = "n v JOIN pset ON v.vec_id = pset.vec_id"
+  private val ProbeRowsWrapped = ProbeRows + "\n   "
+
+  /** The IVF route as one CTE, [[routeCents]]' twin: `name` ranks every
+    * row `v` (vec_id, q, qn) of `from` against `cents` by quantized
+    * cosine, ties to the low cent_id, and keeps the ranks `bound`
+    * admits (`= 1` is the inverted-list assignment, `<= k` a k-deep
+    * route). Rows are keyed `vec_id`, or `probe_id` when `from` is
+    * [[ProbeRows]]; `carry` adds `q`/`qn`, the probe's `pq`/`pqn`, or
+    * `r`, the route rank. */
+  private def routeSql(name: String, from: String, bound: String, carry: String*): String = {
+    val probe = from.startsWith(ProbeRows)
+    val outer = Seq(if (probe) "probe_id" else "vec_id", "cent_id") ++
+      carry.map(c => if (c == "r") "rn AS r" else c)
+    val inner = Seq(if (probe) "v.vec_id AS probe_id" else "v.vec_id", "c.cent_id") ++
+      carry.collect {
+        case c @ ("pq" | "pqn") => s"v.${c.tail} AS $c"
+        case c if c != "r" => s"v.$c"
+      }
+    s"""$name AS (
+       |  SELECT ${outer.mkString(", ")} FROM (
+       |    SELECT ${inner.mkString(", ")},
+       |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
+       |${qcosSql("v.q", "c.cq", 13)} DESC,
+       |             c.cent_id) AS rn
+       |    FROM $from CROSS JOIN cents c) t
+       |  WHERE rn $bound)""".stripMargin
+  }
+
+  /** The flat and residual PQ codes of each vector (`enc`, `renc`) as
+    * comma-joined strings `ck`, the census checksum key. */
+  private def codeKeysSql: String =
+    """ecodes AS (
+      |  SELECT vec_id, array_to_string(list(code ORDER BY sub), ',') AS ck
+      |  FROM enc GROUP BY vec_id),
+      |rcodes AS (
+      |  SELECT vec_id, array_to_string(list(code ORDER BY sub), ',') AS ck
+      |  FROM renc GROUP BY vec_id)""".stripMargin
+
+  val embeddingNearDupSql: String = mat(
+    s"""WITH $quantSql,
        |p AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
        |             CAST(list_inner_product(a.q, b.q) AS BIGINT) AS dot,
        |             a.qn AS qna, b.qn AS qnb
@@ -546,17 +624,12 @@ object Similarity {
     Layout.materializedTable(s, dir, "exacttopk") { cosineTopK(s, dir) }
 
   val cosineTopKSql: String = mat(
-    s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
-       |n AS (SELECT vec_id, q,
-       |             CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
-       |      FROM q
-       |      WHERE list_sum(list_transform(q, x -> x * x)) > 0),
+    s"""WITH $quantSql,
        |pset AS (SELECT vec_id FROM n WHERE vec_id % 100 = 0
        |         ORDER BY vec_id LIMIT $MaxProbes),
        |scored AS (
        |  SELECT p.vec_id AS probe_id, c.vec_id AS vec_id,
-       |         CAST(CAST(list_inner_product(p.q, c.q) AS BIGINT) AS DOUBLE)
-       |           / sqrt(CAST(p.qn AS DOUBLE) * CAST(c.qn AS DOUBLE)) AS cos
+       |${qcosSql("p.q", "c.q")} AS cos
        |  FROM n p JOIN pset ON p.vec_id = pset.vec_id
        |  JOIN n c ON p.vec_id <> c.vec_id),
        |ranked AS (
@@ -645,11 +718,7 @@ object Similarity {
   }
 
   val annLshSql: String = mat(
-    s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
-       |n AS (SELECT vec_id, q,
-       |             CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
-       |      FROM q
-       |      WHERE list_sum(list_transform(q, x -> x * x)) > 0),
+    s"""WITH $quantSql,
        |planes AS (
        |  SELECT j.b AS j, i.b AS i,
        |         1 - 2 * (CAST('0x' || substr(md5('p' || CAST(j.b AS VARCHAR) || '_'
@@ -703,21 +772,15 @@ object Similarity {
     * query touches nprobe/K of the data. Recall vs q25 (brute force) is
     * the tunable nprobe tradeoff. */
   def annIvf(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val e = quantized(s, dir)
-      .select(col("vec_id"), col("q"), col("qn")).as[(Long, Array[Long], Long)]
 
     // coarse quantizer: k-means trained over the bounded sample (a
     // TakeOrdered — trainNOf rows collected), constant-size at any
     // corpus scale; q83 serves the same centroids from its written
     // table (the q83 == q37 oracle identity)
     val cents = lloydCents(trainSample(s, dir, Full), ivfK(s, dir, Full)).sortBy(_._1)
-    val bcCents = s.sparkContext.broadcast(cents)
     // inverted-list assignment: map-only, nearest (nprobe=1) centroid
-    val assign = e.mapPartitions { it =>
-      val cs = bcCents.value
-      it.map { case (id, q, qn) => (id, routeCents(q, qn, cs, 1).head, q, qn) }
-    }.toDF("vec_id", "cent_id", "q", "qn")
+    val assign = assignDf(e, s.sparkContext.broadcast(cents))
 
     // query path: probes route DISTRIBUTED against the broadcast
     // quantizer (routeProbesDf — map-side argmin, zero driver
@@ -726,7 +789,7 @@ object Similarity {
     // depends on the bound — an unbounded probe stream routes the
     // same way (the pruning-literal collect of q83 does not exist on
     // this inline path)
-    val probes = routeProbesDf(boundedProbes(e.toDF()), cents, 2).drop("r")
+    val probes = routeProbesDf(boundedProbes(e), cents, 2).drop("r")
 
     val wTop = Window.partitionBy(col("probe_id"))
       .orderBy(col("cos").desc, col("vec_id"))
@@ -764,8 +827,7 @@ object Similarity {
        |  SELECT vec_id, q, cent_id FROM (
        |    SELECT s.vec_id, s.q, c.cent_id,
        |           row_number() OVER (PARTITION BY s.vec_id ORDER BY
-       |             CAST(CAST(list_inner_product(s.q, c.cq) AS BIGINT) AS DOUBLE)
-       |               / sqrt(CAST(s.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
+       |${qcosSql("s.q", "c.cq", 13)} DESC,
        |             c.cent_id) AS rn
        |    FROM samp s CROSS JOIN $prev c) t
        |  WHERE rn = 1),
@@ -798,6 +860,14 @@ object Similarity {
        |$iters,
        |cents AS (SELECT cent_id, cq, cqn FROM c$LloydIters)""".stripMargin
   }
+
+  /** The held quantizer of the append, delete and lifecycle oracles:
+    * `cents` trained on the standing corpus `corp` (vec_id ≢ 0 mod 5,
+    * the [[Standing]] corpus). */
+  private def heldCentsSql: String =
+    s"""corp AS (SELECT * FROM n WHERE vec_id % 5 <> 0),
+       |${sampSql("corp")},
+       |${trainedCentsSql("corp")}""".stripMargin
 
   /** One per-subspace Lloyd iteration of the PQ codebook in SQL (twin
     * of the [[lloydCodebook]] loop body): squared-L2 assignment (ties
@@ -909,28 +979,14 @@ object Similarity {
     * lookup, so the gate proves the point path == the batch path
     * restricted to one probe. */
   private def annIvfSqlFor(probeLimit: Int): String = mat(
-    s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
-       |n AS (SELECT vec_id, q,
-       |             CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
-       |      FROM q
-       |      WHERE list_sum(list_transform(q, x -> x * x)) > 0),
+    s"""WITH $quantSql,
        |pset AS (SELECT vec_id FROM n WHERE vec_id % 100 = 0
        |         ORDER BY vec_id LIMIT $probeLimit),
        |$fullQuantAssignSql,
-       |probes AS (
-       |  SELECT probe_id, cent_id, pq, pqn FROM (
-       |    SELECT v.vec_id AS probe_id, c.cent_id, v.q AS pq, v.qn AS pqn,
-       |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-       |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-       |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-       |             c.cent_id) AS rn
-       |    FROM n v JOIN pset ON v.vec_id = pset.vec_id
-       |    CROSS JOIN cents c) t
-       |  WHERE rn <= 2),
+       |${routeSql("probes", ProbeRowsWrapped, "<= 2", "pq", "pqn")},
        |scored AS (
        |  SELECT p.probe_id, a.vec_id,
-       |         CAST(CAST(list_inner_product(p.pq, a.q) AS BIGINT) AS DOUBLE)
-       |           / sqrt(CAST(p.pqn AS DOUBLE) * CAST(a.qn AS DOUBLE)) AS cos
+       |${qcosSql("p.pq", "a.q")} AS cos
        |  FROM probes p JOIN assign a ON p.cent_id = a.cent_id
        |  WHERE a.vec_id <> p.probe_id),
        |ranked AS (
@@ -1046,17 +1102,10 @@ object Similarity {
     * standing assignment q91 probes at ingest time. */
   private[graft] def ivfAssignTable(s: SparkSession, dir: String,
       c: Corpus): DataFrame = {
-    import s.implicits._
     val cents = ivfCents(s, dir, c)
     Layout.materializedTable(s, dir, "ivfassign" + c.suffix,
         Some((Layout.Buckets, Seq("cent_id")))) {
-      val bcCents = s.sparkContext.broadcast(cents)
-      c.rows(quantized(s, dir))
-        .select(col("vec_id"), col("q"), col("qn")).as[(Long, Array[Long], Long)]
-        .mapPartitions { it =>
-          val cs = bcCents.value
-          it.map { case (id, q, qn) => (id, routeCents(q, qn, cs, 1).head, q, qn) }
-        }.toDF("vec_id", "cent_id", "q", "qn")
+      assignDf(c.rows(quantized(s, dir)), s.sparkContext.broadcast(cents))
     }
   }
 
@@ -1201,18 +1250,7 @@ object Similarity {
         var si = 0
         while (si < sample.length) {
           val q = sample(si)._2
-          var best = 0; var bestD = Long.MaxValue
-          var c = 0
-          while (c < pqK) {
-            var d = 0L; var i = 0
-            while (i < PqDim) {
-              val diff = q(sub * PqDim + i) - cb(c)._2(sub * PqDim + i)
-              d += diff * diff; i += 1
-            }
-            // strict < keeps the LOWEST code on ties
-            if (d < bestD) { bestD = d; best = c }
-            c += 1
-          }
+          val best = nearestCode(q, sub, cb)
           counts(best) += 1
           var i = 0
           while (i < PqDim) { sums(best)(i) += q(sub * PqDim + i); i += 1 }
@@ -1263,25 +1301,32 @@ object Similarity {
     * row_number. Shared by the flat (q90) and residual (q93) encode
     * passes. */
   private[graft] def pqEncode(q: Array[Long], cb: Array[(Long, Array[Long])]): Array[Int] = {
-    val pqK = cb.length
     val cs = new Array[Int](PqSubs)
     var sub = 0
     while (sub < PqSubs) {
-      var best = 0; var bestD = Long.MaxValue
-      var c = 0
-      while (c < pqK) {
-        var d = 0L; var i = 0
-        while (i < PqDim) {
-          val diff = q(sub * PqDim + i) - cb(c)._2(sub * PqDim + i)
-          d += diff * diff; i += 1
-        }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      cs(sub) = best + 1
+      cs(sub) = nearestCode(q, sub, cb) + 1
       sub += 1
     }
     cs
+  }
+
+  /** The 0-based index of `cb`'s codeword nearest to `q`'s subspace
+    * `sub` by exact squared L2; strict < keeps the LOWEST code on ties.
+    * The one nearest-code loop of the codebook trainer and the
+    * encoder. */
+  private def nearestCode(q: Array[Long], sub: Int, cb: Array[(Long, Array[Long])]): Int = {
+    var best = 0; var bestD = Long.MaxValue
+    var c = 0
+    while (c < cb.length) {
+      var d = 0L; var i = 0
+      while (i < PqDim) {
+        val diff = q(sub * PqDim + i) - cb(c)._2(sub * PqDim + i)
+        d += diff * diff; i += 1
+      }
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
   }
 
   /** q90: product-quantization ANN with asymmetric-distance (ADC)
@@ -1432,11 +1477,7 @@ object Similarity {
     * per-subspace nearest-code encoding, and the probes' ADC tables
     * in SQL — all squared-L2 in exact BIGINTs. */
   val pqAdcSql: String = mat(
-    s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
-       |n AS (SELECT vec_id, q,
-       |             CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
-       |      FROM q
-       |      WHERE list_sum(list_transform(q, x -> x * x)) > 0),
+    s"""WITH $quantSql,
        |${sampSql("n")},
        |$trainedCbSql,
        |$pqEncSql,
@@ -1462,8 +1503,7 @@ object Similarity {
       s""",cand AS (SELECT probe_id, vec_id FROM ranked WHERE rnk <= $PqShortlist),
          |rr AS (
          |  SELECT cd.probe_id, cd.vec_id,
-         |         CAST(CAST(list_inner_product(p.q, v.q) AS BIGINT) AS DOUBLE)
-         |           / sqrt(CAST(p.qn AS DOUBLE) * CAST(v.qn AS DOUBLE)) AS cos
+         |${qcosSql("p.q", "v.q")} AS cos
          |  FROM cand cd JOIN n p ON p.vec_id = cd.probe_id
          |  JOIN n v ON v.vec_id = cd.vec_id),
          |rrk AS (SELECT probe_id, vec_id, cos,
@@ -1661,33 +1701,13 @@ object Similarity {
     * and per-cell ADC tables ([[residualPqSql]]), scoring only probed
     * inverted lists. */
   val ivfPqSql: String = mat(
-    s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
-       |n AS (SELECT vec_id, q,
-       |             CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
-       |      FROM q
-       |      WHERE list_sum(list_transform(q, x -> x * x)) > 0),
+    s"""WITH $quantSql,
        |${sampSql("n")},
        |${trainedCentsSql("n")},
-       |assign AS (
-       |  SELECT vec_id, cent_id, q FROM (
-       |    SELECT v.vec_id, c.cent_id, v.q,
-       |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-       |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-       |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-       |             c.cent_id) AS rn
-       |    FROM n v CROSS JOIN cents c) t
-       |  WHERE rn = 1),
+       |${routeSql("assign", "n v", "= 1", "q")},
        |pset AS (SELECT vec_id FROM n WHERE vec_id % 100 = 0
        |         ORDER BY vec_id LIMIT $MaxProbes),
-       |proutes AS (
-       |  SELECT probe_id, cent_id FROM (
-       |    SELECT v.vec_id AS probe_id, c.cent_id,
-       |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-       |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-       |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-       |             c.cent_id) AS rn
-       |    FROM n v JOIN pset ON v.vec_id = pset.vec_id CROSS JOIN cents c) t
-       |  WHERE rn <= 2),
+       |${routeSql("proutes", ProbeRows, "<= 2")},
        |$residualPqSql,
        |${residualScoredSql("scored")},
        |ranked AS (SELECT probe_id, vec_id, adist,
@@ -1730,22 +1750,10 @@ object Similarity {
   }
 
   val clusterBalanceSql: String = mat(
-    s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
-       |n AS (SELECT vec_id, q,
-       |             CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
-       |      FROM q
-       |      WHERE list_sum(list_transform(q, x -> x * x)) > 0),
+    s"""WITH $quantSql,
        |${sampSql("n")},
        |${trainedCentsSql("n")},
-       |assign AS (
-       |  SELECT vec_id, cent_id FROM (
-       |    SELECT v.vec_id, c.cent_id,
-       |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-       |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-       |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-       |             c.cent_id) AS rn
-       |    FROM n v CROSS JOIN cents c) t
-       |  WHERE rn = 1),
+       |${routeSql("assign", "n v", "= 1")},
        |ranked AS (
        |  SELECT cent_id, vec_id,
        |         row_number() OVER (PARTITION BY cent_id
@@ -1834,26 +1842,13 @@ object Similarity {
     * assignment in SQL (the annIvfSql machinery) and applies the same
     * within-cluster keep-lowest-id rule. */
   val semDedupSql: String = mat(
-    s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
-       |n AS (SELECT vec_id, q,
-       |             CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
-       |      FROM q
-       |      WHERE list_sum(list_transform(q, x -> x * x)) > 0),
+    s"""WITH $quantSql,
        |${sampSql("n")},
        |${trainedCentsSql("n")},
-       |assign AS (
-       |  SELECT vec_id, cent_id, q, qn FROM (
-       |    SELECT v.vec_id, c.cent_id, v.q, v.qn,
-       |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-       |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-       |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-       |             c.cent_id) AS rn
-       |    FROM n v CROSS JOIN cents c) t
-       |  WHERE rn = 1),
+       |${routeSql("assign", "n v", "= 1", "q", "qn")},
        |pairs AS (
        |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       |         CAST(CAST(list_inner_product(a.q, b.q) AS BIGINT) AS DOUBLE)
-       |           / sqrt(CAST(a.qn AS DOUBLE) * CAST(b.qn AS DOUBLE)) AS cos
+       |${qcosSql("a.q", "b.q")} AS cos
        |  FROM assign a JOIN assign b
        |    ON a.cent_id = b.cent_id AND a.vec_id < b.vec_id)
        |SELECT vec_b AS vec_id, min(vec_a) AS kept_by,
@@ -1884,18 +1879,12 @@ object Similarity {
   private[graft] def semanticMatchEvents(incoming: DataFrame,
                                          cents: Array[(Long, Array[Long], Long)],
                                          corpusAssign: DataFrame): DataFrame = {
-    val s = corpusAssign.sparkSession
-    import s.implicits._
     val corpus = corpusAssign
       .select(col("cent_id"), col("vec_id").as("cvec"),
         col("q").as("qc"), col("qn").as("qnc"))
-    val bcCents = s.sparkContext.broadcast(cents)
-    val batch = quantizedFrom(incoming)
-      .select(col("vec_id"), col("q"), col("qn")).as[(Long, Array[Long], Long)]
-      .mapPartitions { it =>
-        val cs = bcCents.value
-        it.map { case (id, q, qn) => (id, routeCents(q, qn, cs, 1).head, q, qn) }
-      }.toDF("vec_id", "cent_id", "qb", "qnb")
+    val batch = assignDf(quantizedFrom(incoming),
+        corpusAssign.sparkSession.sparkContext.broadcast(cents))
+      .toDF("vec_id", "cent_id", "qb", "qnb")
     batch.join(corpus, Seq("cent_id"))
       .withColumn("cos", qcosineNative(col("qb"), col("qc"), col("qnb"), col("qnc")))
       .filter(col("cos") >= 0.4)
@@ -1920,37 +1909,16 @@ object Similarity {
   }
 
   val semDedupIncrementalSql: String = mat(
-    s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
-       |n AS (SELECT vec_id, q,
-       |             CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
-       |      FROM q
-       |      WHERE list_sum(list_transform(q, x -> x * x)) > 0),
+    s"""WITH $quantSql,
        |corp AS (SELECT * FROM n WHERE vec_id % 5 <> 0),
        |batch AS (SELECT * FROM n WHERE vec_id % 5 = 0),
        |${sampSql("corp")},
        |${trainedCentsSql("corp")},
-       |ac AS (
-       |  SELECT vec_id, cent_id, q, qn FROM (
-       |    SELECT v.vec_id, c.cent_id, v.q, v.qn,
-       |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-       |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-       |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-       |             c.cent_id) AS rn
-       |    FROM corp v CROSS JOIN cents c) t
-       |  WHERE rn = 1),
-       |ab AS (
-       |  SELECT vec_id, cent_id, q, qn FROM (
-       |    SELECT v.vec_id, c.cent_id, v.q, v.qn,
-       |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-       |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-       |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-       |             c.cent_id) AS rn
-       |    FROM batch v CROSS JOIN cents c) t
-       |  WHERE rn = 1),
+       |${routeSql("ac", "corp v", "= 1", "q", "qn")},
+       |${routeSql("ab", "batch v", "= 1", "q", "qn")},
        |m AS (
        |  SELECT b.vec_id, c.vec_id AS cvec,
-       |         CAST(CAST(list_inner_product(b.q, c.q) AS BIGINT) AS DOUBLE)
-       |           / sqrt(CAST(b.qn AS DOUBLE) * CAST(c.qn AS DOUBLE)) AS cos
+       |${qcosSql("b.q", "c.q")} AS cos
        |  FROM ab b JOIN ac c ON b.cent_id = c.cent_id),
        |r AS (
        |  SELECT vec_id, cvec, cos,
@@ -2017,26 +1985,13 @@ object Similarity {
   }
 
   val embeddingPipelineSql: String = mat(
-    s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
-       |n AS (SELECT vec_id, q,
-       |             CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
-       |      FROM q
-       |      WHERE list_sum(list_transform(q, x -> x * x)) > 0),
+    s"""WITH $quantSql,
        |${sampSql("n")},
        |${trainedCentsSql("n")},
-       |assign AS (
-       |  SELECT vec_id, cent_id, q, qn FROM (
-       |    SELECT v.vec_id, c.cent_id, v.q, v.qn,
-       |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-       |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-       |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-       |             c.cent_id) AS rn
-       |    FROM n v CROSS JOIN cents c) t
-       |  WHERE rn = 1),
+       |${routeSql("assign", "n v", "= 1", "q", "qn")},
        |pairs AS (
        |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       |         CAST(CAST(list_inner_product(a.q, b.q) AS BIGINT) AS DOUBLE)
-       |           / sqrt(CAST(a.qn AS DOUBLE) * CAST(b.qn AS DOUBLE)) AS cos
+       |${qcosSql("a.q", "b.q")} AS cos
        |  FROM assign a JOIN assign b
        |    ON a.cent_id = b.cent_id AND a.vec_id < b.vec_id),
        |drops AS (SELECT DISTINCT vec_b AS vec_id FROM pairs WHERE cos >= 0.4),
@@ -2142,17 +2097,12 @@ object Similarity {
     * definition, so the baseline they all measure against cannot
     * drift between them. */
   private def exactBaseSql: String =
-    s"""q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
-       |n AS (SELECT vec_id, q,
-       |             CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
-       |      FROM q
-       |      WHERE list_sum(list_transform(q, x -> x * x)) > 0),
+    s"""$quantSql,
        |pset AS (SELECT vec_id FROM n WHERE vec_id % 100 = 0
        |         ORDER BY vec_id LIMIT $MaxProbes),
        |escored AS (
        |  SELECT p.vec_id AS probe_id, c.vec_id AS vec_id,
-       |         CAST(CAST(list_inner_product(p.q, c.q) AS BIGINT) AS DOUBLE)
-       |           / sqrt(CAST(p.qn AS DOUBLE) * CAST(c.qn AS DOUBLE)) AS cos
+       |${qcosSql("p.q", "c.q")} AS cos
        |  FROM n p JOIN pset ON p.vec_id = pset.vec_id
        |  JOIN n c ON p.vec_id <> c.vec_id),
        |exact5 AS (SELECT probe_id, vec_id FROM (
@@ -2166,15 +2116,7 @@ object Similarity {
   private def fullQuantAssignSql: String =
     s"""${sampSql("n")},
        |${trainedCentsSql("n")},
-       |assign AS (
-       |  SELECT vec_id, cent_id, q, qn FROM (
-       |    SELECT v.vec_id, c.cent_id, v.q, v.qn,
-       |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-       |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-       |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-       |             c.cent_id) AS rn
-       |    FROM n v CROSS JOIN cents c) t
-       |  WHERE rn = 1)""".stripMargin
+       |${routeSql("assign", "n v", "= 1", "q", "qn")}""".stripMargin
 
   /** The q96 oracle: ONE shared-CTE derivation — the exact baseline
     * (q25's machinery), the IVF route (q37/q83's cents/assign/proutes),
@@ -2186,19 +2128,10 @@ object Similarity {
   val annRecallSql: String = mat(
     s"""WITH $exactBaseSql,
        |$fullQuantAssignSql,
-       |proutes AS (
-       |  SELECT probe_id, cent_id FROM (
-       |    SELECT v.vec_id AS probe_id, c.cent_id,
-       |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-       |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-       |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-       |             c.cent_id) AS rn
-       |    FROM n v JOIN pset ON v.vec_id = pset.vec_id CROSS JOIN cents c) t
-       |  WHERE rn <= 2),
+       |${routeSql("proutes", ProbeRows, "<= 2")},
        |iscored AS (
        |  SELECT pr.probe_id, a.vec_id,
-       |         CAST(CAST(list_inner_product(p.q, a.q) AS BIGINT) AS DOUBLE)
-       |           / sqrt(CAST(p.qn AS DOUBLE) * CAST(a.qn AS DOUBLE)) AS cos
+       |${qcosSql("p.q", "a.q")} AS cos
        |  FROM proutes pr
        |  JOIN n p ON p.vec_id = pr.probe_id
        |  JOIN assign a ON a.cent_id = pr.cent_id
@@ -2220,8 +2153,7 @@ object Similarity {
        |cand AS (SELECT probe_id, vec_id FROM aranked WHERE rnk <= $PqShortlist),
        |rr AS (
        |  SELECT cd.probe_id, cd.vec_id,
-       |         CAST(CAST(list_inner_product(p.q, v.q) AS BIGINT) AS DOUBLE)
-       |           / sqrt(CAST(p.qn AS DOUBLE) * CAST(v.qn AS DOUBLE)) AS cos
+       |${qcosSql("p.q", "v.q")} AS cos
        |  FROM cand cd JOIN n p ON p.vec_id = cd.probe_id
        |  JOIN n v ON v.vec_id = cd.vec_id),
        |rr5 AS (SELECT probe_id, vec_id FROM (
@@ -2306,29 +2238,12 @@ object Similarity {
     s"""WITH $exactBaseSql,
        |${sampSql("n")},
        |${trainedCentsSql("n")},
-       |assign AS (
-       |  SELECT vec_id, cent_id, q, qn FROM (
-       |    SELECT v.vec_id, c.cent_id, v.q, v.qn,
-       |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-       |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-       |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-       |             c.cent_id) AS rn
-       |    FROM n v CROSS JOIN cents c) t
-       |  WHERE rn = 1),
-       |proutes AS (
-       |  SELECT probe_id, cent_id, rn AS r FROM (
-       |    SELECT v.vec_id AS probe_id, c.cent_id,
-       |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-       |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-       |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-       |             c.cent_id) AS rn
-       |    FROM n v JOIN pset ON v.vec_id = pset.vec_id CROSS JOIN cents c) t
-       |  WHERE rn <= 8),
+       |${routeSql("assign", "n v", "= 1", "q", "qn")},
+       |${routeSql("proutes", ProbeRows, "<= 8", "r")},
        |lvl AS (SELECT unnest([1, 2, 4, 8]) AS nprobe),
        |iscored AS (
        |  SELECT l.nprobe, pr.probe_id, a.vec_id,
-       |         CAST(CAST(list_inner_product(p.q, a.q) AS BIGINT) AS DOUBLE)
-       |           / sqrt(CAST(p.qn AS DOUBLE) * CAST(a.qn AS DOUBLE)) AS cos
+       |${qcosSql("p.q", "a.q")} AS cos
        |  FROM lvl l
        |  JOIN proutes pr ON pr.r <= l.nprobe
        |  JOIN n p ON p.vec_id = pr.probe_id
@@ -2414,8 +2329,7 @@ object Similarity {
        |         FROM lvl l JOIN aranked a ON a.rnk <= l.shortlist),
        |rr AS (
        |  SELECT cd.shortlist, cd.probe_id, cd.vec_id,
-       |         CAST(CAST(list_inner_product(p.q, v.q) AS BIGINT) AS DOUBLE)
-       |           / sqrt(CAST(p.qn AS DOUBLE) * CAST(v.qn AS DOUBLE)) AS cos
+       |${qcosSql("p.q", "v.q")} AS cos
        |  FROM cand cd JOIN n p ON p.vec_id = cd.probe_id
        |  JOIN n v ON v.vec_id = cd.vec_id),
        |rr5 AS (SELECT shortlist, probe_id, vec_id FROM (
@@ -2468,31 +2382,14 @@ object Similarity {
     * semantics), then count/checksum only the surviving vectors'
     * assignment, flat codes and residual codes. */
   private[operators] def annDeleteCensusSql(delMod: Int, delRem: Int): String = mat(
-    s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
-       |n AS (SELECT vec_id, q,
-       |             CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
-       |      FROM q
-       |      WHERE list_sum(list_transform(q, x -> x * x)) > 0),
+    s"""WITH $quantSql,
        |${sampSql("n")},
        |${trainedCentsSql("n")},
-       |assign AS (
-       |  SELECT vec_id, cent_id, q FROM (
-       |    SELECT v.vec_id, c.cent_id, v.q,
-       |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-       |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-       |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-       |             c.cent_id) AS rn
-       |    FROM n v CROSS JOIN cents c) t
-       |  WHERE rn = 1),
+       |${routeSql("assign", "n v", "= 1", "q")},
        |$trainedCbSql,
        |$pqEncSql,
        |$residualEncSql,
-       |ecodes AS (
-       |  SELECT vec_id, array_to_string(list(code ORDER BY sub), ',') AS ck
-       |  FROM enc GROUP BY vec_id),
-       |rcodes AS (
-       |  SELECT vec_id, array_to_string(list(code ORDER BY sub), ',') AS ck
-       |  FROM renc GROUP BY vec_id)
+       |$codeKeysSql
        |SELECT 'ivfassign' AS artifact, CAST(count(*) AS BIGINT) AS n_rows,
        |       CAST(coalesce(sum(CAST('0x' || substr(md5(
        |         CAST(vec_id AS VARCHAR) || '|' || CAST(cent_id AS VARCHAR)
@@ -2532,6 +2429,67 @@ object Similarity {
 
   /** Neighbors kept per vector (HNSW's M, layer-0). */
   private[graft] val GraphG = 16
+
+  /** The graph oracles' candidate pool `gpool`: pairs of distinct
+    * vectors sharing a cell of the [[GraphR]]-deep route `rr`. With
+    * `batchSeesAll`, only batch vertices (vec_id ≡ 0 mod 5) pair with
+    * batch neighbours (q108's held-base asymmetry). */
+  private def poolSql(batchSeesAll: Boolean): String = {
+    val where = if (batchSeesAll) "\n  WHERE a.vec_id % 5 = 0 OR b.vec_id % 5 <> 0" else ""
+    s"""gpool AS (
+       |  SELECT DISTINCT a.vec_id, b.vec_id AS nbr
+       |  FROM rr a JOIN rr b ON a.cent_id = b.cent_id AND a.vec_id <> b.vec_id$where)""".stripMargin
+  }
+
+  /** [[topG]]'s twin over `gpool`: `sc` scores every pool pair, `out`
+    * keeps each vertex's [[GraphG]] best (score desc, ties to the low
+    * neighbour), with their rank `rn` when `withRank`. */
+  private def poolTopSql(sc: String, out: String, withRank: Boolean): String = {
+    val rn = if (withRank) ", rn" else ""
+    s"""$sc AS (
+       |  SELECT p.vec_id, p.nbr,
+       |${qcosSql("va.q", "vb.q")} AS sc
+       |  FROM gpool p JOIN n va ON va.vec_id = p.vec_id
+       |  JOIN n vb ON vb.vec_id = p.nbr),
+       |$out AS (
+       |  SELECT vec_id, nbr$rn FROM (
+       |    SELECT vec_id, nbr,
+       |           row_number() OVER (PARTITION BY vec_id
+       |                              ORDER BY sc DESC, nbr) AS rn
+       |    FROM $sc) t
+       |  WHERE rn <= $GraphG)""".stripMargin
+  }
+
+  /** The delete oracles' pool graph, scored once and ranked twice
+    * under the takedown vec_id ≡ `dR` mod `dM`: `g0h` is the held
+    * top-[[GraphG]], `g0s` the survivors' (payload norm `nqn`, rank
+    * `rn` when `withRank`), and `a1` the surviving vertices that lost
+    * a held neighbour. */
+  private def heldSurvivorSql(dM: Long, dR: Long, withRank: Boolean): String = {
+    val rn = if (withRank) ", rn" else ""
+    s"""gsc AS (
+       |  SELECT p.vec_id, p.nbr,
+       |${qcosSql("va.q", "vb.q")} AS cos,
+       |         vb.qn AS nqn
+       |  FROM gpool p JOIN n va ON va.vec_id = p.vec_id
+       |  JOIN n vb ON vb.vec_id = p.nbr),
+       |g0h AS (
+       |  SELECT vec_id, nbr FROM (
+       |    SELECT vec_id, nbr,
+       |           row_number() OVER (PARTITION BY vec_id
+       |                              ORDER BY cos DESC, nbr) AS rn
+       |    FROM gsc) t WHERE rn <= $GraphG),
+       |g0s AS (
+       |  SELECT vec_id, nbr, nqn$rn FROM (
+       |    SELECT vec_id, nbr, nqn,
+       |           row_number() OVER (PARTITION BY vec_id
+       |                              ORDER BY cos DESC, nbr) AS rn
+       |    FROM gsc
+       |    WHERE vec_id % $dM <> $dR AND nbr % $dM <> $dR) t
+       |  WHERE rn <= $GraphG),
+       |a1 AS (SELECT DISTINCT vec_id FROM g0h
+       |       WHERE vec_id % $dM <> $dR AND nbr % $dM = $dR)""".stripMargin
+  }
 
   /** The neighbour order: each vertex's candidates (vec_id, nbr, q,
     * qn, nq, nqn) ranked by quantized cosine, best first, ties to the
@@ -2653,7 +2611,6 @@ object Similarity {
     val routesBase = gRoutesBase(s, dir)
     val graphBase = nnGraphBaseTable(s, dir)
 
-    val bcC = s.sparkContext.broadcast(cents)
     val bcCm = s.sparkContext.broadcast(centById)
     val bcCb = s.sparkContext.broadcast(cb)
     val bcRcb = s.sparkContext.broadcast(rcb)
@@ -2661,12 +2618,7 @@ object Similarity {
       Tables.embeddings(s, dir).filter(pmod(col("vec_id"), lit(5)) === 0))
 
     // map-only assign against the held quantizer
-    val assignBatch = batchQ
-      .select(col("vec_id"), col("q"), col("qn")).as[(Long, Array[Long], Long)]
-      .mapPartitions { it =>
-        val cs = bcC.value
-        it.map { case (id, q, qn) => (id, routeCents(q, qn, cs, 1).head, q, qn) }
-      }.toDF("vec_id", "cent_id", "q", "qn")
+    val assignBatch = assignDf(batchQ, s.sparkContext.broadcast(cents))
     // map-only flat-PQ encode against the held codebook
     val codesBatch = batchQ
       .select(col("vec_id"), col("q")).as[(Long, Array[Long])]
@@ -2736,58 +2688,16 @@ object Similarity {
     * corpus (exactly the maintained composition). */
   val annIndexAppendSql: String = {
     mat(
-      s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
-         |n AS (SELECT vec_id, q,
-         |             CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
-         |      FROM q
-         |      WHERE list_sum(list_transform(q, x -> x * x)) > 0),
-         |corp AS (SELECT * FROM n WHERE vec_id % 5 <> 0),
-         |${sampSql("corp")},
-         |${trainedCentsSql("corp")},
-         |assign AS (
-         |  SELECT vec_id, cent_id, q, qn FROM (
-         |    SELECT v.vec_id, c.cent_id, v.q, v.qn,
-         |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-         |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-         |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-         |             c.cent_id) AS rn
-         |    FROM n v CROSS JOIN cents c) t
-         |  WHERE rn = 1),
+      s"""WITH $quantSql,
+         |$heldCentsSql,
+         |${routeSql("assign", "n v", "= 1", "q", "qn")},
          |$trainedCbSql,
          |${pqEncSqlOver("n", "cb", "enc")},
          |$residualEncSql,
-         |rr AS (
-         |  SELECT vec_id, cent_id FROM (
-         |    SELECT v.vec_id, c.cent_id,
-         |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-         |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-         |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-         |             c.cent_id) AS rn
-         |    FROM n v CROSS JOIN cents c) t
-         |  WHERE rn <= $GraphR),
-         |gpool AS (
-         |  SELECT DISTINCT a.vec_id, b.vec_id AS nbr
-         |  FROM rr a JOIN rr b ON a.cent_id = b.cent_id AND a.vec_id <> b.vec_id
-         |  WHERE a.vec_id % 5 = 0 OR b.vec_id % 5 <> 0),
-         |gsc AS (
-         |  SELECT p.vec_id, p.nbr,
-         |         CAST(CAST(list_inner_product(va.q, vb.q) AS BIGINT) AS DOUBLE)
-         |           / sqrt(CAST(va.qn AS DOUBLE) * CAST(vb.qn AS DOUBLE)) AS sc
-         |  FROM gpool p JOIN n va ON va.vec_id = p.vec_id
-         |  JOIN n vb ON vb.vec_id = p.nbr),
-         |graph AS (
-         |  SELECT vec_id, nbr FROM (
-         |    SELECT vec_id, nbr,
-         |           row_number() OVER (PARTITION BY vec_id
-         |                              ORDER BY sc DESC, nbr) AS rn
-         |    FROM gsc) t
-         |  WHERE rn <= $GraphG),
-         |ecodes AS (
-         |  SELECT vec_id, array_to_string(list(code ORDER BY sub), ',') AS ck
-         |  FROM enc GROUP BY vec_id),
-         |rcodes AS (
-         |  SELECT vec_id, array_to_string(list(code ORDER BY sub), ',') AS ck
-         |  FROM renc GROUP BY vec_id)
+         |${routeSql("rr", "n v", s"<= $GraphR")},
+         |${poolSql(batchSeesAll = true)},
+         |${poolTopSql("gsc", "graph", withRank = false)},
+         |$codeKeysSql
          |SELECT artifact, n_rows, checksum FROM (
          |  SELECT 'ivfassign' AS artifact, CAST(count(*) AS BIGINT) AS n_rows,
          |         ${h32("CAST(vec_id AS VARCHAR) || '|' || CAST(cent_id AS VARCHAR)")} AS checksum
@@ -2823,23 +2733,9 @@ object Similarity {
     * artifact; the stream==batch parity matrix stays in
     * `StreamingSpec`. */
   val indexDoorSql: String = mat(
-    s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
-       |n AS (SELECT vec_id, q,
-       |             CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
-       |      FROM q
-       |      WHERE list_sum(list_transform(q, x -> x * x)) > 0),
-       |corp AS (SELECT * FROM n WHERE vec_id % 5 <> 0),
-       |${sampSql("corp")},
-       |${trainedCentsSql("corp")},
-       |assign AS (
-       |  SELECT vec_id, cent_id, q, qn FROM (
-       |    SELECT v.vec_id, c.cent_id, v.q, v.qn,
-       |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-       |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-       |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-       |             c.cent_id) AS rn
-       |    FROM n v CROSS JOIN cents c) t
-       |  WHERE rn = 1),
+    s"""WITH $quantSql,
+       |$heldCentsSql,
+       |${routeSql("assign", "n v", "= 1", "q", "qn")},
        |$residualEncSql
        |SELECT r.vec_id, a.cent_id, CAST(r.sub AS INT) AS sub,
        |       CAST(r.code AS INT) AS code
@@ -2876,7 +2772,6 @@ object Similarity {
     * splits base/batch × refreshed/untouched so both the asymmetric
     * contract and the O(affected) claim stay visible. */
   def annAppendDelete(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     // materialize the q108 upd family first (its once-gates; no
     // census evaluation rides along)
     annAppendFamily(s, dir)
@@ -2893,16 +2788,10 @@ object Similarity {
     // the graph: class-aware refill under the held asymmetry
     val routesBaseSurv = Layout.deleteRewrite(s, dir, "groutesbase",
       Some((Layout.Buckets, Seq("cent_id"))), del, Seq("vec_id"))(gRoutesBase(s, dir))
-    val bcC = s.sparkContext.broadcast(cents)
     val batchSurvQ = quantizedFrom(
       Tables.embeddings(s, dir).filter(pmod(col("vec_id"), lit(5)) === 0))
       .join(del, Seq("vec_id"), "left_anti")
-    val assignBatchSurv = batchSurvQ
-      .select(col("vec_id"), col("q"), col("qn")).as[(Long, Array[Long], Long)]
-      .mapPartitions { it =>
-        val cs = bcC.value
-        it.map { case (id, q, qn) => (id, routeCents(q, qn, cs, 1).head, q, qn) }
-      }.toDF("vec_id", "cent_id", "q", "qn")
+    val assignBatchSurv = assignDf(batchSurvQ, s.sparkContext.broadcast(cents))
     val routedBatchSurv = routeProbesDf(assignBatchSurv, cents, GraphR)
       .select(col("probe_id").as("vec_id"), col("cent_id"),
         col("pq").as("q"), col("pqn").as("qn"))
@@ -2965,68 +2854,16 @@ object Similarity {
   val annAppendDeleteSql: String = {
     val dM = Dedup.DelMod; val dR = Dedup.DelRem
     mat(
-      s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
-         |n AS (SELECT vec_id, q,
-         |             CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
-         |      FROM q
-         |      WHERE list_sum(list_transform(q, x -> x * x)) > 0),
-         |corp AS (SELECT * FROM n WHERE vec_id % 5 <> 0),
-         |${sampSql("corp")},
-         |${trainedCentsSql("corp")},
-         |assign AS (
-         |  SELECT vec_id, cent_id, q, qn FROM (
-         |    SELECT v.vec_id, c.cent_id, v.q, v.qn,
-         |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-         |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-         |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-         |             c.cent_id) AS rn
-         |    FROM n v CROSS JOIN cents c) t
-         |  WHERE rn = 1),
+      s"""WITH $quantSql,
+         |$heldCentsSql,
+         |${routeSql("assign", "n v", "= 1", "q", "qn")},
          |$trainedCbSql,
          |${pqEncSqlOver("n", "cb", "enc")},
          |$residualEncSql,
-         |rr AS (
-         |  SELECT vec_id, cent_id FROM (
-         |    SELECT v.vec_id, c.cent_id,
-         |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-         |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-         |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-         |             c.cent_id) AS rn
-         |    FROM n v CROSS JOIN cents c) t
-         |  WHERE rn <= $GraphR),
-         |gpool AS (
-         |  SELECT DISTINCT a.vec_id, b.vec_id AS nbr
-         |  FROM rr a JOIN rr b ON a.cent_id = b.cent_id AND a.vec_id <> b.vec_id
-         |  WHERE a.vec_id % 5 = 0 OR b.vec_id % 5 <> 0),
-         |gsc AS (
-         |  SELECT p.vec_id, p.nbr,
-         |         CAST(CAST(list_inner_product(va.q, vb.q) AS BIGINT) AS DOUBLE)
-         |           / sqrt(CAST(va.qn AS DOUBLE) * CAST(vb.qn AS DOUBLE)) AS cos,
-         |         vb.qn AS nqn
-         |  FROM gpool p JOIN n va ON va.vec_id = p.vec_id
-         |  JOIN n vb ON vb.vec_id = p.nbr),
-         |g0h AS (
-         |  SELECT vec_id, nbr FROM (
-         |    SELECT vec_id, nbr,
-         |           row_number() OVER (PARTITION BY vec_id
-         |                              ORDER BY cos DESC, nbr) AS rn
-         |    FROM gsc) t WHERE rn <= $GraphG),
-         |g0s AS (
-         |  SELECT vec_id, nbr, nqn FROM (
-         |    SELECT vec_id, nbr, nqn,
-         |           row_number() OVER (PARTITION BY vec_id
-         |                              ORDER BY cos DESC, nbr) AS rn
-         |    FROM gsc
-         |    WHERE vec_id % $dM <> $dR AND nbr % $dM <> $dR) t
-         |  WHERE rn <= $GraphG),
-         |a1 AS (SELECT DISTINCT vec_id FROM g0h
-         |       WHERE vec_id % $dM <> $dR AND nbr % $dM = $dR),
-         |ecodes AS (
-         |  SELECT vec_id, array_to_string(list(code ORDER BY sub), ',') AS ck
-         |  FROM enc GROUP BY vec_id),
-         |rcodes AS (
-         |  SELECT vec_id, array_to_string(list(code ORDER BY sub), ',') AS ck
-         |  FROM renc GROUP BY vec_id)
+         |${routeSql("rr", "n v", s"<= $GraphR")},
+         |${poolSql(batchSeesAll = true)},
+         |${heldSurvivorSql(dM, dR, withRank = false)},
+         |$codeKeysSql
          |SELECT artifact, n_rows, checksum FROM (
          |  SELECT 'ivfassign' AS artifact, CAST(count(*) AS BIGINT) AS n_rows,
          |         ${h32("CAST(vec_id AS VARCHAR) || '|' || CAST(cent_id AS VARCHAR)")} AS checksum
@@ -3087,21 +2924,14 @@ object Similarity {
     * q108 contract from "batch rows exact, base rows stale" to
     * "every row exact". */
   def annGraphBackfold(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val cents = ivfCents(s, dir, Standing)
     val assignBase = ivfAssignTable(s, dir, Standing)
     val routesBase = gRoutesBase(s, dir)
     val graphBase = nnGraphBaseTable(s, dir)
 
-    val bcC = s.sparkContext.broadcast(cents)
     val batchQ = quantizedFrom(
       Tables.embeddings(s, dir).filter(pmod(col("vec_id"), lit(5)) === 0))
-    val assignBatch = batchQ
-      .select(col("vec_id"), col("q"), col("qn")).as[(Long, Array[Long], Long)]
-      .mapPartitions { it =>
-        val cs = bcC.value
-        it.map { case (id, q, qn) => (id, routeCents(q, qn, cs, 1).head, q, qn) }
-      }.toDF("vec_id", "cent_id", "q", "qn")
+    val assignBatch = assignDf(batchQ, s.sparkContext.broadcast(cents))
     val routedBatch = routeProbesDf(assignBatch, cents, GraphR)
       .select(col("probe_id").as("vec_id"), col("cent_id"),
         col("pq").as("q"), col("pqn").as("qn"))
@@ -3156,39 +2986,11 @@ object Similarity {
     * refreshed/untouched/batch partitions included. */
   val annGraphBackfoldSql: String = {
     mat(
-      s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
-         |n AS (SELECT vec_id, q,
-         |             CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
-         |      FROM q
-         |      WHERE list_sum(list_transform(q, x -> x * x)) > 0),
-         |corp AS (SELECT * FROM n WHERE vec_id % 5 <> 0),
-         |${sampSql("corp")},
-         |${trainedCentsSql("corp")},
-         |rr AS (
-         |  SELECT vec_id, cent_id FROM (
-         |    SELECT v.vec_id, c.cent_id,
-         |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-         |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-         |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-         |             c.cent_id) AS rn
-         |    FROM n v CROSS JOIN cents c) t
-         |  WHERE rn <= $GraphR),
-         |gpool AS (
-         |  SELECT DISTINCT a.vec_id, b.vec_id AS nbr
-         |  FROM rr a JOIN rr b ON a.cent_id = b.cent_id AND a.vec_id <> b.vec_id),
-         |gsc AS (
-         |  SELECT p.vec_id, p.nbr,
-         |         CAST(CAST(list_inner_product(va.q, vb.q) AS BIGINT) AS DOUBLE)
-         |           / sqrt(CAST(va.qn AS DOUBLE) * CAST(vb.qn AS DOUBLE)) AS sc
-         |  FROM gpool p JOIN n va ON va.vec_id = p.vec_id
-         |  JOIN n vb ON vb.vec_id = p.nbr),
-         |graph AS (
-         |  SELECT vec_id, nbr FROM (
-         |    SELECT vec_id, nbr,
-         |           row_number() OVER (PARTITION BY vec_id
-         |                              ORDER BY sc DESC, nbr) AS rn
-         |    FROM gsc) t
-         |  WHERE rn <= $GraphG),
+      s"""WITH $quantSql,
+         |$heldCentsSql,
+         |${routeSql("rr", "n v", s"<= $GraphR")},
+         |${poolSql(batchSeesAll = false)},
+         |${poolTopSql("gsc", "graph", withRank = false)},
          |affected AS (
          |  SELECT DISTINCT a.vec_id
          |  FROM rr a JOIN rr b ON a.cent_id = b.cent_id
@@ -3258,6 +3060,32 @@ object Similarity {
     * automatic: np_eq derives from the realized eval count. */
   private[graft] val NdExp = 16
   private[graft] val NdAdd = 4
+
+  /** The NN-descent round over the survivors' pool graph `g0s` (after
+    * [[heldSurvivorSql]]): `a2` is the refresh cone A1 ∪
+    * in-neighbours(A1), and `nd` each vertex's [[NdAdd]] best
+    * non-adjacent neighbours of its best [[NdExp]] neighbours. */
+  private def survivorExtrasSql: String =
+    s"""a2 AS (SELECT vec_id FROM a1
+       |       UNION SELECT g.vec_id FROM g0s g JOIN a1 ON a1.vec_id = g.nbr),
+       |ndc AS (
+       |  SELECT DISTINCT a.vec_id, b.nbr
+       |  FROM g0s a JOIN g0s b ON b.vec_id = a.nbr
+       |  WHERE a.rn <= $NdExp AND b.nbr <> a.vec_id
+       |    AND NOT EXISTS (SELECT 1 FROM g0s e
+       |                    WHERE e.vec_id = a.vec_id AND e.nbr = b.nbr)),
+       |ndsc AS (
+       |  SELECT c.vec_id, c.nbr, vb.qn AS nqn,
+       |${qcosSql("va.q", "vb.q")} AS sc
+       |  FROM ndc c JOIN n va ON va.vec_id = c.vec_id
+       |  JOIN n vb ON vb.vec_id = c.nbr),
+       |nd AS (
+       |  SELECT vec_id, nbr, nqn FROM (
+       |    SELECT vec_id, nbr, nqn,
+       |           row_number() OVER (PARTITION BY vec_id
+       |                              ORDER BY sc DESC, nbr) AS rn
+       |    FROM ndsc) t
+       |  WHERE rn <= $NdAdd)""".stripMargin
 
   /** The written kNN neighbor-graph table (`graft_nngraph`): per
     * vector its [[GraphG]] nearest neighbors among the members of its
@@ -3550,8 +3378,7 @@ object Similarity {
        |                    WHERE s.probe_id = b.probe_id AND s.v = g.nbr)),
        |ns$h AS (
        |  SELECT c.probe_id, c.v,
-       |         CAST(CAST(list_inner_product(p.q, w.q) AS BIGINT) AS DOUBLE)
-       |           / sqrt(CAST(p.qn AS DOUBLE) * CAST(w.qn AS DOUBLE)) AS cos
+       |${qcosSql("p.q", "w.q")} AS cos
        |  FROM nc$h c JOIN n p ON p.vec_id = c.probe_id
        |  JOIN n w ON w.vec_id = c.v),
        |s$h AS (SELECT * FROM $ps UNION ALL SELECT * FROM ns$h),
@@ -3569,20 +3396,10 @@ object Similarity {
     * oracle (pr1 probe routing through the final 2-row relation) —
     * requires `n`, `pset`, `cents`, `assign`, `graph`, `exact5`. */
   private def graphAnnTailSql: String =
-    s"""pr1 AS (
-       |  SELECT probe_id, cent_id FROM (
-       |    SELECT v.vec_id AS probe_id, c.cent_id,
-       |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-       |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-       |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-       |             c.cent_id) AS rn
-       |    FROM n v JOIN pset ON v.vec_id = pset.vec_id
-       |    CROSS JOIN cents c) t
-       |  WHERE rn = 1),
+    s"""${routeSql("pr1", ProbeRowsWrapped, "= 1")},
        |s0 AS (
        |  SELECT pr.probe_id, a.vec_id AS v,
-       |         CAST(CAST(list_inner_product(p.q, a.q) AS BIGINT) AS DOUBLE)
-       |           / sqrt(CAST(p.qn AS DOUBLE) * CAST(a.qn AS DOUBLE)) AS cos
+       |${qcosSql("p.q", "a.q")} AS cos
        |  FROM pr1 pr JOIN assign a ON a.cent_id = pr.cent_id
        |  JOIN n p ON p.vec_id = pr.probe_id
        |  WHERE a.vec_id <> pr.probe_id),
@@ -3602,20 +3419,10 @@ object Similarity {
        |npeq AS (
        |  SELECT GREATEST(1, (2 * tot * kk + p * nn) // (2 * p * nn)) AS np
        |  FROM stats),
-       |preq AS (
-       |  SELECT probe_id, cent_id FROM (
-       |    SELECT v.vec_id AS probe_id, c.cent_id,
-       |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-       |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-       |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-       |             c.cent_id) AS rn
-       |    FROM n v JOIN pset ON v.vec_id = pset.vec_id
-       |    CROSS JOIN cents c) t
-       |  WHERE rn <= (SELECT np FROM npeq)),
+       |${routeSql("preq", ProbeRowsWrapped, "<= (SELECT np FROM npeq)")},
        |icand AS (
        |  SELECT pr.probe_id, a.vec_id AS v,
-       |         CAST(CAST(list_inner_product(p.q, a.q) AS BIGINT) AS DOUBLE)
-       |           / sqrt(CAST(p.qn AS DOUBLE) * CAST(a.qn AS DOUBLE)) AS cos
+       |${qcosSql("p.q", "a.q")} AS cos
        |  FROM preq pr JOIN assign a ON a.cent_id = pr.cent_id
        |  JOIN n p ON p.vec_id = pr.probe_id
        |  WHERE a.vec_id <> pr.probe_id),
@@ -3651,40 +3458,10 @@ object Similarity {
     s"""WITH $exactBaseSql,
        |${sampSql("n")},
        |${trainedCentsSql("n")},
-       |assign AS (
-       |  SELECT vec_id, cent_id, q, qn FROM (
-       |    SELECT v.vec_id, c.cent_id, v.q, v.qn,
-       |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-       |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-       |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-       |             c.cent_id) AS rn
-       |    FROM n v CROSS JOIN cents c) t
-       |  WHERE rn = 1),
-       |rr AS (
-       |  SELECT vec_id, cent_id FROM (
-       |    SELECT v.vec_id, c.cent_id,
-       |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-       |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-       |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-       |             c.cent_id) AS rn
-       |    FROM n v CROSS JOIN cents c) t
-       |  WHERE rn <= $GraphR),
-       |gpool AS (
-       |  SELECT DISTINCT a.vec_id, b.vec_id AS nbr
-       |  FROM rr a JOIN rr b ON a.cent_id = b.cent_id AND a.vec_id <> b.vec_id),
-       |g0sc AS (
-       |  SELECT p.vec_id, p.nbr,
-       |         CAST(CAST(list_inner_product(va.q, vb.q) AS BIGINT) AS DOUBLE)
-       |           / sqrt(CAST(va.qn AS DOUBLE) * CAST(vb.qn AS DOUBLE)) AS sc
-       |  FROM gpool p JOIN n va ON va.vec_id = p.vec_id
-       |  JOIN n vb ON vb.vec_id = p.nbr),
-       |g0 AS (
-       |  SELECT vec_id, nbr, rn FROM (
-       |    SELECT vec_id, nbr,
-       |           row_number() OVER (PARTITION BY vec_id
-       |                              ORDER BY sc DESC, nbr) AS rn
-       |    FROM g0sc) t
-       |  WHERE rn <= $GraphG),
+       |${routeSql("assign", "n v", "= 1", "q", "qn")},
+       |${routeSql("rr", "n v", s"<= $GraphR")},
+       |${poolSql(batchSeesAll = false)},
+       |${poolTopSql("g0sc", "g0", withRank = true)},
        |ndc AS (
        |  SELECT DISTINCT a.vec_id, b.nbr
        |  FROM g0 a JOIN g0 b ON b.vec_id = a.nbr
@@ -3695,8 +3472,7 @@ object Similarity {
        |  SELECT vec_id, nbr FROM (
        |    SELECT c.vec_id, c.nbr,
        |           row_number() OVER (PARTITION BY c.vec_id ORDER BY
-       |             CAST(CAST(list_inner_product(va.q, vb.q) AS BIGINT) AS DOUBLE)
-       |               / sqrt(CAST(va.qn AS DOUBLE) * CAST(vb.qn AS DOUBLE)) DESC,
+       |${qcosSql("va.q", "vb.q", 13)} DESC,
        |             c.nbr) AS rn
        |    FROM ndc c JOIN n va ON va.vec_id = c.vec_id
        |    JOIN n vb ON vb.vec_id = c.nbr) t
@@ -3938,11 +3714,7 @@ object Similarity {
   val annDeleteGraphSql: String = {
     val dM = Dedup.DelMod; val dR = Dedup.DelRem
     mat(
-      s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
-         |n AS (SELECT vec_id, q,
-         |             CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
-         |      FROM q
-         |      WHERE list_sum(list_transform(q, x -> x * x)) > 0),
+      s"""WITH $quantSql,
          |${sampSql("n")},
          |${trainedCentsSql("n")},
          |pset AS (SELECT vec_id FROM n WHERE vec_id % 100 = 0
@@ -3950,8 +3722,7 @@ object Similarity {
          |psurv AS (SELECT vec_id FROM pset WHERE vec_id % $dM <> $dR),
          |scored AS (
          |  SELECT p.vec_id AS probe_id, c.vec_id AS vec_id,
-         |         CAST(CAST(list_inner_product(p.q, c.q) AS BIGINT) AS DOUBLE)
-         |           / sqrt(CAST(p.qn AS DOUBLE) * CAST(c.qn AS DOUBLE)) AS cos
+         |${qcosSql("p.q", "c.q")} AS cos
          |  FROM n p JOIN psurv ps ON p.vec_id = ps.vec_id
          |  JOIN n c ON p.vec_id <> c.vec_id),
          |held5 AS (
@@ -3967,62 +3738,10 @@ object Similarity {
          |           row_number() OVER (PARTITION BY probe_id
          |                              ORDER BY cos DESC, vec_id) AS rnk
          |    FROM scored WHERE vec_id % $dM <> $dR) t WHERE rnk <= 5),
-         |rr AS (
-         |  SELECT vec_id, cent_id FROM (
-         |    SELECT v.vec_id, c.cent_id,
-         |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-         |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-         |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-         |             c.cent_id) AS rn
-         |    FROM n v CROSS JOIN cents c) t
-         |  WHERE rn <= $GraphR),
-         |gpool AS (
-         |  SELECT DISTINCT a.vec_id, b.vec_id AS nbr
-         |  FROM rr a JOIN rr b ON a.cent_id = b.cent_id AND a.vec_id <> b.vec_id),
-         |gsc AS (
-         |  SELECT p.vec_id, p.nbr,
-         |         CAST(CAST(list_inner_product(va.q, vb.q) AS BIGINT) AS DOUBLE)
-         |           / sqrt(CAST(va.qn AS DOUBLE) * CAST(vb.qn AS DOUBLE)) AS cos,
-         |         vb.qn AS nqn
-         |  FROM gpool p JOIN n va ON va.vec_id = p.vec_id
-         |  JOIN n vb ON vb.vec_id = p.nbr),
-         |g0h AS (
-         |  SELECT vec_id, nbr FROM (
-         |    SELECT vec_id, nbr,
-         |           row_number() OVER (PARTITION BY vec_id
-         |                              ORDER BY cos DESC, nbr) AS rn
-         |    FROM gsc) t WHERE rn <= $GraphG),
-         |g0s AS (
-         |  SELECT vec_id, nbr, nqn, rn FROM (
-         |    SELECT vec_id, nbr, nqn,
-         |           row_number() OVER (PARTITION BY vec_id
-         |                              ORDER BY cos DESC, nbr) AS rn
-         |    FROM gsc
-         |    WHERE vec_id % $dM <> $dR AND nbr % $dM <> $dR) t
-         |  WHERE rn <= $GraphG),
-         |a1 AS (SELECT DISTINCT vec_id FROM g0h
-         |       WHERE vec_id % $dM <> $dR AND nbr % $dM = $dR),
-         |a2 AS (SELECT vec_id FROM a1
-         |       UNION SELECT g.vec_id FROM g0s g JOIN a1 ON a1.vec_id = g.nbr),
-         |ndc AS (
-         |  SELECT DISTINCT a.vec_id, b.nbr
-         |  FROM g0s a JOIN g0s b ON b.vec_id = a.nbr
-         |  WHERE a.rn <= $NdExp AND b.nbr <> a.vec_id
-         |    AND NOT EXISTS (SELECT 1 FROM g0s e
-         |                    WHERE e.vec_id = a.vec_id AND e.nbr = b.nbr)),
-         |ndsc AS (
-         |  SELECT c.vec_id, c.nbr, vb.qn AS nqn,
-         |         CAST(CAST(list_inner_product(va.q, vb.q) AS BIGINT) AS DOUBLE)
-         |           / sqrt(CAST(va.qn AS DOUBLE) * CAST(vb.qn AS DOUBLE)) AS sc
-         |  FROM ndc c JOIN n va ON va.vec_id = c.vec_id
-         |  JOIN n vb ON vb.vec_id = c.nbr),
-         |nd AS (
-         |  SELECT vec_id, nbr, nqn FROM (
-         |    SELECT vec_id, nbr, nqn,
-         |           row_number() OVER (PARTITION BY vec_id
-         |                              ORDER BY sc DESC, nbr) AS rn
-         |    FROM ndsc) t
-         |  WHERE rn <= $NdAdd),
+         |${routeSql("rr", "n v", s"<= $GraphR")},
+         |${poolSql(batchSeesAll = false)},
+         |${heldSurvivorSql(dM, dR, withRank = true)},
+         |$survivorExtrasSql,
          |graphs AS (
          |  SELECT vec_id, nbr, nqn FROM g0s
          |  UNION ALL SELECT vec_id, nbr, nqn FROM nd)
@@ -4116,69 +3835,13 @@ object Similarity {
     * q106/q129 `winSurvivorsSql` discipline). */
   private val sparseSurvivorChainSql: String = {
     val dM = SparseDelMod; val dR = SparseDelRem
-    s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
-         |n AS (SELECT vec_id, q,
-         |             CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
-         |      FROM q
-         |      WHERE list_sum(list_transform(q, x -> x * x)) > 0),
+    s"""WITH $quantSql,
          |${sampSql("n")},
          |${trainedCentsSql("n")},
-         |rr AS (
-         |  SELECT vec_id, cent_id FROM (
-         |    SELECT v.vec_id, c.cent_id,
-         |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-         |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-         |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-         |             c.cent_id) AS rn
-         |    FROM n v CROSS JOIN cents c) t
-         |  WHERE rn <= $GraphR),
-         |gpool AS (
-         |  SELECT DISTINCT a.vec_id, b.vec_id AS nbr
-         |  FROM rr a JOIN rr b ON a.cent_id = b.cent_id AND a.vec_id <> b.vec_id),
-         |gsc AS (
-         |  SELECT p.vec_id, p.nbr,
-         |         CAST(CAST(list_inner_product(va.q, vb.q) AS BIGINT) AS DOUBLE)
-         |           / sqrt(CAST(va.qn AS DOUBLE) * CAST(vb.qn AS DOUBLE)) AS cos,
-         |         vb.qn AS nqn
-         |  FROM gpool p JOIN n va ON va.vec_id = p.vec_id
-         |  JOIN n vb ON vb.vec_id = p.nbr),
-         |g0h AS (
-         |  SELECT vec_id, nbr FROM (
-         |    SELECT vec_id, nbr,
-         |           row_number() OVER (PARTITION BY vec_id
-         |                              ORDER BY cos DESC, nbr) AS rn
-         |    FROM gsc) t WHERE rn <= $GraphG),
-         |g0s AS (
-         |  SELECT vec_id, nbr, nqn, rn FROM (
-         |    SELECT vec_id, nbr, nqn,
-         |           row_number() OVER (PARTITION BY vec_id
-         |                              ORDER BY cos DESC, nbr) AS rn
-         |    FROM gsc
-         |    WHERE vec_id % $dM <> $dR AND nbr % $dM <> $dR) t
-         |  WHERE rn <= $GraphG),
-         |a1 AS (SELECT DISTINCT vec_id FROM g0h
-         |       WHERE vec_id % $dM <> $dR AND nbr % $dM = $dR),
-         |a2 AS (SELECT vec_id FROM a1
-         |       UNION SELECT g.vec_id FROM g0s g JOIN a1 ON a1.vec_id = g.nbr),
-         |ndc AS (
-         |  SELECT DISTINCT a.vec_id, b.nbr
-         |  FROM g0s a JOIN g0s b ON b.vec_id = a.nbr
-         |  WHERE a.rn <= $NdExp AND b.nbr <> a.vec_id
-         |    AND NOT EXISTS (SELECT 1 FROM g0s e
-         |                    WHERE e.vec_id = a.vec_id AND e.nbr = b.nbr)),
-         |ndsc AS (
-         |  SELECT c.vec_id, c.nbr, vb.qn AS nqn,
-         |         CAST(CAST(list_inner_product(va.q, vb.q) AS BIGINT) AS DOUBLE)
-         |           / sqrt(CAST(va.qn AS DOUBLE) * CAST(vb.qn AS DOUBLE)) AS sc
-         |  FROM ndc c JOIN n va ON va.vec_id = c.vec_id
-         |  JOIN n vb ON vb.vec_id = c.nbr),
-         |nd AS (
-         |  SELECT vec_id, nbr, nqn FROM (
-         |    SELECT vec_id, nbr, nqn,
-         |           row_number() OVER (PARTITION BY vec_id
-         |                              ORDER BY sc DESC, nbr) AS rn
-         |    FROM ndsc) t
-         |  WHERE rn <= $NdAdd)""".stripMargin
+         |${routeSql("rr", "n v", s"<= $GraphR")},
+         |${poolSql(batchSeesAll = false)},
+         |${heldSurvivorSql(dM, dR, withRank = true)},
+         |$survivorExtrasSql""".stripMargin
   }
 
   /** The q123 oracle: [[sparseSurvivorChainSql]] censused pool/extras
@@ -4254,19 +3917,12 @@ object Similarity {
   }
 
   /** Map-only held-quantizer assignment of an embeddings subset —
-    * q131's per-event ingest step (the [[annAppendFamily]]
-    * assignBatch shape, payload-free); also the correction door's
-    * per-micro-batch transform (q134). */
+    * q131's per-event ingest step ([[assignDf]] without the vector
+    * payload); also the correction door's per-micro-batch transform
+    * (q134). */
   private[graft] def lifeAssign(s: SparkSession, emb: DataFrame,
-      bc: org.apache.spark.broadcast.Broadcast[Array[(Long, Array[Long], Long)]]): DataFrame = {
-    import s.implicits._
-    quantizedFrom(emb)
-      .select(col("vec_id"), col("q"), col("qn")).as[(Long, Array[Long], Long)]
-      .mapPartitions { it =>
-        val cs = bc.value
-        it.map { case (id, q, qn) => (id, routeCents(q, qn, cs, 1).head) }
-      }.toDF("vec_id", "cent_id")
-  }
+      bc: Broadcast[Array[(Long, Array[Long], Long)]]): DataFrame =
+    assignDf(quantizedFrom(emb), bc).select(col("vec_id"), col("cent_id"))
 
   /** q131: the INTERLEAVED LIFECYCLE gate (round-13 item 5) — append →
     * sparse delete → append → compact over ONE ANN artifact, on the
@@ -4341,23 +3997,9 @@ object Similarity {
          |       ${h32("CAST(vec_id AS VARCHAR) || '|' || CAST(cent_id AS VARCHAR)")} AS checksum
          |FROM m $where""".stripMargin
     mat(
-      s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
-         |n AS (SELECT vec_id, q,
-         |             CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
-         |      FROM q
-         |      WHERE list_sum(list_transform(q, x -> x * x)) > 0),
-         |corp AS (SELECT * FROM n WHERE vec_id % 5 <> 0),
-         |${sampSql("corp")},
-         |${trainedCentsSql("corp")},
-         |assign AS (
-         |  SELECT vec_id, cent_id FROM (
-         |    SELECT v.vec_id, c.cent_id,
-         |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-         |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-         |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-         |             c.cent_id) AS rn
-         |    FROM n v CROSS JOIN cents c) t
-         |  WHERE rn = 1),
+      s"""WITH $quantSql,
+         |$heldCentsSql,
+         |${routeSql("assign", "n v", "= 1")},
          |m AS (
          |  SELECT vec_id, cent_id FROM assign
          |  WHERE (vec_id % 5 <> 0 AND vec_id % $dM <> $dR)
@@ -4382,6 +4024,26 @@ object Similarity {
   private[graft] val UpsMod = 13L
   private[graft] val UpsRem = 1L
 
+  /** The correction route `ups` of the q132/q134/q136 oracles: the
+    * correction set (only the rows of the membership `m` when `live`)
+    * routed by its REVERSED vectors. It keeps its own text, not
+    * [[routeSql]]'s: the reversal is index arithmetic inside the dot
+    * product, and its filter sits inside the ranked subquery. */
+  private def upsSql(live: Boolean): String = {
+    val inM = if (live) "\n      AND v.vec_id IN (SELECT vec_id FROM m)" else ""
+    s"""ups AS (
+       |  SELECT vec_id, cent_id FROM (
+       |    SELECT v.vec_id, c.cent_id,
+       |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
+       |             CAST(CAST(list_sum(list_transform(generate_series(1, len(v.q)),
+       |                    i -> v.q[len(v.q) + 1 - i] * c.cq[i])) AS BIGINT) AS DOUBLE)
+       |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
+       |             c.cent_id) AS rn
+       |    FROM n v CROSS JOIN cents c
+       |    WHERE v.vec_id % $UpsMod = $UpsRem$inM) t
+       |  WHERE rn = 1)""".stripMargin
+  }
+
   /** The q134 oracle (query: [[graft.streaming.StreamDoor
     * .streamUpsertDoor]]): the correction door's final store state
     * re-derived from raw embeddings — carried keys keep the standing
@@ -4395,34 +4057,10 @@ object Similarity {
          |       ${h32("CAST(vec_id AS VARCHAR) || '|' || CAST(cent_id AS VARCHAR)")} AS checksum
          |FROM $src""".stripMargin
     mat(
-      s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
-         |n AS (SELECT vec_id, q,
-         |             CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
-         |      FROM q
-         |      WHERE list_sum(list_transform(q, x -> x * x)) > 0),
-         |corp AS (SELECT * FROM n WHERE vec_id % 5 <> 0),
-         |${sampSql("corp")},
-         |${trainedCentsSql("corp")},
-         |assign AS (
-         |  SELECT vec_id, cent_id FROM (
-         |    SELECT v.vec_id, c.cent_id,
-         |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-         |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-         |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-         |             c.cent_id) AS rn
-         |    FROM n v CROSS JOIN cents c) t
-         |  WHERE rn = 1),
-         |ups AS (
-         |  SELECT vec_id, cent_id FROM (
-         |    SELECT v.vec_id, c.cent_id,
-         |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-         |             CAST(CAST(list_sum(list_transform(generate_series(1, len(v.q)),
-         |                    i -> v.q[len(v.q) + 1 - i] * c.cq[i])) AS BIGINT) AS DOUBLE)
-         |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-         |             c.cent_id) AS rn
-         |    FROM n v CROSS JOIN cents c
-         |    WHERE v.vec_id % $UpsMod = $UpsRem) t
-         |  WHERE rn = 1),
+      s"""WITH $quantSql,
+         |$heldCentsSql,
+         |${routeSql("assign", "n v", "= 1")},
+         |${upsSql(live = false)},
          |carried AS (
          |  SELECT vec_id, cent_id FROM assign WHERE vec_id % $UpsMod <> $UpsRem),
          |final AS (
@@ -4494,39 +4132,14 @@ object Similarity {
          |       ${h32("CAST(vec_id AS VARCHAR) || '|' || CAST(cent_id AS VARCHAR)")} AS checksum
          |FROM $src""".stripMargin
     mat(
-      s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
-         |n AS (SELECT vec_id, q,
-         |             CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
-         |      FROM q
-         |      WHERE list_sum(list_transform(q, x -> x * x)) > 0),
-         |corp AS (SELECT * FROM n WHERE vec_id % 5 <> 0),
-         |${sampSql("corp")},
-         |${trainedCentsSql("corp")},
-         |assign AS (
-         |  SELECT vec_id, cent_id FROM (
-         |    SELECT v.vec_id, c.cent_id,
-         |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-         |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-         |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-         |             c.cent_id) AS rn
-         |    FROM n v CROSS JOIN cents c) t
-         |  WHERE rn = 1),
+      s"""WITH $quantSql,
+         |$heldCentsSql,
+         |${routeSql("assign", "n v", "= 1")},
          |m AS (
          |  SELECT vec_id, cent_id FROM assign
          |  WHERE (vec_id % 5 <> 0 AND vec_id % $dM <> $dR)
          |     OR vec_id % 10 = 0 OR vec_id % 10 = 5),
-         |ups AS (
-         |  SELECT vec_id, cent_id FROM (
-         |    SELECT v.vec_id, c.cent_id,
-         |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-         |             CAST(CAST(list_sum(list_transform(generate_series(1, len(v.q)),
-         |                    i -> v.q[len(v.q) + 1 - i] * c.cq[i])) AS BIGINT) AS DOUBLE)
-         |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-         |             c.cent_id) AS rn
-         |    FROM n v CROSS JOIN cents c
-         |    WHERE v.vec_id % $UpsMod = $UpsRem
-         |      AND v.vec_id IN (SELECT vec_id FROM m)) t
-         |  WHERE rn = 1),
+         |${upsSql(live = true)},
          |carried AS (
          |  SELECT vec_id, cent_id FROM m WHERE vec_id % $UpsMod <> $UpsRem),
          |final AS (
@@ -4597,39 +4210,14 @@ object Similarity {
          |       ${h32("CAST(vec_id AS VARCHAR) || '|' || CAST(cent_id AS VARCHAR)")} AS checksum
          |FROM $src""".stripMargin
     mat(
-      s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
-         |n AS (SELECT vec_id, q,
-         |             CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
-         |      FROM q
-         |      WHERE list_sum(list_transform(q, x -> x * x)) > 0),
-         |corp AS (SELECT * FROM n WHERE vec_id % 5 <> 0),
-         |${sampSql("corp")},
-         |${trainedCentsSql("corp")},
-         |assign AS (
-         |  SELECT vec_id, cent_id FROM (
-         |    SELECT v.vec_id, c.cent_id,
-         |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-         |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-         |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-         |             c.cent_id) AS rn
-         |    FROM n v CROSS JOIN cents c) t
-         |  WHERE rn = 1),
+      s"""WITH $quantSql,
+         |$heldCentsSql,
+         |${routeSql("assign", "n v", "= 1")},
          |m AS (
          |  SELECT vec_id, cent_id FROM assign
          |  WHERE (vec_id % 5 <> 0 AND vec_id % $dM <> $dR)
          |     OR vec_id % 10 = 0 OR vec_id % 10 = 5),
-         |ups AS (
-         |  SELECT vec_id, cent_id FROM (
-         |    SELECT v.vec_id, c.cent_id,
-         |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-         |             CAST(CAST(list_sum(list_transform(generate_series(1, len(v.q)),
-         |                    i -> v.q[len(v.q) + 1 - i] * c.cq[i])) AS BIGINT) AS DOUBLE)
-         |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-         |             c.cent_id) AS rn
-         |    FROM n v CROSS JOIN cents c
-         |    WHERE v.vec_id % $UpsMod = $UpsRem
-         |      AND v.vec_id IN (SELECT vec_id FROM m)) t
-         |  WHERE rn = 1),
+         |${upsSql(live = true)},
          |carried AS (
          |  SELECT vec_id, cent_id FROM m WHERE vec_id % $UpsMod <> $UpsRem),
          |fin AS (
@@ -4703,49 +4291,11 @@ object Similarity {
   val annDeleteBaseSql: String = {
     val dM = Dedup.DelMod; val dR = Dedup.DelRem
     mat(
-      s"""WITH q AS (SELECT vec_id, $qListSql AS q FROM embeddings),
-         |n AS (SELECT vec_id, q,
-         |             CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
-         |      FROM q
-         |      WHERE list_sum(list_transform(q, x -> x * x)) > 0),
-         |corp AS (SELECT * FROM n WHERE vec_id % 5 <> 0),
-         |${sampSql("corp")},
-         |${trainedCentsSql("corp")},
-         |rr AS (
-         |  SELECT vec_id, cent_id, qn FROM (
-         |    SELECT v.vec_id, c.cent_id, v.qn,
-         |           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-         |             CAST(CAST(list_inner_product(v.q, c.cq) AS BIGINT) AS DOUBLE)
-         |               / sqrt(CAST(v.qn AS DOUBLE) * CAST(c.cqn AS DOUBLE)) DESC,
-         |             c.cent_id) AS rn
-         |    FROM corp v CROSS JOIN cents c) t
-         |  WHERE rn <= $GraphR),
-         |gpool AS (
-         |  SELECT DISTINCT a.vec_id, b.vec_id AS nbr
-         |  FROM rr a JOIN rr b ON a.cent_id = b.cent_id AND a.vec_id <> b.vec_id),
-         |gsc AS (
-         |  SELECT p.vec_id, p.nbr,
-         |         CAST(CAST(list_inner_product(va.q, vb.q) AS BIGINT) AS DOUBLE)
-         |           / sqrt(CAST(va.qn AS DOUBLE) * CAST(vb.qn AS DOUBLE)) AS cos,
-         |         vb.qn AS nqn
-         |  FROM gpool p JOIN n va ON va.vec_id = p.vec_id
-         |  JOIN n vb ON vb.vec_id = p.nbr),
-         |g0h AS (
-         |  SELECT vec_id, nbr FROM (
-         |    SELECT vec_id, nbr,
-         |           row_number() OVER (PARTITION BY vec_id
-         |                              ORDER BY cos DESC, nbr) AS rn
-         |    FROM gsc) t WHERE rn <= $GraphG),
-         |g0s AS (
-         |  SELECT vec_id, nbr, nqn FROM (
-         |    SELECT vec_id, nbr, nqn,
-         |           row_number() OVER (PARTITION BY vec_id
-         |                              ORDER BY cos DESC, nbr) AS rn
-         |    FROM gsc
-         |    WHERE vec_id % $dM <> $dR AND nbr % $dM <> $dR) t
-         |  WHERE rn <= $GraphG),
-         |a1 AS (SELECT DISTINCT vec_id FROM g0h
-         |       WHERE vec_id % $dM <> $dR AND nbr % $dM = $dR)
+      s"""WITH $quantSql,
+         |$heldCentsSql,
+         |${routeSql("rr", "corp v", s"<= $GraphR", "qn")},
+         |${poolSql(batchSeesAll = false)},
+         |${heldSurvivorSql(dM, dR, withRank = false)}
          |SELECT artifact, n_rows, checksum FROM (
          |  SELECT 'groutes' AS artifact, CAST(count(*) AS BIGINT) AS n_rows,
          |         ${h32("CAST(vec_id AS VARCHAR) || '|' || CAST(cent_id AS VARCHAR) || '|' || CAST(qn AS VARCHAR)")} AS checksum

@@ -29,6 +29,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * StreamDoor's file-sink doors share one AvailableNow parquet-sink
   * run (`StreamDoor.fileSinkRun`) and its lifecycle doors one
   * file-per-batch drain (`StreamDoor.drainOneFileEach`).
+  * The IVF route has one definition on each side: the oracles' quantize
+  * prologue (`Similarity.quantSql`) and nearest-centroid CTE
+  * (`Similarity.routeSql`; the one other ranked route is the q132
+  * correction route `Similarity.upsSql`, which ranks by the reversed
+  * vector), and Spark's map-side assignment (`Similarity.assignDf`).
+  * The PQ trainer and encoder share one nearest-code loop
+  * (`Similarity.nearestCode`), and the dedup oracles one shingle hash
+  * (`Dedup.shingleHashSql`).
   * A hand copy that grows back elsewhere fails here. The second test
   * pins the layering: the table format (`graft.sources`) never calls
   * up into the query layer (`graft.operators`). Comment lines are
@@ -60,7 +68,18 @@ class OneDefinitionSpec extends AnyFunSuite {
     "(99L, if (" -> None,
     """.outputMode("append").trigger(Trigger.AvailableNow())""" ->
       Some("graft/streaming/StreamDoor.scala"),
-    """.option("maxFilesPerTrigger", "1")""" -> Some("graft/streaming/StreamDoor.scala"))
+    """.option("maxFilesPerTrigger", "1")""" -> Some("graft/streaming/StreamDoor.scala"),
+    "WHERE list_sum(list_transform(q, x -> x * x)) > 0)" ->
+      Some("graft/operators/Similarity.scala"),
+    "(id, routeCents(q, qn, cs, 1).head" -> Some("graft/operators/Similarity.scala"),
+    "substr(md5(sgl), 1, 15) AS BIGINT)" -> Some("graft/operators/Dedup.scala"),
+    "var best = 0; var bestD = Long.MaxValue" -> Some("graft/operators/Similarity.scala"))
+
+  /** idiom -> (the one file allowed to spell it, at most this often) */
+  private val bounded = Seq(
+    // routeSql and the reversed-vector upsSql
+    "row_number() OVER (PARTITION BY v.vec_id ORDER BY" ->
+      ("graft/operators/Similarity.scala", 2))
 
   private def sources(d: java.io.File): Seq[java.io.File] =
     Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap { f =>
@@ -95,6 +114,17 @@ class OneDefinitionSpec extends AnyFunSuite {
       }
       if (ok) Nil
       else Seq(s"$idiom: expected ${home.fold("no site")(h => s"one site in $h")}, " +
+        s"found ${at.size}: ${at.mkString(", ")}")
+    }
+    assert(problems.isEmpty, problems.mkString("\n"))
+  }
+
+  test("the IVF route's ranked CTE is spelled only in its builders") {
+    val code = codeLines("src/main/scala")
+    val problems = bounded.flatMap { case (idiom, (home, most)) =>
+      val at = code.collect { case (where, line) if line.contains(idiom) => where }
+      if (at.size <= most && at.forall(_.contains(home))) Nil
+      else Seq(s"$idiom: expected at most $most sites in $home, " +
         s"found ${at.size}: ${at.mkString(", ")}")
     }
     assert(problems.isEmpty, problems.mkString("\n"))
