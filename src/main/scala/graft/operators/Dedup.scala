@@ -1847,10 +1847,13 @@ object Dedup {
     minhashLshSql.replace(sel, "SELECT doc_a, doc_b").replace(ord, "")
   }
 
-  val dupClustersSql: String = {
-    // same pair graph as q21, then transitive min-label closure
-    val pairGraph = pairGraphSql
-    s"""WITH RECURSIVE pairs AS ($pairGraph),
+  /** The q38/q76/q135/q122 oracles' shared prefix: q21's pair graph
+    * (`pairs`), its edges in both directions (`edges`), the recursive
+    * reachability closure (`reach`) and each clustered document's
+    * minimum reachable label (`final`, in the column the caller names
+    * with `lab`). */
+  private def minLabelClosureSql(lab: String): String =
+    s"""WITH RECURSIVE pairs AS ($pairGraphSql),
        |edges AS (
        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
        |  UNION ALL
@@ -1859,10 +1862,13 @@ object Dedup {
        |  SELECT src, src FROM edges
        |  UNION
        |  SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.doc),
-       |final AS (SELECT doc, min(lab) AS cluster_id FROM reach GROUP BY doc)
+       |final AS (SELECT doc, min(lab) AS $lab FROM reach GROUP BY doc)""".stripMargin
+
+  /** The q38 oracle: q21's pair graph, then its min-label closure. */
+  val dupClustersSql: String =
+    s"""${minLabelClosureSql("cluster_id")}
        |SELECT cluster_id, count(*) AS n_docs, max(doc) AS max_doc
        |FROM final GROUP BY cluster_id ORDER BY cluster_id""".stripMargin
-  }
 
   /** Incremental dedup — the daily-ingest shape of a training pipeline:
     * an incoming batch (doc_id ≡ 0 mod 5 stands in for "today's crawl")
@@ -2310,26 +2316,15 @@ object Dedup {
       .orderBy("source")
   }
 
-  val dedupRetentionSql: String = {
-    // the same pair graph + transitive closure as q38's oracle, joined
-    // back to documents: kept = unclustered or the cluster minimum
-    val pairGraph = pairGraphSql
-    s"""WITH RECURSIVE pairs AS ($pairGraph),
-       |edges AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT doc_b AS src, doc_a AS dst FROM pairs),
-       |reach(doc, lab) AS (
-       |  SELECT src, src FROM edges
-       |  UNION
-       |  SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.doc),
-       |final AS (SELECT doc, min(lab) AS cid FROM reach GROUP BY doc)
+  /** The q76 oracle: q38's closure joined back to documents; kept =
+    * unclustered or the cluster minimum. */
+  val dedupRetentionSql: String =
+    s"""${minLabelClosureSql("cid")}
        |SELECT d.source, count(*) AS n_docs,
        |       CAST(sum(CASE WHEN f.doc IS NULL OR d.doc_id = f.cid THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
        |       CAST(sum(CASE WHEN f.doc IS NULL OR d.doc_id = f.cid THEN 0 ELSE 1 END) AS BIGINT) AS n_dropped
        |FROM documents d LEFT JOIN final f ON f.doc = d.doc_id
        |GROUP BY d.source ORDER BY d.source""".stripMargin
-  }
 
   /** q135: QUALITY-AWARE CANONICAL SELECTION — the production upgrade
     * of q76's keep-min retention: real pipelines keep the BEST copy
@@ -2370,18 +2365,8 @@ object Dedup {
 
   /** The q135 oracle: q76's recursive-CTE transitive closure, the
     * same integer quality key, the same per-source rollup. */
-  val qualityRetentionSql: String = {
-    val pairGraph = pairGraphSql
-    s"""WITH RECURSIVE pairs AS ($pairGraph),
-       |edges AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT doc_b AS src, doc_a AS dst FROM pairs),
-       |reach(doc, lab) AS (
-       |  SELECT src, src FROM edges
-       |  UNION
-       |  SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.doc),
-       |final AS (SELECT doc, min(lab) AS cid FROM reach GROUP BY doc),
+  val qualityRetentionSql: String =
+    s"""${minLabelClosureSql("cid")},
        |docs AS (
        |  SELECT doc_id, source,
        |         CAST(len(list_filter(string_split(text, ' '), t -> t <> '')) AS BIGINT) AS n_tok,
@@ -2401,7 +2386,6 @@ object Dedup {
        |              THEN CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
        |            END), 0) AS BIGINT) AS kept_checksum
        |FROM ranked GROUP BY source ORDER BY source""".stripMargin
-  }
 
   /** q122: CLUSTER-AWARE TRAIN/VAL/TEST SPLIT — the eval-leakage
     * guard every training pipeline needs and per-document splitting
@@ -2459,16 +2443,7 @@ object Dedup {
     * closure, singleton fallback, the same md5-derived 60-bit hash
     * assignment, and an independent cross-split pair check. */
   val clusterSplitSql: String =
-    s"""WITH RECURSIVE pairs AS ($pairGraphSql),
-       |edges AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT doc_b AS src, doc_a AS dst FROM pairs),
-       |reach(doc, lab) AS (
-       |  SELECT src, src FROM edges
-       |  UNION
-       |  SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.doc),
-       |final AS (SELECT doc, min(lab) AS lab FROM reach GROUP BY doc),
+    s"""${minLabelClosureSql("lab")},
        |cl AS (
        |  SELECT d.doc_id, coalesce(f.lab, d.doc_id) AS cluster_id
        |  FROM documents d LEFT JOIN final f ON f.doc = d.doc_id),

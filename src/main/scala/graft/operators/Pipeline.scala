@@ -2250,40 +2250,12 @@ object Pipeline {
   }
 
   /** The q142 oracle: the FULL profile recomputed from scratch over
-    * the whole corpus (standing ∪ batch = documents) on the shared
-    * q140 fragments — including exact min/max, which the incremental
+    * the whole corpus (standing ∪ batch = documents), which is q140's
+    * oracle itself — including exact min/max, which the incremental
     * side merges typed from the wide scalar index — so the gate
     * proves incremental == rebuild on the complete insert-only
     * statistic set. */
-  val profileUpdateSql: String = mat(
-    s"""WITH aug AS (
-       |  $profAugSql),
-       |scalar AS (
-       |  SELECT 'doc_id' AS cname, count(*) - count(doc_id) AS n_null,
-       |         CAST(min(doc_id) AS VARCHAR) AS min_v,
-       |         CAST(max(doc_id) AS VARCHAR) AS max_v,
-       |         CAST(sum(doc_id) AS BIGINT) AS mass FROM aug
-       |  UNION ALL
-       |  SELECT 'text', count(*) - count(text), min(text), max(text),
-       |         CAST(sum(length(text)) AS BIGINT) FROM aug
-       |  UNION ALL
-       |  SELECT 'lang', count(*) - count(lang), min(lang), max(lang),
-       |         CAST(sum(length(lang)) AS BIGINT) FROM aug
-       |  UNION ALL
-       |  SELECT 'source', count(*) - count(source), min(source), max(source),
-       |         CAST(sum(length(source)) AS BIGINT) FROM aug
-       |  UNION ALL
-       |  SELECT 'n_chars', count(*) - count(n_chars),
-       |         CAST(min(n_chars) AS VARCHAR), CAST(max(n_chars) AS VARCHAR),
-       |         CAST(sum(n_chars) AS BIGINT) FROM aug),
-       |${profCountsSqlOver("aug")}
-       |SELECT s.cname, CAST(s.n_null AS BIGINT) AS n_null,
-       |       CAST(nd.n_distinct AS BIGINT) AS n_distinct,
-       |       s.min_v, s.max_v, s.mass,
-       |       CASE WHEN nd.n_distinct <= $ProfileTopKMaxDistinct
-       |            THEN coalesce(t.top3raw, '') ELSE '' END AS top3
-       |FROM scalar s JOIN nd USING (cname) LEFT JOIN topk t USING (cname)
-       |ORDER BY cname""".stripMargin)
+  val profileUpdateSql: String = corpusProfileSql
 
   /** The counts-derived profile surface (cname, n_vals, n_distinct,
     * top3) from ANY (cname, v, cnt) relation — q140's consumers

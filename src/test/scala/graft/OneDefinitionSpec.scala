@@ -35,8 +35,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * correction route `Similarity.upsSql`, which ranks by the reversed
   * vector), and Spark's map-side assignment (`Similarity.assignDf`).
   * The PQ trainer and encoder share one nearest-code loop
-  * (`Similarity.nearestCode`), and the dedup oracles one shingle hash
-  * (`Dedup.shingleHashSql`).
+  * (`Similarity.nearestCode`), the dedup oracles one shingle hash
+  * (`Dedup.shingleHashSql`) and one min-label closure over the pair
+  * graph (`Dedup.minLabelClosureSql`, for q38, q76, q135 and q122).
+  * A table path's snapshot identity has one listing fingerprint
+  * (`Tables.fingerprint`).
   * A hand copy that grows back elsewhere fails here. The second test
   * pins the layering: the table format (`graft.sources`) never calls
   * up into the query layer (`graft.operators`). Comment lines are
@@ -73,7 +76,11 @@ class OneDefinitionSpec extends AnyFunSuite {
       Some("graft/operators/Similarity.scala"),
     "(id, routeCents(q, qn, cs, 1).head" -> Some("graft/operators/Similarity.scala"),
     "substr(md5(sgl), 1, 15) AS BIGINT)" -> Some("graft/operators/Dedup.scala"),
-    "var best = 0; var bestD = Long.MaxValue" -> Some("graft/operators/Similarity.scala"))
+    "var best = 0; var bestD = Long.MaxValue" -> Some("graft/operators/Similarity.scala"),
+    "SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.doc" ->
+      Some("graft/operators/Dedup.scala"),
+    """${st.getPath}\t${st.getLen}\t${st.getModificationTime}""" ->
+      Some("graft/sources/Tables.scala"))
 
   /** idiom -> (the one file allowed to spell it, at most this often) */
   private val bounded = Seq(

@@ -1,8 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 /** Physical-plan regression tests: the scan/shuffle/broadcast shapes
@@ -460,20 +458,6 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
-  /** Spark jobs started while `body` runs. */
-  private def jobsDuring(body: => Unit): Int = {
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      org.apache.spark.graftshim.BusFlush.waitEmpty(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(l)
-    n.get
-  }
-
   test("Delay/Late: one exchange to a single partition, no range sort, two jobs, file scan kept") {
     // the per-partition combiner's partials shuffle once; the final
     // aggregate and the sort run on that one partition, so neither adds
@@ -486,7 +470,8 @@ class PlanShapeSpec extends SparkSpec {
     val lines = spark.read.textFile(dir.toString)
     for ((name, df) <- Seq("Delay" -> graft.operators.Fidelity.delay(lines),
                            "Late" -> graft.operators.Fidelity.late(lines))) {
-      assert(jobsDuring(df.collect()) == 2, s"$name: not two jobs per collect")
+      assert(JobBudgetSpec.jobsDuring(spark, name)(df.collect())._2 == 2,
+        s"$name: not two jobs per collect")
       val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
       assert(countOf(p, "\\bExchange ") == 1, s"$name: not exactly one exchange:\n$p")
       assert(!p.contains("rangepartitioning"), s"$name: sort shuffles:\n$p")
