@@ -84,7 +84,10 @@ object Fns {
   def quantize(a: Column): Column =
     transform(a, v => round(v.cast(DoubleType) * lit(1000000L)).cast(LongType))
 
-  /** Exact integer dot product of two quantized vectors. */
+  /** Exact integer dot product of two quantized vectors. This,
+    * [[qcosine]] and [[qdotStatic]] are the reference implementations
+    * `QDotSpec` and `FnsSpec` check [[qdotNative]] against; query code
+    * calls [[qdotNative]] / [[qcosineNative]]. */
   def qdot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, v) => acc + v)
 

@@ -2813,7 +2813,7 @@ object Pipeline {
     * generation files). Since round 16 live pins PARTICIPATE in the
     * retention horizon: a later compaction freezes the pinned
     * generation rather than GC it (q152 gates that interleaving;
-    * `SavepointSpec` pins retain/refuse/release). The pin is
+    * `SavepointSpec` pins retain/release). The pin is
     * per-snapshot here — the builder releases any prior snapshot's
     * leftover manifest before re-pinning (the same refresh discipline
     * every materialized artifact follows), keeping declare-over-live
@@ -3244,19 +3244,6 @@ object Pipeline {
     image
   }
 
-  /** Every physical part file under the shard dirs of `path`, as
-    * `shard_id=<k>/<name>` -> length (manifest-oblivious: retained
-    * bytes included). */
-  private def partFiles(s: SparkSession, path: String): Map[String, Long] = {
-    import graft.sources.Layout
-    Layout.listWarehouseNames(s, path, dirsOnly = true)
-      .filter(_.startsWith("shard_id=")).flatMap { sd =>
-        val (fs, p) = Layout.hfs(s, s"$path/$sd")
-        fs.listStatus(p).toSeq.filter(_.getPath.getName.startsWith("part-"))
-          .map(st => s"$sd/${st.getPath.getName}" -> st.getLen)
-      }.toMap
-  }
-
   /** The document census per shard of the layout at `path`, read RAW:
     * a manifest-oblivious json glob sees exactly the bytes on disk
     * (shard_id re-enters as the partition column). */
@@ -3287,26 +3274,18 @@ object Pipeline {
     held.map { case (nm, ok) => (s"zz_$nm", 0L, if (ok) 1L else 0L, 1L, 1L) }
 
   /** The layout checks of a fresh [[sharded18]] export read off the
-    * directory listing: exactly one part file in each of the
+    * live listing: exactly one part file in each of the
     * [[graft.sources.ShardLayout.EpochShards]] shard dirs, and every
     * part file a zstd frame by its magic bytes. */
   private def oneZstFilePerShard(s: SparkSession, path: String): (Boolean, Boolean) = {
     import graft.sources.{Layout, ZstdCodec}
-    val shardDirs = Layout.listWarehouseNames(s, path, dirsOnly = true)
-      .filter(_.startsWith("shard_id="))
-    val partsPerDir = shardDirs.map(sd =>
-      Layout.listWarehouseNames(s, s"$path/$sd")
-        .filter(_.startsWith("part-")))
-    val oneFileEach = shardDirs.length == EpochShards &&
-      partsPerDir.forall(_.length == 1)
-    val allZst = partsPerDir.zip(shardDirs).forall { case (ps, sd) =>
-      ps.forall { f =>
-        f.endsWith(".zst") && {
-          val magic = Layout.headBytes(s, s"$path/$sd/$f", 4)
-          magic.length == 4 &&
-            magic.zip(ZstdCodec.Magic).forall { case (b, m) =>
-              (b & 0xff) == m }
-        }
+    val parts = ShardManifest.livePartsByShard(s.sessionState.newHadoopConf(), path)
+    val oneFileEach = parts.size == EpochShards && parts.values.forall(_.size == 1)
+    val allZst = parts.values.flatMap(_.keys).forall { f =>
+      f.endsWith(".zst") && {
+        val magic = Layout.headBytes(s, s"$path/$f", 4)
+        magic.length == 4 &&
+          magic.zip(ZstdCodec.Magic).forall { case (b, m) => (b & 0xff) == m }
       }
     }
     (oneFileEach, allZst)
@@ -4030,26 +4009,26 @@ object Pipeline {
       val path = freshLayout(s, Layout.warehousePath(s, Layout.tableName(dir, "deltashards")))
       writeShards(sharded18(d.filter(pmod(col("doc_id"), lit(10)) =!= 3),
         "epoch0:"), path, "overwrite")
-      val before = partFiles(s, path)
+      val hconf = s.sessionState.newHadoopConf()
+      val before = ShardManifest.livePartsByShard(hconf, path)
       val batch = d.filter(pmod(col("doc_id"), lit(10)) === 3)
       // the delta: append-mode connector write — new files land in
       // the touched shard dirs, existing files are never opened, and
       // the commit MERGES the touched shards' manifest lines (round-17:
       // the sidecar survives the lifecycle, judge item 1)
       writeShards(sharded18(batch, "epoch0:"), path, "append")
-      val after = partFiles(s, path)
-      val baseUntouched = before.forall { case (f, len) =>
-        after.get(f).contains(len) }
+      val after = ShardManifest.livePartsByShard(hconf, path)
+      val baseUntouched = before.forall { case (sh, fs) =>
+        fs.toSet.subsetOf(after.getOrElse(sh, Map.empty).toSet) }
       val touched = shardImage(batch, "epoch0:")
-      val newPerShard = (after.keySet -- before.keySet).toSeq
-        .groupBy(ShardManifest.shardOf)
-        .map { case (sh, fs) => sh -> fs.size }
+      val newPerShard = after.map { case (sh, fs) =>
+        sh -> (fs.keySet -- before.getOrElse(sh, Map.empty).keySet).size
+      }.filter(_._2 > 0)
       val oneDeltaEach = newPerShard.keySet == touched &&
         newPerShard.values.forall(_ == 1)
       // the merged sidecar still describes the bytes — base lines
       // untouched, touched shards' lines extended by the delta commit
-      val manifestValid = graft.sources.ShardManifest.readValidated(
-        s.sessionState.newHadoopConf(), path).isDefined
+      val manifestValid = ShardManifest.readValidated(hconf, path).isDefined
       rawShardCensus(s, path)
         .unionByName(decisionRows(baseUntouched, oneDeltaEach, manifestValid)
           .toDF("shard_id", "n_docs", "sum_chars", "checksum"))
@@ -4100,12 +4079,9 @@ object Pipeline {
         pmod(col("doc_id"), lit(10)) =!= 7), "overwrite")
       write(d.filter(pmod(col("doc_id"), lit(10)) === 3), "append")
       write(d.filter(pmod(col("doc_id"), lit(10)) === 7), "append")
-      val before = partFiles(s, path)
-      def filesPerShard(l: Map[String, Long]): Map[Long, Int] =
-        l.keySet.toSeq
-          .groupBy(ShardManifest.shardOf)
-          .map { case (sh, fs) => sh -> fs.size }
-      val crossed = filesPerShard(before).filter(_._2 >= 3).keySet
+      val hconf = s.sessionState.newHadoopConf()
+      val before = ShardManifest.livePartsByShard(hconf, path)
+      val crossed = before.filter(_._2.size >= 3).keySet
       require(crossed.nonEmpty, "the compaction policy never fired — " +
         "the gate would be vacuous (deltas missed every shard)")
       foldShardDirs(s, path, crossed)
@@ -4113,15 +4089,13 @@ object Pipeline {
       // q175 exercise that); this gate claims the post-GC physical
       // collapse, so it runs the vacuum at an everything-past horizon
       vacuumShardLayout(s, path, System.currentTimeMillis() + 60000L)
-      val hconf = s.sessionState.newHadoopConf()
-      val after = partFiles(s, path)
-      val crossedFolded = filesPerShard(after)
-        .filter { case (sh, _) => crossed.contains(sh) }
-        .values.forall(_ == 1)
+      val after = ShardManifest.livePartsByShard(hconf, path)
+      val crossedFolded = after.filter { case (sh, _) => crossed.contains(sh) }
+        .values.forall(_.size == 1)
       val uncrossedUntouched = before
-        .filter { case (f, _) =>
-          !crossed.contains(ShardManifest.shardOf(f)) }
-        .forall { case (f, len) => after.get(f).contains(len) }
+        .filter { case (sh, _) => !crossed.contains(sh) }
+        .forall { case (sh, fs) =>
+          fs.toSet.subsetOf(after.getOrElse(sh, Map.empty).toSet) }
       // the policy decision checked INDEPENDENTLY of the listing that
       // defined `crossed` (round-16 advice — the prior form compared
       // the expression against itself): each of the three writes lands
@@ -4190,20 +4164,19 @@ object Pipeline {
         r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
       // shard pruning: the two lowest present shards
       val pick = byShard.keySet.toSeq.sorted.take(2)
-      val expFiles = pick.map(sh =>
-        Layout.listWarehouseNames(s, s"$path/shard_id=$sh")
-          .count(_.startsWith("part-"))).sum
-      val c0 = ShardSource.openedFiles.get()
+      val live = ShardManifest.livePartsByShard(s.sessionState.newHadoopConf(), path)
+      val expFiles = pick.map(sh => live.get(sh).fold(0)(_.size)).sum
       // the counting expression is deliberately NOT manifest-answerable
       // (length(text) ≥ 0 is no NamedReference), so the probe exercises
       // the DATA path's shard pruning — a plain count would route to
       // the statistics sidecar since round 17 (q167/q168 gate that)
-      val prCounts = src.filter(col("shard_id").isin(pick.map(Long.box): _*))
-        .groupBy(col("shard_id"))
-        .agg(sum((length(col("text")) >= 0).cast(LongType)).as("n"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val opened = ShardSource.openedFiles.get() - c0
-      val prunedOk = opened == expFiles.toLong &&
+      val (prCounts, reads) = ShardSource.counting {
+        src.filter(col("shard_id").isin(pick.map(Long.box): _*))
+          .groupBy(col("shard_id"))
+          .agg(sum((length(col("text")) >= 0).cast(LongType)).as("n"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
+      val prunedOk = reads.opened == expFiles.toLong &&
         pick.forall(sh => prCounts.get(sh).contains(byShard(sh)._1))
       // column pruning: the BatchScan's output carries only n_chars
       // (abs() keeps the aggregate off the manifest path)
@@ -4269,19 +4242,17 @@ object Pipeline {
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
           min(col("doc_id")).as("min_doc"), max(col("doc_id")).as("max_doc"))
         .collect()
-      val f0 = ShardSource.openedFiles.get()
-      val m0 = ShardSource.manifestReads.get()
-      val stats = statsOf(src)
-      val statsZeroFiles = ShardSource.openedFiles.get() == f0 &&
-        ShardSource.manifestReads.get() > m0
+      val (stats, statsReads) = ShardSource.counting(statsOf(src))
+      val statsZeroFiles = statsReads.metadataOnly
       // filter × aggregate composition: a shard-filtered global count
       val picks = stats.map(_.getLong(0)).sorted.take(2)
-      val f1 = ShardSource.openedFiles.get()
-      val filteredCount = src.filter(col("shard_id").isin(picks.map(Long.box): _*))
-        .agg(count(lit(1)).as("n")).collect()(0).getLong(0)
+      val (filteredCount, filteredReads) = ShardSource.counting {
+        src.filter(col("shard_id").isin(picks.map(Long.box): _*))
+          .agg(count(lit(1)).as("n")).collect()(0).getLong(0)
+      }
       val expFiltered = stats.filter(r => picks.contains(r.getLong(0)))
         .map(_.getLong(1)).sum
-      val filteredZero = ShardSource.openedFiles.get() == f1 &&
+      val filteredZero = filteredReads.opened == 0 &&
         filteredCount == expFiltered
       // the sidecar vs a full-scan recompute through the same
       // connector (forces the data path: group by a data column too)
@@ -4467,16 +4438,16 @@ object Pipeline {
       var openedDelta = 0L
       var manifestDelta = 0L
       def statsOf(): Seq[(Long, Long, Long, Long, Long)] = {
-        val f0 = ShardSource.openedFiles.get()
-        val m0 = ShardSource.manifestReads.get()
-        val rows = src.groupBy(col("shard_id"))
-          .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-            min(col("doc_id")).as("min_doc"), max(col("doc_id")).as("max_doc"))
-          .collect() // bounded: shards
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-            r.getLong(3), r.getLong(4))).toSeq
-        openedDelta += ShardSource.openedFiles.get() - f0
-        manifestDelta += ShardSource.manifestReads.get() - m0
+        val (rows, reads) = ShardSource.counting {
+          src.groupBy(col("shard_id"))
+            .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
+              min(col("doc_id")).as("min_doc"), max(col("doc_id")).as("max_doc"))
+            .collect() // bounded: shards
+            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+              r.getLong(3), r.getLong(4))).toSeq
+        }
+        openedDelta += reads.opened
+        manifestDelta += reads.manifestReads
         rows
       }
       // 1-2: base export, stats
@@ -4730,67 +4701,51 @@ object Pipeline {
       val path = freshLayout(s, Layout.warehousePath(s, Layout.tableName(dir, "tdelshards")))
       writeShards(sharded18(d, "tdel17:"), path, "overwrite")
       val hconf = s.sessionState.newHadoopConf()
-      def partListing(): Map[String, Long] =
-        ShardManifest.listDataFiles(hconf, path)
-          .filter(_._1.split("/")(1).startsWith("part-"))
-      val before = partListing()
+      val before = ShardManifest.livePartsByShard(hconf, path)
       def src = readShards(s, path)
       // 2: the takedown — opened-files accounting around it
       val tombIds = d.filter(pmod(col("doc_id"), lit(7)) === 3)
         .select(col("doc_id"))
-      val f0 = ShardSource.openedFiles.get()
-      val image = shardTakedown(s, path, tombIds, "tdel17:")
-      val takedownOpened = ShardSource.openedFiles.get() - f0
-      val imagePartFiles = before.keySet
-        .count(f => image.contains(ShardManifest.shardOf(f)))
-      val after = partListing()
-      val baseUntouched = before == after
+      val (image, takedownReads) =
+        ShardSource.counting(shardTakedown(s, path, tombIds, "tdel17:"))
+      val imagePartFiles = before.filter { case (sh, _) => image.contains(sh) }
+        .values.map(_.size).sum
+      val baseUntouched = before == ShardManifest.livePartsByShard(hconf, path)
       // 3: phase a — the full live census, min/max included: the
       // takedown recomputed exact bounds in its own pass, so the whole
       // grouped aggregate answers from the manifest (round 19 — the
       // pre-round-19 behavior dropped the hit bounds and fell back)
-      val f1 = ShardSource.openedFiles.get()
-      val ma = ShardSource.manifestReads.get()
-      val statsOfData = src.groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-          min(col("doc_id")).as("min_doc"), max(col("doc_id")).as("max_doc"))
-        .collect() // bounded: shards
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getLong(4)))
-      val aMetadataOnly = ShardSource.openedFiles.get() == f1 &&
-        ShardSource.manifestReads.get() > ma
+      def fullStats(): (Array[(Long, Long, Long, Long, Long)], ShardSource.Reads) =
+        ShardSource.counting {
+          src.groupBy(col("shard_id"))
+            .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
+              min(col("doc_id")).as("min_doc"), max(col("doc_id")).as("max_doc"))
+            .collect() // bounded: shards
+            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+              r.getLong(3), r.getLong(4)))
+        }
+      val (statsOfData, aReads) = fullStats()
       // ... and one tombstoned id is provably invisible
       val probeId = tombIds.orderBy(col("doc_id")).limit(1)
         .collect()(0).getLong(0)
       val hidden = src.filter(col("doc_id") === probeId).collect().isEmpty
       // 4: phase b — count + mass answer from the manifest
-      val f2 = ShardSource.openedFiles.get()
-      val m0 = ShardSource.manifestReads.get()
-      val statsOfManifest = src.groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), 1L, 1L))
-      val bZeroFiles = ShardSource.openedFiles.get() == f2 &&
-        ShardSource.manifestReads.get() > m0
+      val (statsOfManifest, bReads) = ShardSource.counting {
+        src.groupBy(col("shard_id"))
+          .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
+          .collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), 1L, 1L))
+      }
       // 5: the fold materializes the deletion
       foldShardDirs(s, path, image)
-      val tombsGone = ShardManifest.listDataFiles(hconf, path)
-        .keys.forall(!_.split("/")(1).startsWith("tomb-"))
+      val tombsGone = !ShardManifest.listDataFiles(hconf, path)
+        .keys.exists(ShardManifest.isTomb)
       // 6: phase c — full stats, manifest-only again
-      val f3 = ShardSource.openedFiles.get()
-      val m1 = ShardSource.manifestReads.get()
-      val statsOfFold = src.groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-          min(col("doc_id")).as("min_doc"), max(col("doc_id")).as("max_doc"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getLong(4)))
-      val cZeroFiles = ShardSource.openedFiles.get() == f3 &&
-        ShardSource.manifestReads.get() > m1
+      val (statsOfFold, cReads) = fullStats()
       val oAffected = baseUntouched &&
-        takedownOpened == imagePartFiles.toLong && image.nonEmpty
-      val metadataThroughTakedown = aMetadataOnly && bZeroFiles &&
-        cZeroFiles && tombsGone
+        takedownReads.opened == imagePartFiles.toLong && image.nonEmpty
+      val metadataThroughTakedown = aReads.metadataOnly && bReads.metadataOnly &&
+        cReads.metadataOnly && tombsGone
       def phased(phase: String, rows: Seq[(Long, Long, Long, Long, Long)]) =
         rows.map { case (sh, n, sc, mn, mx) => (phase, sh, n, sc, mn, mx) }
       (phased("a_live", statsOfData.toSeq) ++
@@ -4889,11 +4844,12 @@ object Pipeline {
       val after = shardCensus(src)
       val invisible = after == before
       // 4: the snapshot is intact — stats stay metadata-only and agree
-      val f0 = ShardSource.openedFiles.get()
-      val statRows = src.groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val statsOk = ShardSource.openedFiles.get() == f0 &&
+      val (statRows, statReads) = ShardSource.counting {
+        src.groupBy(col("shard_id"))
+          .agg(count(lit(1)).as("n")).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
+      val statsOk = statReads.opened == 0 &&
         statRows == before.map(t => t._1 -> t._2).toMap
       // 5: a manifest-oblivious read DOES see the orphan byte-for-byte
       val rawN = d.count()
@@ -5076,29 +5032,25 @@ object Pipeline {
       try o.write(s"""{"doc_id":$victim}\n""".getBytes("UTF-8"))
       finally o.close()
       // the probe: snapshot broken -> refusal -> data path (tomb applied)
-      val r0 = ShardSource.statsRefused.get()
-      val f0 = ShardSource.openedFiles.get()
-      val probeBroken = src.groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val refusedToData = ShardSource.statsRefused.get() > r0 &&
-        ShardSource.openedFiles.get() > f0
+      val (probeBroken, brokenReads) = ShardSource.counting {
+        src.groupBy(col("shard_id"))
+          .agg(count(lit(1)).as("n")).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
+      val refusedToData = brokenReads.refused > 0 && brokenReads.opened > 0
       // phase a: the degraded census (data path, tombstone applied)
       val censusA = shardCensus(src)
       val brokenTruth = refusedToData &&
         probeBroken == censusA.map(t => t._1 -> t._2).toMap
       // 3: repair — rescan rebuilds and ADOPTS the tombstone
       val repaired = repairShardManifest(s, path)
-      val f1 = ShardSource.openedFiles.get()
-      val m0 = ShardSource.manifestReads.get()
-      val r1 = ShardSource.statsRefused.get()
-      val probeFixed = src.groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sc")).collect()
-        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      val (probeFixed, fixedReads) = ShardSource.counting {
+        src.groupBy(col("shard_id"))
+          .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sc")).collect()
+          .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      }
       val statsRecovered = repaired &&
-        ShardSource.openedFiles.get() == f1 &&
-        ShardSource.manifestReads.get() > m0 &&
-        ShardSource.statsRefused.get() == r1 &&
+        fixedReads.metadataOnly && fixedReads.refused == 0 &&
         probeFixed == censusA.map(t => t._1 -> (t._2, t._3)).toMap
       // 4: an orphan lands; the vacuum sweeps exactly it
       val (ofs, op) = Layout.hfs(s,
@@ -5191,15 +5143,14 @@ object Pipeline {
         .toSeq
       // the stats probe: COUNT(*) and both nullable COUNTs answer from
       // the merged manifest with ZERO data files
-      val f0 = ShardSource.openedFiles.get()
-      val m0 = ShardSource.manifestReads.get()
-      val probe = src.groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n"), count(col("lang")).as("nl"),
-          count(col("quality")).as("nq")).collect()
-        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toMap
-      val statsZero = ShardSource.openedFiles.get() == f0 &&
-        ShardSource.manifestReads.get() > m0
+      val (probe, probeReads) = ShardSource.counting {
+        src.groupBy(col("shard_id"))
+          .agg(count(lit(1)).as("n"), count(col("lang")).as("nl"),
+            count(col("quality")).as("nq")).collect()
+          .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
+          .toMap
+      }
+      val statsZero = probeReads.metadataOnly
       // count(quality) == count(lang) == the era-2 rows per shard
       val statsTrue = statsZero &&
         probe == census.map(t => t._1 -> (t._2, t._3, t._3)).toMap
@@ -5278,25 +5229,18 @@ object Pipeline {
       writeShards(sharded18(d.filter(pmod(col("doc_id"), lit(10)) =!= 3), "gd18:"),
         path, "overwrite")
       val gen1 = ShardManifest.currentGen(hconf, path)
-      val gen1Names = ShardManifest.read(hconf, path).toSeq
-        .flatMap(_._2.flatMap(_.files.map(_.name))).toSet
+      val gen1Parts = ShardManifest.recordedParts(hconf, path).toSet
       writeShards(sharded18(d.filter(pmod(col("doc_id"), lit(10)) === 3), "gd18:"),
         path, "append")
       val gen2 = ShardManifest.currentGen(hconf, path)
-      val newFiles = ShardManifest.read(hconf, path).toSeq
-        .flatMap(_._2.flatMap(_.files.map(_.name)))
-        .count(n => !gen1Names.contains(n) &&
-          n.split("/").last.startsWith("part-"))
+      val newFiles = ShardManifest.recordedParts(hconf, path).count(!gen1Parts(_))
       def since(g: Long) = readShards(s, path, sinceGen = Some(g))
       // 3: the diff census — exactly the delta, exactly the new files
-      val f0 = ShardSource.openedFiles.get()
-      val census = shardCensus(since(gen1))
-      val oNewFiles = ShardSource.openedFiles.get() - f0 == newFiles.toLong &&
-        newFiles > 0
+      val (census, diffReads) = ShardSource.counting(shardCensus(since(gen1)))
+      val oNewFiles = diffReads.opened == newFiles.toLong && newFiles > 0
       // 4: the up-to-date reader pays nothing
-      val f1 = ShardSource.openedFiles.get()
-      val upToDate = since(gen2).count() == 0L &&
-        ShardSource.openedFiles.get() == f1
+      val (upToDateN, upToDateReads) = ShardSource.counting(since(gen2).count())
+      val upToDate = upToDateN == 0L && upToDateReads.opened == 0
       // 5: an expired/unknown base fails loudly
       val loud =
         try { since(999999L).count(); false }
@@ -5466,12 +5410,13 @@ object Pipeline {
       val censusLive = shardCensus(readShards(s, path))
       val censusGen1 = shardCensus(readShards(s, path, asOfGen = Some(gen1)))
       // 5b: the rewritten manifest serves the corrected stats
-      val f0 = ShardSource.openedFiles.get()
-      val statRows = readShards(s, path)
-        .groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sc")).collect()
-        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-      val statsCorrected = ShardSource.openedFiles.get() == f0 &&
+      val (statRows, statReads) = ShardSource.counting {
+        readShards(s, path)
+          .groupBy(col("shard_id"))
+          .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sc")).collect()
+          .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      }
+      val statsCorrected = statReads.opened == 0 &&
         statRows == censusLive.map(t => t._1 -> (t._2, t._3)).toMap
       def phased(phase: String, rows: Seq[(Long, Long, Long, Long)]) =
         rows.map { case (sh, n, sc, ck) => (phase, sh, n, sc, ck) }
@@ -5559,14 +5504,12 @@ object Pipeline {
         "lo18:")
       val hconf = s.sessionState.newHadoopConf()
       // 2: ONE maintenance call; the decision pass is metadata-only
-      val f0 = ShardSource.openedFiles.get()
-      val snapshotPeek = ShardManifest.readSnapshot(hconf, path)
-      val crossedPeek = snapshotPeek.toSeq.flatMap(_._2).filter { e =>
-        val names = e.files.map(_.name.split("/").last)
-        names.count(_.startsWith("part-")) >= 2 ||
-          names.exists(_.startsWith("tomb-"))
-      }.map(_.shardId).toSet
-      val decisionZeroFiles = ShardSource.openedFiles.get() == f0
+      val (crossedPeek, peekReads) = ShardSource.counting {
+        ShardManifest.readSnapshot(hconf, path).toSeq.flatMap(_._2)
+          .filter(e => e.parts.size >= 2 || e.tombs.nonEmpty)
+          .map(_.shardId).toSet
+      }
+      val decisionZeroFiles = peekReads.opened == 0
       val (crossed, _, sweptG) = maintainShardLayout(s, path,
         System.currentTimeMillis() + 60000L)
       // the predicted set, re-derived from raw residues (never from
@@ -5588,7 +5531,7 @@ object Pipeline {
       // stays addressable at its present state while all superseded
       // snapshots expire
       val collapsed = perShard.values.forall(_.size == 1) &&
-        live.keys.forall(!_.split("/").last.startsWith("tomb-")) &&
+        !live.keys.exists(ShardManifest.isTomb) &&
         ShardManifest.listGens(hconf, path).map(_._1) ==
           Seq(ShardManifest.currentGen(hconf, path)) &&
         ShardManifest.retiredNames(hconf, path).isEmpty &&
@@ -5657,20 +5600,20 @@ object Pipeline {
       val probeShard = shardImage(d.filter(col("doc_id") === probe), "fs19:").head
       def src = readShards(s, path)
       val hconf = s.sessionState.newHadoopConf()
-      val totalParts = ShardManifest.read(hconf, path).toSeq
-        .flatMap(_._2.flatMap(_.files.map(_.name)))
-        .count(_.split("/").last.startsWith("part-"))
+      val totalParts = ShardManifest.recordedParts(hconf, path).size
       // 2: the point read — one shard directory, ONE file
-      val f0 = ShardSource.openedFiles.get()
-      val pointRows = shardCensus(src
-        .filter(col("shard_id") === probeShard && col("doc_id") === probe))
-        .map(t => ("a_point", t._1, t._2, t._3, t._4))
-      val pointOpened = ShardSource.openedFiles.get() - f0
+      val (pointRows, pointReads) = ShardSource.counting {
+        shardCensus(src
+          .filter(col("shard_id") === probeShard && col("doc_id") === probe))
+          .map(t => ("a_point", t._1, t._2, t._3, t._4))
+      }
+      val pointOpened = pointReads.opened
       // 3: the id-range scan — only intersecting era files
-      val f1 = ShardSource.openedFiles.get()
-      val rangeRows = shardCensus(src.filter(col("doc_id") > c3))
-        .map(t => ("b_range", t._1, t._2, t._3, t._4))
-      val rangeOpened = ShardSource.openedFiles.get() - f1
+      val (rangeRows, rangeReads) = ShardSource.counting {
+        shardCensus(src.filter(col("doc_id") > c3))
+          .map(t => ("b_range", t._1, t._2, t._3, t._4))
+      }
+      val rangeOpened = rangeReads.opened
       // the expected era-4 image, RAW-derived (never from the manifest
       // the skip itself reads — the q165 independence rule)
       val expectedRange = shardImage(d.filter(col("doc_id") > c3), "fs19:").size.toLong
@@ -5799,10 +5742,10 @@ object Pipeline {
             m.contains("retention horizon") || m.contains("not readable"))
         }
       // 4c: stats pushdown survives the catalog route
-      val f0 = ShardSource.openedFiles.get()
-      val n = s.sql(s"SELECT count(*) AS n FROM graft.`$tbl`")
-        .collect()(0).getLong(0)
-      val statsViaSql = ShardSource.openedFiles.get() == f0 && n == d.count()
+      val (n, sqlReads) = ShardSource.counting {
+        s.sql(s"SELECT count(*) AS n FROM graft.`$tbl`").collect()(0).getLong(0)
+      }
+      val statsViaSql = sqlReads.opened == 0 && n == d.count()
       // phase c: the commit history from SQL (`CALL graft.history`) —
       // generations normalized to their rank (the warehouse's version
       // clock continues across runs), the per-generation facts packed
@@ -5915,11 +5858,8 @@ object Pipeline {
       writeShards(scattered, ctrl, "overwrite")
       val hconf = s.sessionState.newHadoopConf()
       val (_, entries) = ShardManifest.readSnapshot(hconf, path).get
-      val clusteredOne = entries.nonEmpty && entries.forall(_.files.count(
-        _.name.split("/").last.startsWith("part-")) == 1)
-      val ctrlFiles = ShardManifest.read(hconf, ctrl).toSeq
-        .flatMap(_._2.flatMap(_.files.map(_.name)))
-        .count(_.split("/").last.startsWith("part-"))
+      val clusteredOne = entries.nonEmpty && entries.forall(_.parts.size == 1)
+      val ctrlFiles = ShardManifest.recordedParts(hconf, ctrl).size
       // the zone-map tightness check derives expected extrema from RAW
       // (never from the manifest the decision is about)
       val expBounds = shardAssign(d, "cw19:")
@@ -6109,9 +6049,7 @@ object Pipeline {
       write(col("doc_id") > c2 && col("doc_id") <= c3, "append")
       write(col("doc_id") > c3, "append")
       val hconf = s.sessionState.newHadoopConf()
-      val totalParts = ShardManifest.read(hconf, path).toSeq
-        .flatMap(_._2.flatMap(_.files.map(_.name)))
-        .count(_.split("/").last.startsWith("part-"))
+      val totalParts = ShardManifest.recordedParts(hconf, path).size
       // the dimension: top-quartile ids ≡ 0 mod 97 — selective, and
       // entirely inside era 4 so the zone maps can rule eras 1-3 out
       val dim = d.filter(col("doc_id") > c3 &&
@@ -6128,11 +6066,12 @@ object Pipeline {
         .join(dim, col("k") >= col("mn") && col("k") <= col("mx"),
           "left_semi")
         .count()
-      val f0 = ShardSource.openedFiles.get()
-      val census = shardCensus(readShards(s, path)
-        .join(dim, col("doc_id") === col("k")))
-        .map(t => ("a_join", t._1, t._2, t._3, t._4))
-      val opened = ShardSource.openedFiles.get() - f0
+      val (census, reads) = ShardSource.counting {
+        shardCensus(readShards(s, path)
+          .join(dim, col("doc_id") === col("k")))
+          .map(t => ("a_join", t._1, t._2, t._3, t._4))
+      }
+      val opened = reads.opened
       (census ++ namedDecisionRows(
         "runtime_opens_exactly_matching_files" -> (opened == expOpen),
         "skip_is_real" -> (opened < totalParts.toLong)))
@@ -6195,11 +6134,9 @@ object Pipeline {
         .mode("overwrite").save()
       val hconf = s.sessionState.newHadoopConf()
       val (_, entries) = ShardManifest.readSnapshot(hconf, path).get
-      val everyShardRolls = entries.nonEmpty && entries.forall(_.files.count(
-        _.name.split("/").last.startsWith("part-")) >= 2)
+      val everyShardRolls = entries.nonEmpty && entries.forall(_.parts.size >= 2)
       val disjointSorted = entries.forall { e =>
-        val parts = e.files.filter(_.name.split("/").last.startsWith("part-"))
-          .sortBy(_.name)
+        val parts = e.parts.sortBy(_.name)
         parts.forall(f => f.minDoc.isDefined && f.maxDoc.isDefined) &&
           parts.sliding(2).forall {
             case Seq(a, b) => a.maxDoc.get < b.minDoc.get
@@ -6210,10 +6147,10 @@ object Pipeline {
       val probe = d.agg(max(col("doc_id"))).collect()(0).getLong(0)
       val probeShard = shardImage(d.filter(col("doc_id") === probe), "fb19:").head
       def src = readShards(s, path)
-      val f0 = ShardSource.openedFiles.get()
-      val probeN = src.filter(col("shard_id") === probeShard &&
-        col("doc_id") === probe).count()
-      val pointOne = ShardSource.openedFiles.get() - f0 == 1L && probeN == 1L
+      val (probeN, probeReads) = ShardSource.counting {
+        src.filter(col("shard_id") === probeShard && col("doc_id") === probe).count()
+      }
+      val pointOne = probeReads.opened == 1L && probeN == 1L
       val census = shardCensus(src)
         .map(t => ("a_census", t._1, t._2, t._3, t._4))
       (census ++ namedDecisionRows(
@@ -6278,16 +6215,16 @@ object Pipeline {
       val allNamed = crossed1 == entries.map(_.shardId).toSet &&
         crossed1.size == EpochShards
       val bounded = entries.forall { e =>
-        val parts = e.files.filter(_.name.split("/").last.startsWith("part-"))
-        parts.size >= 2 && parts.forall(_.len < budget)
+        e.parts.size >= 2 && e.parts.forall(_.len < budget)
       }
       val (crossed2, _, _) = maintainShardLayout(s, path, 0L, Some(budget))
       val idempotent = crossed2.isEmpty
-      val f0 = ShardSource.openedFiles.get()
-      val agg = readShards(s, path)
-        .agg(count(lit(1)).as("n"), min(col("doc_id")).as("mn"),
-          max(col("doc_id")).as("mx")).collect()(0) // bounded: 1
-      val statsMeta = ShardSource.openedFiles.get() == f0 &&
+      val (agg, aggReads) = ShardSource.counting {
+        readShards(s, path)
+          .agg(count(lit(1)).as("n"), min(col("doc_id")).as("mn"),
+            max(col("doc_id")).as("mx")).collect()(0) // bounded: 1
+      }
+      val statsMeta = aggReads.opened == 0 &&
         agg.getLong(0) == d.count()
       val census = shardCensus(readShards(s, path))
         .map(t => ("a_census", t._1, t._2, t._3, t._4))

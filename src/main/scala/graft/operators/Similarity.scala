@@ -19,8 +19,9 @@ import graft.functions.Fns._
   * BIGINT sums (order-independent under any partitioning), with a single
   * IEEE-deterministic double division at the end — so Spark and the
   * DuckDB oracle agree bit-for-bit, which float accumulation cannot
-  * guarantee. The pair-scoring hot path uses the statically unrolled
-  * [[graft.functions.Fns.qdotStatic]] so it compiles into whole-stage
+  * guarantee. Every pair score goes through
+  * [[graft.functions.Fns.qcosineNative]], whose dot product is the
+  * native `qdot_native` expression: one tight loop inside whole-stage
   * codegen (interpreted `aggregate`/`zip_with` cost ~10× on an
   * all-pairs join).
   *

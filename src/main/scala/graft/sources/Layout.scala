@@ -520,15 +520,13 @@ object Layout {
     * never leak into the manifest's reads (version views are
     * immutable commits). A LIVE savepoint participates in the
     * retention horizon (round-16 lead item): [[compactDeleted]]
-    * consults the manifests via [[livePins]] and either RETAINS the
-    * pinned generations across its GC (the default — the pinned
-    * version is frozen into a physical snapshot table at the
-    * compaction, so the pinned read survives the sidecar clearing) or
-    * REFUSES loudly with the pin named
-    * (`spark.graft.savepoint.onCompact=refuse`). The pin ends at
+    * consults the manifests via [[livePins]] and RETAINS the pinned
+    * generations across its GC (the pinned version is frozen into a
+    * physical snapshot table at the compaction, so the pinned read
+    * survives the sidecar clearing). The pin ends at
     * [[releaseSavepoint]]; the NEXT maintenance pass then GCs the
     * retained generation like any other (q152 gates the interleaving;
-    * `SavepointSpec` pins retain, refuse, release and re-pin).
+    * `SavepointSpec` pins retain, release and re-pin).
     *
     * Declaring a savepoint under a LIVE name fails loudly (round-15
     * advice: the prior refresh-then-write silently re-pinned a
@@ -927,19 +925,8 @@ object Layout {
     val store = s"${name}store"
     val isStore = s.catalog.tableExists(store)
     // Live savepoints participate in the retention horizon (round-16):
-    // under the default `retain` policy the pinned generations are
-    // frozen across the GC below; under `refuse` an explicit
-    // compaction call is the caller's error — fail loudly WITH the
-    // pins named, before any mutation (maintainDeleted never gets
-    // here: shouldCompact already skips pinned stores in refuse mode).
-    val pins = livePins(s, dir, what)
-    if (savepointOnCompact(s) == "refuse")
-      require(pins.isEmpty,
-        s"compactDeleted: live savepoint(s) ${
-          pins.map { case (n, g) => s"'$n'@v$g" }.mkString(", ")
-        } pin generations of $name — releaseSavepoint them, or run with " +
-          "spark.graft.savepoint.onCompact=retain to freeze the pinned reads")
-    val pinnedGens = pins.values.toSet
+    // the pinned generations are frozen across the GC below
+    val pinnedGens = livePins(s, dir, what).values.toSet
     val ctr = clock(s, name, isStore)
     ctr.synchronized {
       val e = ctr.incrementAndGet()
@@ -1185,27 +1172,15 @@ object Layout {
       }.toMap
     }
 
-  /** The compaction-vs-savepoint policy: `retain` (default) freezes
-    * pinned generations across the GC ([[freezeVersion]]); `refuse`
-    * makes pinned stores un-compactable until the pins release —
-    * scheduled maintenance skips them ([[shouldCompact]]), an explicit
-    * [[compactDeleted]] call fails loudly with the pins named. */
-  private[graft] def savepointOnCompact(s: SparkSession): String = {
-    val m = s.conf.getOption("spark.graft.savepoint.onCompact").getOrElse("retain")
-    require(m == "retain" || m == "refuse",
-      s"spark.graft.savepoint.onCompact must be retain|refuse (got $m)")
-    m
-  }
-
   /** Should `<what>` be compacted now? A METADATA-only read of the
     * latest mass marker against the policy thresholds — see the
-    * policy block above. False for a fresh artifact (no delete debt),
-    * and false in `refuse` mode while a live savepoint pins the store
-    * (the manifests are O(#members)-row metadata — [[livePins]]). */
+    * policy block above. False for a fresh artifact (no delete debt).
+    * A live savepoint never blocks it: compaction freezes the pinned
+    * generations ([[freezeVersion]]). */
   private[graft] def shouldCompact(s: SparkSession, dir: String, what: String): Boolean = {
     def conf(k: String, d: Long): Long =
       s.conf.getOption(s"spark.graft.compact.$k").map(_.toLong).getOrElse(d)
-    val policy = latestMassMarker(s, s"${tableName(dir, what)}tombs") match {
+    latestMassMarker(s, s"${tableName(dir, what)}tombs") match {
       case None => false
       case Some(m) =>
         val tombRows = m.getOrElse("tombRows", 0L)
@@ -1214,8 +1189,6 @@ object Layout {
           m.getOrElse("segFiles", 0L) > conf("segFilesMax", 64L) ||
           m.getOrElse("events", 0L) >= conf("maxEvents", 16L)
     }
-    policy &&
-      (savepointOnCompact(s) == "retain" || livePins(s, dir, what).isEmpty)
   }
 
   /** The maintenance entry point a deployment schedules: compact

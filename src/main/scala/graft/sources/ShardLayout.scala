@@ -48,12 +48,11 @@ private[graft] object ShardLayout {
     * `names`. */
   private def liveRows(s: SparkSession, path: String, schema: StructType,
       names: Seq[String]): (DataFrame, DataFrame) = {
-    def of(prefix: String): Seq[String] = names
-      .filter(_.split("/").last.startsWith(prefix)).sorted
-      .map(n => s"$path/$n")
-    val tombPaths = of("tomb-")
+    def of(kind: String => Boolean): Seq[String] =
+      names.filter(kind).sorted.map(n => s"$path/$n")
+    val tombPaths = of(ShardManifest.isTomb)
     val raw = s.read.schema(StructType(schema.fields.filter(_.name != "shard_id")))
-      .json(of("part-"): _*)
+      .json(of(ShardManifest.isPart): _*)
       .withColumn("shard_id", regexp_extract(input_file_name(),
         "shard_id=(\\d+)", 1).cast(LongType))
     val live =
@@ -187,7 +186,7 @@ private[graft] object ShardLayout {
     val foldedFiles: Map[Long, Seq[ShardFileEnt]] =
       crossed.toSeq.sorted.map { sh =>
         val names = Layout.listWarehouseNames(s, s"$tmp/shard_id=$sh")
-          .filter(_.startsWith("part-")).sorted
+          .filter(ShardManifest.isPart).sorted
         // a fold lands one file per shard (repartition by shard_id),
         // so the shard's recomputed bounds ARE the file's zone map
         val bounds = folded.get(sh)
@@ -346,7 +345,7 @@ private[graft] object ShardLayout {
       val swept = all.collect {
         case (n, (_, mtime))
             if !protectedNames.contains(n) && mtime < horizonMs &&
-              (!n.split("/").last.startsWith("tomb-") ||
+              (!ShardManifest.isTomb(n) ||
                 droppedRec.contains(n) || retired.contains(n)) =>
           fs.delete(new Path(new Path(path), n), false)
           n
@@ -477,7 +476,7 @@ private[graft] object ShardLayout {
       // wider than live is sound for skipping, narrower never happens)
       val fileBounds: Map[String, (Long, Long)] =
         if (!dataNames.contains("doc_id") ||
-            !listed.keys.exists(_.split("/").last.startsWith("part-"))) Map.empty
+            !listed.keys.exists(ShardManifest.isPart)) Map.empty
         else raw
           .groupBy(regexp_extract(input_file_name(),
             "(shard_id=\\d+/[^/]+)$", 1).as("f"))
@@ -534,12 +533,10 @@ private[graft] object ShardLayout {
     // The budget-less policy is unchanged.
     val crossed = ShardManifest.readSnapshot(hconf, path) match {
       case Some((_, entries)) => entries.filter { e =>
-        val names = e.files.map(_.name.split("/").last)
-        val tombs = names.exists(_.startsWith("tomb-"))
+        val tombs = e.tombs.nonEmpty
         targetFileBytes match {
-          case Some(t) => tombs || e.files.exists(f =>
-            f.name.split("/").last.startsWith("part-") && f.len > 2 * t)
-          case None => tombs || names.count(_.startsWith("part-")) >= 2
+          case Some(t) => tombs || e.parts.exists(_.len > 2 * t)
+          case None => tombs || e.parts.size >= 2
         }
       }.map(_.shardId).toSet
       case None => Set.empty[Long]
@@ -567,8 +564,7 @@ private[graft] object ShardLayout {
       ShardManifest.readGen(hconf, path, g).map { case (_, entries) =>
         val live = entries.filter(_.rows > 0)
         (g, live.map(_.rows).sum, live.size.toLong,
-          entries.flatMap(_.files.map(_.name))
-            .count(_.split("/").last.startsWith("part-")).toLong,
+          ShardManifest.recordedParts(entries).size.toLong,
           if (g == cur) 1L else 0L)
       }
     }.toDF("gen", "n_rows", "n_shards", "n_files", "is_current")
@@ -612,7 +608,7 @@ private[graft] object ShardLayout {
         val ids = removedOf(r)
         // content-derived name: distinct takedowns land distinct files
         val tag = java.lang.Long.toHexString(ids.sum + ids.length)
-        val name = f"shard_id=$sh%d/tomb-${ids.length}%05d-$tag.jsonl.zst"
+        val name = f"shard_id=$sh%d/${ShardManifest.TombPrefix}${ids.length}%05d-$tag.jsonl.zst"
         val (fs, p) = Layout.hfs(s, s"$path/$name")
         val out = codec.createOutputStream(fs.create(p, true))
         try ids.sorted.foreach { id =>

@@ -1,6 +1,8 @@
 package graft.sources
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.JsonNodeFactory
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -36,6 +38,8 @@ private[graft] final case class ShardEnt(
     sumChars: Option[Long], minDoc: Option[Long], maxDoc: Option[Long],
     files: Seq[ShardFileEnt],
     nulls: Option[Map[String, Long]] = None) {
+  def parts: Seq[ShardFileEnt] = files.filter(f => ShardManifest.isPart(f.name))
+  def tombs: Seq[ShardFileEnt] = files.filter(f => ShardManifest.isTomb(f.name))
   def merge(o: ShardEnt): ShardEnt = ShardEnt(
     shardId, rows + o.rows,
     for (a <- sumChars; b <- o.sumChars) yield a + b,
@@ -99,6 +103,37 @@ private[graft] object ShardManifest {
     * lives in. */
   def shardOf(name: String): Long =
     name.split("/")(0).stripPrefix("shard_id=").toLong
+
+  /** The layout's two file kinds, told apart by the last segment of a
+    * name (layout-relative `shard_id=<k>/<file>` or bare): DATA parts
+    * (`part-…`) and TOMBSTONE deltas (`tomb-…`, the doc ids a takedown
+    * excludes). Writers name files with these prefixes; every reader
+    * asks [[isPart]] / [[isTomb]]. */
+  val PartPrefix = "part-"
+  val TombPrefix = "tomb-"
+
+  private def hasKind(name: String, prefix: String): Boolean =
+    name.substring(name.lastIndexOf('/') + 1).startsWith(prefix)
+
+  def isPart(name: String): Boolean = hasKind(name, PartPrefix)
+  def isTomb(name: String): Boolean = hasKind(name, TombPrefix)
+
+  /** The part files a snapshot's entries record, as layout-relative
+    * names. */
+  def recordedParts(entries: Seq[ShardEnt]): Seq[String] =
+    entries.flatMap(_.parts.map(_.name))
+
+  /** The part files the CURRENT manifest records (none when absent). */
+  def recordedParts(conf: Configuration, root: String): Seq[String] =
+    read(conf, root).toSeq.flatMap(m => recordedParts(m._2))
+
+  /** The LIVE part files ([[listDataFiles]]) per shard, as
+    * layout-relative name -> byte length. A shard with no live part
+    * file is absent. */
+  def livePartsByShard(conf: Configuration, root: String)
+      : Map[Long, Map[String, Long]] =
+    listDataFiles(conf, root).filter { case (n, _) => isPart(n) }
+      .groupBy { case (n, _) => shardOf(n) }
 
   /** Archived-generation manifests live here, one per replaced
     * snapshot: `_gen/manifest-<gen>.json`. */
@@ -277,11 +312,9 @@ private[graft] object ShardManifest {
     val in = new java.io.BufferedReader(new java.io.InputStreamReader(
       fs.open(mp), java.nio.charset.StandardCharsets.UTF_8))
     try {
-      val line = in.readLine()
-      if (line == null || line.isEmpty) 0L
-      else {
-        val n = mapper.readTree(line)
-        if (n.has("gen")) n.get("gen").asLong() else 0L
+      Option(in.readLine()).flatMap(decodeLine) match {
+        case Some(Left(h)) => h.gen.getOrElse(0L)
+        case _ => 0L
       }
     } catch { case _: Exception => 0L } finally in.close()
   }
@@ -455,49 +488,41 @@ private[graft] object ShardManifest {
       writeString(conf, retiredPath(root), sb.toString)
     }
 
+  /** A manifest's header line: the schema DDL (format ≥ 2) and the
+    * generation (format ≥ 3). */
+  final case class Header(ddl: Option[String], gen: Option[Long])
+
+  /** Decode ONE manifest line: `Left` the header, `Right` one shard's
+    * statistics line; `None` for a blank line. The whole-file [[parse]]
+    * and the connector's streaming stats reader both decode through
+    * this. */
+  def decodeLine(line: String): Option[Either[Header, ShardEnt]] =
+    if (line.isEmpty) None
+    else {
+      val n = mapper.readTree(line)
+      def optL(j: JsonNode, f: String): Option[Long] =
+        if (j.has(f)) Some(j.get(f).asLong()) else None
+      if (!n.has("shard_id"))
+        Some(Left(Header(Option(n.get("schema")).map(_.asText()), optL(n, "gen"))))
+      else {
+        val files = Option(n.get("files")).toSeq.flatMap(_.elements().asScala)
+          .map(f => ShardFileEnt(f.get("name").asText(), f.get("len").asLong(),
+            optL(f, "min_doc"), optL(f, "max_doc")))
+        val nulls = Option(n.get("nulls")).map(nn =>
+          nn.fieldNames().asScala.map(k => k -> nn.get(k).asLong()).toMap)
+        Some(Right(ShardEnt(n.get("shard_id").asLong(),
+          n.get("rows").asLong(), optL(n, "sum_chars"),
+          optL(n, "min_doc"), optL(n, "max_doc"), files.toVector, nulls)))
+      }
+    }
+
   private def parse(body: String)
       : Option[(Option[StructType], Seq[ShardEnt])] = {
     var schema: Option[StructType] = None
     val entries = Vector.newBuilder[ShardEnt]
-    body.linesIterator.foreach { line =>
-      if (line.nonEmpty) {
-        val n = mapper.readTree(line)
-        if (n.has("schema")) {
-          schema = Some(StructType.fromDDL(n.get("schema").asText()))
-        } else if (n.has("shard_id")) {
-          def optL(f: String): Option[Long] =
-            if (n.has(f)) Some(n.get(f).asLong()) else None
-          val files =
-            if (!n.has("files")) Seq.empty
-            else {
-              val it = n.get("files").elements()
-              val b = Vector.newBuilder[ShardFileEnt]
-              while (it.hasNext) {
-                val f = it.next()
-                def fOpt(k: String): Option[Long] =
-                  if (f.has(k)) Some(f.get(k).asLong()) else None
-                b += ShardFileEnt(f.get("name").asText(),
-                  f.get("len").asLong(), fOpt("min_doc"), fOpt("max_doc"))
-              }
-              b.result()
-            }
-          val nulls =
-            if (!n.has("nulls")) None
-            else {
-              val nn = n.get("nulls")
-              val it = nn.fieldNames()
-              val b = Map.newBuilder[String, Long]
-              while (it.hasNext) {
-                val k = it.next()
-                b += k -> nn.get(k).asLong()
-              }
-              Some(b.result())
-            }
-          entries += ShardEnt(n.get("shard_id").asLong(),
-            n.get("rows").asLong(), optL("sum_chars"),
-            optL("min_doc"), optL("max_doc"), files, nulls)
-        }
-      }
+    body.linesIterator.flatMap(decodeLine).foreach {
+      case Left(h) => h.ddl.foreach(d => schema = Some(StructType.fromDDL(d)))
+      case Right(e) => entries += e
     }
     Some((schema, entries.result()))
   }
@@ -521,8 +546,8 @@ private[graft] object ShardManifest {
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("shard_id="))
       .flatMap { d =>
         fs.listStatus(d.getPath).toSeq
-          .filter(st => st.isFile && (st.getPath.getName.startsWith("part-") ||
-            st.getPath.getName.startsWith("tomb-")))
+          .filter(st => st.isFile &&
+            (isPart(st.getPath.getName) || isTomb(st.getPath.getName)))
           .map(st => s"${d.getPath.getName}/${st.getPath.getName}" ->
             (st.getLen, st.getModificationTime))
       }.toMap
@@ -577,8 +602,7 @@ private[graft] object ShardManifest {
       val live = listDataFiles(conf, root)
       recorded.nonEmpty &&
         recorded.forall { case (n, l) => live.get(n).contains(l) } &&
-        live.keysIterator.filter(_.split("/").last.startsWith("tomb-"))
-          .forall(recordedNames.contains)
+        live.keysIterator.filter(isTomb).forall(recordedNames.contains)
     }
 
   /** An archived generation as a VALIDATED snapshot: every recorded

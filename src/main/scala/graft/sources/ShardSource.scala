@@ -176,6 +176,29 @@ object ShardSource {
     * path, not a wrong answer). */
   val statsRefused = new java.util.concurrent.atomic.AtomicLong()
 
+  /** What one body's connector reads cost: the moves of the three
+    * counters above while it ran. */
+  final case class Reads(opened: Long, manifestReads: Long, refused: Long) {
+    /** Answered from the manifest alone: no part file opened, the
+      * sidecar read at least once. */
+    def metadataOnly: Boolean = opened == 0 && manifestReads > 0
+
+    def -(o: Reads): Reads =
+      Reads(opened - o.opened, manifestReads - o.manifestReads, refused - o.refused)
+  }
+
+  private def reads(): Reads =
+    Reads(openedFiles.get(), manifestReads.get(), statsRefused.get())
+
+  /** Run `body` and report the connector reads it made. The counters
+    * are JVM-wide, so the count is exact only while no other connector
+    * consumer runs. A body that throws rethrows. */
+  def counting[T](body: => T): (T, Reads) = {
+    val before = reads()
+    val v = body
+    (v, reads() - before)
+  }
+
   /** The statistics sidecar an exporter writes next to the shard dirs
     * (header: format + schema DDL + generation; one JSON line per
     * shard: rows, payload mass, id range, null counts, exact file
@@ -570,8 +593,6 @@ private[sources] final class ManifestReader(file: String,
     conf: Array[(String, String)], expectGen: Option[Long] = None)
     extends PartitionReader[InternalRow] {
 
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
   private val reader: java.io.BufferedReader = {
     ShardSource.manifestReads.incrementAndGet()
     val p = new Path(file)
@@ -580,30 +601,27 @@ private[sources] final class ManifestReader(file: String,
       fs.open(p), java.nio.charset.StandardCharsets.UTF_8))
   }
 
-  private var node: com.fasterxml.jackson.databind.JsonNode = _
+  private var ent: ShardEnt = _
 
   override def next(): Boolean = {
     var line = reader.readLine()
     while (line != null) {
-      val n = mapper.readTree(line)
-      // a time-travel read addressed generation g: the header must
-      // carry g — when planning fell back to the LIVE manifest file, a
-      // commit between planning and execution swaps it, and the stats
-      // would silently belong to the wrong snapshot
-      if (n.has("gen")) expectGen.foreach { g =>
-        if (n.get("gen").asLong() != g) throw new IllegalStateException(
-          s"graft.sources.ShardSource: time-travel stats read addressed " +
-            s"generation $g but the manifest at $file now carries " +
-            s"generation ${n.get("gen").asLong()} — a commit landed " +
-            "between planning and execution; re-run the query")
-      }
-      // header lines (schema, format version) carry no shard_id;
-      // zero-row lines (an emptied shard) would emit a group the data
-      // path does not — skipped (round-17 advice, medium)
-      val sid = n.get("shard_id")
-      if (sid != null && n.get("rows").asLong() > 0 &&
-          shards.forall(_.contains(sid.asLong()))) {
-        node = n; return true
+      ShardManifest.decodeLine(line) match {
+        // a time-travel read addressed generation g: the header must
+        // carry g — when planning fell back to the LIVE manifest file, a
+        // commit between planning and execution swaps it, and the stats
+        // would silently belong to the wrong snapshot
+        case Some(Left(h)) => for (g <- expectGen; hg <- h.gen if hg != g)
+          throw new IllegalStateException(
+            s"graft.sources.ShardSource: time-travel stats read addressed " +
+              s"generation $g but the manifest at $file now carries " +
+              s"generation $hg — a commit landed " +
+              "between planning and execution; re-run the query")
+        // zero-row lines (an emptied shard) would emit a group the data
+        // path does not — skipped (round-17 advice, medium)
+        case Some(Right(e)) if e.rows > 0 && shards.forall(_.contains(e.shardId)) =>
+          ent = e; return true
+        case _ =>
       }
       line = reader.readLine()
     }
@@ -612,24 +630,22 @@ private[sources] final class ManifestReader(file: String,
 
   override def get(): InternalRow = {
     val aggVals: Seq[Any] = kinds.map {
-      case "count"     => node.get("rows").asLong()
-      case "sum_chars" => node.get("sum_chars").asLong()
-      case "min_doc"   => node.get("min_doc").asLong()
-      case "max_doc"   => node.get("max_doc").asLong()
+      case "count"     => ent.rows
+      case "sum_chars" => ent.sumChars.get
+      case "min_doc"   => ent.minDoc.get
+      case "max_doc"   => ent.maxDoc.get
       case k if k.startsWith("countcol:") =>
         val f = k.stripPrefix("countcol:")
-        val nn = node.get("nulls")
-        if (nn == null) throw new IllegalStateException(
+        val nn = ent.nulls.getOrElse(throw new IllegalStateException(
           "graft.sources.ShardSource: manifest lost its null counts " +
-            "between planning and execution — re-run the query")
-        val rows = node.get("rows").asLong()
+            "between planning and execution — re-run the query"))
         // a column absent from the map = an era that never carried it
         // = every row reads back NULL (the data path's missing-field
         // rule) — so its non-null count is zero
-        rows - (if (nn.has(f)) nn.get(f).asLong() else rows)
+        ent.rows - nn.getOrElse(f, ent.rows)
     }
     InternalRow.fromSeq(
-      (if (byShard) Seq(node.get("shard_id").asLong()) else Nil) ++ aggVals)
+      (if (byShard) Seq(ent.shardId) else Nil) ++ aggVals)
   }
 
   override def close(): Unit = reader.close()
@@ -724,7 +740,7 @@ private[sources] final class ShardScan(path: String,
     * Shard-level bounds rule whole entries out first; files without
     * bounds always read. An empty predicate keeps everything. */
   private def keptParts(e: ShardEnt): Seq[ShardFileEnt] = {
-    val parts = e.files.filter(_.name.split("/").last.startsWith("part-"))
+    val parts = e.parts
     if (!docPruning) parts
     else if (!rangeMayMatch(e.minDoc, e.maxDoc)) Seq.empty
     else parts.filter(f => rangeMayMatch(f.minDoc, f.maxDoc))
@@ -765,8 +781,7 @@ private[sources] final class ShardScan(path: String,
       val kept = keptParts(e)
       ShardSel(e.shardId,
         kept.map(_.name).sorted.map(n => new Path(root, n).toString),
-        e.files.map(_.name).filter(_.split("/").last.startsWith("tomb-"))
-          .sorted.map(n => new Path(root, n).toString),
+        e.tombs.map(_.name).sorted.map(n => new Path(root, n).toString),
         kept.map(_.len).sum,
         // the manifest's row count is exact for the full shard (the
         // takedown recomputes survivors, the fold materializes); a
@@ -808,8 +823,7 @@ private[sources] final class ShardScan(path: String,
             .map(n => new Path(root, n).toString)
           // the shard's CURRENT tombstones apply to the delta too — an
           // exclusion is never scoped to the files it arrived with
-          val tombs = e.files.map(_.name)
-            .filter(_.split("/").last.startsWith("tomb-")).sorted
+          val tombs = e.tombs.map(_.name).sorted
             .map(n => new Path(root, n).toString)
           ShardSel(e.shardId, fresh, tombs, freshEnts.map(_.len).sum, None)
         }
@@ -820,11 +834,10 @@ private[sources] final class ShardScan(path: String,
           live.keys.toSeq
             .groupBy(ShardManifest.shardOf)
             .toSeq.map { case (sh, names) =>
-              val parts = names.sorted
-                .filter(_.split("/").last.startsWith("part-"))
+              val parts = names.sorted.filter(ShardManifest.isPart)
               ShardSel(sh,
                 parts.map(n => new Path(root, n).toString),
-                names.sorted.filter(_.split("/").last.startsWith("tomb-"))
+                names.sorted.filter(ShardManifest.isTomb)
                   .map(n => new Path(root, n).toString),
                 parts.map(live).sum, None)
             }
@@ -1085,8 +1098,7 @@ private[sources] final class ShardMicroBatchStream(path: String,
       val sh = ShardManifest.shardOf(n)
       shardSet.forall(_.contains(sh))
     }
-    val (tombs, parts) =
-      kept.partition(_.split("/").last.startsWith("tomb-"))
+    val (tombs, parts) = kept.partition(ShardManifest.isTomb)
     val root = new Path(path)
     val tombsByShard = tombs
       .groupBy(ShardManifest.shardOf)
@@ -1576,7 +1588,7 @@ private[sources] final class ShardDataWriter(path: String,
     // explicit -rNNN so NAME order == write order (a bare name would
     // sort AFTER its own -r001 continuation: '-' < '.')
     val suffix = if (targetFileBytes.isEmpty) "" else f"-r$seq%03d"
-    f"shard_id=$shard%d/part-$partitionId%05d-$taskId%d-$jobTok$suffix.jsonl.zst"
+    f"shard_id=$shard%d/${ShardManifest.PartPrefix}$partitionId%05d-$taskId%d-$jobTok$suffix.jsonl.zst"
   }
 
   private def entryOf(sh: Long, so: ShardOut): ShardEnt = {

@@ -805,10 +805,10 @@ object StreamDoor {
       // 4: the destination is first-class
       def out = ShardLayout.readShards(s, outPath)
       val firstClass = ShardManifest.readValidated(hconf, outPath).isDefined
-      val f0 = graft.sources.ShardSource.openedFiles.get()
-      val metaCount = out.agg(count(lit(1))).collect()(0).getLong(0)
-      val statsMetaOnly = graft.sources.ShardSource.openedFiles.get() == f0 &&
-        metaCount == d.count()
+      val (metaCount, metaReads) = graft.sources.ShardSource.counting {
+        out.agg(count(lit(1))).collect()(0).getLong(0)
+      }
+      val statsMetaOnly = metaReads.opened == 0 && metaCount == d.count()
       val twoCommits = ShardManifest.currentGen(hconf, outPath) == genBefore + 1
       Pipeline.shardCensus(out)
         .++(Pipeline.decisionRows(emptyDrainSilent,
@@ -865,9 +865,7 @@ object StreamDoor {
       ShardLayout.writeShards(Pipeline.sharded18(
         d.filter(pmod(col("doc_id"), lit(10)) === 3), "tt19:"), srcPath, "append")
       val hconf = s.sessionState.newHadoopConf()
-      val srcFiles = ShardManifest.read(hconf, srcPath).toSeq
-        .flatMap(_._2.flatMap(_.files.map(_.name)))
-        .count(_.split("/").last.startsWith("part-"))
+      val srcFiles = ShardManifest.recordedParts(hconf, srcPath).size
       val cap = 3
       val expBatches = (srcFiles + cap - 1) / cap
       val q = s.readStream.format("graft.sources.ShardSource")

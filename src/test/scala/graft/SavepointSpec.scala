@@ -8,8 +8,7 @@ import graft.sources.Layout
   * resolve through storeAsOf, so isolation from later events is the
   * version views' immutability. Since round 16 live pins PARTICIPATE
   * in the retention horizon: compaction retains (freezes) pinned
-  * generations by default, refuses loudly under the `refuse` policy,
-  * and a released pin is GC'd by the next compaction. Re-declaring a
+  * generations, and a released pin is GC'd by the next compaction. Re-declaring a
   * live name is loud (round-15 advice — no silent re-pin). */
 class SavepointSpec extends SparkSpec {
   import spark.implicits._
@@ -124,7 +123,7 @@ class SavepointSpec extends SparkSpec {
       s"post-release GC'd read failed without the loud contract: $e")
   }
 
-  test("refuse policy: maintenance skips pinned stores; explicit compaction names the pin") {
+  test("retain policy: a live pin never blocks maintenance or the pinned read") {
     val dir = sfDir
     fresh("spec5")
     val bkt = Some((Layout.Buckets, Seq("k")))
@@ -134,27 +133,17 @@ class SavepointSpec extends SparkSpec {
     Layout.savepoint(spark, dir, "spec5", Seq("svp5upd"))
     Layout.deleteSegment(spark, dir, "svp5",
       (0L until 5L).toDF("k"), Seq("k"))
-    spark.conf.set("spark.graft.savepoint.onCompact", "refuse")
-    // force the mass policy to fire so only the pin stands in the way
+    // force the mass policy to fire
     spark.conf.set("spark.graft.compact.maxEvents", "1")
     try {
-      assert(!Layout.shouldCompact(spark, dir, "svp5upd"),
-        "refuse-mode maintenance did not skip the pinned store")
-      val e = intercept[IllegalArgumentException] {
-        Layout.compactDeleted(spark, dir, "svp5upd", bkt)
-      }
-      assert(e.getMessage.contains("spec5"),
-        s"refusal did not name the live pin: $e")
+      assert(Layout.shouldCompact(spark, dir, "svp5upd"),
+        "a live savepoint kept maintenance off the pinned store")
       // the pinned read (pre-delete moment: 60 rows) is untouched
       assert(Layout.readSavepoint(spark, dir, "spec5", "svp5upd").count() == 60)
-      // release lifts the refusal: the same policy now fires
       Layout.releaseSavepoint(spark, dir, "spec5")
-      assert(Layout.shouldCompact(spark, dir, "svp5upd"),
-        "released store still skipped by refuse-mode maintenance")
       Layout.compactDeleted(spark, dir, "svp5upd", bkt)
       assert(spark.table(Layout.tableName(dir, "svp5upd")).count() == 55)
     } finally {
-      spark.conf.unset("spark.graft.savepoint.onCompact")
       spark.conf.unset("spark.graft.compact.maxEvents")
     }
   }

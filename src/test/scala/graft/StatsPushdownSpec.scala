@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.operators.Pipeline
-import graft.sources.{Layout, ShardSource}
+import graft.sources.{Layout, ShardManifest, ShardSource}
 
 /** q167 — statistics-only aggregate pushdown: the connector answers
   * COUNT/SUM/MIN/MAX from the manifest sidecar without opening data
@@ -53,6 +53,32 @@ class StatsPushdownSpec extends SparkSpec {
     assert(ShardSource.openedFiles.get() == f0,
       "the global count must not open data files")
     assert(viaStats == n)
+  }
+
+  test("counting: a scan opens its shards' part files, stats open none, a throw rethrows") {
+    out.length // export + live manifest exist
+    def src = spark.read.format("graft.sources.ShardSource")
+      .option("path", path).load()
+    val live = ShardManifest.livePartsByShard(spark.sessionState.newHadoopConf(), path)
+    val pick = live.keySet.toSeq.sorted.take(2)
+    assert(pick.size == 2, s"the export left fewer than two shards: $live")
+    // length(text) >= 0 is no column reference: the data path answers
+    val (_, scan) = ShardSource.counting {
+      src.filter(col("shard_id").isin(pick.map(Long.box): _*))
+        .agg(sum((length(col("text")) >= 0).cast("long"))).collect()
+    }
+    assert(scan.opened == pick.map(live(_).size).sum.toLong && !scan.metadataOnly,
+      s"the scan of shards $pick counted $scan")
+    val (n, stats) = ShardSource.counting {
+      src.agg(count(lit(1))).collect()(0).getLong(0)
+    }
+    assert(stats.opened == 0 && stats.manifestReads >= 1 && stats.refused == 0 &&
+      stats.metadataOnly, s"the stats-only count counted $stats")
+    assert(n == spark.read.parquet(s"$sfDir/documents.parquet").count())
+    val e = intercept[IllegalStateException] {
+      ShardSource.counting[Unit](throw new IllegalStateException("body failed"))
+    }
+    assert(e.getMessage == "body failed")
   }
 
   test("an unpushable aggregate falls back to the data path, same answers") {

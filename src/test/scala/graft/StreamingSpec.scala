@@ -2,8 +2,10 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.streaming.EventsStream
 
 /** Stream/batch parity: the same windowedAgg applied to a MemoryStream
@@ -242,9 +244,24 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  /** The stream→storage leg: an append-mode query writing
+    * (event-time day)-partitioned parquet under `path` through Spark's
+    * native file sink, exactly-once via its `_spark_metadata` commit
+    * log at `checkpoint`. Late events land in their own (old) day. */
+  private def eventsToLayout(events: DataFrame, path: String,
+      checkpoint: String): StreamingQuery =
+    events
+      .withColumn("day", to_date(col("ts")))
+      .writeStream
+      .format("parquet")
+      .option("path", path)
+      .option("checkpointLocation", checkpoint)
+      .partitionBy("day")
+      .outputMode("append")
+      .start()
+
   test("streaming layout sink: stream-written day partitions == batch rows, pruning fires") {
     import org.apache.spark.sql.functions.col
-    import graft.streaming.LayoutSink
     val dir = java.nio.file.Files.createTempDirectory("graft_sink_").toString
     val rows = Seq(
       (Timestamp.valueOf("2024-01-01 10:00:00"), 1L, "view"),
@@ -256,7 +273,7 @@ class StreamingSpec extends SparkSpec {
       (Timestamp.valueOf("2024-01-01 23:00:00"), 5L, "view"))
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Timestamp, Long, String)]
-    val q = LayoutSink.eventsToLayout(
+    val q = eventsToLayout(
       mem.toDF().toDF("ts", "user_id", "event_type"),
       s"$dir/events", s"$dir/ckpt")
     try {
@@ -280,7 +297,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("layout sink restart: kill between triggers, resume from checkpoint, no dup/lost rows; torn files ignored") {
-    import graft.streaming.LayoutSink
     val dir = java.nio.file.Files.createTempDirectory("graft_sink_restart_").toString
     val t1 = Seq(
       (Timestamp.valueOf("2024-01-01 10:00:00"), 1L, "view"),
@@ -294,12 +310,12 @@ class StreamingSpec extends SparkSpec {
     val mem = MemoryStream[(Timestamp, Long, String)]
     val events = mem.toDF().toDF("ts", "user_id", "event_type")
     // run 1: one trigger, then KILL the query
-    val q1 = LayoutSink.eventsToLayout(events, s"$dir/events", s"$dir/ckpt")
+    val q1 = eventsToLayout(events, s"$dir/events", s"$dir/ckpt")
     try { mem.addData(t1: _*); q1.processAllAvailable() } finally q1.stop()
     // data arrives while the query is down
     mem.addData(t2: _*)
     // run 2: SAME checkpoint — resumes at the recorded offset
-    val q2 = LayoutSink.eventsToLayout(events, s"$dir/events", s"$dir/ckpt")
+    val q2 = eventsToLayout(events, s"$dir/events", s"$dir/ckpt")
     try { q2.processAllAvailable() } finally q2.stop()
     val back = spark.read.parquet(s"$dir/events")
     // every row exactly once across the kill/restart: nothing lost

@@ -10,6 +10,7 @@ one definition would remove: (copies - 1) x span).
 
     python3 tools/clones.py                  # 6-line windows, top 15
     python3 tools/clones.py -n 5 --top 30 src/main/scala/graft/operators
+    python3 tools/clones.py --loc src/main src/test   # line totals per root
 
 Standard library only.
 """
@@ -21,23 +22,41 @@ import sys
 EXTS = (".scala", ".java")
 
 
-def code_lines(path):
-    """(line number, normalized text) of each non-comment code line."""
-    out = []
+def classified(path):
+    """(line number, kind, stripped text) of each line; kind is "code",
+    "comment" or "blank". Comment lines start with //, * or /*, or lie
+    inside a /* ... */ block; a line mixing code and a comment is code."""
     in_block = False
     with open(path, encoding="utf-8") as f:
         for no, raw in enumerate(f, 1):
             line = raw.strip()
             if in_block:
-                if "*/" in line:
-                    in_block = False
-                continue
-            if not line or line.startswith("//") or line.startswith("*"):
-                continue
-            if line.startswith("/*"):
                 in_block = "*/" not in line
-                continue
-            out.append((no, " ".join(line.split())))
+                yield no, "comment", line
+            elif not line:
+                yield no, "blank", line
+            elif line.startswith("//") or line.startswith("*"):
+                yield no, "comment", line
+            elif line.startswith("/*"):
+                in_block = "*/" not in line
+                yield no, "comment", line
+            else:
+                yield no, "code", line
+
+
+def code_lines(path):
+    """(line number, normalized text) of each non-comment code line."""
+    return [(no, " ".join(line.split()))
+            for no, kind, line in classified(path) if kind == "code"]
+
+
+def loc(roots):
+    """(root, code, comment, blank) line totals of each root."""
+    out = []
+    for root in roots:
+        n = collections.Counter(kind for p in sources([root])
+                                for _, kind, _ in classified(p))
+        out.append((root, n["code"], n["comment"], n["blank"]))
     return out
 
 
@@ -130,9 +149,16 @@ def main():
                     help="window length in code lines (default 6)")
     ap.add_argument("--top", type=int, default=15,
                     help="clusters to print (default 15, 0 = all)")
+    ap.add_argument("--loc", action="store_true",
+                    help="print code / comment / blank line totals per root "
+                         "instead of the clusters")
     args = ap.parse_args()
     if args.lines < 1:
         ap.error("--lines must be >= 1")
+    if args.loc:
+        for root, code, comment, blank in loc(args.roots):
+            print(f"{root}: {code} code / {comment} comment / {blank} blank lines")
+        return 0
     clusters = find(args.roots, args.lines)
     total = sum(c[0] for c in clusters)
     print(f"{len(clusters)} clusters of repeated {args.lines}-line windows; "
